@@ -638,10 +638,8 @@ def _q_multimodal(spark, sf_dir):
     The oracle independently reconstructs the body text from the
     deterministic token rule, so this verifies the full
     binary -> decode -> text path end-to-end."""
-    from jgdtrans_rs_spark.operators import multimodal
-
     pages = pages_src.synth_pages(spark, sf_dir)
-    meta = multimodal.binary_meta(pages, "html")
+    meta = pages_src.binary_meta(pages, "html")
     doc = F.decode(F.col("html"), "UTF-8")
     return meta.select(
         "pkey",

@@ -16,9 +16,10 @@ Layout:
     dms.py       degree-minute-second scalar functions
     engine.py    the Spark layer (broadcast grid, pandas_udf transforms)
     functions/   pure Column expression helpers (JVM-side, codegen-friendly)
-    operators/   spatial joins, kNN, dedup, similarity,
-                 multimodal decode + perceptual fingerprints
-    sources/     synthetic pages source, par reader, checkpointed sink
+    operators/   spatial joins, kNN, dedup, similarity, text, raster,
+                 multimodal decode + perceptual image fingerprints
+    sources/     synthetic pages + binary metadata, WARC and par readers,
+                 checkpointed sink
     plans/       SQL generators shared with the DuckDB oracle
     streaming/   structured-streaming ingest (batch parity first)
 """

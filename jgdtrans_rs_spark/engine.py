@@ -10,11 +10,11 @@ local[*]):
   of 4 joins (one per cell corner).
 * The whole transform chain (validate -> forward/backward -> tile
   assign) is one narrow stage: Scan -> Filter -> Project ->
-  PythonMapInArrow -> Project.  Catalyst prunes the parquet scan down
+  ArrowEvalPython -> Project.  Catalyst prunes the parquet scan down
   to the 2-3 coordinate columns; no shuffle occurs until a downstream
   aggregation/join keys on the tile.
-* Kernels run over Arrow record batches (mapInPandas / pandas_udf) —
-  no per-row Python anywhere.
+* Kernels run as scalar pandas UDFs over Arrow record batches (one
+  factory, ``_kernel_udf``) — no per-row Python anywhere.
 
 Error semantics are dead-letter columns (status / err_meshcode /
 err_corner), never task failures — mirroring trans.rs:946-999
@@ -25,10 +25,9 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     BooleanType,
     DoubleType,
     IntegerType,
@@ -45,6 +44,18 @@ _RESULT_FIELDS = [
     StructField("err_meshcode", LongType(), False),
     StructField("err_corner", IntegerType(), False),
 ]
+_TILE_FIELDS = [
+    StructField("meshcode", LongType(), False),
+    StructField("quadkey", LongType(), False),
+]
+
+
+def _coord_fields(prefix: str) -> list[StructField]:
+    return [StructField(f"{prefix}{c}", DoubleType(), True) for c in ("lat", "lon", "alt")]
+
+
+def _coord_cols(prefix: str, lat, lon, alt) -> dict:
+    return {f"{prefix}lat": lat, f"{prefix}lon": lon, f"{prefix}alt": alt}
 
 
 def _no_duplicate(udf):
@@ -65,23 +76,28 @@ def _no_duplicate(udf):
     return udf.asNondeterministic()
 
 
-def _expand_struct(df: DataFrame, new_names: set[str], struct_col) -> DataFrame:
-    """Attach a kernel's struct column and expand it, replacing any
-    same-named input columns.  The temporary column name is chosen
-    collision-free: a fixed "_r" would silently overwrite (and then
-    re-emit) a user passthrough column named "_r"."""
-    kept = [c for c in df.columns if c not in new_names]
+def _expand_struct(df: DataFrame, *structs: tuple[list[str], Column]) -> DataFrame:
+    """Attach kernel struct columns (``(field names, struct)`` pairs)
+    and expand them in order, replacing any same-named input columns.
+    The temporary column names are chosen collision-free: a fixed "_r"
+    would silently overwrite (and then re-emit) a user passthrough
+    column named "_r"."""
+    kept = [c for c in df.columns if not any(c in names for names, _ in structs)]
+    stars = []
     tmp = "_r"
-    while tmp in df.columns:
-        tmp += "_"
-    return df.withColumn(tmp, struct_col).select(*kept, f"{tmp}.*")
+    for _, struct_col in structs:
+        while tmp in df.columns:
+            tmp += "_"
+        df = df.withColumn(tmp, struct_col)
+        stars.append(f"{tmp}.*")
+    return df.select(*kept, *stars)
 
 
 def _select_fields(all_fields: list[StructField],
                    fields: list[str] | None) -> list[StructField]:
-    """The fused kernels' output-struct pruning contract (shared by
-    transform_and_tile and transform_tile_pip): None = everything,
-    else the named subset in the caller's order; unknown names raise."""
+    """The output-struct pruning contract of every kernel UDF: None =
+    everything, else the named subset in the caller's order; unknown
+    names raise."""
     if fields is None:
         return all_fields
     known = {f.name: f for f in all_fields}
@@ -90,6 +106,56 @@ def _select_fields(all_fields: list[StructField],
         raise ValueError(f"unknown output fields {unknown}; "
                          f"choose from {sorted(known)}")
     return [known[f] for f in fields]
+
+
+def _kernel_udf(compute, all_fields: list[StructField],
+                fields: list[str] | None = None):
+    """The one factory behind every Engine kernel UDF.
+
+    Kernels ride a scalar pandas UDF returning a struct column (the
+    ArrowEvalPython path).  On this Spark build the MapInPandas /
+    MapInArrow input writer costs ~9us/row JVM-side regardless of
+    width, capping at ~3.5M rows/s per JVM; the scalar-UDF writer is
+    ~8x cheaper.  A scalar UDF also only ships the referenced columns
+    through Python — passthrough columns (urls, payloads) stay
+    JVM-side.
+
+    ``compute(want, lat, lon[, alt])`` is the operator's numpy body.
+    It gets the input columns as float64 arrays (NULL -> NaN) and the
+    set of requested output names, so it can skip work nobody reads
+    (the meshcode and quadkey encodes), and returns ``(columns,
+    corr)``: a dict of output arrays plus the kernel's CorrResult or
+    None; the factory packs the CorrResult into status / err_meshcode
+    / err_corner.  Only the fields selected by ``fields`` cross Arrow
+    back to the JVM: Catalyst cannot prune fields inside a UDF struct.
+
+    Returns ``bind(df, lat, lon, *alt) -> (names, struct Column)`` for
+    ``_expand_struct``; an ``alt`` that is None or not a column of
+    ``df`` reads as altitude 0.0.  ``compute`` is pickled into every
+    task, so it must close over the broadcast handle and plain values
+    only — never the Engine (its SparkSession does not pickle) nor its
+    grid (which would then ship with every task).
+    """
+    out_fields = _select_fields(all_fields, fields)
+    names = [f.name for f in out_fields]
+    want = frozenset(names)
+
+    @_no_duplicate
+    @F.pandas_udf(StructType(out_fields))
+    def run(*cols: pd.Series) -> pd.DataFrame:
+        out, c = compute(want, *(s.to_numpy(dtype=np.float64, na_value=np.nan) for s in cols))
+        if c is not None:
+            out["status"] = c.status.astype(np.int32)
+            out["err_meshcode"] = c.err_meshcode
+            out["err_corner"] = c.err_corner.astype(np.int32)
+        return pd.DataFrame({n: out[n] for n in names})
+
+    def bind(df: DataFrame, lat: str, lon: str, *alt: str | None):
+        alt_cols = [F.col(a) if a is not None and a in df.columns else F.lit(0.0)
+                    for a in alt]
+        return names, run(F.col(lat), F.col(lon), *alt_cols)
+
+    return bind
 
 
 class Engine:
@@ -133,51 +199,22 @@ class Engine:
 
     # -- core transforms --------------------------------------------------
     #
-    # Hot kernels ride scalar pandas_udf returning a struct column (the
-    # ArrowEvalPython path).  On this Spark build the MapInPandas /
-    # MapInArrow input writer costs ~9us/row JVM-side regardless of
-    # width, capping at ~3.5M rows/s per JVM; the scalar-UDF writer is
-    # ~8x cheaper.  pandas_udf also only ships the referenced columns
-    # through Python — passthrough columns (urls, payloads) stay JVM-side.
-
-    def _struct_udf(self, fn_name: str, prefix: str):
-        bc = self._bc
-        sb = self.strict_bounds
-        schema = StructType([
-            StructField(f"{prefix}lat", DoubleType(), True),
-            StructField(f"{prefix}lon", DoubleType(), True),
-            StructField(f"{prefix}alt", DoubleType(), True),
-        ] + _RESULT_FIELDS)
-
-        @_no_duplicate
-        @F.pandas_udf(schema)
-        def run(lat_s: pd.Series, lon_s: pd.Series, alt_s: pd.Series) -> pd.DataFrame:
-            grid = bc.value
-            fn = getattr(kernel, fn_name)
-            la = lat_s.to_numpy(dtype=np.float64, na_value=np.nan)
-            lo = lon_s.to_numpy(dtype=np.float64, na_value=np.nan)
-            al = alt_s.to_numpy(dtype=np.float64, na_value=np.nan)
-            out_la, out_lo, out_al, c = fn(la, lo, al, grid, strict_bounds=sb)
-            return pd.DataFrame({
-                f"{prefix}lat": out_la,
-                f"{prefix}lon": out_lo,
-                f"{prefix}alt": out_al,
-                "status": c.status.astype(np.int32),
-                "err_meshcode": c.err_meshcode,
-                "err_corner": c.err_corner.astype(np.int32),
-            })
-
-        return run
+    # Every kernel closure below captures ``self._bc`` and plain values,
+    # never ``self`` (see _kernel_udf).
 
     def _map_kernel(self, df: DataFrame, lat: str, lon: str, alt: str | None,
                     fn_name: str, prefix: str) -> DataFrame:
         """Run a point->point kernel, appending `{prefix}lat`,
         `{prefix}lon`, `{prefix}alt` + status columns."""
-        udf = self._struct_udf(fn_name, prefix)
-        alt_col = F.col(alt) if alt is not None and alt in df.columns else F.lit(0.0)
-        new_names = {f"{prefix}lat", f"{prefix}lon", f"{prefix}alt",
-                     "status", "err_meshcode", "err_corner"}
-        return _expand_struct(df, new_names, udf(F.col(lat), F.col(lon), alt_col))
+        bc, sb = self._bc, self.strict_bounds
+
+        def compute(want, la, lo, al):
+            out_la, out_lo, out_al, c = getattr(kernel, fn_name)(
+                la, lo, al, bc.value, strict_bounds=sb)
+            return _coord_cols(prefix, out_la, out_lo, out_al), c
+
+        udf = _kernel_udf(compute, _coord_fields(prefix) + _RESULT_FIELDS)
+        return _expand_struct(df, udf(df, lat, lon, alt))
 
     def forward(self, df: DataFrame, lat: str = "lat", lon: str = "lon",
                 alt: str | None = "alt", prefix: str = "out_") -> DataFrame:
@@ -196,31 +233,15 @@ class Engine:
         return self._map_kernel(df, lat, lon, alt, "backward_compat", prefix)
 
     def _corr(self, df: DataFrame, lat: str, lon: str, fn_name: str) -> DataFrame:
-        bc = self._bc
-        sb = self.strict_bounds
-        schema = StructType([
-            StructField("dlat_deg", DoubleType(), True),
-            StructField("dlon_deg", DoubleType(), True),
-            StructField("dalt_m", DoubleType(), True),
-        ] + _RESULT_FIELDS)
+        bc, sb = self._bc, self.strict_bounds
 
-        @_no_duplicate
-        @F.pandas_udf(schema)
-        def run(lat_s: pd.Series, lon_s: pd.Series) -> pd.DataFrame:
-            grid = bc.value
-            fn = getattr(kernel, fn_name)
-            la = lat_s.to_numpy(dtype=np.float64, na_value=np.nan)
-            lo = lon_s.to_numpy(dtype=np.float64, na_value=np.nan)
-            c = fn(la, lo, grid, strict_bounds=sb)
-            return pd.DataFrame({
-                "dlat_deg": c.dlat, "dlon_deg": c.dlon, "dalt_m": c.dalt,
-                "status": c.status.astype(np.int32),
-                "err_meshcode": c.err_meshcode,
-                "err_corner": c.err_corner.astype(np.int32),
-            })
+        def compute(want, la, lo):
+            c = getattr(kernel, fn_name)(la, lo, bc.value, strict_bounds=sb)
+            return {"dlat_deg": c.dlat, "dlon_deg": c.dlon, "dalt_m": c.dalt}, c
 
-        new_names = {"dlat_deg", "dlon_deg", "dalt_m", "status", "err_meshcode", "err_corner"}
-        return _expand_struct(df, new_names, run(F.col(lat), F.col(lon)))
+        all_fields = [StructField(n, DoubleType(), True)
+                      for n in ("dlat_deg", "dlon_deg", "dalt_m")] + _RESULT_FIELDS
+        return _expand_struct(df, _kernel_udf(compute, all_fields)(df, lat, lon))
 
     def forward_corr(self, df: DataFrame, lat: str = "lat", lon: str = "lon") -> DataFrame:
         """``forward_corr`` (trans.rs:428-451): correction columns only."""
@@ -244,38 +265,51 @@ class Engine:
         strict bounds, or node-level checked-path bounds under
         ``strict_bounds=False`` — see _tile_bounds).
         """
-        unit = self.grid.mesh_unit
-        bounds = self._tile_bounds()
-        out_fields = [
-            StructField("meshcode", LongType(), False),
-            StructField("quadkey", LongType(), False),
-        ]
-        if with_position:
-            out_fields += [
-                StructField("pos_y", DoubleType(), True),
-                StructField("pos_x", DoubleType(), True),
-            ]
-        schema = StructType(out_fields)
+        unit, bounds = self.grid.mesh_unit, self._tile_bounds()
 
-        @_no_duplicate
-        @F.pandas_udf(schema)
-        def run(lat_s: pd.Series, lon_s: pd.Series) -> pd.DataFrame:
-            la = lat_s.to_numpy(dtype=np.float64, na_value=np.nan)
-            lo = lon_s.to_numpy(dtype=np.float64, na_value=np.nan)
+        def compute(want, la, lo):
             lat_d, lon_d, valid = mesh.point_to_digits(la, lo, unit, bounds)
-            code = mesh.digits_to_meshcode(lat_d, lon_d)
             out = {
-                "meshcode": np.where(valid, code, -1),
+                "meshcode": np.where(valid, mesh.digits_to_meshcode(lat_d, lon_d), -1),
                 "quadkey": mesh.quadkey(la, lo, level),
             }
-            if with_position:
+            if "pos_y" in want:
                 y, x = mesh.cell_position(la, lo, lat_d, lon_d, unit)
                 out["pos_y"] = np.where(valid, y, np.nan)
                 out["pos_x"] = np.where(valid, x, np.nan)
-            return pd.DataFrame(out)
+            return out, None
 
-        new_names = {f.name for f in out_fields}
-        return _expand_struct(df, new_names, run(F.col(lat), F.col(lon)))
+        all_fields = _TILE_FIELDS + [StructField("pos_y", DoubleType(), True),
+                                     StructField("pos_x", DoubleType(), True)]
+        fields = None if with_position else ["meshcode", "quadkey"]
+        return _expand_struct(df, _kernel_udf(compute, all_fields, fields)(df, lat, lon))
+
+    def _forward_tiled(self, df: DataFrame, lat: str, lon: str, alt: str | None,
+                       level: int, prefix: str, fields: list[str] | None,
+                       poly_mask=None) -> DataFrame:
+        """The shared body of transform_and_tile and transform_tile_pip:
+        forward + meshcode/quadkey (+ ``poly_mask(lat, lon)``) in one
+        UDF, computing only the requested tile and mask columns."""
+        bc, sb = self._bc, self.strict_bounds
+        unit, bounds = self.grid.mesh_unit, self._tile_bounds()
+        all_fields = _coord_fields(prefix) + _RESULT_FIELDS + _TILE_FIELDS
+        if poly_mask is not None:
+            all_fields.append(StructField("poly_mask", LongType(), False))
+
+        def compute(want, la, lo, al):
+            out_la, out_lo, out_al, c = kernel.forward(la, lo, al, bc.value, strict_bounds=sb)
+            out = _coord_cols(prefix, out_la, out_lo, out_al)
+            if "meshcode" in want:
+                lat_d, lon_d, valid = mesh.point_to_digits(out_la, out_lo, unit, bounds)
+                out["meshcode"] = np.where(valid, mesh.digits_to_meshcode(lat_d, lon_d), -1)
+            if "quadkey" in want:
+                out["quadkey"] = mesh.quadkey(out_la, out_lo, level)
+            if "poly_mask" in want:
+                out["poly_mask"] = poly_mask(out_la, out_lo)
+            return out, c
+
+        udf = _kernel_udf(compute, all_fields, fields)
+        return _expand_struct(df, udf(df, lat, lon, alt))
 
     def transform_and_tile(self, df: DataFrame, lat: str = "lat", lon: str = "lon",
                            alt: str | None = "alt", level: int = 15,
@@ -292,52 +326,7 @@ class Engine:
         a pandas UDF, so pass the projection explicitly; skipping
         ``quadkey`` also skips its encode).
         """
-        bc = self._bc
-        sb = self.strict_bounds
-        unit = self.grid.mesh_unit
-        bounds = self._tile_bounds()
-        all_fields = [
-            StructField(f"{prefix}lat", DoubleType(), True),
-            StructField(f"{prefix}lon", DoubleType(), True),
-            StructField(f"{prefix}alt", DoubleType(), True),
-        ] + _RESULT_FIELDS + [
-            StructField("meshcode", LongType(), False),
-            StructField("quadkey", LongType(), False),
-        ]
-        out_fields = _select_fields(all_fields, fields)
-        names = [f.name for f in out_fields]
-        want_mesh = "meshcode" in names
-        want_quadkey = "quadkey" in names
-        schema = StructType(out_fields)
-
-        @_no_duplicate
-        @F.pandas_udf(schema)
-        def run(lat_s: pd.Series, lon_s: pd.Series, alt_s: pd.Series) -> pd.DataFrame:
-            grid = bc.value
-            la = lat_s.to_numpy(dtype=np.float64, na_value=np.nan)
-            lo = lon_s.to_numpy(dtype=np.float64, na_value=np.nan)
-            al = alt_s.to_numpy(dtype=np.float64, na_value=np.nan)
-            out_la, out_lo, out_al, c = kernel.forward(la, lo, al, grid, strict_bounds=sb)
-            cols: dict = {
-                f"{prefix}lat": out_la,
-                f"{prefix}lon": out_lo,
-                f"{prefix}alt": out_al,
-                "status": c.status.astype(np.int32),
-                "err_meshcode": c.err_meshcode,
-                "err_corner": c.err_corner.astype(np.int32),
-            }
-            if want_mesh:
-                lat_d, lon_d, valid = mesh.point_to_digits(out_la, out_lo, unit, bounds)
-                code = mesh.digits_to_meshcode(lat_d, lon_d)
-                cols["meshcode"] = np.where(valid, code, -1)
-            if want_quadkey:
-                cols["quadkey"] = mesh.quadkey(out_la, out_lo, level)
-            return pd.DataFrame({n: cols[n] for n in names})
-
-        alt_col = F.col(alt) if alt is not None and alt in df.columns else F.lit(0.0)
-        new_names = {f.name for f in out_fields}
-        return _expand_struct(df, new_names,
-                              run(F.col(lat), F.col(lon), alt_col))
+        return self._forward_tiled(df, lat, lon, alt, level, prefix, fields)
 
     @staticmethod
     def poly_mask_rows(df: DataFrame, polygons, mask_col: str = "poly_mask",
@@ -398,10 +387,6 @@ class Engine:
         """
         from .operators.spatial import _crossings  # avoid cycle at import time
 
-        bc = self._bc
-        sb = self.strict_bounds
-        unit = self.grid.mesh_unit
-        bounds = self._tile_bounds()
         polys = [[(float(a), float(b)) for a, b in ring] for _, ring in polygons]
         if len(polys) > 63:
             raise ValueError(
@@ -412,57 +397,18 @@ class Engine:
              min(p[1] for p in ring), max(p[1] for p in ring))
             for ring in polys
         ]
-        all_fields = [
-            StructField(f"{prefix}lat", DoubleType(), True),
-            StructField(f"{prefix}lon", DoubleType(), True),
-            StructField(f"{prefix}alt", DoubleType(), True),
-        ] + _RESULT_FIELDS + [
-            StructField("meshcode", LongType(), False),
-            StructField("quadkey", LongType(), False),
-            StructField("poly_mask", LongType(), False),
-        ]
-        out_fields = _select_fields(all_fields, fields)
-        names = [f.name for f in out_fields]
-        want_mesh = "meshcode" in names
-        want_quadkey = "quadkey" in names
-        schema = StructType(out_fields)
 
-        @_no_duplicate
-        @F.pandas_udf(schema)
-        def run(lat_s: pd.Series, lon_s: pd.Series, alt_s: pd.Series) -> pd.DataFrame:
-            grid = bc.value
-            la = lat_s.to_numpy(dtype=np.float64, na_value=np.nan)
-            lo = lon_s.to_numpy(dtype=np.float64, na_value=np.nan)
-            al = alt_s.to_numpy(dtype=np.float64, na_value=np.nan)
-            out_la, out_lo, out_al, c = kernel.forward(la, lo, al, grid, strict_bounds=sb)
-            cols: dict = {
-                f"{prefix}lat": out_la,
-                f"{prefix}lon": out_lo,
-                f"{prefix}alt": out_al,
-                "status": c.status.astype(np.int32),
-                "err_meshcode": c.err_meshcode,
-                "err_corner": c.err_corner.astype(np.int32),
-            }
-            if want_mesh:
-                lat_d, lon_d, valid = mesh.point_to_digits(out_la, out_lo, unit, bounds)
-                code = mesh.digits_to_meshcode(lat_d, lon_d)
-                cols["meshcode"] = np.where(valid, code, -1)
-            if want_quadkey:
-                cols["quadkey"] = mesh.quadkey(out_la, out_lo, level)
+        def poly_mask(la, lo):
             mask = np.zeros(la.shape[0], dtype=np.int64)
             for i, (ring, (la0, la1, lo0, lo1)) in enumerate(zip(polys, bboxes)):
-                cand = (out_la >= la0) & (out_la <= la1) & (out_lo >= lo0) & (out_lo <= lo1)
+                cand = (la >= la0) & (la <= la1) & (lo >= lo0) & (lo <= lo1)
                 if cand.any():
                     h = np.zeros(la.shape[0], dtype=bool)
-                    h[cand] = _crossings(out_la[cand], out_lo[cand], ring) == 1
+                    h[cand] = _crossings(la[cand], lo[cand], ring) == 1
                     mask |= h.astype(np.int64) << i
-            cols["poly_mask"] = mask
-            return pd.DataFrame({n: cols[n] for n in names})
+            return mask
 
-        alt_col = F.col(alt) if alt is not None and alt in df.columns else F.lit(0.0)
-        new_names = {f.name for f in out_fields}
-        return _expand_struct(df, new_names,
-                              run(F.col(lat), F.col(lon), alt_col))
+        return self._forward_tiled(df, lat, lon, alt, level, prefix, fields, poly_mask)
 
     def roundtrip_verify(self, df: DataFrame, lat: str = "lat", lon: str = "lon",
                          alt: str | None = "alt") -> DataFrame:
@@ -475,8 +421,7 @@ class Engine:
         round-trip identity tests, trans.rs:1628-1644, as a streaming
         column instead of a test suite).
         """
-        bc = self._bc
-        sb = self.strict_bounds
+        bc, sb = self._bc, self.strict_bounds
 
         # TWO independent UDF structs so Catalyst can drop the one a
         # downstream projection never reads (it cannot prune fields
@@ -489,16 +434,6 @@ class Engine:
         # of five columns; a consumer reading everything runs both
         # kernels (the duplicated forward+backward compute costs ~0.3
         # us/row — far below the Arrow write it would take to share).
-        verdict_schema = StructType([
-            StructField("roundtrip_exact", BooleanType(), True),
-            StructField("status", IntegerType(), False),
-        ])
-        coords_schema = StructType([
-            StructField("out_lat", DoubleType(), True),
-            StructField("out_lon", DoubleType(), True),
-            StructField("out_alt", DoubleType(), True),
-        ])
-
         def _run(la, lo, al):
             grid = bc.value
             f_la, f_lo, f_al, fc = kernel.forward(la, lo, al, grid, strict_bounds=sb)
@@ -507,39 +442,24 @@ class Engine:
             exact = (b_la == la) & (b_lo == lo) & (status == 0)
             return f_la, f_lo, f_al, exact, status
 
-        def _np(s: pd.Series) -> np.ndarray:
-            return s.to_numpy(dtype=np.float64, na_value=np.nan)
+        def coords(want, la, lo, al):
+            return _coord_cols("out_", *_run(la, lo, al)[:3]), None
 
-        @_no_duplicate
-        @F.pandas_udf(verdict_schema)
-        def run_verdict(lat_s: pd.Series, lon_s: pd.Series) -> pd.DataFrame:
+        def verdict(want, la, lo):
             # the verdict is altitude-free (status comes from the
             # lat/lon cell resolves, exactness from the lat/lon bit
             # compare; altitude is a pure passthrough sum), so this
             # UDF does not reference the alt column and a
             # guardrail-only consumer ships 2 input doubles, not 3
-            la = _np(lat_s)
-            _, _, _, exact, status = _run(la, _np(lon_s), np.zeros(la.shape[0]))
-            return pd.DataFrame({"roundtrip_exact": exact, "status": status})
+            _, _, _, exact, status = _run(la, lo, np.zeros(la.shape[0]))
+            return {"roundtrip_exact": exact, "status": status}, None
 
-        @_no_duplicate
-        @F.pandas_udf(coords_schema)
-        def run_coords(lat_s: pd.Series, lon_s: pd.Series, alt_s: pd.Series) -> pd.DataFrame:
-            f_la, f_lo, f_al, _, _ = _run(_np(lat_s), _np(lon_s), _np(alt_s))
-            return pd.DataFrame({"out_lat": f_la, "out_lon": f_lo, "out_alt": f_al})
-
-        alt_col = F.col(alt) if alt is not None and alt in df.columns else F.lit(0.0)
-        kept = [c for c in df.columns
-                if c not in {"out_lat", "out_lon", "out_alt", "roundtrip_exact", "status"}]
-        tmp_c, tmp_v = "_rc", "_rv"
-        while tmp_c in df.columns:
-            tmp_c += "_"
-        while tmp_v in df.columns:
-            tmp_v += "_"
-        return (
-            df.withColumn(tmp_c, run_coords(F.col(lat), F.col(lon), alt_col))
-            .withColumn(tmp_v, run_verdict(F.col(lat), F.col(lon)))
-            .select(*kept, f"{tmp_c}.*", f"{tmp_v}.*")
+        verdict_fields = [StructField("roundtrip_exact", BooleanType(), True),
+                          StructField("status", IntegerType(), False)]
+        return _expand_struct(
+            df,
+            _kernel_udf(coords, _coord_fields("out_"))(df, lat, lon, alt),
+            _kernel_udf(verdict, verdict_fields)(df, lat, lon),
         )
 
     # -- validation (pure Column, JVM-side) -------------------------------

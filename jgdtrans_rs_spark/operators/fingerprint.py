@@ -1,8 +1,8 @@
 """Perceptual fingerprints: the bridge from the multimodal decode
 family to the dedup family.
 
-A 100-TB crawl deduplicates images and audio the same way it
-deduplicates text — fingerprint every payload once, then find
+A 100-TB crawl deduplicates images the same way it deduplicates
+text — fingerprint every payload once, then find
 near-duplicate pairs with a banded equi-join, never all-pairs.  This
 module supplies both halves:
 
@@ -10,24 +10,16 @@ module supplies both halves:
   from scratch: luma -> area-resize -> (for pHash) an orthonormal 2-D
   DCT-II (the forward twin of the separable DCT-III IDCT already in
   ``decode_jpeg_np``) -> sign bits packed into one 64-bit word.
-* ``audio_fp64_np`` — a spectral hash for waveforms: from-scratch
-  Hann-windowed STFT (``stft_mag_np``), mean band ENERGY over an 8x8
-  time-band grid, one bit per cell against the grid's global mean
-  (the threshold choice is measured, see the function docstring).
-  Both sides of every comparison scale together, so the hash is
-  invariant to global amplitude scaling (volume normalization must
-  not break dedup).
-* ``image_fingerprints`` / ``audio_fingerprints`` — the pipeline
-  stage: ONE vectorized Arrow kernel per modality that sniffs,
-  decodes (via the from-scratch decoder family in
+* ``image_fingerprints`` — the pipeline stage: ONE vectorized Arrow
+  kernel that sniffs, decodes (via the from-scratch decoder family in
   ``operators.multimodal``) and hashes each payload in a single pass;
   undecodable payloads keep NULL hashes (errors are data).
-* ``hamming_pairs`` — the generic banded-Hamming self-join both
-  modalities (and any other 64-bit fingerprint) feed, the same
+* ``hamming_pairs`` — the generic banded-Hamming self-join image
+  hashes (and any other 64-bit fingerprint) feed, the same
   pigeonhole design as the text simhash pairs
   (plans/webops.simhash_pairs_from) but in pure DataFrame ops because
   the hashes come from a Python kernel, not SQL.  Its output feeds
-  ``operators.dedup.dedup_components`` unchanged, so image/audio
+  ``operators.dedup.dedup_components`` unchanged, so image
   near-dup clustering is the same end-to-end composition as text.
 
 Scale notes (the round-5 simhash lesson applied from the start): with
@@ -46,17 +38,13 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (ArrayType, DoubleType, IntegerType,
-                               LongType, StringType, StructField,
-                               StructType)
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from .multimodal import IMAGE_KERNELS, decode_wav_np, sniff_image_format
+from .multimodal import IMAGE_KERNELS, sniff_image_format
 
 __all__ = [
     "to_gray_np", "area_resize2d_np", "phash64_np", "dhash64_np",
-    "stft_mag_np", "audio_fp64_np", "image_fingerprints",
-    "audio_fingerprints", "video_fingerprints", "hamming_pairs",
-    "video_pairs", "hamming_topk", "audio_spectrogram",
+    "image_fingerprints", "hamming_pairs",
 ]
 
 # BT.601 luma weights — the same constants the JFIF YCbCr->RGB step in
@@ -149,68 +137,6 @@ def dhash64_np(img: np.ndarray):
     return _pack_bits64(r[:, 1:] > r[:, :-1])
 
 
-def stft_mag_np(x: np.ndarray, n_fft: int = 256, hop: int = 128) -> np.ndarray:
-    """Magnitude STFT from scratch: Hann window (0.5 - 0.5 cos),
-    hop-strided frames, ``np.fft.rfft`` -> (n_frames, n_fft//2 + 1)
-    float64.  Inputs shorter than one frame are zero-padded to a
-    single frame."""
-    x = np.asarray(x, dtype=np.float64)
-    if x.size < n_fft:
-        x = np.pad(x, (0, n_fft - x.size))
-    win = 0.5 - 0.5 * np.cos(2 * np.pi * np.arange(n_fft) / n_fft)
-    frames = np.lib.stride_tricks.sliding_window_view(x, n_fft)[::hop]
-    return np.abs(np.fft.rfft(frames * win, axis=1))
-
-
-def _mono_energy_grid(samples, n_channels: int, n_time: int,
-                      n_bands: int):
-    """Shared spectral stage of ``audio_fp64_np`` and
-    ``audio_spectrogram``: mono mixdown -> ``stft_mag_np`` -> energy
-    (DC bin dropped) -> area-resize to (n_time, n_bands).  Returns
-    None for empty/ragged input so both consumers dead-letter
-    identically — one definition, so the hash and the feature surface
-    cannot drift apart."""
-    if samples is None:
-        return None
-    s = np.asarray(samples, dtype=np.float64)
-    if s.size == 0 or n_channels is None or n_channels <= 0 \
-            or s.size % int(n_channels):
-        return None
-    mono = s.reshape(-1, int(n_channels)).mean(axis=1)
-    energy = stft_mag_np(mono)[:, 1:] ** 2
-    return area_resize2d_np(energy, n_time, n_bands)
-
-
-def audio_fp64_np(samples: np.ndarray, n_channels: int = 1):
-    """64-bit spectral fingerprint for a waveform: mono mixdown ->
-    ``stft_mag_np`` -> ENERGY (magnitude squared, DC bin dropped) ->
-    area-resize to an 8 (time) x 8 (band) grid of mean band energies
-    -> one bit per cell: energy above the grid's global mean.
-
-    The energy/global-mean combination is the part that matters,
-    arrived at by measuring alternatives on tonal, chirp, and shaped-
-    noise clips: (a) neighbor-gradient or median-split codes spend
-    most bits comparing leakage floor against leakage floor for
-    sparse spectra — sign-of-noise that a 1%-noise re-encode flips
-    wholesale (measured 29/64 bits); (b) any threshold involving the
-    grid MINIMUM moves whenever the floor moves, which is exactly
-    what dither/quantization changes; (c) band-averaging LOG
-    magnitudes dilutes a tone's peak into its band's floor bins and
-    compresses the grid's dynamic range to nothing.  Mean energy per
-    cell keeps peaks dominant (a single hot bin holds its band ~12 dB
-    under the raw peak, not ~50), and the global mean is peak-
-    dominated for sparse material (floor cells sit stably far below)
-    while splitting broadband material on its spectral envelope;
-    silent time blocks sit stably below a mean set by the loud
-    blocks.  Both sides of every comparison scale together, so a
-    re-normalized (gain-adjusted) copy of a clip fingerprints
-    identically.  Returns signed int64, or None for empty input."""
-    grid = _mono_energy_grid(samples, n_channels, 8, 8)
-    if grid is None:
-        return None
-    return _pack_bits64(grid > grid.mean())
-
-
 def image_fingerprints(df: DataFrame, col: str = "html",
                        out: str = "image_fp") -> DataFrame:
     """Fingerprint a mixed-format image column in ONE vectorized Arrow
@@ -253,119 +179,9 @@ def image_fingerprints(df: DataFrame, col: str = "html",
     return df.withColumn(out, fps(F.col(col)))
 
 
-def audio_fingerprints(df: DataFrame, col: str = "html",
-                       out: str = "audio_fp") -> DataFrame:
-    """The audio twin of ``image_fingerprints``: decode RIFF/WAVE
-    (``decode_wav_np``) and emit struct(sample_rate, n_frames, afp)
-    in one Arrow pass; undecodable payloads yield NULL fields."""
-    schema = StructType([
-        StructField("sample_rate", IntegerType(), True),
-        StructField("n_frames", IntegerType(), True),
-        StructField("afp", LongType(), True),
-    ])
-
-    @F.pandas_udf(schema)
-    def fps(data: pd.Series) -> pd.DataFrame:
-        rates, frames, fp = [], [], []
-        for payload in data:
-            # same per-payload guard as image_fingerprints: a hash
-            # kernel exception dead-letters the row, never the batch
-            try:
-                dec = decode_wav_np(payload)
-            except Exception:
-                dec = None
-            if dec is None:
-                rates.append(None), frames.append(None), fp.append(None)
-            else:
-                rate, mat = dec
-                try:
-                    h = audio_fp64_np(mat.ravel(), mat.shape[1])
-                except Exception:
-                    h = None
-                rates.append(rate), frames.append(mat.shape[0])
-                fp.append(h)
-        return pd.DataFrame({"sample_rate": rates, "n_frames": frames,
-                             "afp": fp})
-
-    return df.withColumn(out, fps(F.col(col)))
-
-
-def audio_spectrogram(df: DataFrame, audio_col: str = "audio",
-                      n_time: int = 16, n_bands: int = 16,
-                      out: str = "spectrogram") -> DataFrame:
-    """Fixed-size log-energy spectrogram features from a decoded
-    ``multimodal.decode_audio`` struct: mono mixdown -> ``stft_mag_np``
-    -> energy (DC dropped) -> area-resize to (n_time, n_bands) ->
-    log1p -> row-major flattened array of length n_time*n_bands.
-
-    This is the dense FEATURE surface next to ``audio_fp64_np``'s
-    64-bit hash — the fixed-shape input an audio classifier or
-    embedding stage consumes, the audio analogue of the image
-    ``resize_bytes``/``decode_image`` pair.  NULL audio (decode dead
-    letter) and empty waveforms yield NULL, propagating the
-    errors-are-data contract."""
-
-    @F.pandas_udf(ArrayType(DoubleType()))
-    def feats(samples: pd.Series, chans: pd.Series) -> pd.Series:
-        outs = []
-        for s, c in zip(samples, chans):
-            try:
-                grid = _mono_energy_grid(s, c, n_time, n_bands)
-                outs.append(None if grid is None
-                            else np.log1p(grid).ravel())
-            except Exception:
-                outs.append(None)
-        return pd.Series(outs)
-
-    return df.withColumn(out, feats(F.col(f"{audio_col}.samples"),
-                                    F.col(f"{audio_col}.n_channels")))
-
-
-def video_fingerprints(df: DataFrame, col: str = "html",
-                       n_frames: int = 8,
-                       out: str = "video_fp") -> DataFrame:
-    """The video arm of the fingerprint family: decode an animated
-    GIF (the one multi-frame format this sandbox decodes from
-    scratch), sample ``n_frames`` evenly spaced composited frames
-    (the same ``(k*avail)//n`` spacing law as
-    ``multimodal.decode_video_frames``), and dHash EACH sampled frame
-    -> struct(n_frames_total, frame_hashes array<long>).  A video's
-    identity is its frame-hash set, so near-dup detection works on
-    re-encodes, clips, and re-muxes without ever comparing pixels
-    across payloads; undecodable payloads yield NULL fields.  Feed
-    the result to ``video_pairs``."""
-    from .multimodal import decode_gif_np, even_frame_picks
-
-    schema = StructType([
-        StructField("n_frames_total", IntegerType(), True),
-        StructField("frame_hashes", ArrayType(LongType()), True),
-    ])
-
-    @F.pandas_udf(schema)
-    def fps(data: pd.Series) -> pd.DataFrame:
-        totals, hashes = [], []
-        for payload in data:
-            try:
-                got = decode_gif_np(payload, with_total=True)
-                if got is None or not got[0]:
-                    raise ValueError
-                frames, total = got
-                picks = even_frame_picks(len(frames), n_frames)
-                hs = [dhash64_np(frames[i]) for i in picks]
-            except Exception:
-                total, hs = None, None
-            totals.append(total)
-            hashes.append(hs)
-        return pd.DataFrame({"n_frames_total": totals,
-                             "frame_hashes": hashes})
-
-    return df.withColumn(out, fps(F.col(col)))
-
-
 def _banded(rel: DataFrame, fp_field: str, n_bands: int) -> DataFrame:
     """Explode a LONG fingerprint column into (band, band_key) rows —
-    the shared candidate-generation step of ``hamming_pairs`` and
-    ``video_pairs``.  Integer-space extraction: arithmetic shiftright
+    the candidate-generation step of ``hamming_pairs``.  Integer-space extraction: arithmetic shiftright
     plus mask is exact for negative (bit-63-set) hashes."""
     band_bits = 64 // n_bands
     mask = (1 << band_bits) - 1
@@ -384,117 +200,6 @@ def _check_band_geometry(tau: int, n_bands: int) -> None:
         raise ValueError("bands must divide 64 bits evenly")
     if tau > n_bands - 1:
         raise ValueError("pigeonhole guarantee needs tau <= n_bands - 1")
-
-
-def video_pairs(df: DataFrame, id_col: str = "doc_id",
-                hashes_col: str = "frame_hashes", tau: int = 2,
-                min_matches: int = 2, n_bands: int = 4) -> DataFrame:
-    """Near-duplicate video pairs over ``video_fingerprints`` output:
-    (id_a, id_b, matched_a, matched_b, n_frames_a, n_frames_b) where
-    matched_x counts the DISTINCT sampled frame slots of side x with
-    at least one Hamming-``tau`` partner frame on the other side.
-
-    Candidates come from the same banded equi-join as
-    ``hamming_pairs``, applied per FRAME hash — so a clip, a
-    re-encode, or a re-mux of a video collides with it through any
-    shared frame, never via all-pairs.  Pairs are emitted when
-    ``greatest(matched_a, matched_b) >= least(min_matches,
-    n_frames_a, n_frames_b)``: a true re-encode matches on (almost)
-    every sampled slot of both sides, a clip saturates the shorter
-    side's count, and the clamp keeps videos with FEWER sampled
-    frames than ``min_matches`` pairable at all — without it two
-    identical single-frame GIFs could never reach 2 matched slots and
-    exact duplicates would silently drop.  Callers wanting symmetric
-    near-dup only can post-filter on ``least(matched_a, matched_b)``;
-    the slot counts make the containment direction auditable.
-
-    100 TB design: one explode (n_frames x n_bands rows per video,
-    both small constants), one keyed shuffle join on
-    (band, band_key), one groupBy on the pair key.  The fingerprint
-    projection is localCheckpoint-ed for the same
-    decode-once-per-side reason as ``hamming_pairs``."""
-    _check_band_geometry(tau, n_bands)
-    fp = (df.select(F.col(id_col).alias("_id"),
-                    F.col(hashes_col).alias("_fhs"))
-            .where(F.col(hashes_col).isNotNull() & (F.size(hashes_col) > 0))
-            .localCheckpoint())
-    frames = fp.select(
-        "_id", F.size("_fhs").alias("_n"),
-        F.posexplode("_fhs").alias("_slot", "_fh"),
-    ).where(F.col("_fh").isNotNull())
-    bands = _banded(frames, "_fh", n_bands)
-    x, y = bands.alias("x"), bands.alias("y")
-    cand = (
-        x.join(y, (F.col("x._b") == F.col("y._b"))
-               & (F.col("x._k") == F.col("y._k"))
-               & (F.col("x._id") < F.col("y._id")))
-        .select(F.col("x._id").alias("id_a"), F.col("y._id").alias("id_b"),
-                F.col("x._n").alias("n_frames_a"),
-                F.col("y._n").alias("n_frames_b"),
-                F.col("x._slot").alias("_sa"), F.col("y._slot").alias("_sb"),
-                F.col("x._fh").alias("_ha"), F.col("y._fh").alias("_hb"))
-        .where(F.bit_count(F.col("_ha").bitwiseXOR(F.col("_hb"))) <= tau)
-        .distinct()
-    )
-    return (
-        cand.groupBy("id_a", "id_b", "n_frames_a", "n_frames_b")
-        .agg(F.countDistinct("_sa").cast("int").alias("matched_a"),
-             F.countDistinct("_sb").cast("int").alias("matched_b"))
-        .where(F.greatest("matched_a", "matched_b")
-               >= F.least(F.lit(min_matches), F.col("n_frames_a"),
-                          F.col("n_frames_b")))
-        .select("id_a", "id_b", "matched_a", "matched_b",
-                "n_frames_a", "n_frames_b")
-    )
-
-
-def hamming_topk(df: DataFrame, queries: DataFrame, k: int = 5,
-                 id_col: str = "doc_id", fp_col: str = "fp",
-                 q_id_col: str = "query_id", tau: int = 3,
-                 n_bands: int = 4) -> DataFrame:
-    """Top-k Hamming search: for each query fingerprint, the ``k``
-    nearest corpus fingerprints WITHIN radius ``tau`` ->
-    (query_id, doc_id, hamming, rank) — the binary-code member of the
-    similarity family (cosine top-k lives in operators/similarity).
-
-    Same coverage guarantee as ``hamming_pairs``: candidates come
-    from the banded equi-join, so every corpus item within Hamming
-    ``tau <= n_bands - 1`` of a query is guaranteed found; this is
-    radius-bounded search (the near-duplicate regime), not
-    unbounded nearest-neighbor — a query with nothing inside the
-    radius returns no rows, by design.
-
-    100 TB plan: the QUERY side is banded and **broadcast**, so the
-    corpus is probed map-side — zero shuffle of the corpus table; the
-    only wide operation is the per-query top-k window over verified
-    candidates (bounded by the radius, tiny).  Ties break
-    deterministically on (hamming, doc_id).  The ranking is keyed on
-    (query_id, fingerprint): if ``queries`` carries the same id with
-    two DIFFERENT fingerprints, each fingerprint gets its own
-    independent correct top-k (the rows share the id) instead of the
-    two candidate sets silently merging into one corrupted ranking."""
-    _check_band_geometry(tau, n_bands)
-    corpus = (df.select(F.col(id_col).alias("_id"),
-                        F.col(fp_col).cast("long").alias("_fp"))
-                .where(F.col(fp_col).isNotNull()))
-    qs = (queries.select(F.col(q_id_col).alias("_qid"),
-                         F.col(fp_col).cast("long").alias("_qfp"))
-                 .where(F.col(fp_col).isNotNull()))
-    c_bands = _banded(corpus, "_fp", n_bands)
-    q_bands = F.broadcast(_banded(qs, "_qfp", n_bands))
-    ham = F.bit_count(F.col("_fp").bitwiseXOR(F.col("_qfp")))
-    cand = (
-        c_bands.join(q_bands, ["_b", "_k"])
-        .select("_qid", "_qfp", "_id", ham.cast("int").alias("hamming"))
-        .where(F.col("hamming") <= tau)
-        .distinct()
-    )
-    from pyspark.sql import Window
-    w = Window.partitionBy("_qid", "_qfp").orderBy("hamming", "_id")
-    return (cand.withColumn("rank", F.row_number().over(w))
-                .where(F.col("rank") <= k)
-                .select(F.col("_qid").alias(q_id_col),
-                        F.col("_id").alias(id_col), "hamming", "rank"))
 
 
 def hamming_pairs(df: DataFrame, id_col: str = "doc_id",

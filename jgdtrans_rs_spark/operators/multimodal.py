@@ -1,10 +1,10 @@
 """Multimodal (binary) column operators.
 
 Treats image/audio/video/html payloads as opaque ``binary`` columns
-with typed metadata, per the training-data-pipeline requirements:
+with typed metadata, per the training-data-pipeline requirements (the
+Column-only payload tagger ``binary_meta`` lives in
+``sources/pages.py``):
 
-* ``binary_meta`` — pure Column metadata (byte length, magic prefix,
-  modality guess): JVM-side, codegen, pushes down.
 * ``byte_histogram_features`` — deterministic feature extraction from
   raw bytes (16-bucket normalized histogram) as a vectorized Arrow
   kernel: the real Spark-side plumbing (schema, batching, UDF
@@ -45,35 +45,6 @@ from pyspark.sql.types import (ArrayType, DoubleType, IntegerType, LongType,
                                StringType, StructField, StructType)
 
 N_BUCKETS = 16
-
-
-def binary_meta(df: DataFrame, col: str = "html") -> DataFrame:
-    """Adds n_bytes / magic / modality columns (pure Column ops)."""
-    b = F.col(col)
-    # ISO-8859-1 maps every byte, so arbitrary binary never throws
-    # (ANSI decode errors on invalid UTF-8)
-    magic = F.decode(F.substring(b, 1, 6), "ISO-8859-1")
-    # RIFF is a CONTAINER magic shared by WAV, WebP, and AVI: the form
-    # type at bytes 9-12 decides the modality (routing every RIFF to
-    # the audio path silently NULLed the very common WebP payloads)
-    riff_form = F.decode(F.substring(b, 9, 4), "ISO-8859-1")
-    modality = (
-        F.when(magic.startswith("<html"), "html")
-        .when(magic.startswith("\x89PNG"), "image/png")
-        .when(magic.startswith("\xff\xd8"), "image/jpeg")
-        .when(magic.startswith("GIF8"), "image/gif")
-        .when(magic.startswith("BM"), "image/bmp")
-        .when(magic.rlike("^P[2356][ \t\r\n]"), "image/pnm")
-        .when(magic.startswith("II*\x00") | magic.startswith("MM\x00*"),
-              "image/tiff")
-        .when(magic.startswith("RIFF") & (riff_form == "WAVE"), "audio/wav")
-        .when(magic.startswith("RIFF") & (riff_form == "WEBP"), "image/webp")
-        .when(magic.startswith("RIFF") & (riff_form == "AVI "), "video/avi")
-        .otherwise("unknown")
-    )
-    return df.withColumn("n_bytes", F.length(b).cast("long")) \
-             .withColumn("magic", magic) \
-             .withColumn("modality", modality)
 
 
 def byte_histogram_features(df: DataFrame, col: str = "html",
@@ -1228,7 +1199,7 @@ def audio_frame_features(df: DataFrame, audio_col: str = "audio",
 
 def sniff_image_format(buf: bytes):
     """Magic-byte sniff for the still-image router (the python twin of
-    ``binary_meta``'s Column-space modality map)."""
+    ``sources.pages.binary_meta``'s Column-space modality map)."""
     if buf is None or len(buf) < 2:
         return None
     head = bytes(buf[:8])
@@ -1249,11 +1220,9 @@ def sniff_image_format(buf: bytes):
 
 
 def even_frame_picks(avail: int, n_frames: int) -> list:
-    """THE evenly-spaced sampling law — ``(k*avail)//n_frames`` for k
-    in [0, n_frames), deduplicated and sorted.  One definition shared
-    by ``decode_video_frames`` and
-    ``fingerprint.video_fingerprints`` so the decode surface and the
-    fingerprint surface can never sample different frames."""
+    """The evenly-spaced sampling law of ``decode_video_frames`` —
+    ``(k*avail)//n_frames`` for k in [0, n_frames), deduplicated and
+    sorted."""
     return sorted({(k * avail) // n_frames for k in range(n_frames)})
 
 

@@ -8,7 +8,9 @@ derives identical rows from identical inputs; no external data.
 The geotag rides inside ``html`` as a ``geo.position`` meta tag;
 ``extract_geotags`` recovers (lat, lon) and the body text with pure
 Column regexes (JVM-side, whole-stage codegen) — the per-row invariant
-is byte-identical extracted ``text`` per ``url``.
+is byte-identical extracted ``text`` per ``url``.  ``binary_meta``
+tags the raw payload column with its length, magic prefix and
+modality, also as pure Column ops.
 
 At 100 TB scale this module's real-world counterpart is an Iceberg
 scan (``spark.read.format("iceberg")``); the sandbox substitutes
@@ -121,3 +123,31 @@ def extract_geotags(pages: DataFrame) -> DataFrame:
         F.regexp_extract(doc, geo, 1).try_cast("double").alias("lat"),
         F.regexp_extract(doc, geo, 2).try_cast("double").alias("lon"),
     )
+
+
+def binary_meta(df: DataFrame, col: str = "html") -> DataFrame:
+    """Adds n_bytes / magic / modality columns (pure Column ops)."""
+    b = F.col(col)
+    # ISO-8859-1 maps every byte, so arbitrary binary never throws
+    # (ANSI decode errors on invalid UTF-8)
+    magic = F.decode(F.substring(b, 1, 6), "ISO-8859-1")
+    # RIFF is a CONTAINER magic shared by WAV, WebP, and AVI: the form
+    # type at bytes 9-12 decides the modality
+    riff_form = F.decode(F.substring(b, 9, 4), "ISO-8859-1")
+    modality = (
+        F.when(magic.startswith("<html"), "html")
+        .when(magic.startswith("\x89PNG"), "image/png")
+        .when(magic.startswith("\xff\xd8"), "image/jpeg")
+        .when(magic.startswith("GIF8"), "image/gif")
+        .when(magic.startswith("BM"), "image/bmp")
+        .when(magic.rlike("^P[2356][ \t\r\n]"), "image/pnm")
+        .when(magic.startswith("II*\x00") | magic.startswith("MM\x00*"),
+              "image/tiff")
+        .when(magic.startswith("RIFF") & (riff_form == "WAVE"), "audio/wav")
+        .when(magic.startswith("RIFF") & (riff_form == "WEBP"), "image/webp")
+        .when(magic.startswith("RIFF") & (riff_form == "AVI "), "video/avi")
+        .otherwise("unknown")
+    )
+    return df.withColumn("n_bytes", F.length(b).cast("long")) \
+             .withColumn("magic", magic) \
+             .withColumn("modality", modality)

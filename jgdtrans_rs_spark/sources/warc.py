@@ -437,7 +437,7 @@ def stream_read_warc(spark: SparkSession, path: str,
     the same recovery contract proven for the pages stream), and the
     record stage is the identical stateless mapInPandas as batch.
     Downstream composition is unchanged: filter ok responses, extract,
-    transform, or feed ``stream_dedup_media`` — all stateless or
+    transform, or feed ``stream_dedup_exact`` — all stateless or
     watermark-bounded."""
     # streaming sources require an explicit schema; binaryFile's is fixed
     bf_schema = ("path string, modificationTime timestamp, "

@@ -127,9 +127,8 @@ def stream_dedup_exact(pages_stream: DataFrame, text_col: str = "text",
     state forever on an unbounded crawl)."""
     # NULL text (extraction dead letters) would md5 to NULL, and
     # dropDuplicates* treats NULL as ONE grouping value — every dead
-    # letter after the first would be swallowed (the same NULL-key
-    # hazard stream_dedup_media documents); the surrogate keeps each
-    # distinct dead-letter row alive
+    # letter after the first would be swallowed; the surrogate keeps
+    # each distinct dead-letter row alive
     key = F.coalesce(F.md5(F.col(text_col)),
                      _surrogate_key("dead", [*id_cols, ts_col]))
     return (
@@ -138,73 +137,4 @@ def stream_dedup_exact(pages_stream: DataFrame, text_col: str = "text",
         .withColumn("digest", key)
         .withWatermark(ts_col, watermark)
         .dropDuplicatesWithinWatermark(["digest"])
-    )
-
-
-def stream_decode_media(pages_stream: DataFrame,
-                        col: str = "html") -> DataFrame:
-    """Streaming twin of the mixed-corpus image router: decode each
-    arriving payload by its sniffed container (operators/multimodal.
-    decode_any — the same Arrow-batched UDF as batch, stateless, so
-    the plan shape carries over unchanged) and surface the decode
-    outcome as columns.  Dead letters stay visible: ``decode_status``
-    is 'ok' / 'corrupt' (container recognized, decode failed) /
-    'unknown' (no recognized magic), the streaming face of the
-    engine-wide errors-are-data contract."""
-    from ..operators import multimodal
-
-    decoded = multimodal.decode_any(pages_stream, col, out="image")
-    img = F.col("image")
-    return decoded.withColumn(
-        "decode_status",
-        F.when(img["pixels"].isNotNull(), "ok")
-        .when(img["format"].isNotNull(), "corrupt")
-        .otherwise("unknown"),
-    )
-
-
-def stream_dedup_media(pages_stream: DataFrame, col: str = "html",
-                       ts_col: str = "warc_ts",
-                       watermark: str = "24 hours",
-                       id_cols: tuple = ("url",)) -> DataFrame:
-    """Perceptual dedup-on-arrival: the media twin of
-    ``stream_dedup_exact``.  Each arriving payload is fingerprinted
-    (operators/fingerprint.image_fingerprints — the same stateless
-    Arrow kernel as batch, so the plan shape carries over), then
-    ``dropDuplicatesWithinWatermark`` keys on the pHash: a re-encoded
-    or lightly-recompressed copy of an image that already arrived
-    within the watermark horizon is dropped even though its BYTES
-    differ (an md5 digest would keep it).  State holds one 8-byte
-    hash per image per horizon — bounded, and ~100x smaller rows than
-    keeping digests of the payloads themselves.
-
-    Dead letters pass through: undecodable payloads have NULL phash,
-    and dropDuplicates* treats NULL as a grouping value — every dead
-    letter after the first would be silently swallowed if the NULLs
-    entered the state as one key — so the dedup keys on a surrogate:
-    the phash when it exists, else a per-row 'dead:<id cols>:<ts>'
-    string built from ``id_cols``.  Two corrupt rows only collapse if
-    they agree on every id column AND the timestamp, i.e. when they
-    are the same record.  (A split-into-two-streams + union design
-    keeps dead letters too, but each union branch re-executes the
-    fingerprint UDF over every row — the decode stage is the
-    expensive one, and streaming plans cannot localCheckpoint the
-    shared stage — so the surrogate key does it in ONE decode pass.)
-    Exact-Hamming matches only — banded NEAR-dup needs a self-join,
-    which is the batch ``hamming_pairs`` path over the sink's
-    fingerprint table."""
-    from ..operators import fingerprint as fng
-
-    return (
-        fng.image_fingerprints(
-            pages_stream.withColumn(ts_col, _event_time(ts_col)), col)
-        .select("*", F.col("image_fp.phash").alias("phash"))
-        .withColumn(
-            "_dedup_key",
-            F.coalesce(
-                F.col("phash").cast("string"),
-                _surrogate_key("dead", [*id_cols, ts_col])))
-        .withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark(["_dedup_key"])
-        .drop("_dedup_key")
     )

@@ -3,6 +3,7 @@ DataFrame kernels vs numpy, spatial operators, checkpoint/resume,
 streaming smoke."""
 
 import os
+import re
 
 import numpy as np
 import pytest
@@ -476,28 +477,34 @@ def test_streaming_watermark_finalizes_windows(spark, tmp_path):
     assert hours == [5], hours  # 10/11/12 windows not yet finalized
 
 
-def test_transform_tile_pip_fields_pruning(engine, points):
-    """fields= must (a) reject unknown names, (b) enforce the 63-bit
-    mask bound, (c) produce values identical to the full output on the
-    kept columns."""
+@pytest.mark.parametrize("op", ["transform_tile_pip", "transform_and_tile"])
+def test_fused_fields_pruning(engine, points, op):
+    """fields= must (a) reject unknown names, (b) emit the kept fields
+    in the caller's order, (c) produce values identical to the full
+    output on the kept columns; transform_tile_pip must also (d)
+    enforce the 63-bit mask bound."""
     import __spark_entry__ as entry_mod
 
     polys = entry_mod.POLYGONS
+    pip = op == "transform_tile_pip"
+    args = (polys,) if pip else ()
+    run = getattr(engine, op)
     with pytest.raises(ValueError, match="unknown output fields"):
-        engine.transform_tile_pip(points, polys, fields=["nope"])
-    many = [(f"p{i}", polys[0][1]) for i in range(64)]
-    with pytest.raises(ValueError, match="63-bit"):
-        engine.transform_tile_pip(points, many)
+        run(points, *args, fields=["nope"])
+    if pip:
+        many = [(f"p{i}", polys[0][1]) for i in range(64)]
+        with pytest.raises(ValueError, match="63-bit"):
+            engine.transform_tile_pip(points, many)
 
+    kept = ["poly_mask" if pip else "quadkey", "status"]  # not schema order
     pts = points.limit(500)
-    full = engine.transform_tile_pip(pts, polys, "lat", "lon", "alt")
-    pruned = engine.transform_tile_pip(pts, polys, "lat", "lon", "alt",
-                                       fields=["status", "poly_mask"])
-    assert set(pruned.columns) == set(pts.columns) | {"status", "poly_mask"}
-    a = {r.pkey: (r.status, r.poly_mask)
-         for r in full.select("pkey", "status", "poly_mask").collect()}
-    b = {r.pkey: (r.status, r.poly_mask)
-         for r in pruned.select("pkey", "status", "poly_mask").collect()}
+    full = run(pts, *args, "lat", "lon", "alt")
+    pruned = run(pts, *args, "lat", "lon", "alt", fields=kept)
+    assert pruned.columns == pts.columns + kept
+    a = {r.pkey: tuple(r[k] for k in kept)
+         for r in full.select("pkey", *kept).collect()}
+    b = {r.pkey: tuple(r[k] for k in kept)
+         for r in pruned.select("pkey", *kept).collect()}
     assert a == b and len(a) == 500
 
 
@@ -555,25 +562,68 @@ def test_checkpoint_sink_tile_sorted_layout(engine, points, tmp_path):
     assert got == want > 0
 
 
-def test_q4_chain_plan_shape(engine, points):
-    """The headline join chain (pruned fused UDF -> broadcast bit-test
-    join) must plan as: ONE Python stage, a broadcast nested-loop
-    probe, and NO shuffle exchange (broadcast exchange is expected)."""
+def _pip(engine, points):
     import __spark_entry__ as entry_mod
 
-    fused = engine.transform_tile_pip(
-        points, entry_mod.POLYGONS, "lat", "lon", "alt",
-        fields=["status", "poly_mask"])
-    chain = Engine.poly_mask_rows(
-        fused.filter(F.col("status") == 0).select("pkey", "poly_mask"),
+    return engine.transform_tile_pip(points, entry_mod.POLYGONS,
+                                     fields=["status", "poly_mask"])
+
+
+def _q4_chain(engine, points):
+    """The headline join chain: pruned fused UDF -> broadcast bit-test
+    join."""
+    import __spark_entry__ as entry_mod
+
+    return Engine.poly_mask_rows(
+        _pip(engine, points).filter(F.col("status") == 0).select("pkey", "poly_mask"),
         entry_mod.POLYGONS,
     ).select("pkey", "poly_idx")
-    plan = chain._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("ArrowEvalPython") == 1, plan
-    assert "BroadcastNestedLoopJoin" in plan, plan
-    for line in plan.splitlines():
-        if "Exchange" in line:
-            assert "BroadcastExchange" in line, plan
+
+
+_OK = "status = 0"
+# (operator chain, input-column count of every planned kernel UDF)
+_PLAN_CASES = {
+    "forward": (lambda e, p: e.forward(p).filter(_OK).select("pkey", "out_lat"), [3]),
+    "backward": (lambda e, p: e.backward(p).filter(_OK).select("pkey", "out_lon"), [3]),
+    "forward_corr": (lambda e, p: e.forward_corr(p).filter(_OK).select("pkey", "dlat_deg"),
+                     [2]),
+    "assign_tiles": (lambda e, p: e.assign_tiles(p).filter("meshcode != -1")
+                     .select("pkey", "quadkey"), [2]),
+    "transform_and_tile": (lambda e, p: e.transform_and_tile(p).filter(_OK)
+                           .select("pkey", "meshcode"), [3]),
+    "transform_tile_pip": (lambda e, p: _pip(e, p).filter(_OK).select("pkey", "poly_mask"),
+                           [3]),
+    # the verdict UDF reads no altitude; an unread coordinates UDF is
+    # dropped, a read one runs beside it
+    "roundtrip_verdict": (lambda e, p: e.roundtrip_verify(p).filter(_OK)
+                          .select("pkey", "roundtrip_exact"), [2]),
+    "roundtrip_full": (lambda e, p: e.roundtrip_verify(p).filter(_OK)
+                       .select("pkey", "out_lat", "roundtrip_exact"), [2, 3]),
+    "q4_chain": (_q4_chain, [3]),
+}
+
+
+@pytest.mark.parametrize("case", list(_PLAN_CASES))
+def test_kernel_plan_shape(engine, points, case):
+    """Every Engine kernel operator, filtered on its own output and
+    projected, plans each kernel UDF exactly once (_no_duplicate: no
+    copy pushed into the filter) and ships only the 2-3 coordinate
+    columns through Arrow (``points`` is cached, so the UDF arguments
+    print as plain attributes).  The q4 chain additionally plans a
+    broadcast nested-loop probe and NO shuffle exchange."""
+    build, want_inputs = _PLAN_CASES[case]
+    plan = build(engine, points)._jdf.queryExecution().executedPlan().toString()
+    calls = [args
+             for line in plan.splitlines() if "ArrowEvalPython" in line
+             for args in re.findall(r"\w+\(([^()]*)\)#\d+",
+                                    re.search(r"ArrowEvalPython \[(.*?)\], \[", line)[1])]
+    assert sorted(len(a.split(", ")) for a in calls) == want_inputs, plan
+    assert plan.count("ArrowEvalPython") == len(want_inputs), plan
+    if case == "q4_chain":
+        assert "BroadcastNestedLoopJoin" in plan, plan
+        for line in plan.splitlines():
+            if "Exchange" in line:
+                assert "BroadcastExchange" in line, plan
 
 
 def test_expand_struct_preserves_underscore_r_column(engine, spark):
@@ -838,3 +888,20 @@ def test_bucketed_join_rejects_duplicate_poly_ids(spark):
     with pytest.raises(ValueError, match="duplicate poly_id"):
         spatial.bucketed_spatial_join(pts, [("A", ring), ("A", ring)],
                                       unit=1)
+
+
+def test_raster_roundtrip(engine, points, semidyna_grid):
+    """rasterize -> vectorize: every point lies inside its cell's
+    recovered corner geometry."""
+    from jgdtrans_rs_spark.operators import raster
+
+    tiled = engine.assign_tiles(points)
+    r = raster.rasterize(tiled, "alt")
+    v = raster.vectorize(r.select("meshcode"), semidyna_grid.mesh_unit)
+    j = tiled.filter(F.col("meshcode") != -1).join(v, "meshcode")
+    outside = j.filter(
+        (F.col("lat") < F.col("sw_lat")) | (F.col("lat") >= F.col("ne_lat"))
+        | (F.col("lon") < F.col("sw_lon")) | (F.col("lon") >= F.col("ne_lon"))
+    ).count()
+    assert outside == 0
+    assert r.count() > 0

@@ -7,21 +7,16 @@ end-to-end Spark composition (mixed-format corpus -> fingerprints ->
 pairs -> dedup_components clusters).
 """
 
-import os
-
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
-
-_SLOW = os.environ.get("SPARK_GRAFT_SLOW", "")
 
 from jgdtrans_rs_spark.operators import fingerprint as fp
 from jgdtrans_rs_spark.operators.dedup import dedup_components
 from jgdtrans_rs_spark.operators.multimodal import (decode_bmp_np,
                                                     decode_png_np,
                                                     decode_pnm_np)
-from tests.test_multimodal import (_bmp_bytes, _gif_bytes, _png_bytes,
-                                   _wav_bytes)
+from tests.test_multimodal import _bmp_bytes, _png_bytes
 
 
 def _ham(a, b):
@@ -117,56 +112,6 @@ def test_pack_bits64_signed_range():
 
 
 # ---------------------------------------------------------------------------
-# audio fingerprint kernel
-# ---------------------------------------------------------------------------
-
-def _tone(freq, n=16000, rate=16000.0):
-    return np.sin(2 * np.pi * freq * np.arange(n) / rate)
-
-
-def test_audio_fp_distance_separation():
-    rng = np.random.default_rng(7)
-    a0 = _tone(440)
-    near = a0 * 0.3 + rng.normal(0, 0.01, a0.shape)
-    far = _tone(880) + 0.5 * _tone(1760)
-    assert _ham(fp.audio_fp64_np(a0), fp.audio_fp64_np(near)) <= 3
-    assert _ham(fp.audio_fp64_np(a0), fp.audio_fp64_np(far)) >= 6
-    # broadband: same shaping filter far from a differently shaped one
-    lp = np.convolve(rng.normal(0, 1, 16500), np.ones(8) / 8, "valid")[:16000]
-    hp = np.convolve(rng.normal(0, 1, 16500),
-                     np.array([1.0, -1.0] * 4) / 8, "valid")[:16000]
-    assert _ham(fp.audio_fp64_np(lp), fp.audio_fp64_np(lp * 2.5)) == 0
-    assert _ham(fp.audio_fp64_np(lp), fp.audio_fp64_np(hp)) >= 10
-
-
-def test_audio_fp_invariances():
-    a0 = _tone(440)
-    # global gain: exact (both sides of every comparison scale together)
-    assert fp.audio_fp64_np(a0 * 0.25) == fp.audio_fp64_np(a0)
-    # 16-bit quantization (the WAV round trip): exact for a clean tone
-    q = np.round(a0 * 32767) / 32767
-    assert fp.audio_fp64_np(q) == fp.audio_fp64_np(a0)
-    # dual-mono stereo mixdown == the mono clip
-    st = np.stack([a0, a0], axis=1).ravel()
-    assert fp.audio_fp64_np(st, 2) == fp.audio_fp64_np(a0)
-
-
-def test_audio_fp_degenerate():
-    assert fp.audio_fp64_np(None) is None
-    assert fp.audio_fp64_np(np.array([])) is None
-    assert fp.audio_fp64_np(np.arange(5.0), n_channels=2) is None  # ragged
-    assert fp.audio_fp64_np(np.arange(4.0), n_channels=0) is None
-    # shorter than one FFT frame: zero-padded, still hashes
-    assert fp.audio_fp64_np(np.array([0.1, -0.2])) is not None
-
-
-def test_stft_shape():
-    mag = fp.stft_mag_np(np.zeros(1000), n_fft=256, hop=128)
-    assert mag.shape == ((1000 - 256) // 128 + 1, 129)
-    assert fp.stft_mag_np(np.zeros(10)).shape[0] == 1  # padded single frame
-
-
-# ---------------------------------------------------------------------------
 # hamming_pairs vs brute force
 # ---------------------------------------------------------------------------
 
@@ -210,80 +155,6 @@ def test_hamming_pairs_reports_exact_distance(spark):
         [(1, 0), (2, 7), (3, None)], "doc_id long, fp long")
     rows = fp.hamming_pairs(df, "doc_id", "fp", tau=3).collect()
     assert [(r.id_a, r.id_b, r.hamming) for r in rows] == [(1, 2, 3)]
-
-
-def test_hamming_topk_matches_radius_bounded_brute_force(spark):
-    """Within radius tau the banded probe is COMPLETE (pigeonhole),
-    so hamming_topk must EQUAL the brute-force radius-limited top-k —
-    not merely approximate it."""
-    rng = np.random.default_rng(29)
-    corpus = {i: int(rng.integers(-(1 << 63), 1 << 63))
-              for i in range(3000)}
-    queries = {}
-    for qi in range(25):
-        if qi < 15:  # perturbed corpus member, distance 0-3
-            base = corpus[qi * 100]
-            v = base
-            for b in rng.choice(64, size=int(rng.integers(0, 4)),
-                                replace=False):
-                v ^= 1 << int(b)
-            v = v - (1 << 64) if v >= (1 << 63) else \
-                (v + (1 << 64) if v < -(1 << 63) else v)
-            queries[qi] = v
-        else:  # random query — usually nothing in radius
-            queries[qi] = int(rng.integers(-(1 << 63), 1 << 63))
-    cdf = spark.createDataFrame(list(corpus.items()), "doc_id long, fp long")
-    qdf = spark.createDataFrame(list(queries.items()), "query_id long, fp long")
-    got = {}
-    for r in fp.hamming_topk(cdf, qdf, k=5, tau=3).collect():
-        got.setdefault(r.query_id, []).append((r.rank, r.doc_id, r.hamming))
-    for qi, qfp in queries.items():
-        brute = sorted(((_ham(qfp, h), i) for i, h in corpus.items()
-                        if _ham(qfp, h) <= 3))[:5]
-        expect = [(rk + 1, i, d) for rk, (d, i) in enumerate(brute)]
-        assert sorted(got.get(qi, [])) == expect, f"query {qi}"
-
-
-def test_hamming_topk_duplicate_query_id_ranks_independently(spark):
-    """A query_id appearing with two different fingerprints gets one
-    independent correct ranking per fingerprint (keyed on (id, fp)),
-    not a merged candidate pool — which silently corrupted the
-    ranking before the round-5 review."""
-    cdf = spark.createDataFrame(
-        [(1, 0), (2, 1), (3, 1 << 40)], "doc_id long, fp long")
-    qdf = spark.createDataFrame(
-        [(7, 0), (7, 1 << 40)], "query_id long, fp long")
-    rows = sorted((r.query_id, r.doc_id, r.hamming, r.rank)
-                  for r in fp.hamming_topk(cdf, qdf, k=2, tau=1).collect())
-    # fp=0:    doc 1 (d=0) rank 1, doc 2 (d=1) rank 2 (doc 3 ties at
-    #          d=1 but loses the (hamming, doc_id) tiebreak, > k)
-    # fp=2^40: doc 3 (d=0) rank 1, doc 1 (d=1, single set bit) rank 2
-    assert rows == [(7, 1, 0, 1), (7, 1, 1, 2),
-                    (7, 2, 1, 2), (7, 3, 0, 1)]
-
-
-def test_hamming_topk_corpus_side_never_shuffles(spark):
-    """The 100-TB contract in the docstring, pinned on the plan: the
-    banded query side broadcasts, so the corpus is probed map-side —
-    the only Exchange below the top-k window is the tiny candidate
-    set, never the corpus."""
-    cdf = spark.range(1000).select(
-        F.col("id").alias("doc_id"), (F.col("id") * 2654435761).alias("fp"))
-    qdf = spark.range(4).select(
-        F.col("id").alias("query_id"), (F.col("id") * 97).alias("fp"))
-    plan = fp.hamming_topk(cdf, qdf)._jdf.queryExecution() \
-             .executedPlan().toString()
-    # one BroadcastHashJoin building the QUERY side, verify predicate
-    # folded into the join condition
-    assert plan.count("BroadcastHashJoin") == 1
-    assert "BuildRight" in plan and "bit_count" in plan.split(
-        "BroadcastHashJoin")[1].split("\n")[0]
-    # the only hash Exchange is the per-query window over VERIFIED
-    # candidates (and Spark pre-limits with a partial WindowGroupLimit
-    # before even that); the corpus never shuffles
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert "hashpartitioning(_qid" in plan
-    assert plan.count("BroadcastExchange") == 1
 
 
 def test_hamming_pairs_guards():
@@ -361,155 +232,11 @@ def test_image_fingerprints_gray_alpha_png_in_batch(spark):
     assert rows[1].dhash == rows[2].dhash
 
 
-def test_audio_fingerprints_to_pairs(spark):
-    rng = np.random.default_rng(5)
-    a = _tone(440, 8000)
-    corpus = [
-        (1, bytearray(_wav_bytes(a[:, None]))),
-        (2, bytearray(_wav_bytes((a * 0.5)[:, None]))),        # gain copy
-        (3, bytearray(_wav_bytes(
-            np.stack([a, a], axis=1)))),                        # stereo copy
-        (4, bytearray(_wav_bytes(
-            (_tone(880, 8000) + 0.5 * _tone(1760, 8000))[:, None]))),
-        (5, bytearray(b"RIFFgarbage")),                         # dead letter
-    ]
-    df = spark.createDataFrame(corpus, "doc_id long, html binary")
-    fps = fp.audio_fingerprints(df, "html").select("doc_id", "audio_fp.*")
-    rows = {r.doc_id: r for r in fps.collect()}
-    assert rows[1].sample_rate == 16000 and rows[1].n_frames == 8000
-    assert rows[5].afp is None
-    pairs = {(r.id_a, r.id_b): r.hamming
-             for r in fp.hamming_pairs(fps, "doc_id", "afp",
-                                       tau=3).collect()}
-    assert set(pairs) == {(1, 2), (1, 3), (2, 3)}
-    # 16-bit WAV round trip + gain + stereo mixdown: all exact copies
-    assert all(v == 0 for v in pairs.values())
-
-
-def _anim_gif(rng, n_frames, w=24, h=16, pal=None, clip=None,
-              interlace=()):
-    """Full-frame random animation through the independent test
-    encoder; ``clip`` keeps only the first k frames."""
-    if pal is None:
-        pal = rng.integers(0, 256, size=(16, 3)).astype(np.uint8)
-    frames = [(0, 0, w, h, rng.integers(0, 16, size=(h, w)), None, 0)
-              for _ in range(n_frames)]
-    if clip is not None:
-        frames = frames[:clip]
-    return _gif_bytes(w, h, pal, frames, interlace_frames=interlace), frames
-
-
-def test_video_fingerprints_and_pairs(spark):
-    rng = np.random.default_rng(21)
-    gif_a, frames_a = _anim_gif(rng, 6)
-    # re-encode of A: same frames, interlaced rows on two frames —
-    # different bitstream, pixel-identical decode
-    w, h = 24, 16
-    gif_a2 = _gif_bytes(w, h,
-                        np.frombuffer(gif_a[13:13 + 48],
-                                      dtype=np.uint8).reshape(16, 3),
-                        frames_a, interlace_frames=(1, 3))
-    gif_clip = _gif_bytes(w, h,
-                          np.frombuffer(gif_a[13:13 + 48],
-                                        dtype=np.uint8).reshape(16, 3),
-                          frames_a[:3])
-    gif_b, _ = _anim_gif(rng, 6)
-    corpus = [(1, bytearray(gif_a)), (2, bytearray(gif_a2)),
-              (3, bytearray(gif_clip)), (4, bytearray(gif_b)),
-              (5, bytearray(b"GIF89a garbage"))]
-    df = spark.createDataFrame(corpus, "doc_id long, html binary")
-    fps = fp.video_fingerprints(df, "html", n_frames=4).select(
-        "doc_id", "video_fp.*")
-    rows = {r.doc_id: r for r in fps.collect()}
-    assert rows[1].n_frames_total == 6
-    assert rows[3].n_frames_total == 3
-    assert rows[5].frame_hashes is None  # dead letter
-    # re-encode decodes pixel-identical -> identical frame-hash lists
-    assert list(rows[1].frame_hashes) == list(rows[2].frame_hashes)
-    pairs = {(r.id_a, r.id_b): r
-             for r in fp.video_pairs(fps, "doc_id", "frame_hashes",
-                                     tau=2, min_matches=2).collect()}
-    assert set(pairs) == {(1, 2), (1, 3), (2, 3)}
-    full = pairs[(1, 2)]
-    assert full.matched_a == full.matched_b == len(rows[1].frame_hashes)
-    # the clip overlaps A exactly on the jointly-sampled frames:
-    # A samples raster frames {0,1,3,4} of 6, the 3-frame clip samples
-    # {0,1,2} — frames 0 and 1 are shared, frame 2 was not sampled on
-    # A's side, so both slot counts are 2 (>= min_matches, pair kept)
-    clip = pairs[(1, 3)]
-    assert (clip.matched_a, clip.matched_b) == (2, 2)
-    assert clip.n_frames_a == len(rows[1].frame_hashes)
-    assert clip.n_frames_b == len(rows[3].frame_hashes)
-
-
-def test_streaming_dedup_media(spark, tmp_path):
-    """Perceptual dedup-on-arrival: a PNG re-encode of a BMP that
-    already arrived is dropped across micro-batches (same pHash,
-    different bytes — an md5 digest would keep it), while BOTH dead
-    letters survive (NULL phash must bypass the dedup state: NULL is
-    a grouping value to dropDuplicates*, so riding through would
-    swallow every dead letter after the first)."""
-    import datetime
-    import os
-
-    from jgdtrans_rs_spark.streaming.ingest import stream_dedup_media
-
-    img_a = _base_img(32, 40)
-    img_b = np.random.default_rng(9).integers(
-        0, 256, (32, 40, 3)).astype(np.uint8)
-    t0 = datetime.datetime(2023, 1, 1)
-    f1 = [("u1", t0, bytearray(_bmp_bytes(img_a.tolist()))),
-          ("u2", t0, bytearray(b"BM corrupt payload"))]
-    f2 = [("u3", t0, bytearray(_png_bytes(img_a, 2, [0, 1]))),  # re-encode
-          ("u4", t0, bytearray(_bmp_bytes(img_b.tolist()))),
-          ("u5", t0, bytearray(b"also not an image"))]
-    d = str(tmp_path / "mstream")
-    os.makedirs(d)
-    schema = "url string, warc_ts timestamp, html binary"
-    spark.createDataFrame(f1, schema).coalesce(1).write.parquet(d + "/f1")
-    spark.createDataFrame(f2, schema).coalesce(1).write.parquet(d + "/f2")
-    src = (spark.readStream.schema(schema)
-           .option("maxFilesPerTrigger", 1).parquet(d + "/f*"))
-    q = (stream_dedup_media(src)
-         .writeStream.format("memory").queryName("media_dedup")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    urls = sorted(r.url for r in spark.sql(
-        "SELECT url FROM media_dedup").collect())
-    # u3 (the re-encoded copy) is gone; both dead letters survive
-    assert urls == ["u1", "u2", "u4", "u5"]
-
-
-def test_audio_spectrogram_features(spark):
-    """The dense feature surface: fixed shape, tone energy lands in a
-    stable band column, stereo mixdown matches mono, dead letters and
-    empty waveforms propagate NULL."""
-    from jgdtrans_rs_spark.operators.multimodal import decode_audio
-
-    a = _tone(440, 8000)
-    corpus = [(1, bytearray(_wav_bytes(a[:, None]))),
-              (2, bytearray(_wav_bytes(np.stack([a, a], axis=1)))),
-              (3, bytearray(b"RIFFgarbage"))]
-    df = decode_audio(
-        spark.createDataFrame(corpus, "doc_id long, html binary"), "html")
-    rows = {r.doc_id: r.spectrogram for r in
-            fp.audio_spectrogram(df).select("doc_id", "spectrogram")
-              .collect()}
-    g1 = np.array(rows[1]).reshape(16, 16)
-    assert rows[3] is None
-    # dual-mono stereo mixdown == mono, exactly
-    assert np.array_equal(np.array(rows[2]), np.array(rows[1]))
-    # a stationary 440 Hz tone puts its peak in the same band column
-    # of every time row
-    assert len(set(np.argmax(g1, axis=1))) == 1
-    assert (g1 >= 0).all()
-
-
 def test_product_encoders_roundtrip_decoders():
     """The write-side encoders (encode_bmp_np / encode_png_np) must
     round-trip pixel-exact through the from-scratch decoders — they
-    generate the probe and scale-tier corpora, so a drift here would
-    measure the wrong thing."""
+    build test corpora, so a drift here would measure the wrong
+    thing."""
     from jgdtrans_rs_spark.operators.multimodal import (decode_bmp_np,
                                                         decode_png_np,
                                                         encode_bmp_np,
@@ -522,96 +249,6 @@ def test_product_encoders_roundtrip_decoders():
         img = rng.integers(0, 256, (7, 11, c)).astype(np.uint8)
         back = decode_png_np(encode_png_np(img))
         assert np.array_equal(back.reshape(img.shape), img)
-
-
-def test_video_pairs_single_frame_duplicates(spark):
-    """min_matches is clamped to the shorter side's sampled-frame
-    count: two re-encodes of a SINGLE-frame GIF have exactly one slot
-    each, and the pair must still be reported (it dropped silently
-    before the round-5 review)."""
-    rng = np.random.default_rng(33)
-    gif, frames = _anim_gif(rng, 1)
-    pal = np.frombuffer(gif[13:13 + 48], dtype=np.uint8).reshape(16, 3)
-    gif2 = _gif_bytes(24, 16, pal, frames, interlace_frames=(0,))
-    df = spark.createDataFrame(
-        [(1, bytearray(gif)), (2, bytearray(gif2))],
-        "doc_id long, html binary")
-    fps = fp.video_fingerprints(df, "html", n_frames=4).select(
-        "doc_id", "video_fp.*")
-    rows = fp.video_pairs(fps, "doc_id", "frame_hashes",
-                          tau=2, min_matches=2).collect()
-    assert [(r.id_a, r.id_b, r.matched_a, r.matched_b)
-            for r in rows] == [(1, 2, 1, 1)]
-
-
-@pytest.mark.skipif(_SLOW != "4",
-                    reason="fingerprint scale tier — SPARK_GRAFT_SLOW=4")
-def test_fingerprint_scale_recall(spark):
-    """Scale tier for the perceptual-dedup path (the big-SF
-    discipline applied to the new family): a 44k-payload corpus is
-    GENERATED IN THE EXECUTORS (seeded per id — the driver ships only
-    ids), fingerprinted, and paired; gates are planted-family recall
-    and exact family precision.
-
-    Families: ids < 10^5 are distinct random rasters; 2,000 ids at
-    10^5+i are PNG re-encodes of base i (must pair at Hamming 0,
-    recall 1.0); 2,000 ids at 2*10^5+i are +-4-noise copies of base i
-    (recall >= 0.95 at tau 3).  EVERY reported pair must connect
-    members of one family — 40k random rasters give ~8e8 candidate
-    pairs and an iid-bits estimate of ~2e-6 expected chance
-    collisions at tau 3, so any cross-family pair is a real bug, not
-    noise."""
-    from pyspark.sql.types import BinaryType
-
-    from jgdtrans_rs_spark.operators.multimodal import (encode_bmp_np,
-                                                        encode_png_np)
-
-    n_base, n_fam = 40000, 2000
-
-    @F.pandas_udf(BinaryType())
-    def gen_payload(ids):
-        import pandas as pd
-
-        out = []
-        for i in ids:
-            i = int(i)
-            base_id = i % 100000
-            img = np.random.default_rng(base_id).integers(
-                0, 256, (48, 64, 3)).astype(np.uint8)
-            if i >= 200000:  # noisy copy
-                noise = np.random.default_rng(i).integers(
-                    -4, 5, img.shape)
-                img = np.clip(img.astype(np.int64) + noise,
-                              0, 255).astype(np.uint8)
-                out.append(encode_bmp_np(img))
-            elif i >= 100000:  # exact re-encode
-                out.append(encode_png_np(img))
-            else:
-                out.append(encode_bmp_np(img))
-        return pd.Series(out)
-
-    ids = (spark.range(n_base)
-           .union(spark.range(100000, 100000 + n_fam))
-           .union(spark.range(200000, 200000 + n_fam))
-           .repartition(32))
-    fps = (fp.image_fingerprints(
-               ids.withColumn("html", gen_payload(F.col("id"))), "html")
-           .select(F.col("id").alias("doc_id"), "image_fp.phash"))
-    pairs = fp.hamming_pairs(fps, "doc_id", "phash", tau=3).collect()
-    fam = lambda i: i % 100000  # noqa: E731
-    assert all(fam(r.id_a) == fam(r.id_b) for r in pairs), \
-        "cross-family pair: either a hash defect or a band-join bug"
-    exact = {fam(r.id_a) for r in pairs
-             if {r.id_a // 100000, r.id_b // 100000} == {0, 1}}
-    noisy = {fam(r.id_a) for r in pairs
-             if {r.id_a // 100000, r.id_b // 100000} == {0, 2}}
-    assert len(exact) == n_fam, \
-        f"exact re-encode recall {len(exact)}/{n_fam} != 1.0"
-    assert len(noisy) >= 0.95 * n_fam, \
-        f"noisy-copy recall {len(noisy)}/{n_fam} < 0.95"
-    print(f"fingerprint scale: {n_base + 2 * n_fam} payloads, "
-          f"{len(pairs)} pairs, exact {len(exact)}/{n_fam}, "
-          f"noisy {len(noisy)}/{n_fam}", flush=True)
 
 
 def test_fingerprint_kernels_never_raise_on_garbage():

@@ -288,3 +288,12 @@ def test_par_numeric_parsing_rust_strictness():
     with pytest.raises(ParseParError) as e:
         parse_par(line(lat="    1_0.50"), "TKY2JGD")
     assert e.value.kind == "ParseFloat"
+
+
+def test_grid_json_roundtrip(semidyna_grid):
+    s = semidyna_grid.to_json()
+    g2 = MeshGrid.from_json(s)
+    assert (g2.codes == semidyna_grid.codes).all()
+    assert (g2.dlat_sec == semidyna_grid.dlat_sec).all()
+    assert g2.format == semidyna_grid.format
+    assert g2.mesh_unit == semidyna_grid.mesh_unit

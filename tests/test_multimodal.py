@@ -14,36 +14,6 @@ def pages(spark):
     return pages_src.synth_pages(spark, SF_TINY).limit(50).cache()
 
 
-def test_binary_meta(pages):
-    out = multimodal.binary_meta(pages, "html").select("n_bytes", "magic", "modality")
-    rows = out.collect()
-    assert all(r.modality == "html" for r in rows)
-    assert all(r.magic == "<html>" for r in rows)
-    assert all(r.n_bytes > 50 for r in rows)
-
-
-def test_binary_meta_magic_detection(spark):
-    df = spark.createDataFrame(
-        [(1, bytearray(b"\x89PNG\r\n\x1a\n1234")),
-         (2, bytearray(b"RIFF1234WAVE")),
-         (3, bytearray(b"garbage")),
-         # RIFF is a container: the form type decides the modality —
-         # routing every RIFF to audio silently sank WebP images into
-         # the WAV decoder (round-5 review)
-         (4, bytearray(b"RIFF1234WEBPVP8 ")),
-         (5, bytearray(b"RIFF1234AVI LIST")),
-         (6, bytearray(b"RIFF1234JUNK"))],
-        "id long, html binary",
-    )
-    rows = {r.id: r.modality for r in multimodal.binary_meta(df, "html").collect()}
-    assert rows[1] == "image/png"
-    assert rows[2] == "audio/wav"
-    assert rows[3] == "unknown"
-    assert rows[4] == "image/webp"
-    assert rows[5] == "video/avi"
-    assert rows[6] == "unknown"
-
-
 def test_decode_area_guard_bmp_pnm():
     """BMP and PNM enforce the same 16M-px area cap as PNG/GIF/JPEG/
     TIFF (round-5 review): an oversize-but-well-formed raster must
@@ -147,39 +117,6 @@ def test_decode_bmp_real(spark):
     # the identical payload drives the resize kernel (shared plumbing)
     resized = multimodal.resize_bytes(df, k=8).select("pkey", "resized").collect()
     assert all(len(r.resized) == 8 for r in resized)
-
-
-def test_grid_json_roundtrip(semidyna_grid):
-    from jgdtrans_rs_spark.grid import MeshGrid
-
-    s = semidyna_grid.to_json()
-    g2 = MeshGrid.from_json(s)
-    assert (g2.codes == semidyna_grid.codes).all()
-    assert (g2.dlat_sec == semidyna_grid.dlat_sec).all()
-    assert g2.format == semidyna_grid.format
-    assert g2.mesh_unit == semidyna_grid.mesh_unit
-
-
-def test_raster_roundtrip(spark, semidyna_grid):
-    """rasterize -> vectorize: every point lies inside its cell's
-    recovered corner geometry."""
-    from jgdtrans_rs_spark.engine import Engine
-    from jgdtrans_rs_spark.operators import raster
-    from jgdtrans_rs_spark.plans import oracle as osql
-
-    spark.read.parquet("/root/testdata/sf0.001/orders.parquet").createOrReplaceTempView("orders")
-    pts = spark.sql(osql.points_sql("orders"))
-    eng = Engine(spark, semidyna_grid)
-    tiled = eng.assign_tiles(pts)
-    r = raster.rasterize(tiled, "alt")
-    v = raster.vectorize(r.select("meshcode"), semidyna_grid.mesh_unit)
-    j = tiled.filter(F.col("meshcode") != -1).join(v, "meshcode")
-    outside = j.filter(
-        (F.col("lat") < F.col("sw_lat")) | (F.col("lat") >= F.col("ne_lat"))
-        | (F.col("lon") < F.col("sw_lon")) | (F.col("lon") >= F.col("ne_lon"))
-    ).count()
-    assert outside == 0
-    assert r.count() > 0
 
 
 def test_resize_bytes_shape_and_values(spark):
@@ -1522,7 +1459,7 @@ def test_decode_any_mixed_corpus(spark):
 
     # Column-space modality map stays consistent with the sniff
     meta = {r.pkey: r.modality for r in
-            multimodal.binary_meta(df, "html").select("pkey", "modality").collect()}
+            pages_src.binary_meta(df, "html").select("pkey", "modality").collect()}
     want_mod = {0: "image/bmp", 1: "image/pnm", 2: "image/png",
                 3: "image/jpeg", 4: "image/gif",
                 97: "image/png", 98: "html"}

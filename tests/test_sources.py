@@ -1,13 +1,14 @@
 """Source-layer tests: distributed par reader, Engine.from_par,
-streaming transform."""
+streaming transform, binary payload metadata."""
 
 import numpy as np
 from pyspark.sql import functions as F
 
 from jgdtrans_rs_spark.engine import Engine
 from jgdtrans_rs_spark.grid import parse_par
+from jgdtrans_rs_spark.sources import pages as pages_src
 from jgdtrans_rs_spark.sources.par import grid_from_par_df, read_par_df
-from tests.conftest import SEMIDYNA
+from tests.conftest import SEMIDYNA, SF_TINY
 
 PAR_TEXT = (
     "\n" * 15
@@ -48,7 +49,6 @@ def test_engine_from_par(spark, tmp_path):
 def test_streaming_pages_transform(spark, semidyna_grid, tmp_path):
     """Stateless streaming transform: one availableNow micro-batch of
     extracted pages produces the same rows as the batch path."""
-    from jgdtrans_rs_spark.sources import pages as pages_src
     from jgdtrans_rs_spark.streaming.ingest import stream_pages_transform
 
     eng = Engine(spark, semidyna_grid)
@@ -85,7 +85,6 @@ def test_streaming_transform_tile_counts(spark, semidyna_grid, tmp_path):
     """Streaming fused twin (transform + tile + windowed counts):
     availableNow over a file source must reproduce the batch
     groupBy(window, meshcode) counts exactly."""
-    from jgdtrans_rs_spark.sources import pages as pages_src
     from jgdtrans_rs_spark.streaming.ingest import stream_transform_tile_counts
 
     eng = Engine(spark, semidyna_grid)
@@ -315,7 +314,6 @@ def test_streaming_restart_from_checkpoint_exactly_once(
     ONLY B (offsets prove the checkpoint was read), the sink must hold
     A union B with every url exactly once, and a third restart with no
     new data must add nothing."""
-    from jgdtrans_rs_spark.sources import pages as pages_src
     from jgdtrans_rs_spark.streaming.ingest import stream_pages_transform
 
     eng = Engine(spark, semidyna_grid)
@@ -370,61 +368,34 @@ def test_streaming_restart_from_checkpoint_exactly_once(
         df.unpersist()
 
 
-def test_streaming_decode_media_batch_parity(spark, tmp_path):
-    """Streaming mixed-format media decode: one availableNow
-    micro-batch over a corpus holding every decodable container plus
-    corrupt/unknown payloads must produce row-identical output to the
-    batch decode_any path, with both failure classes visible as
-    decode_status values."""
-    import numpy as np
+def test_binary_meta(spark):
+    pages = pages_src.synth_pages(spark, SF_TINY).limit(50)
+    rows = pages_src.binary_meta(pages, "html").select(
+        "n_bytes", "magic", "modality").collect()
+    assert all(r.modality == "html" for r in rows)
+    assert all(r.magic == "<html>" for r in rows)
+    assert all(r.n_bytes > 50 for r in rows)
 
-    from jgdtrans_rs_spark.operators import multimodal
-    from jgdtrans_rs_spark.streaming.ingest import stream_decode_media
-    from tests.test_multimodal import (_bmp_bytes, _gif_bytes, _jpeg_bytes,
-                                       _png_bytes, _rand_blocks)
 
-    rng = np.random.RandomState(33)
-    img = rng.randint(0, 256, size=(4, 3, 3)).astype(np.uint8)
-    pal = rng.randint(0, 256, size=(4, 3)).astype(np.uint8)
-    rows = [
-        (1, _bmp_bytes(img.tolist())),
-        (2, b"P6\n3 4\n255\n" + img.tobytes()),
-        (3, _png_bytes(img, 2, filters=[0, 1, 2])),
-        (4, _jpeg_bytes([_rand_blocks(rng, 1, 1)], [[16] * 64],
-                        8, 8, [(1, 1)])),
-        (5, _gif_bytes(3, 4, pal,
-                       [(0, 0, 3, 4, rng.randint(0, 4, size=(4, 3)),
-                         None, 0)])),
-        (6, b"\x89PNG\r\n\x1a\ncorrupt"),
-        (7, b"<html>not media</html>"),
-        (8, None),
-    ]
-    batch = spark.createDataFrame(rows, "pkey long, html binary")
-    src_dir = str(tmp_path / "media_src")
-    batch.write.mode("overwrite").parquet(src_dir)
-
-    stream = spark.readStream.schema(batch.schema).parquet(src_dir)
-    out = stream_decode_media(stream)
-    assert out.isStreaming
-    q = (
-        out.selectExpr("pkey", "image.format AS fmt", "decode_status",
-                       "image.pixels AS pixels")
-        .writeStream.format("memory").queryName("media_decode")
-        .outputMode("append").trigger(availableNow=True).start()
+def test_binary_meta_magic_detection(spark):
+    df = spark.createDataFrame(
+        [(1, bytearray(b"\x89PNG\r\n\x1a\n1234")),
+         (2, bytearray(b"RIFF1234WAVE")),
+         (3, bytearray(b"garbage")),
+         # RIFF is a container: the form type decides the modality,
+         # so WebP and AVI payloads are not tagged as audio
+         (4, bytearray(b"RIFF1234WEBPVP8 ")),
+         (5, bytearray(b"RIFF1234AVI LIST")),
+         (6, bytearray(b"RIFF1234JUNK"))],
+        "id long, html binary",
     )
-    assert q.awaitTermination(120), "availableNow batch did not finish"
-    got = {r.pkey: r for r in spark.sql("SELECT * FROM media_decode").collect()}
-    want = {r["pkey"]: r for r in
-            multimodal.decode_any(batch).selectExpr(
-                "pkey", "image.format AS fmt", "image.pixels AS pixels")
-            .collect()}
-    assert set(got) == set(want) == {1, 2, 3, 4, 5, 6, 7, 8}
-    for k in got:
-        assert got[k].fmt == want[k].fmt, k
-        assert got[k].pixels == want[k].pixels, k
-    assert {k: got[k].decode_status for k in got} == {
-        1: "ok", 2: "ok", 3: "ok", 4: "ok", 5: "ok",
-        6: "corrupt", 7: "unknown", 8: "unknown"}
+    rows = {r.id: r.modality for r in pages_src.binary_meta(df, "html").collect()}
+    assert rows[1] == "image/png"
+    assert rows[2] == "audio/wav"
+    assert rows[3] == "unknown"
+    assert rows[4] == "image/webp"
+    assert rows[5] == "video/avi"
+    assert rows[6] == "unknown"
 
 
 def test_par_strict_rejects_java_float_suffix(spark, tmp_path):
