@@ -17,7 +17,7 @@ Layout:
     engine.py    the Spark layer (broadcast grid, pandas_udf transforms)
     functions/   pure Column expression helpers (JVM-side, codegen-friendly)
     operators/   spatial joins, kNN, dedup, similarity, text, raster,
-                 multimodal decode + perceptual image fingerprints
+                 still-image decoders
     sources/     synthetic pages + binary metadata, WARC and par readers,
                  checkpointed sink
     plans/       SQL generators shared with the DuckDB oracle

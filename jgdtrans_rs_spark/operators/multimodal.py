@@ -1,20 +1,10 @@
-"""Multimodal (binary) column operators.
+"""Still-image decoders over binary columns.
 
-Treats image/audio/video/html payloads as opaque ``binary`` columns
-with typed metadata, per the training-data-pipeline requirements (the
+Treats image payloads as opaque ``binary`` columns with typed
+metadata, per the training-data-pipeline requirements (the
 Column-only payload tagger ``binary_meta`` lives in
 ``sources/pages.py``):
 
-* ``byte_histogram_features`` — deterministic feature extraction from
-  raw bytes (16-bucket normalized histogram) as a vectorized Arrow
-  kernel: the real Spark-side plumbing (schema, batching, UDF
-  signature) for a decode->featurize stage.
-* ``sample_offsets`` — deterministic "frame sampling": n evenly
-  spaced byte offsets per payload (the video-frame-sampling shape
-  for formats with no from-scratch decoder).
-* ``decode_video_frames`` — REAL frame sampling: animated GIF decode
-  (``decode_gif_np`` — from-scratch LZW, compositing, transparency,
-  disposal) with n evenly spaced composited frames kept per payload.
 * ``decode_image`` — the genuine decode step, all FROM SCRATCH with
   no codec library: uncompressed 24-bit BMP (``decode_bmp_np``), the
   Netpbm family (``decode_pnm_np``), real compressed PNG
@@ -29,10 +19,9 @@ Column-only payload tagger ``binary_meta`` lives in
   NULL struct fields instead of failing the job; formats that
   genuinely need an imaging library (webp/progressive jpeg) stay
   stubbed behind an import guard with the identical plumbing.
-* ``decode_audio`` — the audio twin (``decode_wav_np``: RIFF/WAVE
-  PCM from scratch, 8/16-bit, any channel count), with
-  ``audio_frame_features`` (block RMS) as the waveform analogue of
-  ``resize_bytes``.
+* ``decode_any`` — one pass over a mixed-format column, routed by
+  ``sniff_image_format`` through ``IMAGE_KERNELS``.
+* ``resize_bytes`` — block-averaged fixed-size byte representation.
 """
 
 from __future__ import annotations
@@ -41,54 +30,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (ArrayType, DoubleType, IntegerType, LongType,
+from pyspark.sql.types import (ArrayType, DoubleType, IntegerType,
                                StringType, StructField, StructType)
-
-N_BUCKETS = 16
-
-
-def byte_histogram_features(df: DataFrame, col: str = "html",
-                            out: str = "features") -> DataFrame:
-    """16-bucket normalized byte histogram per payload — a
-    deterministic stand-in for an embedding/feature extractor, with
-    the production batch shape (Arrow in, float64 array out)."""
-
-    @F.pandas_udf(ArrayType(DoubleType()))
-    def feats(data: pd.Series) -> pd.Series:
-        outs = []
-        for payload in data:
-            if payload is None:
-                outs.append(np.zeros(N_BUCKETS))
-                continue
-            arr = np.frombuffer(bytes(payload), dtype=np.uint8)
-            if arr.size == 0:
-                outs.append(np.zeros(N_BUCKETS))
-                continue
-            hist = np.bincount(arr >> 4, minlength=N_BUCKETS).astype(np.float64)
-            outs.append(hist / arr.size)
-        return pd.Series(outs)
-
-    return df.withColumn(out, feats(F.col(col)))
-
-
-def sample_offsets(df: DataFrame, col: str = "html", n: int = 4,
-                   out: str = "frame_offsets") -> DataFrame:
-    """n evenly spaced byte offsets per payload (video frame-sample
-    shape; integer output)."""
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def offsets(data: pd.Series) -> pd.Series:
-        outs = []
-        for payload in data:
-            ln = 0 if payload is None else len(payload)
-            if ln == 0:
-                outs.append(np.zeros(0, dtype=np.int64))
-            else:
-                outs.append((np.arange(n, dtype=np.int64) * ln) // n)
-        return pd.Series(outs)
-
-    return df.withColumn(out, offsets(F.col(col)))
-
 
 def decode_bmp_np(buf: bytes):
     """From-scratch decoder for uncompressed 24-bit BI_RGB BMP
@@ -413,9 +356,7 @@ _GIF_INTERLACE_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
 def decode_gif_np(buf: bytes, max_frames: int = 256,
                   max_total_bytes: int = 1 << 28, with_total: bool = False):
     """From-scratch GIF87a/GIF89a decoder — LZW needs no codec
-    library either, and an ANIMATED gif is the closest thing to video
-    this sandbox can decode for real, so the frame-sampling surface
-    gets real frames instead of byte offsets.
+    library either.
 
     Returns a list of composited (h, w, 3) uint8 RGB frames (capped
     at ``max_frames``), or ``(frames, n_frames_total)`` when
@@ -1021,149 +962,10 @@ def _decode_tiff_inner(buf: bytes, bo: str):
     return arr
 
 
-# WAVE_FORMAT_EXTENSIBLE SubFormat GUID suffix (KSDATAFORMAT media
-# types share this 14-byte tail; the leading 2 bytes carry the tag)
-_WAV_GUID_TAIL = bytes([0x00, 0x00, 0x00, 0x00, 0x10, 0x00, 0x80, 0x00,
-                        0x00, 0xAA, 0x00, 0x38, 0x9B, 0x71])
-
-
-def decode_wav_np(buf: bytes):
-    """From-scratch RIFF/WAVE PCM decoder — the audio twin of the
-    image decoders: uncompressed PCM needs no codec library, so the
-    audio decode step is real too, not an opaque-bytes stand-in.
-
-    Supported: WAVE with a PCM ``fmt `` chunk (format tag 1: 8-bit
-    unsigned offset-binary, 16/24/32-bit signed little-endian) or an
-    IEEE-float chunk (tag 3: float32/float64), plus both wrapped in
-    WAVE_FORMAT_EXTENSIBLE (tag 0xFFFE — what DAWs emit for >16-bit
-    and >2-channel files; the SubFormat GUID resolves the real tag).
-    Any channel count >= 1; chunks are walked by the RIFF grammar
-    (word alignment honored), unknown chunks skipped.  Compressed
-    formats, other bit depths, and malformed/truncated payloads
-    return None — dead letters, like the image kernels.
-
-    Returns (sample_rate, samples) with samples an (n_frames,
-    n_channels) float64 array scaled to nominal [-1, 1] (8-bit is
-    offset binary per the spec: 128 -> 0.0; float data is taken
-    verbatim, so hot-mastered payloads may exceed +/-1)."""
-    if buf is None or len(buf) < 44:
-        return None
-    buf = bytes(buf)
-    if buf[:4] != b"RIFF" or buf[8:12] != b"WAVE":
-        return None
-    pos, n = 12, len(buf)
-    fmt = None
-    data = None
-    while pos + 8 <= n:
-        cid = buf[pos:pos + 4]
-        ln = int.from_bytes(buf[pos + 4:pos + 8], "little")
-        body_end = pos + 8 + ln
-        if body_end > n:
-            return None  # truncated chunk
-        body = buf[pos + 8:body_end]
-        if cid == b"fmt ":
-            if ln < 16:
-                return None
-            tag = int.from_bytes(body[0:2], "little")
-            if tag == 0xFFFE:  # WAVE_FORMAT_EXTENSIBLE
-                # the real format tag is the first 2 bytes of the
-                # SubFormat GUID; the 14-byte tail must be the fixed
-                # KSDATAFORMAT media-type suffix
-                if ln < 40 or body[26:40] != _WAV_GUID_TAIL:
-                    return None
-                tag = int.from_bytes(body[24:26], "little")
-            fmt = (
-                tag,
-                int.from_bytes(body[2:4], "little"),    # channels
-                int.from_bytes(body[4:8], "little"),    # sample rate
-                int.from_bytes(body[14:16], "little"),  # bits/sample
-            )
-        elif cid == b"data":
-            data = body
-        pos = body_end + (ln & 1)  # RIFF chunks pad to word boundary
-    if fmt is None or data is None:
-        return None
-    audio_fmt, channels, rate, bits = fmt
-    # rate is 4 unsigned LE header bytes; the decode_audio struct
-    # declares sample_rate int32, so a hostile header >= 2^31 must
-    # dead-letter here — otherwise the Arrow cast wraps it negative
-    # (or kills the task under safe-cast), breaking the errors-are-data
-    # contract
-    if audio_fmt not in (1, 3) or channels < 1 or rate <= 0 \
-            or rate > 0x7FFFFFFF:
-        return None
-    step = bits // 8
-    if step == 0:
-        return None
-    usable = len(data) - (len(data) % (step * channels))
-    if usable == 0:
-        return None
-    if audio_fmt == 3:  # IEEE float PCM
-        if bits == 32:
-            samples = np.frombuffer(data, dtype="<f4",
-                                    count=usable // 4).astype(np.float64)
-        elif bits == 64:
-            samples = np.frombuffer(data, dtype="<f8",
-                                    count=usable // 8).astype(np.float64)
-        else:
-            return None
-    elif bits == 16:
-        raw = np.frombuffer(data, dtype="<i2", count=usable // 2)
-        samples = raw.astype(np.float64) / 32768.0
-    elif bits == 8:
-        raw = np.frombuffer(data, dtype=np.uint8, count=usable)
-        samples = (raw.astype(np.float64) - 128.0) / 128.0
-    elif bits == 24:
-        b = np.frombuffer(data, dtype=np.uint8,
-                          count=usable).reshape(-1, 3).astype(np.int64)
-        v = b[:, 0] | (b[:, 1] << 8) | (b[:, 2] << 16)
-        v -= (v & 0x800000) << 1  # sign-extend bit 23
-        samples = v.astype(np.float64) / float(1 << 23)
-    elif bits == 32:
-        raw = np.frombuffer(data, dtype="<i4", count=usable // 4)
-        samples = raw.astype(np.float64) / float(1 << 31)
-    else:
-        return None  # other integer depths out of scope
-    return rate, np.ascontiguousarray(samples.reshape(-1, channels))
-
-
-def decode_audio(df: DataFrame, col: str = "html",
-                 out: str = "audio") -> DataFrame:
-    """Audio decode as a vectorized Arrow kernel (RIFF/WAVE PCM via
-    ``decode_wav_np``): adds a struct column (sample_rate, n_channels,
-    n_frames, samples) with samples the frame-major interleaved
-    float64 waveform in [-1, 1]; undecodable payloads yield a
-    NULL-field struct — the same errors-are-data contract as
-    ``decode_image``."""
-    schema = StructType([
-        StructField("sample_rate", IntegerType(), True),
-        StructField("n_channels", IntegerType(), True),
-        StructField("n_frames", IntegerType(), True),
-        StructField("samples", ArrayType(DoubleType()), True),
-    ])
-
-    @F.pandas_udf(schema)
-    def decode(data: pd.Series) -> pd.DataFrame:
-        rates, chans, frames, samps = [], [], [], []
-        for payload in data:
-            dec = decode_wav_np(payload)
-            if dec is None:
-                rates.append(None), chans.append(None)
-                frames.append(None), samps.append(None)
-            else:
-                rate, mat = dec
-                rates.append(rate), chans.append(mat.shape[1])
-                frames.append(mat.shape[0]), samps.append(mat.ravel())
-        return pd.DataFrame({"sample_rate": rates, "n_channels": chans,
-                             "n_frames": frames, "samples": samps})
-
-    return df.withColumn(out, decode(F.col(col)))
-
-
 def _block_means(arr: np.ndarray, k: int) -> np.ndarray:
     """Mean of ``arr`` over ``k`` equal blocks (block i covers
-    [i*n/k, (i+1)*n/k)) — the shared area-interpolation kernel behind
-    ``resize_bytes`` and ``audio_frame_features``.  When n < k the
+    [i*n/k, (i+1)*n/k)) — the area-interpolation kernel behind
+    ``resize_bytes``.  When n < k the
     boundary list has duplicate starts; np.add.reduceat yields the
     single element at a duplicated index (not 0) and the width clamp
     keeps the divisor 1, so short inputs stretch instead of divide by
@@ -1172,29 +974,6 @@ def _block_means(arr: np.ndarray, k: int) -> np.ndarray:
     sums = np.add.reduceat(arr, bounds[:-1])
     widths = np.maximum(np.diff(bounds), 1)
     return sums / widths
-
-
-def audio_frame_features(df: DataFrame, audio_col: str = "audio",
-                         n_frames: int = 8,
-                         out: str = "audio_features") -> DataFrame:
-    """Fixed-size waveform features from a decoded ``decode_audio``
-    struct: the samples are block-averaged into ``n_frames`` RMS
-    values (channel-agnostic — RMS over the interleaved stream), the
-    audio analogue of ``resize_bytes``.  NULL audio (dead-lettered
-    decode) yields a NULL feature array, propagating the error."""
-
-    @F.pandas_udf(ArrayType(DoubleType()))
-    def feats(samples: pd.Series) -> pd.Series:
-        outs = []
-        for s in samples:
-            if s is None or len(s) == 0:
-                outs.append(None)
-                continue
-            outs.append(np.sqrt(_block_means(
-                np.asarray(s, dtype=np.float64) ** 2, n_frames)))
-        return pd.Series(outs)
-
-    return df.withColumn(out, feats(F.col(f"{audio_col}.samples")))
 
 
 def sniff_image_format(buf: bytes):
@@ -1219,62 +998,11 @@ def sniff_image_format(buf: bytes):
     return None
 
 
-def even_frame_picks(avail: int, n_frames: int) -> list:
-    """The evenly-spaced sampling law of ``decode_video_frames`` —
-    ``(k*avail)//n_frames`` for k in [0, n_frames), deduplicated and
-    sorted."""
-    return sorted({(k * avail) // n_frames for k in range(n_frames)})
-
-
-def encode_bmp_np(img: np.ndarray) -> bytes:
-    """From-scratch 24-bit BI_RGB BMP encoder — the write-side twin of
-    ``decode_bmp_np`` (bottom-up, BGR, 4-byte row stride), so decoded
-    or resized rasters can be written back out as artifacts without a
-    codec library.  ``img`` is (H, W, 3) uint8 RGB."""
-    img = np.asarray(img, dtype=np.uint8)
-    h, w, _ = img.shape
-    stride = (w * 3 + 3) & ~3
-    rows = np.zeros((h, stride), dtype=np.uint8)
-    rows[:, : w * 3] = img[::-1, :, ::-1].reshape(h, w * 3)
-    body = rows.tobytes()
-    head = (b"BM" + (54 + len(body)).to_bytes(4, "little") + b"\x00" * 4
-            + (54).to_bytes(4, "little") + (40).to_bytes(4, "little")
-            + w.to_bytes(4, "little") + h.to_bytes(4, "little")
-            + (1).to_bytes(2, "little") + (24).to_bytes(2, "little")
-            + b"\x00" * 24)
-    return head + body
-
-
-def encode_png_np(img: np.ndarray) -> bytes:
-    """From-scratch 8-bit PNG encoder (filter 0 scanlines, one IDAT,
-    stdlib-zlib deflate) — the write-side twin of ``decode_png_np``.
-    ``img`` is (H, W, C) uint8 with C in {1: gray, 2: gray+alpha,
-    3: RGB, 4: RGBA}."""
-    import struct
-    import zlib
-
-    img = np.asarray(img, dtype=np.uint8)
-    h, w, c = img.shape
-    ctype = {1: 0, 2: 4, 3: 2, 4: 6}[c]
-    raw = b"".join(b"\x00" + img[y].tobytes() for y in range(h))
-
-    def chunk(tag, data):
-        payload = tag + data
-        return (struct.pack(">I", len(data)) + payload
-                + struct.pack(">I", zlib.crc32(payload) & 0xFFFFFFFF))
-
-    return (b"\x89PNG\r\n\x1a\n"
-            + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, ctype,
-                                         0, 0, 0))
-            + chunk(b"IDAT", zlib.compress(raw))
-            + chunk(b"IEND", b""))
-
-
 # The one sniffed-format -> still-image decoder map, shared by
-# decode_any and operators/fingerprint.image_fingerprints so the
-# router cannot drift between the two (a format added to
-# sniff_image_format must be added here, and both consumers pick it
-# up).  Keys must cover every non-None sniff_image_format value.
+# decode_any and decode_image so the router cannot drift between the
+# two (a format added to sniff_image_format must be added here, and
+# both consumers pick it up).  Keys must cover every non-None
+# sniff_image_format value.
 IMAGE_KERNELS = {"bmp": decode_bmp_np, "pnm": decode_pnm_np,
                  "png": decode_png_np, "jpeg": decode_jpeg_np,
                  "gif": _decode_gif_first_np, "tiff": decode_tiff_np}
@@ -1321,57 +1049,6 @@ def decode_any(df: DataFrame, col: str = "html",
     return df.withColumn(out, decode(F.col(col)))
 
 
-def decode_video_frames(df: DataFrame, col: str = "html", n_frames: int = 4,
-                        out: str = "video") -> DataFrame:
-    """Real frame sampling over a real multi-frame format: decode an
-    animated GIF (``decode_gif_np`` — from-scratch LZW) and keep
-    ``n_frames`` evenly spaced composited frames, the decode-side twin
-    of ``sample_offsets``'s byte-offset shape (same ``(k*n)//n_frames``
-    spacing).  Adds a struct column (width, height, n_frames_total,
-    frame_indices, frames) with frames[i] the row-major flattened RGB
-    doubles of the i-th sampled frame; undecodable payloads yield a
-    NULL-field struct.  ``n_frames_total`` is the TRUE animation
-    length (the decoder counts every image block structurally, even
-    past its materialization cap), so a capped decode is visible
-    downstream rather than silently reported as shorter.  At 100 TB this is the `mapInPandas`-class
-    decode stage: per-payload codec work, vectorized per batch, errors
-    as data."""
-    schema = StructType([
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("n_frames_total", IntegerType(), True),
-        StructField("frame_indices", ArrayType(IntegerType()), True),
-        StructField("frames", ArrayType(ArrayType(DoubleType())), True),
-    ])
-
-    @F.pandas_udf(schema)
-    def decode(data: pd.Series) -> pd.DataFrame:
-        ws, hs, ns, idxs, frs = [], [], [], [], []
-        for payload in data:
-            got = decode_gif_np(payload, with_total=True)
-            if got is None:
-                ws.append(None), hs.append(None), ns.append(None)
-                idxs.append(None), frs.append(None)
-                continue
-            frames, total = got
-            # picks span the DECODED frames (the decoder's cap bounds
-            # what can be materialized); n_frames_total reports the
-            # true animation length so any truncation is visible
-            avail = len(frames)
-            picks = even_frame_picks(avail, n_frames)
-            ws.append(frames[0].shape[1])
-            hs.append(frames[0].shape[0])
-            ns.append(total)
-            idxs.append(np.asarray(picks, dtype=np.int32))
-            frs.append([frames[i].ravel().astype(np.float64)
-                        for i in picks])
-        return pd.DataFrame({"width": ws, "height": hs,
-                             "n_frames_total": ns,
-                             "frame_indices": idxs, "frames": frs})
-
-    return df.withColumn(out, decode(F.col(col)))
-
-
 def decode_image(df: DataFrame, col: str = "html", out: str = "pixels",
                  format: str = "bmp") -> DataFrame:
     """Image decode as a vectorized Arrow kernel.
@@ -1406,8 +1083,7 @@ def decode_image(df: DataFrame, col: str = "html", out: str = "pixels",
                 f"{format} decode requires PIL/cv2 (absent in this sandbox); "
                 "bmp/pnm/ppm/pgm, png (stdlib-zlib inflate), and baseline "
                 "jpeg (from-scratch Huffman+IDCT) are implemented from "
-                "scratch, and byte_histogram_features is the "
-                "deterministic stand-in"
+                "scratch"
             ) from exc
         raise NotImplementedError("wire PIL decode kernel here")
 
