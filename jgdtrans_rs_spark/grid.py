@@ -6,10 +6,11 @@ columns filled with 0.0 — not NaN — (par.rs:396-466), description =
 first N header lines joined (par.rs:360-366), positional parse errors
 (par.rs:744-859).
 
-The grid itself is stored as numpy arrays sorted by meshcode so that
-executor-side lookup is an O(log n) ``searchsorted`` gather — the
-Spark-side equivalent of the reference's HashMap probe
-(par.rs:283-285) without paying 4 broadcast-hash-join shuffles.
+The grid itself is stored as numpy arrays sorted by meshcode.  Each
+Python worker builds, once per broadcast, a block-dense slot index over
+them (``_slot_index``), so executor-side lookup is one direct slot
+gather per code — the Spark-side equivalent of the reference's HashMap
+probe (par.rs:283-285) without paying 4 broadcast-hash-join shuffles.
 """
 
 from __future__ import annotations
@@ -107,6 +108,34 @@ def _stat_from_array(vs: np.ndarray) -> dict:
     }
 
 
+# Slot-index block widths, widest first: one first-level mesh (10^4
+# codes), then 10^2, then single codes (a binary search over every code).
+_BLOCK_WIDTHS = (10_000, 100, 1)
+
+
+def _slot_index(codes: np.ndarray) -> tuple[int, np.ndarray, np.ndarray]:
+    """``(W, blocks, slot)`` over sorted unique int64 ``codes``.
+
+    A code splits into block ``code // W`` and offset ``code % W``;
+    ``blocks`` holds the sorted block keys plus one pad entry, and
+    ``slot[block_pos * W + code % W]`` is the code's row, ``n`` when
+    absent.  The last ``W`` slots belong to no block: codes whose block
+    is absent land there.  ``W`` is the widest width that keeps
+    ``slot`` within ``8 n + 2^20`` entries (``W = 1`` always does), so
+    memory stays O(n) however sparse the grid."""
+    n = codes.size
+    for w in _BLOCK_WIDTHS:
+        q = codes // w
+        new = np.ones(n, dtype=bool)
+        new[1:] = q[1:] != q[:-1]
+        n_blocks = int(np.count_nonzero(new))
+        if (n_blocks + 1) * w <= 8 * n + (1 << 20):
+            break
+    slot = np.full((n_blocks + 1) * w, n, dtype=np.int32)
+    slot[(np.cumsum(new) - 1) * w + codes % w] = np.arange(n, dtype=np.int32)
+    return w, np.append(q[new], 0), slot
+
+
 @dataclass
 class MeshGrid:
     """The broadcastable parameter table: ``ParData`` re-expressed as
@@ -141,22 +170,40 @@ class MeshGrid:
     def __len__(self) -> int:
         return int(self.codes.size)
 
+    def _slots(self):
+        """The slot index plus the three value columns, each with a
+        trailing 0.0 that absent codes (row ``n``) gather.  Built on the
+        first ``lookup`` and cached on the instance; ``__getstate__``
+        drops it, so the broadcast pickle never carries it."""
+        slots = self.__dict__.get("_slot_cache")
+        if slots is None:
+            slots = self._slot_cache = (
+                *_slot_index(self.codes),
+                tuple(np.append(a, 0.0) for a in (self.dlat_sec, self.dlon_sec, self.dalt_m)),
+            )
+        return slots
+
+    def __getstate__(self):
+        state = dict(self.__dict__)
+        state.pop("_slot_cache", None)
+        return state
+
     def lookup(self, codes: np.ndarray):
         """Vectorized ``ParameterSet::get`` (transformer.rs:257-263):
         gather (dlat_sec, dlon_sec, dalt_m, found_mask) for an int64
-        meshcode array.  Missing codes return 0.0 with found=False."""
+        meshcode array.  Missing codes return 0.0 with found=False.
+
+        A binary search over the few block keys, then one slot gather
+        (``_slot_index``)."""
         codes = np.asarray(codes, dtype=np.int64)
-        idx = np.searchsorted(self.codes, codes)
-        idx_c = np.minimum(idx, len(self.codes) - 1) if len(self.codes) else idx * 0
-        if len(self.codes) == 0:
-            found = np.zeros(codes.shape, dtype=bool)
-            z = np.zeros(codes.shape, dtype=np.float64)
-            return z, z.copy(), z.copy(), found
-        found = self.codes[idx_c] == codes
-        dlat = np.where(found, self.dlat_sec[idx_c], 0.0)
-        dlon = np.where(found, self.dlon_sec[idx_c], 0.0)
-        dalt = np.where(found, self.dalt_m[idx_c], 0.0)
-        return dlat, dlon, dalt, found
+        w, blocks, slot, values = self._slots()
+        q = codes // w
+        pos = np.searchsorted(blocks[:-1], q)
+        # an absent block (pos past the keys reads the pad) -> no-block slots
+        pos = np.where(blocks[pos] == q, pos, blocks.size - 1)
+        row = slot[pos * w + codes % w]
+        dlat, dlon, dalt = (v[row] for v in values)
+        return dlat, dlon, dalt, row != self.codes.size
 
     def lookup_carry(self, codes: np.ndarray, prev_codes: np.ndarray, prev):
         """``lookup`` that reuses a previous gather where the meshcode
@@ -166,8 +213,8 @@ class MeshGrid:
         The chained kernels (backward_compat's two forward_corr steps,
         the Newton prepare/verify pair) resolve points that moved by
         ~the correction magnitude (1e-5 deg) or DELTA (3.3e-3 deg),
-        far below the cell size, so typically >90%% of lanes keep all
-        four corner codes and skip the searchsorted entirely."""
+        far below the cell size, so typically >90% of lanes keep all
+        four corner codes and skip the slot lookup entirely."""
         prev_dlat, prev_dlon, prev_dalt, prev_found = prev
         same = codes == prev_codes
         if same.all():

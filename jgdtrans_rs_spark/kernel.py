@@ -86,7 +86,7 @@ def _resolve_cell(lat, lon, grid: MeshGrid, carry: dict | None = None,
     ``carry`` is a previous resolve (of the same batch at nearby
     points): corner lookups are reused via ``grid.lookup_carry`` where
     the meshcode is unchanged — bit-identical, and typically >90% of
-    lanes skip the searchsorted in the chained kernels (the points
+    lanes skip the slot lookup in the chained kernels (the points
     move by ~corrections, far below the cell size).
     """
     n = lat.shape[0]

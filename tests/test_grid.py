@@ -297,3 +297,88 @@ def test_grid_json_roundtrip(semidyna_grid):
     assert (g2.dlat_sec == semidyna_grid.dlat_sec).all()
     assert g2.format == semidyna_grid.format
     assert g2.mesh_unit == semidyna_grid.mesh_unit
+
+
+def _searchsorted_lookup(g, codes):
+    """Reference: the binary search over every meshcode that the slot
+    index replaced."""
+    if len(g) == 0:
+        z = np.zeros(codes.shape)
+        return z, z, z, np.zeros(codes.shape, dtype=bool)
+    idx = np.minimum(np.searchsorted(g.codes, codes), len(g) - 1)
+    found = g.codes[idx] == codes
+    return (*(np.where(found, a[idx], 0.0) for a in (g.dlat_sec, g.dlon_sec, g.dalt_m)),
+            found)
+
+
+def _random_grid(codes, seed=0):
+    rng = np.random.default_rng(seed)
+    codes = np.unique(np.asarray(codes, dtype=np.int64))
+    return MeshGrid(codes, *rng.normal(size=(3, codes.size)), mesh_unit=1, format="TKY2JGD")
+
+
+def _grid_semidyna():
+    return MeshGrid.from_dict(SEMIDYNA, "SemiDynaEXE")
+
+
+def _grid_one_per_block():
+    rng = np.random.default_rng(1)
+    blocks = rng.choice(np.arange(3000, 7000), 500, replace=False)
+    return _random_grid(blocks * 10_000 + rng.integers(0, 10_000, blocks.size))
+
+
+def _grid_random_u32():
+    return _random_grid(np.random.default_rng(2).integers(0, 2**32, 200_000))
+
+
+def _grid_odd_codes():
+    return MeshGrid.from_dict({c: (c / 7.0, -1.5, 0.25) for c in [-5, 0, 9999, 10000, 2**40]})
+
+
+@pytest.mark.parametrize("make, width", [
+    (_grid_semidyna, 10_000),
+    (lambda: MeshGrid.from_dict({}), 10_000),
+    (_grid_one_per_block, 100),
+    (_grid_random_u32, 1),
+    (_grid_odd_codes, 10_000),
+], ids=["semidyna", "empty", "one_per_block", "random_u32", "odd_codes"])
+def test_lookup_matches_searchsorted(make, width):
+    """The slot index returns what a binary search over every code
+    returns, bit for bit, on codes next to, between and far from the
+    grid's, and keeps its slot table within 8 n + 2^20 entries."""
+    g = make()
+    i64 = np.iinfo(np.int64)
+    near = (g.codes[:, None] + np.array([-1, 1, -10, 10, -10**4, 10**4])).ravel()
+    rng = np.random.default_rng(3)
+    queries = np.concatenate([
+        g.codes,
+        near,
+        np.array([-1, -5, -10**4, -10**4 - 1, 0, 9999, 10**4, 10**8, 10**8 + 1, 2**32 - 1,
+                  2**32, 2**40, 2**40 + 1, i64.min, i64.min + 1, i64.max, i64.max - 1],
+                 dtype=np.int64),
+        rng.integers(-2**62, 2**62, 20_000),
+        rng.integers(0, 10**8, 20_000),
+    ])
+    got = g.lookup(queries)
+    want = _searchsorted_lookup(g, queries)
+    for a, b in zip(got, want):
+        assert a.dtype == b.dtype and a.tobytes() == b.tobytes()
+    assert got[3][: g.codes.size].all()
+
+    w, _, slot, _ = g._slots()
+    assert w == width
+    assert slot.size <= 8 * len(g) + 2**20
+
+
+def test_pickle_excludes_slot_index():
+    """The slot index is built per process on the first lookup and never
+    travels with the broadcast grid."""
+    import pickle
+
+    g = _grid_semidyna()
+    before = pickle.dumps(g)
+    codes = np.array([54401005, 54401006, 54401150])
+    want = g.lookup(codes)
+    assert pickle.dumps(g) == before
+    for a, b in zip(pickle.loads(before).lookup(codes), want):
+        assert a.tobytes() == b.tobytes()
