@@ -16,9 +16,8 @@ Layout:
     dms.py       degree-minute-second scalar functions
     engine.py    the Spark layer (broadcast grid, pandas_udf transforms)
     functions/   pure Column expression helpers (JVM-side, codegen-friendly)
-    operators/   spatial joins, kNN, dedup, similarity, text, raster,
-                 still-image decoders
-    sources/     synthetic pages + binary metadata, WARC and par readers,
+    operators/   spatial joins, kNN, dedup, similarity, text, raster
+    sources/     synthetic pages + binary metadata, WARC reader,
                  checkpointed sink
     plans/       SQL generators shared with the DuckDB oracle
     streaming/   structured-streaming ingest (batch parity first)

@@ -350,8 +350,11 @@ def load_par(path: str, format: str) -> MeshGrid:
     """``Transformer::from_str`` file-path convenience
     (transformer.rs:395-449).  Driver-side: par files are small
     relative to the cluster (O(10^5..10^6) rows) and the result is
-    broadcast, so a distributed parse would only add overhead."""
-    with open(path, encoding="utf-8") as f:
+    broadcast, so a distributed parse would only add overhead.
+
+    ``newline=""`` hands ``parse_par`` the raw line ends, so a stray
+    ``\\r`` mid-line is not a line break (Rust ``str::lines``)."""
+    with open(path, encoding="utf-8", newline="") as f:
         return parse_par(f.read(), format)
 
 

@@ -17,8 +17,7 @@ engine's input_hint table shape with no codec or parsing library:
   ``Transfer-Encoding: chunked`` de-chunking.  Errors are data: a
   malformed record dead-letters with a status naming the defect and
   the walk resynchronizes on the next record boundary; the function
-  never raises on arbitrary bytes (fuzz-pinned, like every decoder in
-  ``operators.multimodal``).
+  never raises on arbitrary bytes (fuzz-pinned).
 * ``read_warc`` — the distributed reader: ``binaryFile`` scan ->
   ``mapInPandas`` (one Arrow batch of files in, record rows out).
   Parallelism is per FILE, which is the real-world plan too: gzip
@@ -45,7 +44,7 @@ engine's input_hint table shape with no codec or parsing library:
   parser's own conventions.
 
 Reference parity note: this is the web-corpus sibling of the par-file
-reader (sources/par.py) — same contract of positional, named errors
+parser (grid.parse_par) — same contract of positional, named errors
 for a byte-level wire format (par.rs:744-859's discipline), applied
 to the crawl side of the graft.
 """

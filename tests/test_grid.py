@@ -54,6 +54,17 @@ def test_parse_tky2jgd_fills_zero_altitude():
     assert (g.dalt_m == 0.0).all()
     assert g.description == "header line 1\nheader line 2\n"
 
+    # a header line that starts with 8 digits is still header, and a
+    # duplicated meshcode keeps its last line (HashMap insert)
+    g = parse_par(
+        "JGD2000\n"
+        "12345678 this header line looks like a parameter\n"
+        "46303582  11.49105  -9.88759\n"
+        "46303582  99.00000  99.00000\n"
+        "46303592  11.49099  -9.88994\n", "TKY2JGD")
+    assert g.codes.tolist() == [46303582, 46303592]
+    assert g.dlat_sec[0] == 99.0 and g.dalt_m[0] == 0.0
+
 
 def test_parse_patchjgd_h_altitude_only():
     # PatchJGD_H: altitude at columns 9..18
@@ -96,6 +107,8 @@ def test_parse_errors_positional():
     with pytest.raises(ParseParError) as e:
         parse_par("only one line\n", "SemiDynaEXE")
     assert e.value.kind == "Header"
+    # the range is the last line read (par.rs:744-859)
+    assert (e.value.lineno, e.value.start, e.value.end) == (1, 0, 13)
 
     bad = "\n" * 16 + "notanint -0.00622  0.01516 0.0946\n"
     with pytest.raises(ParseParError) as e:
@@ -110,6 +123,15 @@ def test_parse_errors_positional():
         parse_par(short, "SemiDynaEXE")
     assert e.value.kind == "ColumnNotFound"
     assert e.value.column == "Longitude"
+
+    # the earliest bad line wins, attributed to its own column
+    two_bad = ("h1\nh2\n"
+               "46303582  11.49105  xx.88759\n"   # line 3: longitude
+               "46303592  yy.49099  -9.88994\n")  # line 4: latitude
+    with pytest.raises(ParseParError) as e:
+        parse_par(two_bad, "TKY2JGD")
+    assert (e.value.kind, e.value.lineno, e.value.column) == (
+        "ParseFloat", 3, "Longitude")
 
 
 def test_statistics_goldens():

@@ -51,6 +51,5 @@ def _reached():
 
 def test_unreached_library_modules():
     unreached = {m.removeprefix(PKG + ".") for m in set(LIBRARY) - _reached()}
-    assert unreached == {"operators.multimodal", "sources.par",
-                         "sources.tables", "streaming", "streaming.ingest",
+    assert unreached == {"sources.tables", "streaming", "streaming.ingest",
                          "streaming.stateful"}

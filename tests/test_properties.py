@@ -145,22 +145,6 @@ def test_knn_anisotropy_counterexample():
     assert sw not in got
 
 
-@given(st.integers(1, 6), st.integers(1, 5), st.booleans(), st.randoms())
-@settings(max_examples=100, deadline=None)
-def test_bmp_decode_roundtrip_property(w, h, top_down, rnd):
-    """decode(encode(pixels)) == pixels for any size/orientation —
-    encoder lives in tests (independent of the decoder under test),
-    covering stride padding (w % 4 != 0) and both row orders."""
-    from jgdtrans_rs_spark.operators.multimodal import decode_bmp_np
-    from tests.test_multimodal import _bmp_bytes
-
-    px = [[(rnd.randrange(256), rnd.randrange(256), rnd.randrange(256))
-           for _ in range(w)] for _ in range(h)]
-    img = decode_bmp_np(_bmp_bytes(px, top_down=top_down))
-    assert img is not None and img.shape == (h, w, 3)
-    assert img.tolist() == [[list(p) for p in row] for row in px]
-
-
 @given(st.one_of(st.floats(min_value=-1e12, max_value=1e12, allow_nan=False),
                  st.just(float('nan'))),
        st.sampled_from([mesh.UNIT_ONE, mesh.UNIT_FIVE]))

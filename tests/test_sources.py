@@ -1,13 +1,11 @@
-"""Source-layer tests: distributed par reader, Engine.from_par,
-streaming transform, binary payload metadata."""
+"""Source-layer tests: par files on disk (load_par, Engine.from_par),
+streaming transform, table reader, sink, binary payload metadata."""
 
-import numpy as np
 from pyspark.sql import functions as F
 
 from jgdtrans_rs_spark.engine import Engine
-from jgdtrans_rs_spark.grid import parse_par
+from jgdtrans_rs_spark.grid import ParseParError, load_par, parse_par
 from jgdtrans_rs_spark.sources import pages as pages_src
-from jgdtrans_rs_spark.sources.par import grid_from_par_df, read_par_df
 from tests.conftest import SEMIDYNA, SF_TINY
 
 PAR_TEXT = (
@@ -18,18 +16,6 @@ PAR_TEXT = (
         for c, (a, b, h) in sorted(SEMIDYNA.items())
     )
 )
-
-
-def test_distributed_par_reader_matches_driver_parse(spark, tmp_path):
-    p = tmp_path / "semidyna.par"
-    p.write_text(PAR_TEXT)
-    df = read_par_df(spark, str(p), "SemiDynaEXE")
-    g_dist = grid_from_par_df(df, "SemiDynaEXE")
-    g_drv = parse_par(PAR_TEXT, "SemiDynaEXE")
-    assert (g_dist.codes == g_drv.codes).all()
-    assert (g_dist.dlat_sec == g_drv.dlat_sec).all()
-    assert (g_dist.dlon_sec == g_drv.dlon_sec).all()
-    assert (g_dist.dalt_m == g_drv.dalt_m).all()
 
 
 def test_engine_from_par(spark, tmp_path):
@@ -125,42 +111,6 @@ def test_streaming_transform_tile_counts(spark, semidyna_grid, tmp_path):
     assert got == want and len(want) > 0
 
 
-def test_par_reader_reference_parity_edges(spark, tmp_path):
-    """ADVICE r01: exact header skip, ParseFloat errors, last-wins
-    duplicate meshcodes — all matching par.rs semantics."""
-    import pytest
-
-    from jgdtrans_rs_spark.grid import ParseParError
-
-    # TKY2JGD layout: 2 header lines.  Header line 2 starts with 8
-    # digits — the reference does NOT ingest it (header count rules).
-    text = (
-        "JGD2000\n"
-        "12345678 this header line looks like a parameter\n"
-        "46303582   11.49105   -9.88759\n"
-        "46303582   99.00000   99.00000\n"   # duplicate: last wins
-        "46303592   11.49099   -9.88994\n"
-    )
-    p = tmp_path / "t.par"
-    p.write_text(text)
-    g = grid_from_par_df(read_par_df(spark, str(p), "TKY2JGD"), "TKY2JGD")
-    assert set(g.codes.tolist()) == {46303582, 46303592}
-    i = list(g.codes).index(46303582)
-    assert g.dlat_sec[i] == 99.0  # last occurrence won
-    assert 12345678 not in g.codes
-
-    # malformed float in a data row raises (reference ParseFloat)
-    bad = tmp_path / "bad.par"
-    bad.write_text("JGD2000\nheader\n46303582   xx.49105   -9.88759\n")
-    with pytest.raises(ParseParError):
-        read_par_df(spark, str(bad), "TKY2JGD").collect()
-
-    # strict=False keeps the dead-letter mode (zero-fill)
-    df = read_par_df(spark, str(bad), "TKY2JGD", strict=False)
-    rows = df.collect()
-    assert len(rows) == 1 and rows[0]["dlat_sec"] == 0.0
-
-
 def test_tables_reader_parquet_fallback(spark):
     """Capability-gated table reader: no Iceberg runtime here, so
     parquet paths read directly, catalog identifiers raise with a
@@ -206,33 +156,6 @@ def test_bucketed_tables_join_without_shuffle(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS pts_b")
 
 
-def test_par_reader_column_not_found_and_attribution(spark, tmp_path):
-    """Truncated lines raise ColumnNotFound (not a silently-parsed
-    truncated float); malformed fields are attributed to the actual
-    column; the earliest bad line wins."""
-    import pytest
-
-    from jgdtrans_rs_spark.grid import ParseParError
-
-    short = tmp_path / "short.par"
-    short.write_text("h1\nh2\n46303582   11.4\n")  # line ends mid-latitude
-    with pytest.raises(ParseParError) as ei:
-        read_par_df(spark, str(short), "TKY2JGD").collect()
-    assert ei.value.kind == "ColumnNotFound"
-
-    lonbad = tmp_path / "lonbad.par"
-    lonbad.write_text(
-        "h1\nh2\n"
-        "46303582   11.49105   xx.88759\n"   # line 3: longitude malformed
-        "46303592   yy.49099   -9.88994\n"   # line 4: latitude malformed
-    )
-    with pytest.raises(ParseParError) as ei:
-        read_par_df(spark, str(lonbad), "TKY2JGD").collect()
-    assert ei.value.kind == "ParseFloat"
-    assert ei.value.column == "Longitude"  # earliest line, actual column
-    assert ei.value.lineno == 3
-
-
 def test_sink_all_empty_pending_write(spark, tmp_path):
     """A fresh checkpoint run over an empty input must write zero-row
     manifests, not crash on schema inference of an empty directory."""
@@ -242,28 +165,6 @@ def test_sink_all_empty_pending_write(spark, tmp_path):
     m = sink.run_checkpointed(df, str(tmp_path / "empty_out"), n_groups=4)
     assert [x["bucket_group"] for x in m] == [0, 1, 2, 3]
     assert all(x["n_rows"] == 0 for x in m)
-
-
-def test_par_reader_header_error(spark, tmp_path):
-    """A file shorter than the layout's header block raises the
-    reference's Header error instead of yielding an empty grid."""
-    import pytest
-
-    from jgdtrans_rs_spark.grid import ParseParError
-
-    from jgdtrans_rs_spark.grid import parse_par
-
-    p = tmp_path / "trunc.par"
-    p.write_text("only one line\n")  # TKY2JGD expects 2 header lines
-    with pytest.raises(ParseParError) as ei:
-        read_par_df(spark, str(p), "TKY2JGD")
-    assert ei.value.kind == "Header"
-    # payload parity with the driver-side twin: same lineno AND the
-    # same end position (= length of the last line)
-    with pytest.raises(ParseParError) as ei2:
-        parse_par("only one line\n", "TKY2JGD")
-    for attr in ("kind", "lineno", "start", "end", "column"):
-        assert getattr(ei.value, attr) == getattr(ei2.value, attr), attr
 
 
 def test_extract_geotags_missing_tag_dead_letters(spark):
@@ -284,23 +185,6 @@ def test_extract_geotags_missing_tag_dead_letters(spark):
            extract_geotags(df).withColumn("pkey", F.col("url").substr(-1, 1).cast("long")).collect()}
     assert got[1] == (None, None)
     assert got[2] == (36.5, 140.25)
-
-
-def test_par_reader_strict_rejects_u32_range_violations(tmp_path, spark):
-    """try_cast('long') happily parses negative / over-u32 meshcodes;
-    the reference's u32::from_str raises ParseInt — strict mode must
-    match (driver twin grid.parse_par already does)."""
-    import pytest
-
-    from jgdtrans_rs_spark.grid import ParseParError
-    from jgdtrans_rs_spark.sources.par import read_par_df
-
-    bad = "\n\n-5030118   1.00000   2.00000\n"
-    p = tmp_path / "neg.par"
-    p.write_text(bad)
-    with pytest.raises(ParseParError) as e:
-        read_par_df(spark, str(p), "TKY2JGD").collect()
-    assert e.value.kind == "ParseInt" and e.value.column == "Meshcode"
 
 
 def test_streaming_restart_from_checkpoint_exactly_once(
@@ -398,57 +282,53 @@ def test_binary_meta_magic_detection(spark):
     assert rows[6] == "unknown"
 
 
-def test_par_strict_rejects_java_float_suffix(spark, tmp_path):
-    """try_cast('double') accepts Java-style '1.5d'/'2f' suffixes that
-    Rust f64::from_str rejects — strict mode must raise ParseFloat on
-    them (round-5 review), while plain floats/exponents still parse."""
+def test_par_strict_rejects_java_float_suffix():
+    """Java-style '1.5d'/'2f' suffixes are not Rust f64::from_str
+    syntax: parse_par raises ParseFloat on them (round-5 review), while
+    plain floats/exponents still parse."""
     import pytest
 
-    from jgdtrans_rs_spark.grid import ParseParError
-    from jgdtrans_rs_spark.sources.par import read_par_df
-
-    bad = tmp_path / "sfx.par"
     # TKY2JGD layout: code 0..8, lat 9..18, lon 19..28 — place the
     # suffix INSIDE the lat field window
     line = "46303582" + " " + "11.491d".ljust(9) + " " + "-9.88759".ljust(9)
-    bad.write_text("JGD2000\nheader\n" + line + "\n")
     with pytest.raises(ParseParError) as e:
-        read_par_df(spark, str(bad), "TKY2JGD").collect()
-    assert "ParseFloat" in str(e.value)
+        parse_par("JGD2000\nheader\n" + line + "\n", "TKY2JGD")
+    assert e.value.kind == "ParseFloat" and e.value.column == "Latitude"
 
-    ok = tmp_path / "exp.par"
     ok_line = ("46303582" + " " + "1.15e+01".ljust(9) + " "
                + "-9.88759".ljust(9))
-    ok.write_text("JGD2000\nheader\n" + ok_line + "\n")
-    rows = read_par_df(spark, str(ok), "TKY2JGD").collect()
-    assert rows[0].dlat_sec == 11.5
+    g = parse_par("JGD2000\nheader\n" + ok_line + "\n", "TKY2JGD")
+    assert g.dlat_sec[0] == 11.5
 
 
-def test_par_bare_cr_is_not_a_line_break(spark, tmp_path):
-    """Hadoop's LineReader splits on a bare \\r; the reference's
-    str::lines does not — a stray CR mid-line must stay ONE (malformed)
-    line with the reference's line numbering, not shift every later
-    lineno (round-5 review)."""
-    import pytest
-
-    from jgdtrans_rs_spark.grid import ParseParError, parse_par
-    from jgdtrans_rs_spark.sources.par import read_par_df
-
+def test_par_bare_cr_is_not_a_line_break(tmp_path):
+    """Universal-newline reads split on a bare \\r; the reference's
+    str::lines does not — a stray CR mid-line must stay ONE line with
+    the reference's line numbering, so load_par on the file equals
+    parse_par on its text (round-5 review)."""
     text = ("JGD2000\n"
             "header\n"
             "46303582  11.49105\r  -9.88759\n"   # CR mid-line
             "46303592  11.49099   -9.88994\n")
     p = tmp_path / "cr.par"
     p.write_bytes(text.encode())
-    # the reference (str::lines) keeps the CR line as ONE line and
-    # parses it; a Hadoop-LineReader split would instead yield a
-    # fragment line '  -9.88759' that fails strict validation
-    ref = parse_par(text, "TKY2JGD")  # MeshGrid
-    got = {r.meshcode: (r.dlat_sec, r.dlon_sec)
-           for r in read_par_df(spark, str(p), "TKY2JGD").collect()}
-    assert set(got) == set(int(c) for c in ref.codes)
-    for i, code in enumerate(ref.codes):
-        assert got[int(code)] == (ref.dlat_sec[i], ref.dlon_sec[i])
+    ref = parse_par(text, "TKY2JGD")
+    got = load_par(str(p), "TKY2JGD")
+    assert len(got) == len(ref) == 2
+    assert got.codes.tolist() == ref.codes.tolist()
+    for col in ("dlat_sec", "dlon_sec", "dalt_m"):
+        assert getattr(got, col).tolist() == getattr(ref, col).tolist()
+    assert got.description == ref.description
+
+    # CRLF files: the trailing \r is stripped per line, description too
+    crlf = tmp_path / "crlf.par"
+    crlf.write_bytes(b"JGD2000\r\nheader\r\n"
+                     b"46303582  11.49105  -9.88759\r\n"
+                     b"46303592  11.49099  -9.88994\r\n")
+    g = load_par(str(crlf), "TKY2JGD")
+    assert g.codes.tolist() == [46303582, 46303592]
+    assert g.dlon_sec.tolist() == [-9.88759, -9.88994]
+    assert g.description == "JGD2000\nheader\n"
 
 
 def test_rasterize_nan_value_does_not_abort(spark):
