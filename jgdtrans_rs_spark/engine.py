@@ -5,11 +5,13 @@ local[*]):
 
 * The parameter grid (O(10^5..10^6) rows) is ``sc.broadcast`` once —
   the Spark equivalent of the reference's in-process HashMap probe
-  (par.rs:283-285).  Executor-side lookup is an in-UDF slot gather
-  through a block-dense meshcode index each Python worker builds once
-  per broadcast (``MeshGrid.lookup``), i.e. broadcast-hash-join
-  semantics with zero shuffles instead of 4 joins (one per cell
-  corner).
+  (par.rs:283-285).  Each Python worker builds, once per broadcast, a
+  block-dense meshcode slot index and a per-node neighbour table
+  (``MeshGrid.rows``/``neighbours``), so a kernel resolves a cell with
+  one in-UDF slot lookup on its SW code and one table row — broadcast-
+  hash-join semantics with zero shuffles instead of 4 joins (one per
+  cell corner).  The chained kernels (Newton, backward_compat)
+  re-probe only the lanes whose cell can have changed.
 * The whole transform chain (validate -> forward/backward -> tile
   assign) is one narrow stage: Scan -> Filter -> Project ->
   ArrowEvalPython -> Project.  Catalyst prunes the parquet scan down

@@ -11,6 +11,10 @@ Python worker builds, once per broadcast, a block-dense slot index over
 them (``_slot_index``), so executor-side lookup is one direct slot
 gather per code — the Spark-side equivalent of the reference's HashMap
 probe (par.rs:283-285) without paying 4 broadcast-hash-join shuffles.
+Next to it the worker builds a per-row neighbour table
+(``MeshGrid.neighbours``): the rows of the other three corners of the
+cell each node is the SW corner of, so the kernels resolve a cell with
+one probe instead of the reference's four.  Neither is pickled.
 """
 
 from __future__ import annotations
@@ -19,7 +23,14 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-from .mesh import UNIT_FIVE, UNIT_ONE
+from .mesh import (
+    UNIT_FIVE,
+    UNIT_ONE,
+    digits_to_meshcode,
+    meshcode_to_digits,
+    next_east,
+    next_north,
+)
 
 # (header_lines, meshcode_slice, lat_slice, lon_slice, alt_slice)
 # verbatim from par.rs:642-653 (Rust半open ranges -> Python slices).
@@ -112,6 +123,10 @@ def _stat_from_array(vs: np.ndarray) -> dict:
 # codes), then 10^2, then single codes (a binary search over every code).
 _BLOCK_WIDTHS = (10_000, 100, 1)
 
+# Rows per step of the neighbour-table build: bounds its transients to
+# a few MB whatever the grid size.
+_NEIGHBOUR_CHUNK = 1 << 16
+
 
 def _slot_index(codes: np.ndarray) -> tuple[int, np.ndarray, np.ndarray]:
     """``(W, blocks, slot)`` over sorted unique int64 ``codes``.
@@ -171,65 +186,88 @@ class MeshGrid:
         return int(self.codes.size)
 
     def _slots(self):
-        """The slot index plus the three value columns, each with a
-        trailing 0.0 that absent codes (row ``n``) gather.  Built on the
-        first ``lookup`` and cached on the instance; ``__getstate__``
-        drops it, so the broadcast pickle never carries it."""
+        """The slot index plus the parameter rows: an (n + 1, 3) array
+        of (dlat_sec, dlon_sec, dalt_m) whose trailing zero row is what
+        absent codes (row ``n``) gather.  Built on the first ``lookup``
+        and cached on the instance; ``__getstate__`` drops it, so the
+        broadcast pickle never carries it."""
         slots = self.__dict__.get("_slot_cache")
         if slots is None:
-            slots = self._slot_cache = (
-                *_slot_index(self.codes),
-                tuple(np.append(a, 0.0) for a in (self.dlat_sec, self.dlon_sec, self.dalt_m)),
-            )
+            values = np.zeros((len(self) + 1, 3))
+            for i, a in enumerate((self.dlat_sec, self.dlon_sec, self.dalt_m)):
+                values[:-1, i] = a
+            slots = self._slot_cache = (*_slot_index(self.codes), values)
         return slots
+
+    def neighbours(self) -> np.ndarray:
+        """The (n + 1, 4) int32 neighbour table.  Row ``r`` takes node
+        ``r`` as the SW corner of a cell and holds the rows of the
+        cell's se, nw and ne corners (``n`` when absent), then a found
+        mask with bits 0-3 set for the sw, se, nw and ne corners
+        present.  The trailing row ``n`` (no SW corner) finds nothing,
+        so a cell resolve is one slot lookup on the SW code and one
+        gather here.
+
+        The neighbour codes come from the node's own digits, exactly as
+        a point's cell builds them (``next_east``/``next_north``), so
+        they equal the per-corner codes of any point whose SW digits
+        round-trip through the SW meshcode.  Built in chunks of
+        ``_NEIGHBOUR_CHUNK`` rows, cached per process like the slot
+        index and never pickled."""
+        table = self.__dict__.get("_neighbour_cache")
+        if table is None:
+            table = self._neighbour_cache = self._neighbour_table()
+        return table
+
+    def _neighbour_table(self) -> np.ndarray:
+        n = len(self)
+        table = np.full((n + 1, 4), n, dtype=np.int32)
+        table[n, 3] = 0
+        for lo in range(0, n, _NEIGHBOUR_CHUNK):
+            # codes >= 10^8 decode as 0 here; no point's SW code is
+            # >= 10^8, so those rows are never read
+            lat_d, lon_d, _ = meshcode_to_digits(self.codes[lo:lo + _NEIGHBOUR_CHUNK])
+            east = next_east(lon_d, self.mesh_unit)
+            north = next_north(lat_d, self.mesh_unit)
+            hi = lo + lat_d[0].size
+            found = np.ones(hi - lo, dtype=np.int32)
+            for i, corner in enumerate(((lat_d, east), (north, lon_d), (north, east))):
+                rows = self.rows(digits_to_meshcode(*corner))
+                table[lo:hi, i] = rows
+                found |= (rows != n) << (i + 1)
+            table[lo:hi, 3] = found
+        return table
 
     def __getstate__(self):
         state = dict(self.__dict__)
         state.pop("_slot_cache", None)
+        state.pop("_neighbour_cache", None)
         return state
 
-    def lookup(self, codes: np.ndarray):
-        """Vectorized ``ParameterSet::get`` (transformer.rs:257-263):
-        gather (dlat_sec, dlon_sec, dalt_m, found_mask) for an int64
-        meshcode array.  Missing codes return 0.0 with found=False.
-
-        A binary search over the few block keys, then one slot gather
+    def rows(self, codes: np.ndarray) -> np.ndarray:
+        """int32 row of each int64 meshcode, ``len(self)`` when absent:
+        a binary search over the few block keys, then one slot gather
         (``_slot_index``)."""
         codes = np.asarray(codes, dtype=np.int64)
-        w, blocks, slot, values = self._slots()
+        w, blocks, slot, _ = self._slots()
         q = codes // w
         pos = np.searchsorted(blocks[:-1], q)
         # an absent block (pos past the keys reads the pad) -> no-block slots
         pos = np.where(blocks[pos] == q, pos, blocks.size - 1)
-        row = slot[pos * w + codes % w]
-        dlat, dlon, dalt = (v[row] for v in values)
-        return dlat, dlon, dalt, row != self.codes.size
+        return slot[pos * w + codes % w]
 
-    def lookup_carry(self, codes: np.ndarray, prev_codes: np.ndarray, prev):
-        """``lookup`` that reuses a previous gather where the meshcode
-        is unchanged — bit-identical by construction (same code ->
-        same parameter row).
+    def values(self) -> np.ndarray:
+        """The (n + 1, 3) parameter rows of ``_slots``: one gather of a
+        row fetches all three components of a node."""
+        return self._slots()[3]
 
-        The chained kernels (backward_compat's two forward_corr steps,
-        the Newton prepare/verify pair) resolve points that moved by
-        ~the correction magnitude (1e-5 deg) or DELTA (3.3e-3 deg),
-        far below the cell size, so typically >90% of lanes keep all
-        four corner codes and skip the slot lookup entirely."""
-        prev_dlat, prev_dlon, prev_dalt, prev_found = prev
-        same = codes == prev_codes
-        if same.all():
-            return prev_dlat, prev_dlon, prev_dalt, prev_found
-        miss = ~same
-        d1, d2, d3, f = self.lookup(codes[miss])
-        dlat = prev_dlat.copy()
-        dlon = prev_dlon.copy()
-        dalt = prev_dalt.copy()
-        found = prev_found.copy()
-        dlat[miss] = d1
-        dlon[miss] = d2
-        dalt[miss] = d3
-        found[miss] = f
-        return dlat, dlon, dalt, found
+    def lookup(self, codes: np.ndarray):
+        """Vectorized ``ParameterSet::get`` (transformer.rs:257-263):
+        gather (dlat_sec, dlon_sec, dalt_m, found_mask) for an int64
+        meshcode array.  Missing codes return 0.0 with found=False."""
+        row = self.rows(codes)
+        v = np.take(self.values(), row, axis=0)
+        return v[:, 0], v[:, 1], v[:, 2], row != self.codes.size
 
     def statistics(self) -> dict[str, dict]:
         """``Transformer::statistics`` (transformer.rs:504-528): exact
@@ -276,16 +314,13 @@ class MeshGrid:
         ]
 
 
-_ASCII_DIGITS = frozenset("0123456789")
-
-
 def _u32_cast(raw: str) -> int:
     """Rust ``u32::from_str`` parity: optional leading '+', ASCII
     digits only, overflow errors.  Python's bare int() is looser — it
     accepts '_' separators ('1_2' -> 12), Unicode decimal digits, and
     negatives, all of which the reference rejects as ParseInt."""
     s = raw[1:] if raw.startswith("+") else raw
-    if not s or not all(c in _ASCII_DIGITS for c in s):
+    if not (s.isascii() and s.isdigit()):
         raise ValueError(raw)
     v = int(s)
     if v > 4294967295:

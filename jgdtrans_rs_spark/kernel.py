@@ -16,7 +16,7 @@ trans.rs:946-999.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 import numpy as np
 
@@ -68,13 +68,89 @@ class CorrResult:
     err_corner: np.ndarray    # int8, -1 when n/a
 
 
-def _resolve_cell(lat, lon, grid: MeshGrid, carry: dict | None = None,
-                  bounds: str = mesh.BOUNDS_STRICT):
+@dataclass
+class _Cells:
+    """The resolved cells of a batch, one lane per point.
+
+    ``key``, ``lat_d``/``lon_d``, ``node``, ``rows``, ``found_all`` and
+    ``corners`` depend only on the lane's SW digits, so a resolve that
+    carries them keeps them wherever the digits cannot have changed;
+    ``latv``/``lonv``, ``valid``, ``ok``, ``y`` and ``x`` belong to the
+    point."""
+
+    key: tuple | None      # floor(8 v), floor(80 v) per axis; None until carried
+    lat_d: tuple           # int64 digit triples of the SW node
+    lon_d: tuple
+    node: tuple            # (latitude, longitude) of the SW node
+    rows: np.ndarray       # int32 (4, n): sw, se, nw, ne grid rows, len(grid) when absent
+    found_all: np.ndarray  # all four corners present
+    corners: np.ndarray    # (3, 4, n): dlat_sec, dlon_sec, dalt_m at sw, se, nw, ne
+    latv: np.ndarray       # mesh values of the point
+    lonv: np.ndarray
+    valid: np.ndarray      # inside ``bounds``
+    ok: np.ndarray
+    y: np.ndarray          # position in the cell (mesh.cell_position)
+    x: np.ndarray
+
+
+def _floor_key(latv, lonv) -> tuple:
+    """What ``mesh.value_to_digits`` reads of the two mesh values.
+
+    The digits are a function of floor(v), floor(8v) and floor(80v).
+    8v is exact, so floor(v) == floor(floor(8v) / 8): two floors per
+    axis decide the digits.  NaN never compares equal, so a NaN lane is
+    always re-resolved."""
+    return (np.floor(8.0 * latv), np.floor(80.0 * latv),
+            np.floor(8.0 * lonv), np.floor(80.0 * lonv))
+
+
+def _probe(latv, lonv, grid: MeshGrid):
+    """The digit-keyed fields of ``_Cells`` for a set of lanes.
+
+    One slot lookup on the SW code, then one gather of the neighbour
+    table.  The table is keyed on the node's own digits, so it equals
+    the reference's four probes (``Params::new_unchecked``,
+    trans.rs:56-89) only when the lane's digits round-trip through the
+    SW meshcode.  Unchecked digits of a saturated mesh value (>= 2^29,
+    e.g. a diverged Newton iterate) have a second or third digit >= 10
+    and do not, so those lanes probe each corner code instead."""
+    unit = grid.mesh_unit
+    lat_d = mesh.value_to_digits(latv, unit)
+    lon_d = mesh.value_to_digits(lonv, unit)
+    sw = grid.rows(mesh.digits_to_meshcode(lat_d, lon_d))
+    table = np.take(grid.neighbours(), sw, axis=0)
+    rows = np.empty((4, sw.size), dtype=np.int32)
+    rows[0] = sw
+    rows[1:] = table[:, :3].T
+    found_all = table[:, 3] == 15
+    odd = np.flatnonzero((lat_d[1] >= 10) | (lat_d[2] >= 10)
+                         | (lon_d[1] >= 10) | (lon_d[2] >= 10))
+    if odd.size:
+        codes = _corner_codes(tuple(d[odd] for d in lat_d), tuple(d[odd] for d in lon_d), unit)
+        rows[1:, odd] = [grid.rows(c) for c in codes[1:]]
+        found_all[odd] = (rows[:, odd] != len(grid)).all(axis=0)
+    node = (mesh.digits_to_lat(lat_d), mesh.digits_to_lon(lon_d))
+    # one gather of a parameter row per corner, then components first,
+    # so each bilinear reads contiguous corner arrays
+    corners = np.ascontiguousarray(np.take(grid.values(), rows, axis=0).transpose(2, 0, 1))
+    return lat_d, lon_d, node, rows, found_all, corners
+
+
+def _corner_codes(lat_d, lon_d, unit: int) -> list:
+    """The sw, se, nw and ne meshcodes of a cell (trans.rs:56-89)."""
+    east = mesh.next_east(lon_d, unit)
+    north = mesh.next_north(lat_d, unit)
+    return [mesh.digits_to_meshcode(*c)
+            for c in ((lat_d, lon_d), (lat_d, east), (north, lon_d), (north, east))]
+
+
+def _resolve_cell(lat, lon, grid: MeshGrid, carry: _Cells | None = None,
+                  bounds: str = mesh.BOUNDS_STRICT) -> _Cells:
     """Cell resolution + 4-corner parameter gather.
 
     Mirrors ``MeshCell::try_from_point`` -> ``Params::new_unchecked``
-    (cell.rs:411-414, trans.rs:56-89).  Returns a dict of arrays; lanes
-    with status != OK carry undefined math fields.
+    (cell.rs:411-414, trans.rs:56-89), with one probe per cell
+    (``_probe``); error attribution is left to ``_cell_errors``.
 
     ``bounds`` selects the validity contract (mesh.py header):
     ``strict`` (engine default), ``inclusive`` (reference checked-path
@@ -83,73 +159,56 @@ def _resolve_cell(lat, lon, grid: MeshGrid, carry: dict | None = None,
     no OOB lane ever; wrapped digits fail as ParameterNotFound exactly
     like the reference's Params::new_unchecked probe).
 
-    ``carry`` is a previous resolve (of the same batch at nearby
-    points): corner lookups are reused via ``grid.lookup_carry`` where
-    the meshcode is unchanged — bit-identical, and typically >90% of
-    lanes skip the slot lookup in the chained kernels (the points
-    move by ~corrections, far below the cell size).
+    ``carry`` is a previous resolve of the same batch at nearby points,
+    and is consumed: its digit-keyed arrays are updated in place.  Only
+    the lanes whose floor key (``_floor_key``) changed are re-probed;
+    the rest keep digits, rows and corner values, bit-identical by
+    construction (same digits -> same cell).
     """
-    n = lat.shape[0]
-    status = np.zeros(n, dtype=np.int8)
-    err_code = np.full(n, -1, dtype=np.int64)
-    err_corner = np.full(n, CORNER_NONE, dtype=np.int8)
-
-    lat_d, lon_d, valid = mesh.point_to_digits(lat, lon, grid.mesh_unit, bounds)
-    status[~valid] = STATUS_OUT_OF_BOUNDS
-
-    east = mesh.next_east(lon_d, grid.mesh_unit)
-    north = mesh.next_north(lat_d, grid.mesh_unit)
-
-    sw_code = mesh.digits_to_meshcode(lat_d, lon_d)
-    se_code = mesh.digits_to_meshcode(lat_d, east)
-    nw_code = mesh.digits_to_meshcode(north, lon_d)
-    ne_code = mesh.digits_to_meshcode(north, east)
-
-    p = {}
-    codes = {}
-    found_map = {}
-    found_all = np.ones(n, dtype=bool)
-    # probe order sw, se, nw, ne — first miss wins (trans.rs:76-87)
-    for corner, code, key in (
-        (CORNER_NE, ne_code, "ne"),
-        (CORNER_NW, nw_code, "nw"),
-        (CORNER_SE, se_code, "se"),
-        (CORNER_SW, sw_code, "sw"),
-    ):
-        if carry is not None:
-            dlat, dlon, dalt, found = grid.lookup_carry(
-                code, carry["codes"][key], (*carry["p"][key], carry["found"][key]))
-        else:
-            dlat, dlon, dalt, found = grid.lookup(code)
-        p[key] = (dlat, dlon, dalt)
-        codes[key] = code
-        found_map[key] = found
-        miss = valid & ~found
-        # iterating ne->sw so the earliest corner overwrites last
-        status[miss] = STATUS_PARAMETER_NOT_FOUND
-        err_code[miss] = code[miss]
-        err_corner[miss] = corner
-        found_all &= found
-
-    y, x = mesh.cell_position(lat, lon, lat_d, lon_d, grid.mesh_unit)
-    return {
-        "status": status,
-        "err_code": err_code,
-        "err_corner": err_corner,
-        "ok": valid & found_all,
-        "found_all": found_all,
-        "lat_d": lat_d,
-        "lon_d": lon_d,
-        "y": y,
-        "x": x,
-        "p": p,
-        "codes": codes,
-        "found": found_map,
-        "sw_code": sw_code,
-    }
+    unit = grid.mesh_unit
+    latv = mesh.lat_mesh_value(lat)
+    if carry is None:
+        key = None
+        fields = _probe(latv, lon, grid)
+    else:
+        key = _floor_key(latv, lon)
+        old = carry.key if carry.key is not None else _floor_key(carry.latv, carry.lonv)
+        moved = np.flatnonzero((key[0] != old[0]) | (key[1] != old[1])
+                               | (key[2] != old[2]) | (key[3] != old[3]))
+        fields = (carry.lat_d, carry.lon_d, carry.node, carry.rows, carry.found_all,
+                  carry.corners)
+        if moved.size:
+            # every array keeps its lanes on the last axis
+            for have, new in zip(_flat(fields), _flat(_probe(latv[moved], lon[moved], grid))):
+                have[..., moved] = new
+    lat_d, lon_d, node, rows, found_all, corners = fields
+    valid = mesh.point_bounds_mask(latv, lon, lat_d, lon_d, unit, bounds)
+    y, x = mesh.node_offset(lat, lon, *node, unit)
+    return _Cells(key, lat_d, lon_d, node, rows, found_all, corners,
+                  latv, lon, valid, valid & found_all, y, x)
 
 
-def _rebound_cell(cell: dict, lat, lon, unit: int, bounds: str) -> dict:
+def _flat(fields) -> list:
+    return [a for f in fields for a in (f if isinstance(f, tuple) else (f,))]
+
+
+def _cell_errors(cell: _Cells, idx: np.ndarray, grid: MeshGrid):
+    """(status, err_code, err_corner) of failing lanes ``idx``:
+    OutOfBounds without attribution (TransformError::new_oob), else
+    ParameterNotFound at the first missing corner in the reference's
+    probe order sw, se, nw, ne (trans.rs:76-87)."""
+    codes = np.stack(_corner_codes(tuple(d[idx] for d in cell.lat_d),
+                                   tuple(d[idx] for d in cell.lon_d), grid.mesh_unit))
+    corner = np.argmax(cell.rows[:, idx] == len(grid), axis=0)
+    valid = cell.valid[idx]
+    return (
+        np.where(valid, STATUS_PARAMETER_NOT_FOUND, STATUS_OUT_OF_BOUNDS).astype(np.int8),
+        np.where(valid, codes[corner, np.arange(idx.size)], -1),
+        np.where(valid, corner, CORNER_NONE).astype(np.int8),
+    )
+
+
+def _rebound_cell(cell: _Cells, unit: int, bounds: str) -> _Cells:
     """Checked view of an UNCHECKED resolve at the same point: digits,
     params and cell position are bounds-independent, only the validity
     verdict differs — lanes outside ``bounds`` become OUT_OF_BOUNDS
@@ -157,15 +216,14 @@ def _rebound_cell(cell: dict, lat, lon, unit: int, bounds: str) -> dict:
     the Newton loop, where the reference verifies iteration i
     unchecked (trans.rs:658) but prepares iteration i+1 checked
     (trans.rs:600-602) at the very same iterate."""
-    valid = mesh.point_bounds_mask(lat, lon, cell["lat_d"], cell["lon_d"], unit, bounds)
-    oob = ~valid
-    return {
-        **cell,
-        "status": np.where(oob, STATUS_OUT_OF_BOUNDS, cell["status"]).astype(np.int8),
-        "err_code": np.where(oob, -1, cell["err_code"]),
-        "err_corner": np.where(oob, CORNER_NONE, cell["err_corner"]).astype(np.int8),
-        "ok": cell["found_all"] & valid,
-    }
+    valid = mesh.point_bounds_mask(cell.latv, cell.lonv, cell.lat_d, cell.lon_d, unit, bounds)
+    return replace(cell, valid=valid, ok=valid & cell.found_all)
+
+
+def _corr(cell: _Cells, comp: int, idx=slice(None)):
+    """Bilinear correction of component ``comp`` at lanes ``idx``."""
+    sw, se, nw, ne = cell.corners[comp][:, idx]
+    return bilinear(sw, se, nw, ne, cell.y[idx], cell.x[idx])
 
 
 def _bounds_mode(strict_bounds: bool) -> str:
@@ -174,25 +232,29 @@ def _bounds_mode(strict_bounds: bool) -> str:
     return mesh.BOUNDS_STRICT if strict_bounds else mesh.BOUNDS_INCLUSIVE
 
 
-def _forward_corr_cell(lat, lon, grid: MeshGrid, carry: dict | None = None,
+def _forward_corr_cell(lat, lon, grid: MeshGrid, carry: _Cells | None = None,
                        strict_bounds: bool = True):
-    """forward_corr + the resolved cell (for lookup carry-over in the
-    chained kernels)."""
+    """forward_corr + the resolved cell (the carry of the chained
+    kernels)."""
     lat = np.ascontiguousarray(lat, dtype=np.float64)
     lon = np.ascontiguousarray(lon, dtype=np.float64)
     cell = _resolve_cell(lat, lon, grid, carry, _bounds_mode(strict_bounds))
-    p, y, x = cell["p"], cell["y"], cell["x"]
 
-    dlat = bilinear(p["sw"][0], p["se"][0], p["nw"][0], p["ne"][0], y, x) / SCALE
-    dlon = bilinear(p["sw"][1], p["se"][1], p["nw"][1], p["ne"][1], y, x) / SCALE
-    dalt = bilinear(p["sw"][2], p["se"][2], p["nw"][2], p["ne"][2], y, x)
+    dlat = _corr(cell, 0) / SCALE
+    dlon = _corr(cell, 1) / SCALE
+    dalt = _corr(cell, 2)
 
-    bad = ~cell["ok"]
-    dlat[bad] = np.nan
-    dlon[bad] = np.nan
-    dalt[bad] = np.nan
-    res = CorrResult(dlat, dlon, dalt, cell["status"], cell["err_code"], cell["err_corner"])
-    return res, cell
+    n = lat.shape[0]
+    status = np.zeros(n, dtype=np.int8)
+    err_code = np.full(n, -1, dtype=np.int64)
+    err_corner = np.full(n, CORNER_NONE, dtype=np.int8)
+    bad = np.flatnonzero(~cell.ok)
+    if bad.size:
+        status[bad], err_code[bad], err_corner[bad] = _cell_errors(cell, bad, grid)
+        dlat[bad] = np.nan
+        dlon[bad] = np.nan
+        dalt[bad] = np.nan
+    return CorrResult(dlat, dlon, dalt, status, err_code, err_corner), cell
 
 
 def forward_corr(lat, lon, grid: MeshGrid, strict_bounds: bool = True) -> CorrResult:
@@ -236,7 +298,7 @@ def backward_compat_corr(lat, lon, grid: MeshGrid, strict_bounds: bool = True) -
     c1, cell1 = _forward_corr_cell(t_lat, t_lon, grid, strict_bounds=strict_bounds)
 
     # step 2 sits ~DELTA away from step 1 (corrections are ~1e-5 deg),
-    # so most lanes keep the same cell -> corner lookups carried over
+    # so most lanes keep their cell and skip the probe
     c2, _ = _forward_corr_cell(*_add_normalized(lat, lon, -c1.dlat, -c1.dlon),
                                grid, carry=cell1, strict_bounds=strict_bounds)
 
@@ -269,7 +331,8 @@ def backward_corr(lat, lon, grid: MeshGrid, strict_bounds: bool = True) -> CorrR
     corner-difference terms at the *absolute* latitude/longitude
     iterate (yn, xn) — not the cell-local fraction (trans.rs:624-648).
     Converged lanes freeze; the cell is re-resolved from the updated
-    iterate every round (it can change between iterations).
+    iterate every round (it can change between iterations), re-probing
+    only the lanes whose floor key moved.
     """
     q_lat = np.ascontiguousarray(lat, dtype=np.float64)
     q_lon = np.ascontiguousarray(lon, dtype=np.float64)
@@ -286,36 +349,34 @@ def backward_corr(lat, lon, grid: MeshGrid, strict_bounds: bool = True) -> CorrR
     err_corner = np.full(n, CORNER_NONE, dtype=np.int8)
     active = np.ones(n, dtype=bool)
 
-    # The verification resolve of iteration i is at the same point as
-    # the preparation resolve of iteration i+1, so it is carried over —
-    # bit-identical inputs give bit-identical outputs, at ~60% of the
-    # cell-resolution cost.
+    def fail(cell, mask):
+        idx = np.flatnonzero(mask)
+        if idx.size:
+            status[idx], err_code[idx], err_corner[idx] = _cell_errors(cell, idx, grid)
+            active[idx] = False
+
+    # Each iteration resolves once, at the verify iterate: the next
+    # iteration's prepare sits at the same point, so it re-bounds that
+    # resolve and reuses its corrections and residuals (same cell, same
+    # expressions, same floats).  dalt is interpolated on converging
+    # lanes alone.
     bounds = _bounds_mode(strict_bounds)
     cell = _resolve_cell(yn, xn, grid, bounds=bounds)
+    fx = q_lon - (xn + _corr(cell, 1) / SCALE)
+    fy = q_lat - (yn + _corr(cell, 0) / SCALE)
     for _ in range(ITERATION):
         if not active.any():
             break
-        fail = active & ~cell["ok"]
-        status[fail] = cell["status"][fail]
-        err_code[fail] = cell["err_code"][fail]
-        err_corner[fail] = cell["err_corner"][fail]
-        active &= cell["ok"]
+        fail(cell, active & ~cell.ok)
 
-        p, y, x = cell["p"], cell["y"], cell["x"]
-        sw, se, nw, ne = p["sw"], p["se"], p["nw"], p["ne"]
-
-        corr_x = bilinear(sw[1], se[1], nw[1], ne[1], y, x) / SCALE
-        corr_y = bilinear(sw[0], se[0], nw[0], ne[0], y, x) / SCALE
-
-        fx = q_lon - (xn + corr_x)
-        fy = q_lat - (yn + corr_y)
+        (sw0, se0, nw0, ne0), (sw1, se1, nw1, ne1) = cell.corners[:2]
 
         # Jacobian in terms of the absolute iterate (trans.rs:624-648);
         # fma(a, b, c) == a*b + c on the non-fma path.
-        fx_x = -1.0 - ((se[1] - sw[1]) * (1.0 - yn) + (ne[1] - nw[1]) * yn) / SCALE
-        fx_y = -((nw[1] - sw[1]) * (1.0 - xn) + (ne[1] - se[1]) * xn) / SCALE
-        fy_x = -((se[0] - sw[0]) * (1.0 - yn) + (ne[0] - nw[0]) * yn) / SCALE
-        fy_y = -1.0 - ((nw[0] - sw[0]) * (1.0 - xn) + (ne[0] - se[0]) * xn) / SCALE
+        fx_x = -1.0 - ((se1 - sw1) * (1.0 - yn) + (ne1 - nw1) * yn) / SCALE
+        fx_y = -((nw1 - sw1) * (1.0 - xn) + (ne1 - se1) * xn) / SCALE
+        fy_x = -((se0 - sw0) * (1.0 - yn) + (ne0 - nw0) * yn) / SCALE
+        fy_y = -1.0 - ((nw0 - sw0) * (1.0 - xn) + (ne0 - se0) * xn) / SCALE
 
         det = fx_x * fy_y + (-fx_y) * fy_x  # trans.rs:651
 
@@ -334,34 +395,25 @@ def backward_corr(lat, lon, grid: MeshGrid, strict_bounds: bool = True) -> CorrR
         # probe), never OUT_OF_BOUNDS.  Reachable only when Newton
         # diverges — no fixture value changes.
         # The Newton step moved each lane by ~the residual, so the cell
-        # rarely changes: corner lookups are carried from the prepare
-        # resolve (bit-identical; only changed codes re-probe).
-        vcell = _resolve_cell(yn, xn, grid, carry=cell, bounds=mesh.BOUNDS_UNCHECKED)
-        vfail = active & ~vcell["ok"]
-        status[vfail] = vcell["status"][vfail]
-        err_code[vfail] = vcell["err_code"][vfail]
-        err_corner[vfail] = vcell["err_corner"][vfail]
-        active &= vcell["ok"]
+        # rarely changes: only lanes whose floor key moved re-probe.
+        cell = _resolve_cell(yn, xn, grid, carry=cell, bounds=mesh.BOUNDS_UNCHECKED)
+        fail(cell, active & ~cell.ok)
 
-        vp, vy, vx = vcell["p"], vcell["y"], vcell["x"]
-        vlat = bilinear(vp["sw"][0], vp["se"][0], vp["nw"][0], vp["ne"][0], vy, vx) / SCALE
-        vlon = bilinear(vp["sw"][1], vp["se"][1], vp["nw"][1], vp["ne"][1], vy, vx) / SCALE
-        valt = bilinear(vp["sw"][2], vp["se"][2], vp["nw"][2], vp["ne"][2], vy, vx)
+        vlat = _corr(cell, 0) / SCALE
+        vlon = _corr(cell, 1) / SCALE
+        fx = q_lon - (xn + vlon)
+        fy = q_lat - (yn + vlat)
 
-        conv = (
-            active
-            & (np.abs(q_lat - (yn + vlat)) < MAX_ERROR)
-            & (np.abs(q_lon - (xn + vlon)) < MAX_ERROR)
-        )
-        out_dlat[conv] = -vlat[conv]
-        out_dlon[conv] = -vlon[conv]
-        out_dalt[conv] = -valt[conv]
-        status[conv] = STATUS_OK
-        active &= ~conv
+        conv = np.flatnonzero(active & (np.abs(fy) < MAX_ERROR) & (np.abs(fx) < MAX_ERROR))
+        if conv.size:
+            out_dlat[conv] = -vlat[conv]
+            out_dlon[conv] = -vlon[conv]
+            out_dalt[conv] = -_corr(cell, 2, conv)
+            status[conv] = STATUS_OK
+            active[conv] = False
         # the next iteration's PREPARE is checked (trans.rs:600-602):
-        # same resolve, re-bounded — digits/params/position are
-        # bounds-independent, so the carry stays bit-identical
-        cell = _rebound_cell(vcell, yn, xn, grid.mesh_unit, bounds)
+        # same resolve, re-bounded
+        cell = _rebound_cell(cell, grid.mesh_unit, bounds)
 
     return CorrResult(out_dlat, out_dlon, out_dalt, status, err_code, err_corner)
 

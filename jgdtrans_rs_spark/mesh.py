@@ -114,18 +114,17 @@ def value_to_digits(value: np.ndarray, unit: int):
     return first, second, third
 
 
-def point_bounds_mask(lat: np.ndarray, lon: np.ndarray, lat_digits, lon_digits,
+def point_bounds_mask(latv: np.ndarray, lonv: np.ndarray, lat_digits, lon_digits,
                       unit: int, bounds: str = BOUNDS_STRICT) -> np.ndarray:
     """Validity mask of a point batch under a bounds mode (module
-    header comment).  ``inclusive`` reproduces the reference checked
-    path exactly: try_from bounds are inclusive (coord.rs:278-280,
-    313-316) and a point whose CELL cannot be built — the top latitude
-    coord (99,7,bound) has no next_up (coord.rs:409-427), and
-    longitude exactly 180.0 puts the east node past the (80,0,0)
-    maximum (node invariant, node.rs:89-124) — is OutOfBounds
-    (trans.rs:429-430)."""
-    latv = lat_mesh_value(lat)
-    lonv = _as_f64(lon)
+    header comment), from its mesh values (``lat_mesh_value`` and the
+    longitude itself) and digits.  ``inclusive`` reproduces the
+    reference checked path exactly: try_from bounds are inclusive
+    (coord.rs:278-280, 313-316) and a point whose CELL cannot be built
+    — the top latitude coord (99,7,bound) has no next_up
+    (coord.rs:409-427), and longitude exactly 180.0 puts the east node
+    past the (80,0,0) maximum (node invariant, node.rs:89-124) — is
+    OutOfBounds (trans.rs:429-430)."""
     if bounds == BOUNDS_UNCHECKED:
         return np.ones(latv.shape, dtype=bool)
     if bounds == BOUNDS_NODE:
@@ -172,7 +171,7 @@ def point_to_digits(lat: np.ndarray, lon: np.ndarray, unit: int,
     lonv = _as_f64(lon)
     lat_digits = value_to_digits(latv, unit)
     lon_digits = value_to_digits(lonv, unit)
-    valid = point_bounds_mask(lat, lon, lat_digits, lon_digits, unit, bounds)
+    valid = point_bounds_mask(latv, lonv, lat_digits, lon_digits, unit, bounds)
     return lat_digits, lon_digits, valid
 
 
@@ -267,10 +266,14 @@ def digits_to_lon(lon_digits) -> np.ndarray:
 def cell_position(lat, lon, lat_digits, lon_digits, unit: int):
     """``MeshCell::position`` (cell.rs:483-491 / code.rs:86-96):
     (y, x) of the point within its cell, sw corner = (0, 0)."""
-    lat = _as_f64(lat)
-    lon = _as_f64(lon)
-    x = lon - digits_to_lon(lon_digits)
-    y = lat - digits_to_lat(lat_digits)
+    return node_offset(lat, lon, digits_to_lat(lat_digits), digits_to_lon(lon_digits), unit)
+
+
+def node_offset(lat, lon, node_lat, node_lon, unit: int):
+    """``cell_position`` from the SW node's latitude and longitude
+    (``digits_to_lat``/``digits_to_lon`` of its digits)."""
+    y = _as_f64(lat) - node_lat
+    x = _as_f64(lon) - node_lon
     if unit == UNIT_ONE:
         return 120.0 * y, 80.0 * x
     return 24.0 * y, 16.0 * x

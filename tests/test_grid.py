@@ -393,8 +393,8 @@ def test_lookup_matches_searchsorted(make, width):
 
 
 def test_pickle_excludes_slot_index():
-    """The slot index is built per process on the first lookup and never
-    travels with the broadcast grid."""
+    """The slot index and the neighbour table are built per process on
+    first use and never travel with the broadcast grid."""
     import pickle
 
     g = _grid_semidyna()
@@ -402,5 +402,57 @@ def test_pickle_excludes_slot_index():
     codes = np.array([54401005, 54401006, 54401150])
     want = g.lookup(codes)
     assert pickle.dumps(g) == before
-    for a, b in zip(pickle.loads(before).lookup(codes), want):
+    table = g.neighbours()
+    assert pickle.dumps(g) == before
+    back = pickle.loads(before)
+    for a, b in zip(back.lookup(codes), want):
         assert a.tobytes() == b.tobytes()
+    assert back.neighbours().tobytes() == table.tobytes()
+
+
+@pytest.mark.parametrize("fmt", ["TKY2JGD", "SemiDynaEXE"])
+def test_neighbour_table_matches_lookup(fmt):
+    """Each row of the neighbour table holds ``lookup`` of its node's
+    next_east / next_north codes, on a holed block whose east and north
+    edge nodes (and the first-level boundary it straddles) have no
+    neighbour beyond them; the found mask says which corners exist."""
+    from jgdtrans_rs_spark import mesh
+
+    unit = 1 if fmt == "TKY2JGD" else 5
+    thirds = range(0, 10, unit)
+    lat = [(f, s, t) for f, s in ((54, 6), (54, 7), (55, 0), (55, 1)) for t in thirds]
+    lon = [(f, s, t) for f, s in ((40, 6), (40, 7), (41, 0), (41, 1)) for t in thirds]
+    rng = np.random.default_rng(4)
+    codes = [int(mesh.digits_to_meshcode(*(tuple(np.array([d]) for d in x) for x in (la, lo)))[0])
+             for la in lat for lo in lon if rng.random() > 0.3]
+    g = _random_grid(codes)
+    g.mesh_unit, g.format = unit, fmt
+    table = g.neighbours()
+    n = len(g)
+    assert table.shape == (n + 1, 4) and table.dtype == np.int32
+    assert (table[n] == [n, n, n, 0]).all()
+
+    lat_d, lon_d, _ = mesh.meshcode_to_digits(g.codes)
+    east, north = mesh.next_east(lon_d, unit), mesh.next_north(lat_d, unit)
+    found = np.ones(n, dtype=np.int32)
+    for i, corner in enumerate(((lat_d, east), (north, lon_d), (north, east))):
+        code = mesh.digits_to_meshcode(*corner)
+        *_, hit = g.lookup(code)
+        want = np.where(hit, np.searchsorted(g.codes, code), n)
+        np.testing.assert_array_equal(table[:n, i], want)
+        found |= hit.astype(np.int32) << (i + 1)
+    np.testing.assert_array_equal(table[:n, 3], found)
+    assert set(table[:n, 3]) > {1, 15}  # edge nodes and holes, and whole cells
+
+
+def test_u32_cast_accepts_ascii_digits_only():
+    """Rust ``u32::from_str``: an optional '+', then ASCII digits only,
+    at most u32::MAX.  Python's isdigit() alone would let Unicode digits
+    and superscripts through."""
+    from jgdtrans_rs_spark.grid import _u32_cast
+
+    for raw in ("", "+", "1_2", "-1", "\u0661\u0662", "\u00b2", "4294967296", " 1", "++1"):
+        with pytest.raises(ValueError):
+            _u32_cast(raw)
+    for raw, want in (("+12", 12), ("4294967295", 4294967295), ("007", 7), ("+0", 0)):
+        assert _u32_cast(raw) == want
