@@ -601,8 +601,7 @@ def _q_transform_metrics(spark, sf_dir):
     * arm='points' — per-status transform counts + per-cell row counts
       for the skew monitor (the relational twin of the reference's
       error taxonomy, trans.rs:946-999) over the points corpus.
-    * arm='pages_deadletter' — the batch twin of the streaming
-      dead-letter contract (streaming/ingest.stream_pages_transform):
+    * arm='pages_deadletter' — the pipeline's dead-letter contract:
       a corpus where every 7th page carries a corrupt geotag flows
       extract -> forward -> rollup with NOTHING dropped; corrupt pages
       surface as a status!=0 class with meshcode -1, so the
@@ -1163,8 +1162,8 @@ def oracle_sql() -> dict[str, str]:
     )
     # dead-letter arm: the corrupt-geotag corpus rebuilt relationally —
     # every 7th page's coordinates fail extraction (NULL), nothing is
-    # dropped, failures roll up under their status class (the batch
-    # twin of the streaming dead-letter contract).  Corruption is
+    # dropped, failures roll up under their status class (the
+    # pipeline's dead-letter contract).  Corruption is
     # modelled as NaN, not NULL: the extraction emits NULL lat/lon,
     # which Arrow ships to the kernel as NaN, and NaN takes the
     # not-in-bounds lane (status 1 OOB) — whereas SQL NULL would slip

@@ -18,9 +18,8 @@ Layout:
     functions/   pure Column expression helpers (JVM-side, codegen-friendly)
     operators/   spatial joins, kNN, dedup, similarity, text, raster
     sources/     synthetic pages + binary metadata, WARC reader,
-                 checkpointed sink
+                 parquet/Iceberg table reader, checkpointed sink
     plans/       SQL generators shared with the DuckDB oracle
-    streaming/   structured-streaming ingest (batch parity first)
 """
 
 from .workerenv import patch_zipimport_invalidate_caches

@@ -16,7 +16,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, StringType
+from pyspark.sql.types import StringType
 
 
 def dms_to_degree_np(sign: np.ndarray, degree: np.ndarray, minute: np.ndarray,
@@ -146,14 +146,6 @@ def format_dms_scalar(value: float, alternate: bool = False) -> str | None:
     return ("-" if sign < 0 else "") + body
 
 
-@F.pandas_udf(DoubleType())
-def dms_to_degree_udf(s: pd.Series) -> pd.Series:
-    """Reference twin of the parser.  HOT PATHS SHOULD USE the pure
-    Column fast path ``functions.columns.dms_to_degree`` (identical
-    output, zero Python); this UDF remains as the executable spec."""
-    return s.map(lambda v: dms_to_degree_scalar(v) if v is not None else None)
-
-
 @F.pandas_udf(StringType())
 def degree_to_dms_udf(v: pd.Series) -> pd.Series:
     """Compact DMS formatting.  Inherently per-row at the final string
@@ -163,9 +155,3 @@ def degree_to_dms_udf(v: pd.Series) -> pd.Series:
     1e-3).  Not a hot-path function — formatting is for human output."""
     return v.map(lambda x: format_dms_scalar(x) if x == x else None)
 
-
-@F.pandas_udf(StringType())
-def degree_to_dms_alt_udf(v: pd.Series) -> pd.Series:
-    """The ``{:#}`` alternate human form, e.g. 36°06′13.58925″
-    (dms.rs:128-145)."""
-    return v.map(lambda x: format_dms_scalar(x, alternate=True) if x == x else None)

@@ -422,7 +422,7 @@ class Engine:
 
         The production guardrail for a 100 TB run: transform the corpus
         and prove invertibility in the same pass (the reference's
-        round-trip identity tests, trans.rs:1628-1644, as a streaming
+        round-trip identity tests, trans.rs:1628-1644, as a per-row
         column instead of a test suite).
         """
         bc, sb = self._bc, self.strict_bounds

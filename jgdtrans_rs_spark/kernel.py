@@ -28,13 +28,6 @@ STATUS_OUT_OF_BOUNDS = 1
 STATUS_PARAMETER_NOT_FOUND = 2
 STATUS_CORRECTION_NOT_FOUND = 3
 
-STATUS_NAMES = {
-    STATUS_OK: "OK",
-    STATUS_OUT_OF_BOUNDS: "OUT_OF_BOUNDS",
-    STATUS_PARAMETER_NOT_FOUND: "PARAMETER_NOT_FOUND",
-    STATUS_CORRECTION_NOT_FOUND: "CORRECTION_NOT_FOUND",
-}
-
 # Corner ids for err_corner (trans.rs MeshCellCorner, probe order of
 # Params::new_unchecked trans.rs:56-89: sw, se, nw, ne).
 CORNER_NONE = -1

@@ -10,8 +10,8 @@ physical strategy:
                    keys and shingle ids; at 100 TB the band join is the
                    scalable candidate generator (pair count stays near
                    linear instead of quadratic).
-* simhash        — 32-bit fingerprint per doc (near-dup by Hamming
-                   distance on the int).
+* simhash_pairs  — SIMHASH_BITS-bit fingerprint per doc,
+                   banded-Hamming near-dup pairs on the int.
 * ngram_jaccard  — exact blocked self-join (the small-corpus verifier
                    for minhash_lsh's recall).
 """
@@ -101,11 +101,6 @@ def minhash_lsh_pairs(spark: SparkSession, docs: str = "documents",
     sints = _stage(spark, webops.minhash_sints_sql(SPARK, docs), "_mh_sints")
     sigs = _stage(spark, webops.minhash_sigs_from(SPARK, sints), "_mh_sigs")
     return spark.sql(webops.minhash_pairs_from(SPARK, sigs, tau_pct))
-
-
-def simhash(spark: SparkSession, docs: str = "documents") -> DataFrame:
-    """(doc_id, simhash) SIMHASH_BITS-bit fingerprints."""
-    return spark.sql(webops.simhash_sql(SPARK, docs))
 
 
 def ngram_jaccard_pairs(spark: SparkSession, docs: str = "documents",

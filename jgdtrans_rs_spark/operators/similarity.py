@@ -1,7 +1,5 @@
 """Similarity search over embedding columns.
 
-* ``ann_brute_topk`` — declarative brute-force cosine top-k (the
-  correctness baseline; rank output is hash-stable across engines).
 * ``ann_lsh_topk`` — random-hyperplane LSH bucketing: each vector is
   signed against ``n_planes`` fixed hyperplanes; candidates share a
   bucket, exact cosine only on candidates.  At 100 TB this turns the
@@ -15,12 +13,12 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, IntegerType, LongType
 
 from ..plans import webops
-from ..plans.textsql import SPARK
+
 
 def _persist_stage(df: DataFrame, base_name: str) -> DataFrame:
     """Persist a stage AND register it in the shared stage registry
@@ -35,12 +33,6 @@ def _persist_stage(df: DataFrame, base_name: str) -> DataFrame:
     out = df.persist()
     _dedup._register_stage_view(out.sparkSession, out, base_name)
     return out
-
-
-def ann_brute_topk(spark: SparkSession, embeddings: str = "embeddings",
-                   n_queries: int = 10, k: int = 5) -> DataFrame:
-    """(query_id, rank, neighbor_id) exact cosine top-k."""
-    return spark.sql(webops.ann_topk_sql(SPARK, embeddings, n_queries, k))
 
 
 def infer_dim(df: DataFrame, vec_col: str = "embedding") -> int:

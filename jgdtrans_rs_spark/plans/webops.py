@@ -22,31 +22,6 @@ def _regexp_strip(expr: str, pattern: str, d: str) -> str:
     return f"regexp_replace({expr}, '{pattern}', '', 'g')"
 
 
-def text_stats_sql(d: str, docs: str = "documents") -> str:
-    """Per-doc token statistics + order-weighted fingerprint.
-
-    Output: doc_id, n_tokens, n_distinct, n_stop, stop_ratio,
-    fingerprint — the quality-scoring primitives of a corpus pipeline.
-    """
-    tk = T.toks("text", d)
-    tids = T.tok_ids("text", d)
-    stop = T.list_filter(tk, "x -> x = 'the' OR x = 'a' OR x = 'of'", d)
-    n = T.size(tk, d)
-    rng = T.range_list("1", f"{T.size(tids, d)} + 1", d)
-    fp_terms = T.transform(rng, f"i -> {T.idx(tids, 'i', d)} * ((i * i) % 1000 + 1)", d)
-    fingerprint = f"{T.list_sum_int(fp_terms, d)} % 1000003"
-    return f"""
-      SELECT doc_id,
-             CAST({n} AS INTEGER) AS n_tokens,
-             CAST({T.size(T.distinct(tk, d), d)} AS INTEGER) AS n_distinct,
-             CAST({T.size(stop, d)} AS INTEGER) AS n_stop,
-             CAST({T.size(stop, d)} AS DOUBLE) / CAST({n} AS DOUBLE) AS stop_ratio,
-             CAST({fingerprint} AS BIGINT) AS fingerprint
-      FROM {docs}
-      WHERE {n} > 0
-    """
-
-
 def _quality_exprs(d: str, n_ws: str, text: str = "text") -> tuple[str, str, str]:
     """(n_bpe, n_punct, quality-bucket CASE) — ONE source of truth for
     the quality formulas, shared by quality_score_sql and the corpus
@@ -108,42 +83,24 @@ def quality_score_sql(d: str, docs: str = "documents") -> str:
     """
 
 
-def lang_id_sql(d: str, docs: str = "documents") -> str:
-    """n-gram-free language heuristic (integer comparisons only):
-    non-printable-ASCII share -> 'ja', else stopword presence -> 'en',
-    else 'other'."""
-    n_ascii = f"length({_regexp_strip('text', '[^ -~]', d)})"
-    tk = T.toks("text", d)
-    n_stop = T.size(T.list_filter(tk, "x -> x = 'the' OR x = 'a' OR x = 'is'", d), d)
-    return f"""
-      SELECT doc_id, lang AS lang_declared,
-             CASE WHEN {n_ascii} * 100 < length(text) * 95 THEN 'ja'
-                  WHEN {n_stop} > 0 THEN 'en'
-                  ELSE 'other' END AS lang_pred
-      FROM {docs}
-    """
-
-
 def text_profile_sql(d: str, docs: str = "documents") -> str:
-    """Per-document text profile: token statistics (text_stats_sql)
-    joined with the language heuristic (lang_id_sql) on doc_id — one
-    contract query covering both operators (round-4 consolidation for
-    the driver's 50-row correctness budget; the operators themselves
-    are unchanged and separately importable).
+    """Per-document text profile: token statistics (n_tokens,
+    n_distinct, stop-word count and ratio, an order-weighted
+    fingerprint) and an n-gram-free language heuristic
+    (non-printable-ASCII share -> 'ja', else stop-word presence ->
+    'en', else 'other'; integer comparisons only) in one contract
+    query.
 
     Output: doc_id, n_tokens, n_distinct, n_stop, stop_ratio,
     fingerprint, lang_declared, lang_pred.
 
     Scale plan: all eight columns are per-row expressions reading ONE
-    tokenize stage (text_profile_base_sql) — the corpus is read and
-    tokenized once, vs twice for a join of the two standalone
-    builders; no shuffle.  The Spark operator
+    tokenize stage (text_profile_base_sql), so the corpus is read and
+    tokenized once; no shuffle.  The Spark operator
     (operators/text.text_profile) materializes the base because
     CollapseProject would inline the split pipeline into every
     consuming expression; this single-statement form is the DuckDB
-    oracle.  The expressions are the same ones text_stats_sql /
-    lang_id_sql emit, so the standalone operators and this profile
-    are value-identical by construction."""
+    oracle."""
     return (f"WITH _prof_base AS ({text_profile_base_sql(d, docs)})\n"
             f"{text_profile_from(d, '_prof_base')}")
 
@@ -395,8 +352,8 @@ def ngram_jaccard_sql(d: str, docs: str = "documents", tau_pct: int = 50) -> str
 
 
 def events_window_sql(d: str, events: str = "events") -> str:
-    """Tumbling 1-hour window aggregation over the events stream table
-    (batch twin of the streaming ingest): exact integer cent sums."""
+    """Tumbling 1-hour window aggregation over the events table:
+    exact integer cent sums."""
     # Spark unix_timestamp truncates sub-second parts; DuckDB epoch()
     # keeps them (and CAST rounds), so floor explicitly.
     epoch = "unix_timestamp(ts)" if d == SPARK else "CAST(floor(epoch(ts)) AS BIGINT)"

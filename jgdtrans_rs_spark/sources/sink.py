@@ -326,15 +326,3 @@ def read_resumed(spark: SparkSession, out_dir: str) -> DataFrame:
     """Read back everything persisted so far."""
     return spark.read.parquet(f"{out_dir.rstrip('/')}/{DATA_DIR}")
 
-
-def write_bucketed_table(df: DataFrame, table: str, mesh_col: str = "meshcode",
-                         n_buckets: int = 64, sort: bool = True) -> None:
-    """Persist as a Hive-bucketed table on the tile key: two tables
-    bucketed the same way join WITHOUT a shuffle (co-located
-    sort-merge), the right layout for repeated tile-keyed joins over a
-    100 TB corpus (pay the shuffle once at write time, never again).
-    """
-    w = df.write.mode("overwrite").bucketBy(n_buckets, mesh_col)
-    if sort:
-        w = w.sortBy(mesh_col)
-    w.saveAsTable(table)

@@ -30,15 +30,10 @@ engine's input_hint table shape with no codec or parsing library:
   ``pages.extract_geotags``'s Column-space body extraction, so the
   per-row invariant (byte-identical extracted text per url) holds for
   WARC-sourced pages exactly as for table-sourced ones.
-* ``stream_read_warc`` — the streaming twin: newly arriving archive
-  files become record rows under readStream with file-level
-  exactly-once restart semantics (binaryFile source + checkpoint).
 * ``transcode_to_utf8`` — CCNet-style charset recovery: declared
   Shift_JIS/EUC-JP/cp1252/… pages strictly re-encode to UTF-8 (the
   ``charset`` column records the source); lying or undeclared
   encodings keep raw bytes so the quarantine stays visible.
-* ``cdx_index`` — the crawl's companion index (SURT urlkey + sha1
-  digest + positional location) in relational, Column-only form.
 * ``encode_warc_bytes`` — an independent test encoder (plain or
   per-record-gzip-member), so round-trip tests do not reuse the
   parser's own conventions.
@@ -62,9 +57,8 @@ from pyspark.sql.types import (BinaryType, IntegerType, StringType,
                                StructField, StructType)
 
 __all__ = [
-    "parse_warc_bytes", "read_warc", "stream_read_warc",
-    "pages_from_warc", "cdx_index", "encode_warc_bytes",
-    "transcode_to_utf8",
+    "parse_warc_bytes", "read_warc", "pages_from_warc",
+    "encode_warc_bytes", "transcode_to_utf8",
 ]
 
 _CRLF2 = b"\r\n\r\n"
@@ -363,12 +357,31 @@ _WARC_SCHEMA = StructType([
 ])
 
 
-def _records_from_files(files: DataFrame, budget: int,
-                        transcode: bool = True) -> DataFrame:
-    """(path, content) frame -> record rows; shared by the batch and
-    streaming readers (the stage is stateless, so the plan shape is
-    identical under readStream)."""
+def read_warc(spark: SparkSession, path: str,
+              budget: int = DEFAULT_BUDGET,
+              transcode: bool = True) -> DataFrame:
+    """Distributed WARC scan: every record of every file under
+    ``path`` (glob ok) as rows ``(warc_file, rec_type, url, warc_ts,
+    html, lang, status, rec_index)``.
 
+    Plan shape: ``binaryFile`` scan -> ONE ``mapInPandas`` stage, one
+    task per file (gzip members are not splittable; Common Crawl
+    sizes files so that is the right granularity), zero shuffles.
+    ``rec_index`` preserves each record's position in its file so a
+    dead letter is addressable ('file X, record 1047') — the same
+    positional-error discipline as the par reader.  ``warc_ts`` is a
+    real TIMESTAMP; the raw WARC-Date string survives parsing via
+    ``try_to_timestamp`` (an unparseable date yields NULL, never a
+    task failure).
+
+    Task granularity is governed by ``spark.sql.files.maxPartitionBytes``:
+    the binaryFile scan packs WHOLE files into partitions up to that
+    size, so production-sized crawl files (~1 GB > the 128 MB default)
+    get one task each with no tuning, while a directory of tiny test
+    files coalesces into few tasks — lower the conf (as
+    scripts/probe_warc.py does) when benchmarking on small files."""
+    files = spark.read.format("binaryFile").load(path) \
+        .select("path", "content")
     cols = [f.name for f in _WARC_SCHEMA.fields]
 
     def gen(batches):
@@ -397,64 +410,6 @@ def _records_from_files(files: DataFrame, budget: int,
     )
 
 
-def read_warc(spark: SparkSession, path: str,
-              budget: int = DEFAULT_BUDGET,
-              transcode: bool = True) -> DataFrame:
-    """Distributed WARC scan: every record of every file under
-    ``path`` (glob ok) as rows ``(warc_file, rec_type, url, warc_ts,
-    html, lang, status, rec_index)``.
-
-    Plan shape: ``binaryFile`` scan -> ONE ``mapInPandas`` stage, one
-    task per file (gzip members are not splittable; Common Crawl
-    sizes files so that is the right granularity), zero shuffles.
-    ``rec_index`` preserves each record's position in its file so a
-    dead letter is addressable ('file X, record 1047') — the same
-    positional-error discipline as the par reader.  ``warc_ts`` is a
-    real TIMESTAMP; the raw WARC-Date string survives parsing via
-    ``try_to_timestamp`` (an unparseable date yields NULL, never a
-    task failure).
-
-    Task granularity is governed by ``spark.sql.files.maxPartitionBytes``:
-    the binaryFile scan packs WHOLE files into partitions up to that
-    size, so production-sized crawl files (~1 GB > the 128 MB default)
-    get one task each with no tuning, while a directory of tiny test
-    files coalesces into few tasks — lower the conf (as
-    scripts/probe_warc.py does) when benchmarking on small files."""
-    files = spark.read.format("binaryFile").load(path) \
-        .select("path", "content")
-    return _records_from_files(files, budget, transcode)
-
-
-def stream_read_warc(spark: SparkSession, path: str,
-                     budget: int = DEFAULT_BUDGET,
-                     transcode: bool = True) -> DataFrame:
-    """Streaming WARC ingest: new ``.warc.gz`` files appearing under
-    ``path`` become record rows as they arrive — the crawl-archive
-    twin of the repo's other file-stream sources.  The binaryFile
-    source tracks processed files in the checkpoint, so a restart
-    resumes with ONLY unseen files (exactly-once at file granularity,
-    the same recovery contract proven for the pages stream), and the
-    record stage is the identical stateless mapInPandas as batch.
-    Downstream composition is unchanged: filter ok responses, extract,
-    transform, or feed ``stream_dedup_exact`` — all stateless or
-    watermark-bounded."""
-    # streaming sources require an explicit schema; binaryFile's is fixed
-    bf_schema = ("path string, modificationTime timestamp, "
-                 "length long, content binary")
-    # no pathGlobFilter: the batch reader ingests every file under
-    # ``path`` (non-WARC files surface as bad_record_magic dead
-    # letters), and the streaming twin must be row-identical.  As with
-    # every Spark file stream, writers must land files ATOMICALLY
-    # (write elsewhere + rename) — a glob that admitted in-progress
-    # names like *.warc.gz.tmp would mark the partial file processed
-    # forever under the source's file-level exactly-once tracking.
-    files = (spark.readStream.format("binaryFile")
-             .schema(bf_schema)
-             .load(path)
-             .select("path", "content"))
-    return _records_from_files(files, budget, transcode)
-
-
 def pages_from_warc(spark: SparkSession, path: str,
                     budget: int = DEFAULT_BUDGET,
                     transcode: bool = True) -> DataFrame:
@@ -480,47 +435,6 @@ def pages_from_warc(spark: SparkSession, path: str,
         "url", "warc_ts", "html",
         F.regexp_extract(doc, _pages.BODY_RE, 1).alias("text"),
         "lang",
-    )
-
-
-def cdx_index(records: DataFrame) -> DataFrame:
-    """CDX-style capture index from a ``read_warc`` frame — the
-    companion artifact Common Crawl publishes next to every crawl
-    (urlkey + timestamp + digest + location), here in relational form:
-
-    ``(urlkey, cdx_ts, url, digest, warc_file, rec_index)``
-
-    * ``urlkey`` is SURT-lite: host labels reversed and comma-joined,
-      then ``)`` + path — so every capture of one registrable domain
-      sorts adjacently (``com,example)/a``), the property the format
-      exists for (range scans / prefix pruning over a sorted index).
-    * ``digest`` is sha1 over the response bytes (hex; Common Crawl
-      uses base32 of the same sha1) — the exact-dedup key.
-    * ``warc_file`` + ``rec_index`` locate the record, the engine's
-      positional addressing (a parquet index bucketed/sorted by
-      urlkey replaces CC's flat-file binary search at scale).
-
-    Pure Column space: stays in whole-stage codegen, no shuffle — the
-    caller chooses the write layout (e.g. ``write_bucketed_table`` on
-    urlkey for shuffle-free joins against later crawls)."""
-    ok = records.where((F.col("status") == "ok")
-                       & (F.col("rec_type") == "response")
-                       & F.col("url").isNotNull())
-    host = F.regexp_extract("url", r"^[a-z][a-z0-9+.-]*://([^/?#]*)", 1)
-    # strip userinfo/port, lowercase, reverse the dot-separated labels
-    host = F.lower(F.regexp_replace(F.regexp_replace(
-        host, r"^.*@", ""), r":\d+$", ""))
-    path = F.regexp_extract("url", r"^[a-z][a-z0-9+.-]*://[^/?#]*(.*)$", 1)
-    urlkey = F.concat(
-        F.array_join(F.reverse(F.split(host, r"\.")), ","),
-        F.lit(")"),
-        F.when(path == "", "/").otherwise(path))
-    return ok.select(
-        urlkey.alias("urlkey"),
-        F.date_format("warc_ts", "yyyyMMddHHmmss").alias("cdx_ts"),
-        "url",
-        F.sha1(F.coalesce(F.col("html"), F.lit(b""))).alias("digest"),
-        "warc_file", "rec_index",
     )
 
 

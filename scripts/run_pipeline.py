@@ -2,18 +2,23 @@
 """spark-submit entry point for the production pipeline (north rule:
 ``spark-submit --py-files jgdtrans_rs_spark.zip scripts/run_pipeline.py``).
 
-Pure PySpark deployment — no JVM extensions, no custom jars.  On a
-cluster the input is an Iceberg table of web pages
-(``spark.read.format("iceberg")``); the sandbox substitutes the
-deterministic parquet-derived pages source.
+Pure PySpark deployment — no JVM extensions, no custom jars.  The
+input is a table of web pages ``(url, warc_ts, html, text, lang)``:
+``--input`` names an Iceberg table (when the session has an Iceberg
+catalog) or a parquet directory, read by ``sources/tables.read_table``.
+An ``--input`` directory that holds ``orders.parquet`` is an sf dir
+instead, and the deterministic pages source is derived from it
+(``sources/pages.synth_pages``).  ``--warc`` ingests raw crawl
+archives through the same downstream chain.
 
 Usage:
     spark-submit --py-files jgdtrans_rs_spark.zip scripts/run_pipeline.py \
         --par SemiDynaEXE.par --format SemiDynaEXE \
-        --input /root/testdata/sf0.1 --output /tmp/out [--resume]
+        --input <sf dir | pages table> --output /tmp/out
 
 The job is resumable: each mesh-bucket group writes a manifest on
-completion; a restarted job skips completed groups (sources/sink.py).
+completion; rerunning with the same ``--output`` skips completed
+groups (sources/sink.py).
 """
 
 from __future__ import annotations
@@ -31,7 +36,8 @@ def main(argv=None):
     ap.add_argument("--par", help="par file path (omit to use the fixture grid)")
     ap.add_argument("--format", default="SemiDynaEXE")
     src_group = ap.add_mutually_exclusive_group(required=True)
-    src_group.add_argument("--input", help="sf dir or Iceberg table")
+    src_group.add_argument("--input", help="sf dir (holds orders.parquet), "
+                           "parquet pages table or Iceberg identifier")
     src_group.add_argument("--warc", help="directory of .warc(.gz) crawl "
                            "files to ingest instead of the page table")
     ap.add_argument("--output", required=True)
@@ -60,10 +66,16 @@ def main(argv=None):
         from jgdtrans_rs_spark.sources.warc import pages_from_warc
 
         pages = pages_from_warc(spark, args.warc)
-    elif args.input:
-        pages = pages_src.synth_pages(spark, args.input)
     else:
-        ap.error("one of --input / --warc is required")
+        # resolved through Hadoop so object-store URIs work too
+        _, fs, orders = sink._hadoop(
+            spark, f"{args.input.rstrip('/')}/orders.parquet")
+        if fs.exists(orders):
+            pages = pages_src.synth_pages(spark, args.input)
+        else:
+            from jgdtrans_rs_spark.sources import tables
+
+            pages = tables.read_table(spark, args.input)
     extracted = pages_src.extract_geotags(pages)
     valid, quarantine = eng.validate(extracted, "lat", "lon")
     transformed = eng.transform_and_tile(valid, "lat", "lon", None,

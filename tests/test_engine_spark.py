@@ -1,6 +1,5 @@
 """Spark-layer end-to-end tests: entry pipeline, extraction invariant,
-DataFrame kernels vs numpy, spatial operators, checkpoint/resume,
-streaming smoke."""
+DataFrame kernels vs numpy, spatial operators, checkpoint/resume."""
 
 import os
 import re
@@ -280,31 +279,6 @@ def test_checkpoint_sink_single_pass(spark, points, tmp_path):
     assert acc.value == n, f"input scanned {acc.value / n:.1f}x"
 
 
-def test_streaming_events_window(spark, tmp_path):
-    """Structured Streaming twin of events_window: one availableNow
-    micro-batch over the events parquet, checked against the batch agg."""
-    from jgdtrans_rs_spark.streaming.ingest import stream_events_window
-
-    import shutil
-
-    stream_dir = str(tmp_path / "events_stream")
-    os.makedirs(stream_dir, exist_ok=True)
-    shutil.copy(f"{SF_TINY}/events.parquet", os.path.join(stream_dir, "part-0.parquet"))
-    batch_src = spark.read.parquet(f"{SF_TINY}/events.parquet")
-    stream = stream_events_window(spark, stream_dir, batch_src.schema)
-    assert stream.isStreaming
-    q = (
-        stream.writeStream.format("memory").queryName("ev_win")
-        .outputMode("complete").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("SELECT event_type, sum(n_events) AS n FROM ev_win GROUP BY event_type")
-    exp = batch_src.groupBy("event_type").count()
-    g = {r["event_type"]: r["n"] for r in got.collect()}
-    e = {r["event_type"]: r["count"] for r in exp.collect()}
-    assert g == e
-
-
 def test_explain_no_shuffle_in_transform(engine, points):
     """The transform chain must be one narrow stage: no Exchange in the
     physical plan."""
@@ -346,135 +320,6 @@ def test_dms_column_parser_matches_scalar(spark):
             assert have is not None and math.isnan(have), (s, have)
         else:
             assert have == want, (s, have, want)  # bit-exact
-
-
-def test_streaming_stateful_cell_lineage(spark, tmp_path):
-    """applyInPandasWithState keeps per-meshcode running counters
-    across micro-batches: two files forced into separate batches via
-    maxFilesPerTrigger=1; the second emission for a shared cell must
-    carry the accumulated total, and final totals must equal the batch
-    aggregation."""
-    import pandas as pd
-
-    from jgdtrans_rs_spark.streaming.stateful import stream_cell_lineage
-
-    d = str(tmp_path / "tstream")
-    os.makedirs(d)
-    rows1 = pd.DataFrame({"meshcode": [54401005] * 3 + [54401100] * 2,
-                          "status": [0, 0, 1, 0, 0]})
-    rows2 = pd.DataFrame({"meshcode": [54401005] * 4, "status": [0, 2, 0, 0]})
-    schema = "meshcode long, status int"
-    spark.createDataFrame(rows1, schema).coalesce(1).write.parquet(d + "/f1")
-    spark.createDataFrame(rows2, schema).coalesce(1).write.parquet(d + "/f2")
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d + "/f*")
-    )
-    q = (
-        stream_cell_lineage(src)
-        .writeStream.format("memory").queryName("cell_lineage")
-        .outputMode("update").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    out = spark.sql("SELECT * FROM cell_lineage").toPandas()
-    assert out["batch_rows"].max() < 7  # really ran as multiple batches
-    # last emission per cell = running totals = batch aggregation
-    last = out.groupby("meshcode").last()
-    assert int(last.loc[54401005, "n_rows"]) == 7
-    assert int(last.loc[54401005, "n_ok"]) == 5
-    assert int(last.loc[54401100, "n_rows"]) == 2
-    # the shared cell emitted twice, second time with accumulated state
-    emissions = out[out["meshcode"] == 54401005]
-    assert len(emissions) == 2
-    assert emissions["n_rows"].max() > emissions["batch_rows"].max()
-
-
-def test_streaming_dedup_exact(spark, tmp_path):
-    """Dedup-on-arrival drops repeated content across micro-batches
-    (two files, forced into separate batches)."""
-    import datetime
-
-    from jgdtrans_rs_spark.streaming.ingest import stream_dedup_exact
-
-    d = str(tmp_path / "dstream")
-    os.makedirs(d)
-    schema = "url string, warc_ts timestamp, text string"
-    t0 = datetime.datetime(2023, 1, 1)
-    f1 = [("u1", t0, "alpha beta"), ("u2", t0, "gamma delta"), ("u3", t0, "alpha beta")]
-    f2 = [("u4", t0, "alpha beta"), ("u5", t0, "epsilon zeta")]
-    spark.createDataFrame(f1, schema).coalesce(1).write.parquet(d + "/f1")
-    spark.createDataFrame(f2, schema).coalesce(1).write.parquet(d + "/f2")
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(d + "/f*")
-    )
-    q = (
-        stream_dedup_exact(src)
-        .writeStream.format("memory").queryName("dedup_stream")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    out = spark.sql("SELECT text FROM dedup_stream").toPandas()
-    texts = sorted(out["text"])
-    assert texts == ["alpha beta", "epsilon zeta", "gamma delta"]
-
-
-def test_streaming_watermark_finalizes_windows(spark, tmp_path):
-    """Watermark semantics that Spark actually guarantees: in append
-    mode, exactly the windows whose END the watermark has passed are
-    finalized/emitted; younger windows stay in state.  (Dropping of
-    late input rows is explicitly best-effort in Spark — verified on
-    this build: a 05:00 event arriving after the watermark reached
-    09:30 is still accepted — so this test pins finalization, not
-    dropping.)"""
-    import datetime
-
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    d = str(tmp_path / "late")
-    os.makedirs(d)
-
-    def write_file(name, rows, mtime):
-        pdf = pd.DataFrame(rows, columns=["event_id", "ts", "user_id",
-                                          "event_type", "value", "props"])
-        pq.write_table(pa.Table.from_pandas(pdf), f"{d}/{name}",
-                       coerce_timestamps="us", allow_truncated_timestamps=True)
-        os.utime(f"{d}/{name}", (mtime, mtime))
-
-    def ev(i, hour, minute=0):
-        return (i, datetime.datetime(2023, 1, 1, hour, minute), 1, "click", 1.0, "{}")
-
-    # deterministic single files with spaced mtimes -> f1 before f2
-    write_file("f1.parquet", [ev(1, 5), ev(2, 10), ev(3, 11, 30)], 1_600_000_000)
-    write_file("f2.parquet", [ev(4, 12)], 1_600_000_100)
-    src_schema = spark.read.parquet(d + "/f1.parquet").schema
-    src = (
-        spark.readStream.schema(src_schema)
-        .option("maxFilesPerTrigger", 1).parquet(d + "/f*.parquet")
-    )
-    stream = (
-        src.withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", "1 hour"), "event_type")
-        .agg(F.count("*").alias("n_events"))
-    )
-    q = (
-        stream.writeStream.format("memory").queryName("late_win")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    # final watermark = 12:00 - 2h = 10:00; finalized windows are
-    # exactly those ending at or before 10:00 -> only 05:00-06:00
-    final_wm = max(p["eventTime"].get("watermark", "")
-                   for p in q.recentProgress if p.get("eventTime"))
-    assert final_wm.startswith("2023-01-01T10:00")
-    out = spark.sql("SELECT window.start AS ws FROM late_win").toPandas()
-    hours = sorted(int(ts.hour) for ts in out["ws"])
-    assert hours == [5], hours  # 10/11/12 windows not yet finalized
 
 
 @pytest.mark.parametrize("op", ["transform_tile_pip", "transform_and_tile"])
@@ -848,33 +693,6 @@ def test_hot_codes_warns_when_stats_disabled(spark, tmp_path):
     with pytest.warns(UserWarning, match="NO tile statistics"):
         assert sink.hot_codes_from_manifests(out_dir, spark,
                                              threshold=5) == []
-
-
-def test_streaming_dedup_exact_dead_letters_survive(spark, tmp_path):
-    """NULL text md5s to NULL and dropDuplicates* groups NULLs as ONE
-    key — without the surrogate, every dead letter after the first
-    was silently swallowed.  NULL warc_ts rows (unparseable WARC-Date)
-    must also flow instead of parking in a never-closing NULL window."""
-    import datetime
-
-    from jgdtrans_rs_spark.streaming.ingest import stream_dedup_exact
-
-    t0 = datetime.datetime(2023, 1, 1)
-    schema = "url string, warc_ts timestamp, text string"
-    rows = [("u1", t0, "alpha"),
-            ("d1", t0, None),            # dead letter 1
-            ("d2", t0, None),            # dead letter 2 — must survive
-            ("d3", None, None),          # dead letter, NULL event time
-            ("u2", t0, "alpha")]         # true duplicate — dropped
-    d = str(tmp_path / "dl_stream")
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(d)
-    src = spark.readStream.schema(schema).parquet(d)
-    q = (stream_dedup_exact(src)
-         .writeStream.format("memory").queryName("dl_dedup")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    out = spark.sql("SELECT url FROM dl_dedup").toPandas()
-    assert sorted(out["url"]) == ["d1", "d2", "d3", "u1"]
 
 
 def test_bucketed_join_rejects_duplicate_poly_ids(spark):

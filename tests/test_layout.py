@@ -1,9 +1,10 @@
-"""Which library modules the contract, pipeline and benchmark reach.
+"""What of the library the contract, pipeline, benchmark and tests use.
 
 Walks the ``jgdtrans_rs_spark`` imports (module level, inside function
-bodies, and relative) transitively from the entry points, and pins the
-set of library modules none of them reaches.  A later deletion shrinks
-the expected set; a new unreached module fails here.
+bodies, and relative) transitively from the entry points and fails on
+any library module none of them reaches.  A second scan over every
+``.py`` in the repo fails on any top-level library ``def``/``class``
+whose name is used nowhere outside its own body.
 """
 
 import ast
@@ -51,5 +52,35 @@ def _reached():
 
 def test_unreached_library_modules():
     unreached = {m.removeprefix(PKG + ".") for m in set(LIBRARY) - _reached()}
-    assert unreached == {"sources.tables", "streaming", "streaming.ingest",
-                         "streaming.stateful"}
+    assert unreached == set()
+
+
+def _sources():
+    """Every .py in the repo, skipping hidden directories (run output)."""
+    for p in ROOT.rglob("*.py"):
+        if not any(part.startswith(".") for part in p.relative_to(ROOT).parts):
+            yield p, ast.parse(p.read_text())
+
+
+def _uses(node):
+    """The name a Name, attribute access or import refers to, else None."""
+    if isinstance(node, ast.Name):
+        return node.id
+    if isinstance(node, ast.Attribute):
+        return node.attr
+    if isinstance(node, ast.alias):
+        return node.name
+    return None
+
+
+def test_every_library_def_is_referenced():
+    trees = list(_sources())
+    defs = [node for p, tree in trees if p.is_relative_to(ROOT / PKG)
+            for node in tree.body
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                 ast.ClassDef))]
+    # a use inside a def's own body (recursion) does not count
+    owner = {id(n): d.name for d in defs for n in ast.walk(d)}
+    used = {_uses(n) for _, tree in trees for n in ast.walk(tree)
+            if owner.get(id(n)) != _uses(n)}
+    assert sorted({d.name for d in defs} - used) == []

@@ -1,5 +1,5 @@
 """Source-layer tests: par files on disk (load_par, Engine.from_par),
-streaming transform, table reader, sink, binary payload metadata."""
+table reader, sink, geotag extraction, binary payload metadata."""
 
 from pyspark.sql import functions as F
 
@@ -32,85 +32,6 @@ def test_engine_from_par(spark, tmp_path):
     assert row.out_alt == 2.4363138578103
 
 
-def test_streaming_pages_transform(spark, semidyna_grid, tmp_path):
-    """Stateless streaming transform: one availableNow micro-batch of
-    extracted pages produces the same rows as the batch path."""
-    from jgdtrans_rs_spark.streaming.ingest import stream_pages_transform
-
-    eng = Engine(spark, semidyna_grid)
-    batch = pages_src.extract_geotags(
-        pages_src.synth_pages(spark, "/root/testdata/sf0.001")
-    ).select("url", "lat", "lon").unionByName(spark.createDataFrame(
-        # dead-letter fixtures: NULL and out-of-range coordinates must
-        # come out as status rows, not vanish from the stream
-        [("bad://null", None, None), ("bad://oob", 12.0, 3.0)],
-        "url string, lat double, lon double"))
-    src_dir = str(tmp_path / "pages_src")
-    batch.write.mode("overwrite").parquet(src_dir)
-
-    stream = spark.readStream.schema(batch.schema).parquet(src_dir)
-    out = stream_pages_transform(eng, stream)
-    assert out.isStreaming
-    q = (
-        out.writeStream.format("memory").queryName("pages_tf")
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql(
-        "SELECT count(*) AS n, "
-        "sum(CASE WHEN status = 0 THEN 1 ELSE 0 END) AS ok, "
-        "sum(CASE WHEN status <> 0 THEN 1 ELSE 0 END) AS bad "
-        "FROM pages_tf").collect()[0]
-    exp = eng.forward(batch, "lat", "lon", None)
-    assert got.n == exp.count() == batch.count()
-    assert got.ok == exp.filter(F.col("status") == 0).count()
-    assert got.bad >= 2  # the injected dead-letter rows are visible
-
-
-def test_streaming_transform_tile_counts(spark, semidyna_grid, tmp_path):
-    """Streaming fused twin (transform + tile + windowed counts):
-    availableNow over a file source must reproduce the batch
-    groupBy(window, meshcode) counts exactly."""
-    from jgdtrans_rs_spark.streaming.ingest import stream_transform_tile_counts
-
-    eng = Engine(spark, semidyna_grid)
-    batch = pages_src.extract_geotags(
-        pages_src.synth_pages(spark, "/root/testdata/sf0.001")
-    ).select("url", "warc_ts", "lat", "lon")
-    src_dir = str(tmp_path / "pages_tile_src")
-    batch.write.mode("overwrite").parquet(src_dir)
-
-    stream = spark.readStream.schema(
-        spark.read.parquet(src_dir).schema).parquet(src_dir)
-    out = stream_transform_tile_counts(eng, stream)
-    assert out.isStreaming
-    q = (
-        # complete mode: append would hold back windows the watermark
-        # hasn't closed by stream end; complete emits every window, so
-        # the batch twin comparison is exact
-        out.writeStream.format("memory").queryName("tile_counts")
-        .outputMode("complete").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-
-    # batch twin, same operators without the stream wrapper — failed
-    # rows aggregate under meshcode -1 with n_failed, not dropped
-    b = batch.withColumn("warc_ts", F.col("warc_ts").cast("timestamp"))
-    tiled = eng.assign_tiles(eng.forward(b, "lat", "lon", None),
-                             lat="out_lat", lon="out_lon")
-    exp = (
-        tiled.groupBy(F.window("warc_ts", "1 hour"), "meshcode")
-        .agg(F.count("*").alias("n_pages"),
-             F.sum(F.when(F.col("status") != 0, 1).otherwise(0))
-             .cast("long").alias("n_failed"))
-    )
-    got = {(r.window.start, r.meshcode): (r.n_pages, r.n_failed)
-           for r in spark.table("tile_counts").collect()}
-    want = {(r.window.start, r.meshcode): (r.n_pages, r.n_failed)
-            for r in exp.collect()}
-    assert got == want and len(want) > 0
-
-
 def test_tables_reader_parquet_fallback(spark):
     """Capability-gated table reader: no Iceberg runtime here, so
     parquet paths read directly, catalog identifiers raise with a
@@ -127,33 +48,6 @@ def test_tables_reader_parquet_fallback(spark):
     with pytest.raises(ValueError, match="time travel"):
         tables.read_table(spark, "/root/testdata/sf0.001/orders.parquet",
                           snapshot_version=3)
-
-
-def test_bucketed_tables_join_without_shuffle(spark, tmp_path):
-    """Two tables bucketed on meshcode join with zero Exchange in the
-    physical plan (the pay-once co-location layout)."""
-    from pyspark.sql import functions as F
-
-    from jgdtrans_rs_spark.sources.sink import write_bucketed_table
-
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        df = spark.range(1000).select(
-            F.col("id").alias("pkey"),
-            (F.col("id") % 97).alias("meshcode"),
-            (F.col("id") * 2).alias("payload"),
-        )
-        write_bucketed_table(df, "pts_a", n_buckets=8)
-        write_bucketed_table(df.withColumnRenamed("payload", "other"), "pts_b",
-                             n_buckets=8)
-        j = spark.table("pts_a").join(spark.table("pts_b"), "meshcode")
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert j.count() > 0
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS pts_a")
-        spark.sql("DROP TABLE IF EXISTS pts_b")
 
 
 def test_sink_all_empty_pending_write(spark, tmp_path):
@@ -185,71 +79,6 @@ def test_extract_geotags_missing_tag_dead_letters(spark):
            extract_geotags(df).withColumn("pkey", F.col("url").substr(-1, 1).cast("long")).collect()}
     assert got[1] == (None, None)
     assert got[2] == (36.5, 140.25)
-
-
-def test_streaming_restart_from_checkpoint_exactly_once(
-        spark, semidyna_grid, tmp_path):
-    """Checkpointed streaming recovery — the property a 100-TB ingest
-    leans on: a stopped (or killed) query restarted with the SAME
-    checkpointLocation must resume from the recorded source offsets and
-    the file sink's commit log must keep the output exactly-once.
-    Drive: run availableNow over batch A, stop; append batch B to the
-    source; restart the identical query.  The restart must process
-    ONLY B (offsets prove the checkpoint was read), the sink must hold
-    A union B with every url exactly once, and a third restart with no
-    new data must add nothing."""
-    from jgdtrans_rs_spark.streaming.ingest import stream_pages_transform
-
-    eng = Engine(spark, semidyna_grid)
-    ex = pages_src.extract_geotags(
-        pages_src.synth_pages(spark, "/root/testdata/sf0.001")
-    ).select("url", "lat", "lon")
-    half_a = ex.filter(F.crc32(F.col("url")) % 2 == 0).cache()
-    half_b = ex.filter(F.crc32(F.col("url")) % 2 == 1).cache()
-    n_a, n_b = half_a.count(), half_b.count()
-    assert n_a > 0 and n_b > 0
-
-    src_dir = str(tmp_path / "restart_src")
-    out_dir = str(tmp_path / "restart_out")
-    ckpt = str(tmp_path / "restart_ckpt")
-    half_a.write.mode("overwrite").parquet(src_dir)
-
-    def run_once():
-        stream = spark.readStream.schema(half_a.schema).parquet(src_dir)
-        q = (
-            stream_pages_transform(eng, stream)
-            .writeStream.format("parquet")
-            .option("checkpointLocation", ckpt)
-            .option("path", out_dir)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        finished = q.awaitTermination(120)
-        if not finished:  # timed-out query must not masquerade as a
-            q.stop()      # partial-progress "result" (noisy host)
-            raise AssertionError(
-                "availableNow batch did not finish within 120s — "
-                "host stall, not an exactly-once regression")
-        return sum(p["numInputRows"] for p in q.recentProgress)
-
-    assert run_once() == n_a
-    out1 = spark.read.parquet(out_dir)
-    assert out1.count() == n_a
-
-    # "crash" happened after commit; new data lands, query restarts
-    half_b.write.mode("append").parquet(src_dir)
-    assert run_once() == n_b  # ONLY the new files — offsets resumed
-    out2 = spark.read.parquet(out_dir).cache()
-    assert out2.count() == n_a + n_b
-    # exactly-once: every url appears once, nothing reprocessed/lost
-    assert out2.groupBy("url").count().filter(F.col("count") > 1).count() == 0
-    assert (set(r.url for r in out2.select("url").collect())
-            == set(r.url for r in ex.select("url").collect()))
-
-    # idle restart: checkpoint says everything is done
-    assert run_once() == 0
-    assert spark.read.parquet(out_dir).count() == n_a + n_b
-    for df in (half_a, half_b, out2):
-        df.unpersist()
 
 
 def test_binary_meta(spark):

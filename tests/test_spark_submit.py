@@ -1,6 +1,7 @@
 """End-to-end launch-shape test (north rule): package the library,
 run the production pipeline via ``spark-submit --py-files``, and
-resume it — all in real subprocesses, no pytest Spark session.
+resume it — every pipeline run is a real subprocess; the pytest Spark
+session only writes a pages table and reads the sinks back.
 """
 
 from __future__ import annotations
@@ -47,7 +48,7 @@ def _submit(zip_path, out_dir, par_path, extra=()):
     return json.loads(line)
 
 
-def test_spark_submit_pyfiles_end_to_end(tmp_path):
+def test_spark_submit_pyfiles_end_to_end(spark, tmp_path):
     zip_path = str(tmp_path / "jgdtrans_rs_spark.zip")
     pkg = subprocess.run(
         [sys.executable, os.path.join(ROOT, "scripts", "package_pyfiles.py"), zip_path],
@@ -65,6 +66,21 @@ def test_spark_submit_pyfiles_end_to_end(tmp_path):
     # group (manifests are the commit markers)
     second = _submit(zip_path, out_dir, str(par))
     assert second["groups_written"] == []
+
+    # --input also takes a parquet pages table (sources/tables.py):
+    # the sf dir's own pages give the same summary and the same rows
+    from jgdtrans_rs_spark.sources import pages as pages_src
+    from jgdtrans_rs_spark.sources import sink
+    table = str(tmp_path / "pages_table")
+    pages_src.synth_pages(spark, SF_TINY).write.parquet(table)
+    table_out = str(tmp_path / "table_out")
+    assert _submit(zip_path, table_out, str(par),
+                   extra=("--input", table)) == first
+
+    def rows(out):
+        return sorted(map(repr, sink.read_resumed(spark, out).collect()))
+
+    assert rows(table_out) == rows(out_dir)
 
     # the same submitted job ingests raw crawl archives via --warc
     # (the zip must carry sources/warc.py too)

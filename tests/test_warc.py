@@ -4,7 +4,6 @@ contract, and the Spark plumbing (one narrow stage, input_hint
 parity with the table source)."""
 from __future__ import annotations
 
-import os
 import random
 import zlib
 
@@ -12,8 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from jgdtrans_rs_spark.sources.warc import (
-    DEFAULT_BUDGET, encode_warc_bytes, pages_from_warc, parse_warc_bytes,
-    read_warc)
+    encode_warc_bytes, pages_from_warc, parse_warc_bytes, read_warc)
 
 
 def _recs():
@@ -368,98 +366,6 @@ def _crawl_html(lat, lon, body):
            if lat is not None else b"")
     return (b'<html><head>' + geo + b"</head><body>"
             + body.encode() + b"</body></html>")
-
-
-def test_stream_read_warc_batch_parity_and_restart(spark, tmp_path):
-    """Streaming crawl ingest: availableNow over a WARC directory is
-    row-identical to the batch reader, and a restart on the same
-    checkpoint processes ONLY newly arrived archive files (file-level
-    exactly-once — the recovery contract a continuous crawl feed
-    leans on)."""
-    from jgdtrans_rs_spark.sources.warc import stream_read_warc
-
-    d = tmp_path / "crawl_stream"
-    d.mkdir()
-    (d / "seg-a.warc.gz").write_bytes(
-        encode_warc_bytes(_recs(), gzip_members=True))
-    # a stray non-WARC file: BOTH readers must surface it as the same
-    # dead letter (the streaming twin must not silently glob it away)
-    (d / "manifest.json").write_bytes(b'{"shard": 0}')
-
-    out_dir = str(tmp_path / "stream_out")
-    ckpt = str(tmp_path / "stream_ckpt")
-
-    def run_once():
-        q = (stream_read_warc(spark, str(d))
-             .writeStream.format("parquet")
-             .option("checkpointLocation", ckpt)
-             .option("path", out_dir)
-             .outputMode("append").trigger(availableNow=True).start())
-        assert q.awaitTermination(120)
-        return sum(p["numInputRows"] for p in q.recentProgress)
-
-    run_once()
-    got = spark.read.parquet(out_dir)
-    batch = read_warc(spark, str(d))
-    cols = sorted(batch.columns)
-
-    def rows(df):  # full-row parity, order-independent
-        return sorted(
-            (tuple(str(v) for v in r) for r in df.select(*cols).collect()))
-
-    assert rows(got) == rows(batch) and got.count() == 6  # 5 + dead letter
-
-    # a new shard arrives; restart must ingest ONLY it
-    (d / "seg-b.warc.gz").write_bytes(encode_warc_bytes([
-        {"rec_type": "response", "url": "http://x.example/new",
-         "ts": "2024-01-03T00:00:00Z", "payload": b"<body>n</body>"},
-    ], gzip_members=True))
-    assert run_once() == 1
-    assert spark.read.parquet(out_dir).count() == 7
-    # idle restart adds nothing
-    assert run_once() == 0
-
-
-def test_cdx_index(spark, tmp_path):
-    """CDX derivation: SURT urlkey sorts a domain's captures together,
-    the sha1 digest keys exact dedup across captures, and (warc_file,
-    rec_index) locate every record."""
-    import hashlib
-
-    from jgdtrans_rs_spark.sources.warc import cdx_index
-
-    body = b"<html><body>same page</body></html>"
-    d = tmp_path / "crawl_cdx"
-    d.mkdir()
-    (d / "a.warc.gz").write_bytes(encode_warc_bytes([
-        {"rec_type": "response", "url": "http://www.example.com/a?q=1",
-         "ts": "2024-05-01T00:00:00Z", "payload": body},
-        {"rec_type": "response",
-         "url": "https://user:pw@sub.example.com:8443/b",
-         "ts": "2024-05-01T00:00:01Z", "payload": b"<body>other</body>"},
-        {"rec_type": "request", "url": "http://www.example.com/a?q=1",
-         "ts": "2024-05-01T00:00:00Z", "payload": b"GET"},  # excluded
-    ], gzip_members=True))
-    (d / "b.warc.gz").write_bytes(encode_warc_bytes([
-        # same content re-crawled later under the bare host
-        {"rec_type": "response", "url": "http://example.com/",
-         "ts": "2024-06-02T10:20:30Z", "payload": body},
-    ], gzip_members=True))
-
-    idx = cdx_index(read_warc(spark, str(d))).orderBy("urlkey", "cdx_ts")
-    rows = idx.collect()
-    # request records and dead letters never index
-    assert [r.urlkey for r in rows] == [
-        "com,example)/", "com,example,sub)/b", "com,example,www)/a?q=1"]
-    assert rows[0].cdx_ts == "20240602102030"
-    # digest = sha1(response bytes): the two captures of `body` agree,
-    # pinned against hashlib (not Spark's own sha1 applied twice)
-    want = hashlib.sha1(body).hexdigest()
-    assert rows[0].digest == want == rows[2].digest
-    assert rows[1].digest != want
-    # positional addressing survives into the index
-    assert rows[2].warc_file.endswith("a.warc.gz")
-    assert rows[2].rec_index == 0 and rows[1].rec_index == 1
 
 
 def test_warc_crawl_near_dup_detection(spark, tmp_path):
