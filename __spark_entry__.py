@@ -219,9 +219,9 @@ def _q_tile_rollup(spark, sf_dir):
 
 def _q_fused_pip_sqlonly(spark, sf_dir):
     """JVM-only fused transform + point-in-polygon spatial join
-    (SqlEngine.transform_pip): forward in SQL, containment as the
-    crossing-number edge-parity aggregation — zero Python workers in
-    the whole chain."""
+    (SqlEngine.transform_pip): forward in SQL, containment as one
+    codegen crossing-number mask column expanded by a bit-test join —
+    zero Python workers in the whole chain."""
     return _sql_engine(spark).transform_pip(_points(spark, sf_dir), POLYGONS)
 
 

@@ -42,6 +42,7 @@ from pyspark.sql.types import (
 
 from . import kernel, mesh
 from .grid import MeshGrid
+from .operators import spatial
 
 _RESULT_FIELDS = [
     StructField("status", IntegerType(), False),
@@ -332,31 +333,7 @@ class Engine:
         """
         return self._forward_tiled(df, lat, lon, alt, level, prefix, fields)
 
-    @staticmethod
-    def poly_mask_rows(df: DataFrame, polygons, mask_col: str = "poly_mask",
-                       how: str = "left") -> DataFrame:
-        """Expand a containment bitmask into (row, poly_idx, poly_id)
-        rows with a broadcast bit-test join — the JVM-side twin of
-        ``explode_outer`` over an index array (a no-hit row keeps one
-        output row with NULL poly columns under ``how='left'``).
-        The tiny nested-loop probe (one AND per polygon per row) is
-        far cheaper than shipping an array column through Arrow.
-        The name relation is a LocalRelation (localrel.py): its
-        broadcast rebuilds on every downstream action, and the
-        LocalRelation build is job-free where a pickled-RDD frame
-        costs a ~32-task job per action."""
-        from .localrel import local_rows_df
-
-        spark = df.sparkSession
-        names = local_rows_df(
-            spark,
-            [(i, pid) for i, (pid, _) in enumerate(polygons)],
-            schema="poly_idx int, poly_id string",
-        )
-        # expr form: the DataFrame shiftright() only takes a literal
-        # shift, the SQL function accepts a column
-        hit = F.expr(f"(shiftright({mask_col}, poly_idx) & 1) = 1")
-        return df.join(F.broadcast(names), hit, how)
+    poly_mask_rows = staticmethod(spatial.poly_mask_rows)
 
     def transform_tile_pip(self, df: DataFrame, polygons, lat: str = "lat",
                            lon: str = "lon", alt: str | None = "alt",
@@ -365,13 +342,9 @@ class Engine:
         """Fully fused hot chain for broadcast-size polygon sets:
         forward transform + tile assignment + point-in-polygon
         containment in ONE Arrow hop, emitting a ``poly_mask`` LONG
-        bitmask (bit i = inside polygons[i]; expand JVM-side with
-        ``poly_mask_rows``).  The mask replaced round 1-2's
-        ``poly_idxs`` int array: building the per-row arrays was a
-        Python loop over every row inside the UDF (np.nonzero per row
-        — measured ~70 s of q4's 82 s at 18M rows) and the array
-        column paid the expensive Arrow list writer; the mask is pure
-        vectorized numpy and a single int64 column.
+        bitmask (bit i = inside polygons[i], decided by
+        ``operators.spatial.polygon_mask``; expand JVM-side with
+        ``poly_mask_rows``).
 
         ``fields`` selects which output columns the UDF emits (default:
         all of out_lat/out_lon/out_alt/status/err_meshcode/err_corner/
@@ -389,30 +362,8 @@ class Engine:
         zero shuffles, one Python stage.  Use
         operators.spatial.bucketed_spatial_join when it doesn't.
         """
-        from .operators.spatial import _crossings  # avoid cycle at import time
-
-        polys = [[(float(a), float(b)) for a, b in ring] for _, ring in polygons]
-        if len(polys) > 63:
-            raise ValueError(
-                f"{len(polys)} polygons exceed the 63-bit containment mask; "
-                "use operators.spatial.bucketed_spatial_join for large polygon sets")
-        bboxes = [
-            (min(p[0] for p in ring), max(p[0] for p in ring),
-             min(p[1] for p in ring), max(p[1] for p in ring))
-            for ring in polys
-        ]
-
-        def poly_mask(la, lo):
-            mask = np.zeros(la.shape[0], dtype=np.int64)
-            for i, (ring, (la0, la1, lo0, lo1)) in enumerate(zip(polys, bboxes)):
-                cand = (la >= la0) & (la <= la1) & (lo >= lo0) & (lo <= lo1)
-                if cand.any():
-                    h = np.zeros(la.shape[0], dtype=bool)
-                    h[cand] = _crossings(la[cand], lo[cand], ring) == 1
-                    mask |= h.astype(np.int64) << i
-            return mask
-
-        return self._forward_tiled(df, lat, lon, alt, level, prefix, fields, poly_mask)
+        return self._forward_tiled(df, lat, lon, alt, level, prefix, fields,
+                                   spatial.polygon_mask(polygons))
 
     def roundtrip_verify(self, df: DataFrame, lat: str = "lat", lon: str = "lon",
                          alt: str | None = "alt") -> DataFrame:

@@ -1,12 +1,10 @@
 """Pure Column expression helpers — JVM-side, whole-stage-codegen
 friendly (no Python in the plan).
 
-These are the declarative twins of the numpy kernels for the pieces
-that don't need the float-bit ulp trick: validation/normalization
-(point.rs:9-32, 212-223), floor-path meshcode, quadkey.  Use the
-engine's kernels when reference-exact boundary semantics matter; use
-these when staying inside codegen matters (filters pushed to the scan,
-no Arrow hop).
+These are the declarative twins of numpy / UDF kernels: angle
+normalization (point.rs:9-32), DMS parse/format and cosine
+similarity.  Use them when staying inside codegen matters (no Arrow
+hop).
 """
 
 from __future__ import annotations
@@ -36,56 +34,6 @@ def normalize_longitude(c: Column) -> Column:
     case1 = ~((s >= -180.0) & (s < 180.0))
     wrapped = F.when(case1, s - F.signum(s) * 360.0).otherwise(s)
     return F.when(in_range, c).otherwise(wrapped)
-
-
-def valid_point(lat: Column, lon: Column) -> Column:
-    """Point::new bounds (point.rs:212-223) — pushes to the scan.
-    NULL-safe: FALSE (not NULL) for missing coordinates, so the
-    negated filter keeps them in the quarantine split."""
-    return (lat.isNotNull() & lon.isNotNull()
-            & lat.between(-90.0, 90.0) & lon.between(-180.0, 180.0)
-            & ~F.isnan(lat) & ~F.isnan(lon))
-
-
-def mesh_digits(v: Column):
-    """floor-path digit extraction (coord.rs:203-229; no ulp bump)."""
-    i = F.floor(v).cast("long")
-    first = i % 100
-    second = F.floor(v * 8.0).cast("long") - i * 8
-    third = F.floor(v * 80.0).cast("long") - i * 80 - second * 10
-    return first, second, third
-
-
-def meshcode(lat: Column, lon: Column, unit: int = 1) -> Column:
-    """South-west meshcode of the containing cell, -1 outside the mesh
-    domain.  Pure Column math — partition-prunable tile key."""
-    latv = lat * 3.0 / 2.0
-    la1, la2, la3 = mesh_digits(latv)
-    lo1, lo2, lo3 = mesh_digits(lon)
-    if unit == 5:
-        la3 = F.when(la3 < 5, 0).otherwise(5)
-        lo3 = F.when(lo3 < 5, 0).otherwise(5)
-    code = (la1 * 100 + lo1) * 10000 + (la2 * 10 + lo2) * 100 + (la3 * 10 + lo3)
-    valid = (latv >= 0.0) & (latv < 100.0) & (lon >= 100.0) & (lon < 180.0)
-    return F.when(valid, code).otherwise(F.lit(-1)).cast("long")
-
-
-def quadkey(lat: Column, lon: Column, level: int = 15) -> Column:
-    """S2-style interleaved quadtree cell id (mesh.quadkey twin)."""
-    n = 1 << level
-    ix = F.least(
-        F.greatest(F.floor((lon + 180.0) / 360.0 * n).cast("long"), F.lit(0)),
-        F.lit(n - 1),
-    )
-    iy = F.least(
-        F.greatest(F.floor((lat + 90.0) / 180.0 * n).cast("long"), F.lit(0)),
-        F.lit(n - 1),
-    )
-    out = F.lit(0).cast("long")
-    for b in range(level):
-        out = out + F.shiftleft(F.shiftright(ix, b) % 2, 2 * b)
-        out = out + F.shiftleft(F.shiftright(iy, b) % 2, 2 * b + 1)
-    return out
 
 
 def dms_to_degree(c: Column) -> Column:

@@ -7,10 +7,12 @@ semantics anchored to the JGD mesh system.
 
 Scale design:
 
-* ``point_in_polygon`` — broadcast path: the polygon set rides a
-  closure (small dims broadcast), the containment test is a vectorized
-  numpy crossing-number kernel inside ``mapInPandas`` — one narrow
-  stage, no shuffle.  From-scratch kernel (no shapely dependency).
+* Containment is decided here only: one crossing-number kernel per
+  backend (``_crossings`` numpy, ``_ring_parity_col`` codegen), one
+  63-bit mask over them (``polygon_mask`` / ``polygon_mask_col``) and
+  one bit-test expansion (``poly_mask_rows``); from scratch, no shapely.
+  ``point_in_polygon`` is the broadcast path: the mask kernel in a
+  scalar pandas UDF, one narrow stage, no shuffle.
 * ``bucketed_spatial_join`` — shuffle path for large polygon sets:
   polygons are exploded onto the meshcodes their bbox covers, points
   shuffle on meshcode; hot cells (dense Tokyo/Osaka buckets) are
@@ -39,6 +41,19 @@ from .. import mesh
 from ..localrel import local_rows_df
 
 Polygon = tuple[str, list[tuple[float, float]]]  # (poly_id, [(lat, lon), ...])
+
+
+def _float_rings(polygons: Sequence[Polygon]) -> list[list[tuple[float, float]]]:
+    return [[(float(a), float(b)) for a, b in ring] for _, ring in polygons]
+
+
+def _bbox(ring: list[tuple[float, float]]) -> tuple[float, float, float, float]:
+    """(lat_min, lat_max, lon_min, lon_max) of a ring.  Outside it the
+    crossing parity is always even, so a bbox test may short-circuit
+    the exact one without changing the verdict."""
+    lats = [p[0] for p in ring]
+    lons = [p[1] for p in ring]
+    return min(lats), max(lats), min(lons), max(lons)
 
 
 def _crossings(lat: np.ndarray, lon: np.ndarray, ring: list[tuple[float, float]]) -> np.ndarray:
@@ -88,70 +103,126 @@ def _containment_col(rings: list[list[tuple[float, float]]],
     return F.lit(False) if out is None else out.otherwise(F.lit(False))
 
 
-def point_in_polygon(df: DataFrame, polygons: Sequence[Polygon],
-                     key: str = "pkey", lat: str = "lat", lon: str = "lon") -> DataFrame:
-    """Broadcast point-in-polygon join -> (key, poly_id) pairs.
-
-    Polygon bboxes pre-filter each batch before the exact parity test.
-    The UDF emits a 64-bit containment mask (pure vectorized numpy —
-    no per-row array building, no Arrow list writer; same design as
-    Engine.transform_tile_pip) and the (row, polygon) expansion is a
-    broadcast bit-test join in codegen.  >63 polygons raises: use
-    bucketed_spatial_join for large polygon sets.
-    """
-    polys = [(pid, [(float(a), float(b)) for a, b in ring]) for pid, ring in polygons]
-    if len(polys) > 63:
+def _mask_polygons(polygons: Sequence[Polygon]):
+    """(float ring, bbox) per polygon of a set that must fit a 63-bit
+    mask."""
+    if len(polygons) > 63:
         raise ValueError(
-            f"{len(polys)} polygons exceed the 63-bit containment mask; "
-            "use bucketed_spatial_join for large polygon sets")
-    bboxes = [
-        (
-            min(p[0] for p in ring), max(p[0] for p in ring),
-            min(p[1] for p in ring), max(p[1] for p in ring),
-        )
-        for _, ring in polys
-    ]
+            f"{len(polygons)} polygons exceed the 63-bit containment mask; "
+            "use operators.spatial.bucketed_spatial_join for large polygon sets")
+    return [(ring, _bbox(ring)) for ring in _float_rings(polygons)]
 
-    @F.pandas_udf(LongType())
-    def mask_udf(lat_s: pd.Series, lon_s: pd.Series) -> pd.Series:
-        la = lat_s.to_numpy(dtype=np.float64, na_value=np.nan)
-        lo = lon_s.to_numpy(dtype=np.float64, na_value=np.nan)
-        mask = np.zeros(la.shape[0], dtype=np.int64)
-        for i, ((pid, ring), (la0, la1, lo0, lo1)) in enumerate(zip(polys, bboxes)):
+
+def polygon_mask(polygons: Sequence[Polygon]):
+    """The numpy containment kernel: an ``(lat, lon) -> int64`` closure
+    whose bit i is set where the point is inside ``polygons[i]``.
+
+    Each polygon's bbox pre-filters the batch before the exact parity
+    test.  Pure vectorized numpy: a per-row index array in place of
+    the mask cost a Python loop over every row (~70 s of q4's 82 s at
+    18M rows) plus the Arrow list writer.  >63 polygons raises: use
+    bucketed_spatial_join for large polygon sets."""
+    polys = _mask_polygons(polygons)
+
+    def mask(la: np.ndarray, lo: np.ndarray) -> np.ndarray:
+        out = np.zeros(la.shape[0], dtype=np.int64)
+        for i, (ring, (la0, la1, lo0, lo1)) in enumerate(polys):
             cand = (la >= la0) & (la <= la1) & (lo >= lo0) & (lo <= lo1)
             if cand.any():
                 h = np.zeros(la.shape[0], dtype=bool)
                 h[cand] = _crossings(la[cand], lo[cand], ring) == 1
-                mask |= h.astype(np.int64) << i
-        return pd.Series(mask)
+                out |= h.astype(np.int64) << i
+        return out
 
+    return mask
+
+
+def polygon_mask_col(polygons: Sequence[Polygon], lat, lon) -> "F.Column":
+    """The codegen twin of ``polygon_mask``: the same 63-bit mask as a
+    pure Column expression (bbox conjunct + ``_ring_parity_col`` per
+    polygon, bit-identical float64 ops), so a JVM-only plan decides
+    containment in one projection."""
+    out = F.lit(0).cast("long")
+    for i, (ring, (la0, la1, lo0, lo1)) in enumerate(_mask_polygons(polygons)):
+        inside = ((lat >= la0) & (lat <= la1) & (lon >= lo0) & (lon <= lo1)
+                  & _ring_parity_col(ring, lat, lon))
+        out = out.bitwiseOR(F.when(inside, F.lit(1 << i).cast("long")).otherwise(0))
+    return out
+
+
+def poly_mask_rows(df: DataFrame, polygons: Sequence[Polygon], mask_col: str = "poly_mask",
+                   how: str = "left") -> DataFrame:
+    """Expand a containment bitmask into (row, poly_idx, poly_id)
+    rows with a broadcast bit-test join — the JVM-side twin of
+    ``explode_outer`` over an index array (a no-hit row keeps one
+    output row with NULL poly columns under ``how='left'``).
+    The tiny nested-loop probe (one AND per polygon per row) is
+    far cheaper than shipping an array column through Arrow.
+    The name relation is a LocalRelation (localrel.py): its
+    broadcast rebuilds on every downstream action, and the
+    LocalRelation build is job-free where a pickled-RDD frame
+    costs a ~32-task job per action."""
     spark = df.sparkSession
     names = local_rows_df(
         spark,
-        [(i, pid) for i, (pid, _) in enumerate(polys)],
+        [(i, pid) for i, (pid, _) in enumerate(polygons)],
         schema="poly_idx int, poly_id string",
     )
+    # expr form: the DataFrame shiftright() only takes a literal
+    # shift, the SQL function accepts a column
+    hit = F.expr(f"(shiftright({mask_col}, poly_idx) & 1) = 1")
+    return df.join(F.broadcast(names), hit, how)
+
+
+def point_in_polygon(df: DataFrame, polygons: Sequence[Polygon],
+                     key: str = "pkey", lat: str = "lat", lon: str = "lon") -> DataFrame:
+    """Broadcast point-in-polygon join -> (key, poly_id) pairs: the
+    ``polygon_mask`` kernel in a scalar pandas UDF, expanded by
+    ``poly_mask_rows``.  >63 polygons raises: use
+    bucketed_spatial_join for large polygon sets."""
+    kernel = polygon_mask(polygons)
+
+    @F.pandas_udf(LongType())
+    def mask_udf(lat_s: pd.Series, lon_s: pd.Series) -> pd.Series:
+        return pd.Series(kernel(lat_s.to_numpy(dtype=np.float64, na_value=np.nan),
+                                lon_s.to_numpy(dtype=np.float64, na_value=np.nan)))
+
     masked = df.select(key, mask_udf(F.col(lat), F.col(lon)).alias("_pmask"))
-    hit = F.expr("(shiftright(_pmask, poly_idx) & 1) = 1")
-    return masked.join(F.broadcast(names), hit, "inner").select(key, "poly_id")
+    return poly_mask_rows(masked, polygons, "_pmask", how="inner").select(key, "poly_id")
+
+
+# largest latitude / longitude whose cell point_to_digits accepts
+_LAT_TOP = 66.66666666666666
+_LON_TOP = float(np.nextafter(180.0, 0.0))
 
 
 def polygon_mesh_cover(polygons: Sequence[Polygon], unit: int) -> list[tuple[int, str]]:
     """Explode each polygon's bbox onto the meshcodes it covers:
-    (meshcode, poly_id) candidate pairs for the bucketed join."""
+    (meshcode, poly_id) candidate pairs for the bucketed join.
+
+    Every cell between the cells of the bbox's SW and NE corners is
+    enumerated in digit space, widened by one cell on each side: the
+    ulp-parity bump of ``mesh.point_to_digits`` is not monotone within
+    an ulp of a cell boundary, so a point just inside the bbox may sit
+    in the cell next to its corner's.  (Float samples of the bbox land
+    on cell boundaries and drop cells.)"""
     out: list[tuple[int, str]] = []
     for pid, ring in polygons:
-        la0 = min(p[0] for p in ring)
-        la1 = max(p[0] for p in ring)
-        lo0 = min(p[1] for p in ring)
-        lo1 = max(p[1] for p in ring)
-        step_lat = (2.0 / 3.0) / 80.0 * unit
-        step_lon = (1.0 / 80.0) * unit
-        lats = np.arange(la0 - step_lat, la1 + step_lat, step_lat)
-        lons = np.arange(lo0 - step_lon, lo1 + step_lon, step_lon)
-        gl, gn = np.meshgrid(lats, lons)
-        latd, lond, valid = mesh.point_to_digits(gl.ravel(), gn.ravel(), unit)
-        codes = np.unique(mesh.digits_to_meshcode(latd, lond)[valid])
+        la0, la1, lo0, lo1 = _bbox(ring)
+        if la1 < 0.0 or la0 > _LAT_TOP or lo1 < 100.0 or lo0 > _LON_TOP:
+            continue  # no point of the bbox has a cell
+        lat_d, lon_d, _ = mesh.point_to_digits(
+            np.clip([la0, la1], 0.0, _LAT_TOP), np.clip([lo0, lo1], 100.0, _LON_TOP), unit)
+        # axis position first*80 + second*10 + third: adjacent cells are
+        # `unit` apart, so -unit/+unit is next_south/next_north (west/
+        # east); lat digits stop at (99, 7, x), lon at the (80, 0, 0) node
+        axes = []
+        for (f, sec, t), top in ((lat_d, 99 * 80 + 79), (lon_d, 80 * 80)):
+            i = f * 80 + sec * 10 + t
+            axes.append(np.arange(max(i[0] - unit, 0), min(i[1] + unit, top) + 1, unit))
+        gl, gn = (g.ravel() for g in np.meshgrid(*axes, indexing="ij"))
+        codes = mesh.digits_to_meshcode((gl // 80, gl % 80 // 10, gl % 10),
+                                        (gn // 80, gn % 80 // 10, gn % 10))
         out.extend((int(c), pid) for c in codes)
     return out
 
@@ -189,9 +260,7 @@ def bucketed_spatial_join(points: DataFrame, polygons: Sequence[Polygon], unit: 
     # containment refine dispatches on it — int compare in codegen,
     # and the pandas fallback ships only (lat, lon, poly_idx) through
     # Arrow) and the poly_id string, so no name-reattach join is
-    # needed after the refine (r06: the trailing broadcast join over
-    # every refined row was a leftover from when the refine ran in
-    # Python and strings were kept out of the hop)
+    # needed after the refine
     pid_to_idx = {pid: i for i, (pid, _) in enumerate(polygons)}
     if len(pid_to_idx) != len(polygons):
         # a duplicate id would silently collapse onto ONE ring here
@@ -215,13 +284,9 @@ def bucketed_spatial_join(points: DataFrame, polygons: Sequence[Polygon], unit: 
         .otherwise(F.lit(0)),
     )
     # the salt replication of the candidate side happens DRIVER-side:
-    # the cover is a driver list anyway (polygon_mesh_cover), so the
-    # hot rows explode across salts in Python and the whole candidate
-    # relation ships as ONE LocalRelation (localrel.py) — the old
-    # filter/crossJoin(range)/union subtree re-ran as a small
-    # distributed job inside every action's broadcast build, this
-    # build is job-free; row set identical (hot cover x all salts,
-    # non-hot at salt 0)
+    # the cover is a driver list anyway, so hot rows explode across
+    # salts in Python and the candidate relation ships as ONE
+    # LocalRelation (localrel.py), whose broadcast build runs no job
     hot_set = set(hot_codes)
     cand_salted = local_rows_df(
         spark,
@@ -238,8 +303,9 @@ def bucketed_spatial_join(points: DataFrame, polygons: Sequence[Polygon], unit: 
     # crossing-number parity compiles to a pure Column expression —
     # the whole refine step stays in codegen (no second Python stage
     # after the transform UDF).  Very large rings fall back to the
-    # vectorized pandas_udf to keep the expression tree bounded.
-    rings = [[(float(a), float(b)) for a, b in ring] for _, ring in polygons]
+    # vectorized pandas_udf: the Column form of one 600-edge ring
+    # already overflows the JVM stack at ``.filter``.
+    rings = _float_rings(polygons)
     n_edges = sum(len(r) for r in rings)
     if n_edges <= 512:
         contains_col = _containment_col(

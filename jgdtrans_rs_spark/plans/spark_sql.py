@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from ..grid import MeshGrid
 from ..localrel import local_rows_df
+from ..operators import spatial
 from . import oracle
 
 _view_ids = itertools.count()
@@ -133,54 +134,27 @@ class SqlEngine:
         Python workers — whole-stage codegen end to end, so it rides
         the JVM scaling curve instead of the Arrow channel.
 
-        The polygon edges are an inline VALUES relation (tiny ->
-        Catalyst broadcasts it); containment is the same crossing-
-        number edge-parity SQL the DuckDB oracle runs
-        (oracle.point_in_polygon_sql — identical float64 op order, so
-        the output is engine-independent).
+        Containment is one codegen mask column
+        (``operators.spatial.polygon_mask_col``, the DuckDB oracle's
+        edge formula in the same float64 op order) expanded by the
+        bit-test join ``poly_mask_rows``: one scan of the cached
+        projection, no Union.  >63 polygons raises, as in the Arrow
+        engine; use ``operators.spatial.bucketed_spatial_join`` there.
 
-        The (key, lat, lon) probe input is PERSISTED before the join:
-        the nested-loop probe evaluates its condition once per
-        (point, edge) pair, and through a purely logical view Catalyst
-        inlines the transform's output expressions (bilinear CASE +
-        wrapping normalize) into that condition — measured 3.2 s vs
-        1.2 s at 600k x 20 edges once the normalize landed.  The
-        cached projection is 3 columns; at corpus scale this is the
-        stage boundary you would materialize anyway (the transform
-        output IS the dataset being spatially joined)."""
-        from ..operators.spatial import _ring_parity_col
-
+        The (key, lat, lon) input is PERSISTED before the mask: the
+        parity expression reads lat/lon once per (point, edge), and
+        through a purely logical view Catalyst inlines the transform's
+        output expressions (bilinear CASE + wrapping normalize) into it
+        — measured 3.2 s vs 1.2 s at 600k x 20 edges.  At corpus scale
+        this 3-column projection is the stage boundary you would
+        materialize anyway."""
+        mask = spatial.polygon_mask_col(polygons, F.col("lat"), F.col("lon"))
         fwd = self.forward(df, key)
         name = f"{self.grid_view}_fwd"  # fixed name, see _input_rel
         fwd.createOrReplaceTempView(name)
         ok = self.spark.sql(
             f"SELECT {key}, out_lat AS lat, out_lon AS lon "
             f"FROM {name} WHERE status = 0").persist()
-        # Containment as one codegen filter per polygon over the cached
-        # projection, unioned — value-identical to the oracle's
-        # edge-relation form (point_in_polygon_sql: identical float64
-        # edge formula via _ring_parity_col; a point outside a
-        # polygon's bbox always has even parity, so the short-circuit
-        # bbox conjunct cannot change the verdict).  The r06 rewrite:
-        # the previous BroadcastNestedLoopJoin against the edge VALUES
-        # relation evaluated the crossing predicate row-at-a-time per
-        # (point, edge) and shuffled the crossing pairs into a
-        # COUNT/parity aggregation; this form has no join and no
-        # aggregation Exchange at all (guide §2.4).
-        lat, lon = F.col("lat"), F.col("lon")
-        out = None
-        for pid, ring in polygons:
-            r = [(float(a), float(b)) for a, b in ring]
-            la0, la1 = min(p[0] for p in r), max(p[0] for p in r)
-            lo0, lo1 = min(p[1] for p in r), max(p[1] for p in r)
-            inside = (
-                (lat >= la0) & (lat <= la1) & (lon >= lo0) & (lon <= lo1)
-                & _ring_parity_col(r, lat, lon)
-            )
-            branch = ok.filter(inside).select(
-                key, F.lit(pid).alias("poly_id"))
-            out = branch if out is None else out.unionByName(branch)
-        if out is None:
-            return ok.select(key).limit(0).withColumn(
-                "poly_id", F.lit(None).cast("string"))
-        return out
+        return spatial.poly_mask_rows(
+            ok.select(key, mask.alias("poly_mask")), polygons, how="inner",
+        ).select(key, "poly_id")

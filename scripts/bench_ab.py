@@ -7,17 +7,17 @@ Usage:
     python scripts/bench_ab.py <ref-commit> [pairs] --perfbench <workload>
         [--seed 1] [--trace 0] [--dir <tmp>/bench_ab]
 
-Worktrees <ref-commit> under /tmp/bench_ab_<commit>, then runs the
-FROZEN bench (``bench.py --single``, fresh JVM per run) interleaved
-A,B,A,B,... so both trees sample the same host phases, and prints the
-per-query best-of deltas.  Use whenever a round's totals drift >15%:
-on this host a single-run comparison is noise (documented 3-4x
-minute-to-minute swings), while an interleaved best-of pair is the
-cheapest defensible statistic.
+Unpacks <ref-commit> like ``--perfbench`` does (below; the directory
+is ``$TMPDIR/bench_ab``), then runs the FROZEN bench (``bench.py
+--single``, fresh JVM per run) interleaved A,B,A,B,... so both trees
+sample the same host phases, and prints the per-query best-of deltas.
+Use whenever a round's totals drift >15%: on this host a single-run
+comparison is noise (documented 3-4x minute-to-minute swings), while
+an interleaved best-of pair is the cheapest defensible statistic.
 
 ``only`` is a comma list for SPARK_GRAFT_BENCH_ONLY (e.g. "q5,q6");
 default runs every query.  HEAD side runs from the repo root, ref
-side from the worktree; both use the ref-start bench methodology
+side from the unpacked tree; both use the ref-start bench methodology
 (the bench file itself is frozen across optimization rounds).
 
 ``--perfbench`` runs the repository benchmark (``perfbench/run.py``,
@@ -171,10 +171,7 @@ def main():
     only = sys.argv[3] if len(sys.argv) > 3 else None
     sf_dir = sys.argv[4] if len(sys.argv) > 4 else \
         os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    wt = f"/tmp/bench_ab_{ref}"
-    if not os.path.isdir(wt):
-        subprocess.run(["git", "worktree", "add", wt, ref],
-                       cwd=ROOT, check=True)
+    wt = checkout(ref, os.path.join(tempfile.gettempdir(), "bench_ab"))
     runs_a, runs_b = [], []
     for i in range(pairs):
         print(f"pair {i + 1}/{pairs}: HEAD ...", flush=True)

@@ -1,7 +1,8 @@
 #!/usr/bin/env python
-"""Hardware control for the scaling protocol: run the exact q4 UDF body
-(kernel.forward + tile encode + PIP crossings) as plain numpy in P
-worker processes pinned to C cores — no Spark, no Arrow, no JVM.
+"""Hardware control for the scaling protocol: run the q4 UDF body
+(kernel.forward + tile encode + the ``spatial.polygon_mask`` kernel)
+as plain numpy in P worker processes pinned to C cores — no Spark, no
+Arrow, no JVM.
 
 The measured P=1@2cores -> P=4@8cores ratio is the ceiling ANY engine
 can reach for this workload on this guest's memory system; BASELINE.md
@@ -26,13 +27,11 @@ def _worker(args):
     seed, n_rows = args
     import numpy as np
     from jgdtrans_rs_spark import kernel, mesh
-    from jgdtrans_rs_spark.operators.spatial import _crossings
+    from jgdtrans_rs_spark.operators.spatial import polygon_mask
     import __spark_entry__ as entry_mod
 
     grid = entry_mod._GRID
-    polys = [[(float(a), float(b)) for a, b in ring] for _, ring in entry_mod.POLYGONS]
-    bboxes = [(min(p[0] for p in r), max(p[0] for p in r),
-               min(p[1] for p in r), max(p[1] for p in r)) for r in polys]
+    poly_mask = polygon_mask(entry_mod.POLYGONS)
     rng = np.random.default_rng(seed)
     done = 0
     t0 = time.perf_counter()
@@ -44,13 +43,7 @@ def _worker(args):
         out_la, out_lo, out_al, c = kernel.forward(la, lo, al, grid)
         lat_d, lon_d, valid = mesh.point_to_digits(out_la, out_lo, grid.mesh_unit)
         code = mesh.digits_to_meshcode(lat_d, lon_d)
-        mask = np.zeros(n, dtype=np.int64)
-        for i, (ring, (la0, la1, lo0, lo1)) in enumerate(zip(polys, bboxes)):
-            cand = (out_la >= la0) & (out_la <= la1) & (out_lo >= lo0) & (out_lo <= lo1)
-            if cand.any():
-                h = np.zeros(n, dtype=bool)
-                h[cand] = _crossings(out_la[cand], out_lo[cand], ring) == 1
-                mask |= h.astype(np.int64) << i
+        poly_mask(out_la, out_lo)
         done += n
     return time.perf_counter() - t0
 

@@ -129,6 +129,42 @@ def test_salted_join_equals_broadcast(engine, points):
     assert sa == sb and len(sa) > 0
 
 
+def _star(n: int, lat: float, lon: float, r_in: float, r_out: float):
+    t = np.arange(n) * (2 * np.pi / n)
+    r = np.where(np.arange(n) % 2 == 0, r_out, r_in)
+    return [(float(a), float(b)) for a, b in zip(lat + r * np.sin(t), lon + r * np.cos(t))]
+
+
+@pytest.mark.parametrize("ring,unit", [
+    # mesh-aligned unit-1 rectangle: the bbox float sampling of the
+    # cover used to land on cell boundaries and drop a third of its cells
+    ([(37.68333333333333, 132.1125), (37.68333333333333, 132.1875),
+      (37.74166666666666, 132.1875), (37.74166666666666, 132.1125)], 1),
+    # 600 edges: past the 512-edge Column bound, so the refine runs
+    # the pandas fallback
+    (_star(600, 36.1, 140.1, 0.05, 0.09), 5),
+], ids=["aligned_rect_unit1", "star600_fallback"])
+def test_salted_join_equals_broadcast_on_edge_rings(spark, ring, unit):
+    """bucketed_spatial_join returns exactly point_in_polygon's hits on
+    rings that stress the cell cover and the large-ring refine."""
+    import pandas as pd
+    from jgdtrans_rs_spark import mesh
+
+    rng = np.random.default_rng(7)
+    la0, la1 = min(p[0] for p in ring), max(p[0] for p in ring)
+    lo0, lo1 = min(p[1] for p in ring), max(p[1] for p in ring)
+    la, lo = rng.uniform(la0, la1, 3000), rng.uniform(lo0, lo1, 3000)
+    lat_d, lon_d, _ = mesh.point_to_digits(la, lo, unit)
+    pts = spark.createDataFrame(pd.DataFrame({
+        "pkey": np.arange(la.size), "lat": la, "lon": lo,
+        "meshcode": mesh.digits_to_meshcode(lat_d, lon_d)}))
+    polys = [("p", ring)]
+    want = {tuple(r) for r in spatial.point_in_polygon(pts, polys).collect()}
+    got = {tuple(r) for r in spatial.bucketed_spatial_join(
+        pts, polys, unit, hot_threshold=100, num_salts=4).collect()}
+    assert got == want and len(want) > 1000
+
+
 def test_knn_spark_matches_numpy_kernel(points):
     """The Spark operator (pandas_udf + posexplode) emits exactly the
     numpy kernel's ordered lists — which test_properties pins to the
@@ -323,12 +359,13 @@ def test_dms_column_parser_matches_scalar(spark):
 
 
 @pytest.mark.parametrize("op", ["transform_tile_pip", "transform_and_tile"])
-def test_fused_fields_pruning(engine, points, op):
+def test_fused_fields_pruning(spark, semidyna_grid, engine, points, op):
     """fields= must (a) reject unknown names, (b) emit the kept fields
     in the caller's order, (c) produce values identical to the full
     output on the kept columns; transform_tile_pip must also (d)
-    enforce the 63-bit mask bound."""
+    enforce the 63-bit mask bound, as its two mask-based twins do."""
     import __spark_entry__ as entry_mod
+    from jgdtrans_rs_spark.plans.spark_sql import SqlEngine
 
     polys = entry_mod.POLYGONS
     pip = op == "transform_tile_pip"
@@ -338,8 +375,11 @@ def test_fused_fields_pruning(engine, points, op):
         run(points, *args, fields=["nope"])
     if pip:
         many = [(f"p{i}", polys[0][1]) for i in range(64)]
-        with pytest.raises(ValueError, match="63-bit"):
-            engine.transform_tile_pip(points, many)
+        for build in (lambda: engine.transform_tile_pip(points, many),
+                      lambda: spatial.point_in_polygon(points, many),
+                      lambda: SqlEngine(spark, semidyna_grid).transform_pip(points, many)):
+            with pytest.raises(ValueError, match="63-bit"):
+                build()
 
     kept = ["poly_mask" if pip else "quadkey", "status"]  # not schema order
     pts = points.limit(500)

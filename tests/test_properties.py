@@ -1,7 +1,7 @@
 """Property-based tests (hypothesis) for the pure-numpy layers."""
 
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from jgdtrans_rs_spark import dms, kernel, mesh
@@ -122,6 +122,43 @@ def test_knn_window_matches_brute_force(lat, lon, unit, k):
     got = spatial.knn_codes_np(np.array([lat]), np.array([lon]), unit, k)[0]
     want = _knn_brute(lat, lon, unit, k)
     assert list(got) == want, (lat, lon, unit, k)
+
+
+def _node_values(start: int, n: int, to_degree):
+    """Degrees of ``n + 1`` consecutive unit-1 mesh nodes from index
+    ``start`` (first*80 + second*10 + third)."""
+    i = np.arange(start, start + n + 1)
+    return to_degree((i // 80, i % 80 // 10, i % 10))
+
+
+@given(st.integers(min_value=2400, max_value=5000), st.integers(min_value=1, max_value=8),
+       st.integers(min_value=800, max_value=4000), st.integers(min_value=1, max_value=8),
+       st.sampled_from([1, 5]))
+@example(4522, 7, 2569, 6, 1)  # (37.6833.., 132.1125)-(37.7416.., 132.1875)
+@settings(max_examples=150, deadline=None)
+def test_mesh_cover_holds_every_inside_cell(i0, di, j0, dj, unit):
+    """polygon_mesh_cover must list the cell of every point the
+    crossing-number test puts inside a mesh-aligned rectangle,
+    including points on and one ulp either side of every cell
+    boundary (float sampling of the bbox dropped cells there)."""
+    from jgdtrans_rs_spark.operators import spatial
+
+    lats = _node_values(i0, di, mesh.digits_to_lat)
+    lons = _node_values(j0, dj, mesh.digits_to_lon)
+    ring = [(lats[0], lons[0]), (lats[0], lons[-1]), (lats[-1], lons[-1]), (lats[-1], lons[0])]
+    cover = {c for c, _ in spatial.polygon_mesh_cover([("p", ring)], unit)}
+
+    def samples(v):
+        mid = (v[:-1] + v[1:]) / 2.0
+        v = np.concatenate([v, mid])
+        return np.concatenate([v, np.nextafter(v, np.inf), np.nextafter(v, -np.inf)])
+
+    la, lo = (a.ravel() for a in np.meshgrid(samples(lats), samples(lons)))
+    inside = spatial._crossings(la, lo, ring) == 1
+    lat_d, lon_d, valid = mesh.point_to_digits(la, lo, unit)
+    codes = mesh.digits_to_meshcode(lat_d, lon_d)[inside & valid]
+    assert inside.any()
+    assert set(codes.tolist()) <= cover
 
 
 def test_knn_anisotropy_counterexample():

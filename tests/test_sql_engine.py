@@ -75,9 +75,9 @@ def test_sql_engine_plan_is_jvm_only(engines, pts):
 
 
 def test_transform_pip_jvm_only_and_matches_arrow_chain(engines, pts):
-    """The fused SQL transform+PIP must carry no Python stage, and its
-    hit set must equal the Arrow engine's broadcast PIP over the same
-    transformed points."""
+    """The fused SQL transform+PIP must carry no Python stage and no
+    per-polygon Union, and its hit set must equal the Arrow engine's
+    broadcast PIP over the same transformed points."""
     import __spark_entry__ as entry_mod
     from pyspark.sql import functions as F
     from jgdtrans_rs_spark.operators import spatial
@@ -86,6 +86,7 @@ def test_transform_pip_jvm_only_and_matches_arrow_chain(engines, pts):
     out = sql_eng.transform_pip(pts, entry_mod.POLYGONS)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan and "PythonUDF" not in plan
+    assert "Union" not in plan
     got = {(r.pkey, r.poly_id) for r in out.collect()}
 
     fwd = eng.forward(pts, "lat", "lon", None).filter(F.col("status") == 0)
