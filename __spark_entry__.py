@@ -484,11 +484,10 @@ def _q_normalize(spark, sf_dir):
     """Angle normalization (point.rs:9-32) on synthetic wild angles."""
     _view(spark, sf_dir, "orders")
     raw = spark.sql(_from_src(_WILD_ANGLES_SQL, _ORDERS))
-    from jgdtrans_rs_spark.functions import columns as C
     return raw.select(
         "pkey",
-        C.normalize_latitude(F.col("raw_lat")).alias("norm_lat"),
-        C.normalize_longitude(F.col("raw_lon")).alias("norm_lon"),
+        F.expr(oracle.norm_lat_expr("raw_lat")).alias("norm_lat"),
+        F.expr(oracle.norm_lon_expr("raw_lon")).alias("norm_lon"),
     )
 
 
@@ -1164,12 +1163,11 @@ def oracle_sql() -> dict[str, str]:
     # every 7th page's coordinates fail extraction (NULL), nothing is
     # dropped, failures roll up under their status class (the
     # pipeline's dead-letter contract).  Corruption is
-    # modelled as NaN, not NULL: the extraction emits NULL lat/lon,
-    # which Arrow ships to the kernel as NaN, and NaN takes the
-    # not-in-bounds lane (status 1 OOB) — whereas SQL NULL would slip
-    # past the bounds CASE (NULL comparison) into the
-    # ParameterNotFound class, a classification the kernel never
-    # produces for this input.
+    # modelled as NaN: the extraction emits NULL lat/lon, which Arrow
+    # ships to the kernel as NaN, and NaN takes the not-in-bounds lane
+    # (status 1 OOB).  The SQL forward classifies a NULL coordinate
+    # the same way (oracle.digits_select COALESCEs its validity to
+    # FALSE), so NaN and NULL give the same rows here.
     corrupt_rel = f"""
       (SELECT pkey,
               CASE WHEN pkey % 7 = 0 THEN CAST('NaN' AS DOUBLE) ELSE lat END AS lat,

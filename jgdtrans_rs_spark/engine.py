@@ -55,12 +55,11 @@ _TILE_FIELDS = [
 ]
 
 
-def _coord_fields(prefix: str) -> list[StructField]:
-    return [StructField(f"{prefix}{c}", DoubleType(), True) for c in ("lat", "lon", "alt")]
+_COORD_FIELDS = [StructField(f"out_{c}", DoubleType(), True) for c in ("lat", "lon", "alt")]
 
 
-def _coord_cols(prefix: str, lat, lon, alt) -> dict:
-    return {f"{prefix}lat": lat, f"{prefix}lon": lon, f"{prefix}alt": alt}
+def _coord_cols(lat, lon, alt) -> dict:
+    return {"out_lat": lat, "out_lon": lon, "out_alt": alt}
 
 
 def _no_duplicate(udf):
@@ -180,18 +179,6 @@ class Engine:
         self.strict_bounds = strict_bounds
         self._bc = spark.sparkContext.broadcast(grid)
 
-    # -- constructors -----------------------------------------------------
-
-    @classmethod
-    def from_par(cls, spark: SparkSession, path: str, format: str,
-                 strict_bounds: bool = True) -> "Engine":
-        """``Transformer::from_str`` (transformer.rs:395-449).
-        ``strict_bounds`` forwards to the constructor so the file-path
-        route can build reference-parity engines too."""
-        from .grid import load_par
-
-        return cls(spark, load_par(path, format), strict_bounds=strict_bounds)
-
     def _tile_bounds(self) -> str:
         """Bounds mode for TILE assignment: strict by default; under
         reference parity (strict_bounds=False) the checked path for a
@@ -208,55 +195,46 @@ class Engine:
     # never ``self`` (see _kernel_udf).
 
     def _map_kernel(self, df: DataFrame, lat: str, lon: str, alt: str | None,
-                    fn_name: str, prefix: str) -> DataFrame:
-        """Run a point->point kernel, appending `{prefix}lat`,
-        `{prefix}lon`, `{prefix}alt` + status columns."""
+                    fn_name: str) -> DataFrame:
+        """Run a point->point kernel, appending out_lat, out_lon,
+        out_alt + status columns."""
         bc, sb = self._bc, self.strict_bounds
 
         def compute(want, la, lo, al):
             out_la, out_lo, out_al, c = getattr(kernel, fn_name)(
                 la, lo, al, bc.value, strict_bounds=sb)
-            return _coord_cols(prefix, out_la, out_lo, out_al), c
+            return _coord_cols(out_la, out_lo, out_al), c
 
-        udf = _kernel_udf(compute, _coord_fields(prefix) + _RESULT_FIELDS)
+        udf = _kernel_udf(compute, _COORD_FIELDS + _RESULT_FIELDS)
         return _expand_struct(df, udf(df, lat, lon, alt))
 
     def forward(self, df: DataFrame, lat: str = "lat", lon: str = "lon",
-                alt: str | None = "alt", prefix: str = "out_") -> DataFrame:
+                alt: str | None = "alt") -> DataFrame:
         """``Transformer::forward`` (trans.rs:134-136) over a DataFrame."""
-        return self._map_kernel(df, lat, lon, alt, "forward", prefix)
+        return self._map_kernel(df, lat, lon, alt, "forward")
 
     def backward(self, df: DataFrame, lat: str = "lat", lon: str = "lon",
-                 alt: str | None = "alt", prefix: str = "out_") -> DataFrame:
+                 alt: str | None = "alt") -> DataFrame:
         """``Transformer::backward`` (trans.rs:233-235): verified Newton
         inverse, residual < 5e-14 deg."""
-        return self._map_kernel(df, lat, lon, alt, "backward", prefix)
+        return self._map_kernel(df, lat, lon, alt, "backward")
 
     def backward_compat(self, df: DataFrame, lat: str = "lat", lon: str = "lon",
-                        alt: str | None = "alt", prefix: str = "out_") -> DataFrame:
+                        alt: str | None = "alt") -> DataFrame:
         """``Transformer::backward_compat`` (trans.rs:179-181)."""
-        return self._map_kernel(df, lat, lon, alt, "backward_compat", prefix)
+        return self._map_kernel(df, lat, lon, alt, "backward_compat")
 
-    def _corr(self, df: DataFrame, lat: str, lon: str, fn_name: str) -> DataFrame:
+    def forward_corr(self, df: DataFrame, lat: str = "lat", lon: str = "lon") -> DataFrame:
+        """``forward_corr`` (trans.rs:428-451): correction columns only."""
         bc, sb = self._bc, self.strict_bounds
 
         def compute(want, la, lo):
-            c = getattr(kernel, fn_name)(la, lo, bc.value, strict_bounds=sb)
+            c = kernel.forward_corr(la, lo, bc.value, strict_bounds=sb)
             return {"dlat_deg": c.dlat, "dlon_deg": c.dlon, "dalt_m": c.dalt}, c
 
         all_fields = [StructField(n, DoubleType(), True)
                       for n in ("dlat_deg", "dlon_deg", "dalt_m")] + _RESULT_FIELDS
         return _expand_struct(df, _kernel_udf(compute, all_fields)(df, lat, lon))
-
-    def forward_corr(self, df: DataFrame, lat: str = "lat", lon: str = "lon") -> DataFrame:
-        """``forward_corr`` (trans.rs:428-451): correction columns only."""
-        return self._corr(df, lat, lon, "forward_corr")
-
-    def backward_corr(self, df: DataFrame, lat: str = "lat", lon: str = "lon") -> DataFrame:
-        return self._corr(df, lat, lon, "backward_corr")
-
-    def backward_compat_corr(self, df: DataFrame, lat: str = "lat", lon: str = "lon") -> DataFrame:
-        return self._corr(df, lat, lon, "backward_compat_corr")
 
     # -- tiling -----------------------------------------------------------
 
@@ -290,20 +268,20 @@ class Engine:
         return _expand_struct(df, _kernel_udf(compute, all_fields, fields)(df, lat, lon))
 
     def _forward_tiled(self, df: DataFrame, lat: str, lon: str, alt: str | None,
-                       level: int, prefix: str, fields: list[str] | None,
+                       level: int, fields: list[str] | None,
                        poly_mask=None) -> DataFrame:
         """The shared body of transform_and_tile and transform_tile_pip:
         forward + meshcode/quadkey (+ ``poly_mask(lat, lon)``) in one
         UDF, computing only the requested tile and mask columns."""
         bc, sb = self._bc, self.strict_bounds
         unit, bounds = self.grid.mesh_unit, self._tile_bounds()
-        all_fields = _coord_fields(prefix) + _RESULT_FIELDS + _TILE_FIELDS
+        all_fields = _COORD_FIELDS + _RESULT_FIELDS + _TILE_FIELDS
         if poly_mask is not None:
             all_fields.append(StructField("poly_mask", LongType(), False))
 
         def compute(want, la, lo, al):
             out_la, out_lo, out_al, c = kernel.forward(la, lo, al, bc.value, strict_bounds=sb)
-            out = _coord_cols(prefix, out_la, out_lo, out_al)
+            out = _coord_cols(out_la, out_lo, out_al)
             if "meshcode" in want:
                 lat_d, lon_d, valid = mesh.point_to_digits(out_la, out_lo, unit, bounds)
                 out["meshcode"] = np.where(valid, mesh.digits_to_meshcode(lat_d, lon_d), -1)
@@ -318,7 +296,6 @@ class Engine:
 
     def transform_and_tile(self, df: DataFrame, lat: str = "lat", lon: str = "lon",
                            alt: str | None = "alt", level: int = 15,
-                           prefix: str = "out_",
                            fields: list[str] | None = None) -> DataFrame:
         """Fused forward-transform + tile-assignment in ONE Arrow hop.
 
@@ -331,14 +308,13 @@ class Engine:
         a pandas UDF, so pass the projection explicitly; skipping
         ``quadkey`` also skips its encode).
         """
-        return self._forward_tiled(df, lat, lon, alt, level, prefix, fields)
+        return self._forward_tiled(df, lat, lon, alt, level, fields)
 
     poly_mask_rows = staticmethod(spatial.poly_mask_rows)
 
     def transform_tile_pip(self, df: DataFrame, polygons, lat: str = "lat",
                            lon: str = "lon", alt: str | None = "alt",
-                           level: int = 15, prefix: str = "out_",
-                           fields: list[str] | None = None) -> DataFrame:
+                           level: int = 15, fields: list[str] | None = None) -> DataFrame:
         """Fully fused hot chain for broadcast-size polygon sets:
         forward transform + tile assignment + point-in-polygon
         containment in ONE Arrow hop, emitting a ``poly_mask`` LONG
@@ -362,7 +338,7 @@ class Engine:
         zero shuffles, one Python stage.  Use
         operators.spatial.bucketed_spatial_join when it doesn't.
         """
-        return self._forward_tiled(df, lat, lon, alt, level, prefix, fields,
+        return self._forward_tiled(df, lat, lon, alt, level, fields,
                                    spatial.polygon_mask(polygons))
 
     def roundtrip_verify(self, df: DataFrame, lat: str = "lat", lon: str = "lon",
@@ -398,7 +374,7 @@ class Engine:
             return f_la, f_lo, f_al, exact, status
 
         def coords(want, la, lo, al):
-            return _coord_cols("out_", *_run(la, lo, al)[:3]), None
+            return _coord_cols(*_run(la, lo, al)[:3]), None
 
         def verdict(want, la, lo):
             # the verdict is altitude-free (status comes from the
@@ -413,7 +389,7 @@ class Engine:
                           StructField("status", IntegerType(), False)]
         return _expand_struct(
             df,
-            _kernel_udf(coords, _coord_fields("out_"))(df, lat, lon, alt),
+            _kernel_udf(coords, _COORD_FIELDS)(df, lat, lon, alt),
             _kernel_udf(verdict, verdict_fields)(df, lat, lon),
         )
 

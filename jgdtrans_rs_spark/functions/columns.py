@@ -1,39 +1,18 @@
 """Pure Column expression helpers — JVM-side, whole-stage-codegen
 friendly (no Python in the plan).
 
-These are the declarative twins of numpy / UDF kernels: angle
-normalization (point.rs:9-32), DMS parse/format and cosine
-similarity.  Use them when staying inside codegen matters (no Arrow
-hop).
+These are the declarative twins of numpy / UDF kernels: DMS
+parse/format and cosine similarity.  Use them when staying inside
+codegen matters (no Arrow hop).  Angle normalization (point.rs:9-32)
+has one SQL form for both Spark and DuckDB,
+``plans.oracle.norm_lat_expr``/``norm_lon_expr``; wrap it in
+``F.expr``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def normalize_latitude(c: Column) -> Column:
-    """point.rs:9-19 as nested CASE; NaN passes through."""
-    s = c % F.lit(360.0)
-    in_range = c.between(-90.0, 90.0) | F.isnan(c)
-    case1 = ~s.between(-270.0, 270.0)
-    case2 = ~s.between(-90.0, 90.0)
-    wrapped = (
-        F.when(case1, s - F.signum(s) * 360.0)
-        .when(case2, F.signum(s) * 180.0 - s)
-        .otherwise(s)
-    )
-    return F.when(in_range, c).otherwise(wrapped)
-
-
-def normalize_longitude(c: Column) -> Column:
-    """point.rs:23-32 as nested CASE; NaN passes through."""
-    s = c % F.lit(360.0)
-    in_range = c.between(-180.0, 180.0) | F.isnan(c)
-    case1 = ~((s >= -180.0) & (s < 180.0))
-    wrapped = F.when(case1, s - F.signum(s) * 360.0).otherwise(s)
-    return F.when(in_range, c).otherwise(wrapped)
 
 
 def dms_to_degree(c: Column) -> Column:

@@ -280,31 +280,6 @@ class MeshGrid:
             "horizontal": _stat_from_array(horizontal),
         }
 
-    def to_json(self) -> str:
-        """serde-style (de)serialization round-trip (lib.rs:98-136,
-        par.rs:71-92): format + description + parameter map."""
-        import json
-
-        return json.dumps({
-            "format": self.format,
-            "description": self.description,
-            "parameter": {
-                str(int(c)): {"latitude": float(a), "longitude": float(b), "altitude": float(h)}
-                for c, a, b, h in zip(self.codes, self.dlat_sec, self.dlon_sec, self.dalt_m)
-            },
-        })
-
-    @classmethod
-    def from_json(cls, s: str) -> "MeshGrid":
-        import json
-
-        d = json.loads(s)
-        params = {
-            int(c): (p["latitude"], p["longitude"], p["altitude"])
-            for c, p in d["parameter"].items()
-        }
-        return cls.from_dict(params, format=d["format"], description=d.get("description"))
-
     def to_rows(self) -> list[tuple]:
         """(meshcode, dlat_sec, dlon_sec, dalt_m) rows, sorted by code —
         for building a small Spark/DuckDB side table."""
@@ -392,59 +367,3 @@ def load_par(path: str, format: str) -> MeshGrid:
     with open(path, encoding="utf-8", newline="") as f:
         return parse_par(f.read(), format)
 
-
-class GridBuilder:
-    """Fluent incremental builder for a ``MeshGrid`` / ``Engine`` —
-    the relational twin of the reference's ``TransformerBuilder``
-    (builder.rs:32-230): ``format()`` + ``parameter()``/
-    ``parameters()`` accumulate, ``build()`` produces the sorted
-    columnar grid (``build_engine(spark)`` wraps it in an Engine).
-
-    Semantics pinned to the reference: later inserts of the same
-    meshcode overwrite (HashMap insert), ``build()`` raises when the
-    format was never assigned (builder.rs:153-159 panics with
-    'mesh_unit is not assigned'), and a parameter may be a 2-tuple
-    (horizontal-only formats fill altitude 0.0 like
-    ``Parameter::from((f64, f64))``)."""
-
-    def __init__(self) -> None:
-        self._format: str | None = None
-        self._params: dict[int, tuple] = {}
-        self._description: str | None = None
-
-    def format(self, format: str) -> "GridBuilder":
-        if format not in FORMAT_MESH_UNIT:
-            raise ValueError(f"unknown format: {format!r}")
-        self._format = format
-        return self
-
-    def description(self, description: str) -> "GridBuilder":
-        self._description = description
-        return self
-
-    def parameter(self, meshcode: int, parameter) -> "GridBuilder":
-        p = tuple(float(v) for v in parameter)
-        if len(p) == 2:  # Parameter::from((latitude, longitude))
-            p = (*p, 0.0)
-        if len(p) != 3:
-            raise ValueError("parameter must be (dlat_sec, dlon_sec[, dalt_m])")
-        self._params[int(meshcode)] = p
-        return self
-
-    def parameters(self, parameters) -> "GridBuilder":
-        items = parameters.items() if hasattr(parameters, "items") else parameters
-        for meshcode, p in items:
-            self.parameter(meshcode, p)
-        return self
-
-    def build(self) -> MeshGrid:
-        if self._format is None:
-            raise ValueError("mesh_unit is not assigned")  # builder.rs:155
-        return MeshGrid.from_dict(self._params, format=self._format,
-                                  description=self._description)
-
-    def build_engine(self, spark, strict_bounds: bool = True):
-        """Build and broadcast: the Spark-shaped ``build()``."""
-        from .engine import Engine
-
-        return Engine(spark, self.build(), strict_bounds=strict_bounds)

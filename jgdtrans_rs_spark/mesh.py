@@ -323,9 +323,11 @@ def quadkey(lat: np.ndarray, lon: np.ndarray, level: int = 15) -> np.ndarray:
     """
     lat = _as_f64(lat)
     lon = _as_f64(lon)
-    # non-finite coords deterministically map to cell 0
-    lat = np.where(np.isfinite(lat), lat, -90.0)
-    lon = np.where(np.isfinite(lon), lon, -180.0)
+    # non-finite coords deterministically map to cell 0; finite ones
+    # clamp to +-1e6 first, so the int64 cast below cannot overflow
+    # (oracle.tile_sql applies the same rule)
+    lat = np.where(np.isfinite(lat), np.clip(lat, -1e6, 1e6), -90.0)
+    lon = np.where(np.isfinite(lon), np.clip(lon, -1e6, 1e6), -180.0)
     n = np.int64(1) << level
     ix = np.floor((lon + 180.0) / 360.0 * n).astype(np.int64)
     iy = np.floor((lat + 90.0) / 180.0 * n).astype(np.int64)

@@ -4,7 +4,9 @@ All variants are declarative Spark SQL plans (generated from
 plans/webops.py, shared with the DuckDB oracle), so Catalyst owns the
 physical strategy:
 
-* exact          — hash-groupBy on md5(text): one shuffle on the digest.
+* exact          — hash-groupBy on md5(text): one shuffle on the digest;
+                   run it as ``spark.sql(webops.dedup_exact_sql(SPARK,
+                   docs))``.
 * minhash_lsh    — shingle -> 12 minhashes -> 3 bands of 4 -> band
                    self-join -> exact-Jaccard verify.  Shuffles on band
                    keys and shingle ids; at 100 TB the band join is the
@@ -82,11 +84,6 @@ def _stage(spark: SparkSession, sql: str, base_name: str) -> str:
     """Persist a stage and register it under a unique view name."""
     df = spark.sql(sql).persist()
     return _register_stage_view(spark, df, base_name)
-
-
-def exact_duplicates(spark: SparkSession, docs: str = "documents") -> DataFrame:
-    """(doc_id, canonical_id, group_size) over the dup-test corpus."""
-    return spark.sql(webops.dedup_exact_sql(SPARK, docs))
 
 
 def minhash_lsh_pairs(spark: SparkSession, docs: str = "documents",

@@ -412,16 +412,6 @@ def knn_topk_np(la: np.ndarray, lo: np.ndarray, unit: int, k: int):
     return top, top_ok & valid[:, None]
 
 
-def knn_codes_np(la: np.ndarray, lo: np.ndarray, unit: int, k: int):
-    """Batch kNN kernel: ordered k-nearest node-code list per point
-    (empty list for points outside the mesh domain).  Pure numpy —
-    testable against an all-nodes brute force without Spark.  (The
-    Spark operator ships the fixed-width knn_topk_np form instead;
-    this list view is derived from the same arrays.)"""
-    top, keep = knn_topk_np(la, lo, unit, k)
-    return [row[ok_row] for row, ok_row in zip(top, keep)]
-
-
 def knn_mesh_nodes(df: DataFrame, unit: int, k: int = 3,
                    key: str = "pkey", lat: str = "lat", lon: str = "lon") -> DataFrame:
     """k nearest existing mesh nodes per point -> (key, rank, node_code).

@@ -106,7 +106,8 @@ def digits_select_unchecked(lat: str = "lat", lon: str = "lon",
     take none of the saturation/wrap branches, so checked and
     unchecked digits agree wherever mesh_valid is true; mesh_valid
     itself still tests the raw values (the Newton loop's REBOUND view
-    needs it for the next iteration's checked prepare)."""
+    needs it for the next iteration's checked prepare), and a NULL
+    coordinate is invalid, as in digits_select."""
     third_lat = "(flat3r % 256)" if unit == 1 else "(CASE WHEN flat3r < 5 THEN 0 ELSE 5 END)"
     third_lon = "(flon3r % 256)" if unit == 1 else "(CASE WHEN flon3r < 5 THEN 0 ELSE 5 END)"
     return f"""
@@ -115,7 +116,8 @@ def digits_select_unchecked(lat: str = "lat", lon: str = "lon",
              {third_lon} AS lon3,
              (lat2u % 256) AS lat2,
              (lon2u % 256) AS lon2,
-             (latv >= 0.0e0 AND latv < 100.0e0 AND {lon} >= 100.0e0 AND {lon} < 180.0e0) AS mesh_valid
+             COALESCE(latv >= 0.0e0 AND latv < 100.0e0 AND {lon} >= 100.0e0 AND {lon} < 180.0e0,
+                      FALSE) AS mesh_valid
       FROM (
         SELECT *,
                (ilat % 100) AS lat1,
@@ -152,14 +154,18 @@ def digits_select(lat: str = "lat", lon: str = "lon", unit: int = 5) -> str:
     DuckDB hard-errors on CAST(NaN AS BIGINT) while Spark yields 0.
     Validity (mesh_valid) still tests the RAW values, so guarded lanes
     are always invalid and their digits never surface (digits of
-    invalid lanes are unspecified, as in the numpy kernels)."""
+    invalid lanes are unspecified, as in the numpy kernels).  A NULL
+    coordinate is invalid too (COALESCE to FALSE): the kernels see it
+    as NaN and report OutOfBounds, where a NULL mesh_valid would fall
+    through every ``NOT mesh_valid`` CASE into ParameterNotFound."""
     third_lat = "(flat3r)" if unit == 1 else "(CASE WHEN flat3r < 5 THEN 0 ELSE 5 END)"
     third_lon = "(flon3r)" if unit == 1 else "(CASE WHEN flon3r < 5 THEN 0 ELSE 5 END)"
     return f"""
       SELECT *,
              {third_lat} AS lat3,
              {third_lon} AS lon3,
-             (latv >= 0.0e0 AND latv < 100.0e0 AND {lon} >= 100.0e0 AND {lon} < 180.0e0) AS mesh_valid
+             COALESCE(latv >= 0.0e0 AND latv < 100.0e0 AND {lon} >= 100.0e0 AND {lon} < 180.0e0,
+                      FALSE) AS mesh_valid
       FROM (
         SELECT *,
                (ilat % 100) AS lat1,
@@ -624,9 +630,9 @@ def tile_sql(input_rel: str, unit: int, level: int = 15, key: str = "pkey") -> s
     Non-finite coordinates substitute the domain corner (-90 / -180)
     before the quadkey floor-cast — the exact rule mesh.quadkey uses —
     so NaN/Inf lanes neither abort DuckDB (CAST(NaN AS BIGINT) errors
-    there) nor diverge between the engines; huge finite values clamp
-    in double space (numpy's int64 overflow there is unspecified
-    anyway, and such lanes are invalid in every bounds mode)."""
+    there) nor diverge between the engines; finite values clamp to
+    +-1e6 in double space before the cast, as in mesh.quadkey (such
+    lanes are invalid in every bounds mode)."""
     cells = digits_select("lat", "lon", unit).replace("__IN__", input_rel)
     code = _code("lat1", "lat2", "lat3", "lon1", "lon2", "lon3")
     n = 1 << level

@@ -7,7 +7,9 @@ bucket-group plus a manifest row per completed group:
 
     out/
       data/bucket_group=NN/*.parquet
-      _manifest/part-*.json      (bucket_group, n_rows, n_ok, wall_ts)
+      _manifest/part-*.json      (bucket_group, n_rows, n_ok,
+                                  status_counts, top_tiles, n_tiles,
+                                  wall_ts)
 
 ``completed_groups`` reads the manifest set, and ``run_checkpointed``
 processes only pending groups — idempotent re-runs, deterministic
@@ -18,14 +20,16 @@ Scale design (the 100 TB path): the pending groups are written in ONE
 partition overwrite (a killed attempt's partial directories are
 replaced, completed groups' directories are untouched).  Per-group
 manifests are then derived from a columnar scan of the *written*
-output — (bucket_group, status) only — never by recomputing the
-upstream transform.  The previous per-group filter loop recomputed the
-input ~3x per group (count + status agg + write), i.e. ~48 full passes
-at n_groups=16.
+output — (bucket_group, status, meshcode) only — never by recomputing
+the upstream transform.  The previous per-group filter loop recomputed
+the input ~3x per group (count + status agg + write), i.e. ~48 full
+passes at n_groups=16.
 
-Lineage/metrics: each manifest row carries the transform-count metrics
-of its group (rows in, rows ok, per-status counts) — the relational
-twin of the reference's error taxonomy (trans.rs:946-999).
+Lineage/metrics: every manifest has one shape.  It carries the
+transform-count metrics of its group (rows in, rows ok, per-status
+counts) — the relational twin of the reference's error taxonomy
+(trans.rs:946-999) — and the group's skew statistics: the
+``TOP_TILES`` most populous tiles and the distinct-tile count.
 """
 
 from __future__ import annotations
@@ -35,9 +39,12 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 MANIFEST_DIR = "_manifest"
 DATA_DIR = "data"
+# tiles recorded per group manifest (the most populous first)
+TOP_TILES = 8
 
 
 def bucket_group_col(mesh_col: str = "meshcode", n_groups: int = 64):
@@ -112,21 +119,19 @@ def hot_codes_from_manifests(out_dir: str, spark: SparkSession | None = None,
     returned sorted; -1 (untiled/error rows) is never a join key and
     is excluded.
 
-    The manifests record only the top-N tiles per group, and that cap
-    must not be silent: a group's hidden tiles all have counts <= the
-    smallest RECORDED count (top-N is by count), so the hot set is
-    provably complete whenever each truncated group's smallest
-    recorded count is <= ``threshold``.  When a truncated group's
-    recorded floor is still above the threshold, hotter-than-threshold
-    tiles may be hidden — that exact condition raises a warning naming
-    the groups (re-run the sink with a larger ``top_tiles`` or use
-    ``spatial.skew_topk`` for a full pass)."""
+    The manifests record only the ``TOP_TILES`` most populous tiles per
+    group, and that cap must not be silent: a group's hidden tiles all
+    have counts <= the smallest RECORDED count (top-N is by count), so
+    the hot set is provably complete whenever each truncated group's
+    smallest recorded count is <= ``threshold``.  When a truncated
+    group's recorded floor is still above the threshold,
+    hotter-than-threshold tiles may be hidden — that exact condition
+    raises a warning naming the groups (run
+    ``spatial.bucketed_spatial_join(..., hot_codes=None)``, which
+    counts every tile in a full pass)."""
     hot: set[int] = set()
     suspect: list[int] = []
-    rows_seen = tiles_seen = 0
     for m in read_manifests(out_dir, spark):
-        rows_seen += int(m.get("n_rows", 0))
-        tiles_seen += len(m.get("top_tiles", []))
         # manifests written since round 5 never record the -1 sentinel
         # (excluded at write time); the code != -1 guards keep older
         # manifests honest — the sentinel must neither enter the hot
@@ -142,22 +147,11 @@ def hot_codes_from_manifests(out_dir: str, spark: SparkSession | None = None,
 
         warnings.warn(
             f"hot_codes_from_manifests({out_dir}): groups {sorted(suspect)} "
-            f"were truncated at top_tiles with every recorded count above "
-            f"threshold={threshold}; hotter-than-threshold tiles may be "
-            f"missing — raise top_tiles at write time or run a full "
-            f"skew_topk pass", stacklevel=2)
-    if rows_seen > 0 and tiles_seen == 0:
-        # the sink ran with top_tiles=0 (stats disabled) or no tile
-        # column: an empty hot set here means NOTHING, not "no skew" —
-        # say so instead of letting the caller join unsalted on faith
-        import warnings
-
-        warnings.warn(
-            f"hot_codes_from_manifests({out_dir}): manifests record "
-            f"{rows_seen} rows but NO tile statistics (written with "
-            f"top_tiles=0?); the empty hot set carries no skew "
-            f"information — re-run the sink with top_tiles>0 or use "
-            f"spatial.skew_topk", stacklevel=2)
+            f"were truncated at top_tiles ({TOP_TILES} per group) with every "
+            f"recorded count above threshold={threshold}; "
+            f"hotter-than-threshold tiles may be missing — run "
+            f"spatial.bucketed_spatial_join(..., hot_codes=None) for a "
+            f"full pass", stacklevel=2)
     return sorted(hot)
 
 
@@ -183,30 +177,21 @@ def _write_manifest(out_dir: str, manifest: dict, spark: SparkSession) -> None:
 
 
 def run_checkpointed(df: DataFrame, out_dir: str, mesh_col: str = "meshcode",
-                     n_groups: int = 16, status_col: str = "status",
-                     sort_within: bool = False, top_tiles: int = 8) -> list[dict]:
+                     n_groups: int = 16) -> list[dict]:
     """Process + persist per bucket-group, skipping completed groups.
 
-    ``df`` is the transformed DataFrame (already carrying tile + status
-    columns).  ONE action over the input (the partitioned write); the
-    manifest metrics come from scanning the written parquet, so the
-    upstream lineage is never recomputed.  Returns the manifests
-    written this run.
+    ``df`` is the transformed DataFrame, carrying the ``mesh_col`` tile
+    column and the kernels' ``status`` column.  ONE action over the
+    input (the partitioned write); the manifest metrics come from
+    scanning the written parquet, so the upstream lineage is never
+    recomputed.  Returns the manifests written this run.
 
-    ``sort_within=True`` additionally orders every output file by the
-    tile key (``sortWithinPartitions`` — a per-task local sort, NO
-    shuffle added): each parquet row group then covers a narrow
-    meshcode range, so any later tile-predicate read prunes row groups
-    from the min/max footer stats instead of scanning the file.  At
-    100 TB this is the difference between touching one row group and
-    decompressing the whole corpus for a per-city query; the write
-    cost is one in-memory sort per task.
-
-    ``top_tiles`` (0 disables): each manifest additionally records the
-    group's ``top_tiles`` — the N most populous (meshcode, n_rows)
-    pairs, computed by a one-column aggregation over the WRITTEN
-    parquet (map-side partials + a bounded n_groups×N driver collect).
-    This is the skew statistic ``hot_codes_from_manifests`` feeds to
+    Besides the per-status counts, each manifest records the group's
+    ``top_tiles`` — the ``TOP_TILES`` most populous (meshcode, n_rows)
+    pairs — and its distinct-tile count ``n_tiles``, computed by the
+    same aggregation over the WRITTEN parquet (map-side partials + a
+    bounded n_groups×TOP_TILES driver collect).  This is the skew
+    statistic ``hot_codes_from_manifests`` feeds to
     ``spatial.bucketed_spatial_join``: detection paid once per write,
     never re-aggregated at join time.
     """
@@ -217,8 +202,6 @@ def run_checkpointed(df: DataFrame, out_dir: str, mesh_col: str = "meshcode",
         return []
     staged = df.withColumn("bucket_group", bucket_group_col(mesh_col, n_groups))
     part = staged.filter(F.col("bucket_group").isin(pending))
-    if sort_within:
-        part = part.sortWithinPartitions("bucket_group", mesh_col)
     data_dir = f"{out_dir.rstrip('/')}/{DATA_DIR}"
     (
         part.write.mode("overwrite")
@@ -231,63 +214,49 @@ def run_checkpointed(df: DataFrame, out_dir: str, mesh_col: str = "meshcode",
     # both the status counts and the top-tile skew statistics (the
     # finest-grain aggregate is computed once and both rollups derive
     # from it distributedly — at 100 TB a second full scan per sink
-    # run is real wasted IO, round-5 self-review)
-    has_status = status_col in df.columns
-    group_cols = ["bucket_group"] + ([status_col] if has_status else [])
-    # explicit schema: an all-empty pending write leaves only _SUCCESS
+    # run is real wasted IO, round-5 self-review).
+    # Explicit schema: an all-empty pending write leaves only _SUCCESS
     # in data_dir, where schema inference would fail — with the schema
     # given, the read yields an empty frame and zero-row manifests
     read = (
         spark.read.schema(part.schema).parquet(data_dir)
         .filter(F.col("bucket_group").isin(pending))
     )
-    want_tiles = bool(top_tiles) and mesh_col in df.columns
+    base = read.groupBy("bucket_group", "status", mesh_col).count().persist()
+    counts = (
+        base.groupBy("bucket_group", "status")
+        .agg(F.sum("count").alias("count")).collect()
+    )
+    w = Window.partitionBy("bucket_group").orderBy(F.desc("count"), mesh_col)
+    # sentinel -1 (untiled/error rows) is excluded from the tile
+    # statistics entirely: it is never a join key, and recording it
+    # would both waste a top_tiles slot and poison the read side's
+    # truncation proof (a floor/hidden-tile that is really just the
+    # error bucket would trigger a spurious hot-tile warning).
+    # Error volume is still fully visible via status_counts.
+    per_tile = (
+        base.filter(F.col(mesh_col).isNotNull() & (F.col(mesh_col) != -1))
+        .groupBy("bucket_group", mesh_col)
+        .agg(F.sum("count").alias("count"))
+    )
+    # distinct-tile count rides the same window pass (unordered
+    # partition count) instead of a third job over `base`: the read
+    # side uses it to decide whether the top-N list was truncated (and
+    # whether that truncation can hide a hot tile) — no silent caps
+    tile_rows = (
+        per_tile
+        .withColumn("_nt", F.count("*").over(Window.partitionBy("bucket_group")))
+        .withColumn("_rk", F.row_number().over(w))
+        .filter(F.col("_rk") <= TOP_TILES)
+        .collect()
+    )
+    base.unpersist()
     tiles_by_group: dict[int, list[list[int]]] = {g: [] for g in pending}
     n_tiles_by_group: dict[int, int] = {g: 0 for g in pending}
-    if want_tiles:
-        from pyspark.sql.window import Window
-
-        base = (
-            read.groupBy(*group_cols, mesh_col).count()
-            .persist()
-        )
-        counts = (
-            base.groupBy(*group_cols)
-            .agg(F.sum("count").alias("count")).collect()
-        )
-        w = Window.partitionBy("bucket_group").orderBy(
-            F.desc("count"), mesh_col)
-        # sentinel -1 (untiled/error rows) is excluded from the tile
-        # statistics entirely: it is never a join key, and recording it
-        # would both waste a top_tiles slot and poison the read side's
-        # truncation proof (a floor/hidden-tile that is really just the
-        # error bucket would trigger a spurious hot-tile warning).
-        # Error volume is still fully visible via status_counts.
-        per_tile = (
-            base.filter(F.col(mesh_col).isNotNull() & (F.col(mesh_col) != -1))
-            .groupBy("bucket_group", mesh_col)
-            .agg(F.sum("count").alias("count"))
-        )
-        # distinct-tile count rides the same window pass (unordered
-        # partition count) instead of a third job over `base`: the
-        # read side uses it to decide whether the top-N list was
-        # truncated (and whether that truncation can hide a hot tile)
-        # — no silent caps
-        tile_rows = (
-            per_tile
-            .withColumn("_nt", F.count("*").over(
-                Window.partitionBy("bucket_group")))
-            .withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") <= top_tiles)
-            .collect()
-        )
-        base.unpersist()
-        for r in tile_rows:
-            g = int(r["bucket_group"])
-            n_tiles_by_group[g] = int(r["_nt"])
-            tiles_by_group[g].append([int(r[mesh_col]), int(r["count"])])
-    else:
-        counts = read.groupBy(*group_cols).count().collect()
+    for r in tile_rows:
+        g = int(r["bucket_group"])
+        n_tiles_by_group[g] = int(r["_nt"])
+        tiles_by_group[g].append([int(r[mesh_col]), int(r["count"])])
     by_group: dict[int, dict[int, int]] = {g: {} for g in pending}
     for r in counts:
         g = int(r["bucket_group"])
@@ -295,26 +264,23 @@ def run_checkpointed(df: DataFrame, out_dir: str, mesh_col: str = "meshcode",
         # instead of raising int(None) AFTER the data write committed
         # — that failure mode wrote the data but no manifests, forcing
         # the next run to redo every group
-        s = (-1 if r[status_col] is None else int(r[status_col])) \
-            if has_status else 0
+        s = -1 if r["status"] is None else int(r["status"])
         by_group[g][s] = by_group[g].get(s, 0) + int(r["count"])
 
     written = []
     wall_ts = time.time()
     for g in pending:  # groups with zero rows still get a manifest
         by_status = by_group[g]
-        rows = sum(by_status.values())
         manifest = {
             "bucket_group": g,
-            "n_rows": rows,
-            "n_ok": by_status.get(0, 0) if has_status else rows,
+            "n_rows": sum(by_status.values()),
+            "n_ok": by_status.get(0, 0),
             # string keys from the start: json round-trips stringify
             # dict keys, so a live manifest and a read_manifests() one
             # must agree on key type to compare equal
-            "status_counts": ({str(k): v for k, v in by_status.items()}
-                              if has_status else {}),
-            "top_tiles": tiles_by_group.get(g, []),
-            "n_tiles": n_tiles_by_group.get(g, 0),
+            "status_counts": {str(k): v for k, v in by_status.items()},
+            "top_tiles": tiles_by_group[g],
+            "n_tiles": n_tiles_by_group[g],
             "wall_ts": wall_ts,
         }
         _write_manifest(out_dir, manifest, spark)

@@ -167,18 +167,18 @@ def test_salted_join_equals_broadcast_on_edge_rings(spark, ring, unit):
 
 def test_knn_spark_matches_numpy_kernel(points):
     """The Spark operator (pandas_udf + posexplode) emits exactly the
-    numpy kernel's ordered lists — which test_properties pins to the
+    numpy kernel's kept slots, in order — which test_properties pins to the
     all-nodes brute force."""
     import numpy as np
 
     src = points.limit(200).toPandas().sort_values("pkey")
     out = spatial.knn_mesh_nodes(points.limit(200), 5, 3).toPandas()
-    want = spatial.knn_codes_np(
+    top, keep = spatial.knn_topk_np(
         src["lat"].to_numpy(np.float64), src["lon"].to_numpy(np.float64), 5, 3)
     expect = {
         (int(pk), r + 1): int(code)
-        for pk, codes in zip(src["pkey"], want)
-        for r, code in enumerate(codes)
+        for pk, codes, ok in zip(src["pkey"], top, keep)
+        for r, code in enumerate(codes[ok])
     }
     got = {
         (int(row.pkey), int(row.rank)): int(row.node_code)
@@ -309,8 +309,9 @@ def test_checkpoint_sink_single_pass(spark, points, tmp_path):
         acc.add(len(x))
         return x
 
-    df = points.withColumn("lat", counted(F.col("lat"))).withColumn(
-        "meshcode", (F.col("pkey") % 7).cast("long"))
+    df = (points.withColumn("lat", counted(F.col("lat")))
+          .withColumn("meshcode", (F.col("pkey") % 7).cast("long"))
+          .withColumn("status", F.lit(0)))
     sink.run_checkpointed(df, str(tmp_path / "once"), n_groups=7)
     assert acc.value == n, f"input scanned {acc.value / n:.1f}x"
 
@@ -412,39 +413,6 @@ def test_poly_mask_rows_matches_explode_semantics(engine, points, spark):
         else:
             exp.add((r.pkey, None))
     assert got == exp and any(i is not None for _, i in got)
-
-
-def test_checkpoint_sink_tile_sorted_layout(engine, points, tmp_path):
-    """sort_within=True must leave every output file meshcode-ordered
-    (the property parquet row-group pruning relies on) without
-    changing WHAT is written."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from jgdtrans_rs_spark.sources import sink as sink_mod
-
-    tiled = engine.transform_and_tile(points, "lat", "lon", "alt")
-    out = str(tmp_path / "sorted_out")
-    manifests = sink_mod.run_checkpointed(tiled, out, n_groups=4,
-                                          sort_within=True)
-    assert sum(m["n_rows"] for m in manifests) == points.count()
-
-    files = glob.glob(f"{out}/data/bucket_group=*/*.parquet")
-    assert files
-    for f in files:
-        codes = pq.read_table(f, columns=["meshcode"])["meshcode"].to_pylist()
-        assert codes == sorted(codes), f"unsorted file {f}"
-
-    # filtered read returns exactly the matching rows
-    spark = points.sparkSession
-    some_code = next(c for fpath in files[:1]
-                     for c in pq.read_table(fpath, columns=["meshcode"])
-                     ["meshcode"].to_pylist() if c > 0)
-    got = (spark.read.parquet(f"{out}/data")
-           .filter(F.col("meshcode") == some_code).count())
-    want = tiled.filter(F.col("meshcode") == some_code).count()
-    assert got == want > 0
 
 
 def _pip(engine, points):
@@ -613,7 +581,7 @@ def test_hot_codes_from_manifests_feeds_salted_join(spark, engine, points, tmp_p
     tiled = engine.assign_tiles(
         engine.forward(points, "lat", "lon", "alt"), "lat", "lon")
     out_dir = str(tmp_path / "stats_sink")
-    ms = sink.run_checkpointed(tiled, out_dir, n_groups=4, top_tiles=4)
+    ms = sink.run_checkpointed(tiled, out_dir, n_groups=4)
     assert all("top_tiles" in m for m in ms)
     assert any(m["top_tiles"] for m in ms)
     # recorded counts are real row counts per code
@@ -642,15 +610,14 @@ def test_hot_codes_truncation_is_loud(spark, tmp_path):
     warning fires."""
     import warnings
 
-    # 3 tiles, all congruent mod 4 -> one group holds all of them; the
-    # cap of 1 must truncate and say so (counts 30/20/10 rows)
-    rows = [(i, code, 0) for code, n in ((54400000, 30), (54400004, 20),
-                                         (54400008, 10))
-            for i in range(n)]
+    # TOP_TILES + 2 tiles, all congruent mod 4 -> one group holds all
+    # of them; the cap must truncate and say so (counts 40, 38, ... rows)
+    rows = [(i, 54400000 + 4 * t, 0) for t in range(sink.TOP_TILES + 2)
+            for i in range(40 - 2 * t)]
     tiled = spark.createDataFrame(
         rows, "pkey long, meshcode long, status int")
     out_dir = str(tmp_path / "trunc_sink")
-    ms = sink.run_checkpointed(tiled, out_dir, n_groups=4, top_tiles=1)
+    ms = sink.run_checkpointed(tiled, out_dir, n_groups=4)
     assert all("n_tiles" in m for m in ms)
     assert any(m["n_tiles"] > len(m["top_tiles"]) for m in ms)
     # threshold below every recorded count -> incomplete-set hazard
@@ -677,7 +644,7 @@ def test_sink_tile_stats_exclude_error_sentinel(spark, tmp_path):
     tiled = spark.createDataFrame(
         rows, "pkey long, meshcode long, status int")
     out_dir = str(tmp_path / "sentinel_sink")
-    ms = sink.run_checkpointed(tiled, out_dir, n_groups=1, top_tiles=2)
+    ms = sink.run_checkpointed(tiled, out_dir, n_groups=1)
     (m,) = ms
     assert [c for c, _ in m["top_tiles"]] == [54400000, 54400004]
     assert m["n_tiles"] == 2                     # sentinel not a tile
@@ -717,22 +684,6 @@ def test_sink_null_meshcode_and_status_accounting(spark, tmp_path):
         for k, v in m["status_counts"].items():
             reread[k] = reread.get(k, 0) + v
     assert reread == merged
-
-
-def test_hot_codes_warns_when_stats_disabled(spark, tmp_path):
-    """An empty hot set from manifests WITHOUT tile statistics means
-    'unknown', not 'no skew' — it must warn instead of letting the
-    caller join unsalted on faith (round-5 review)."""
-    import warnings
-
-    df = spark.createDataFrame(
-        [(i, 54400000, 0) for i in range(20)],
-        "pkey long, meshcode long, status int")
-    out_dir = str(tmp_path / "nostats_sink")
-    sink.run_checkpointed(df, out_dir, n_groups=1, top_tiles=0)
-    with pytest.warns(UserWarning, match="NO tile statistics"):
-        assert sink.hot_codes_from_manifests(out_dir, spark,
-                                             threshold=5) == []
 
 
 def test_bucketed_join_rejects_duplicate_poly_ids(spark):

@@ -216,75 +216,6 @@ def test_parse_with_description_override():
     assert 46303582 in g.codes
 
 
-def test_grid_builder_fluent():
-    """TransformerBuilder parity (builder.rs:32-230): fluent
-    format/parameter/parameters, last-insert-wins, 2-tuple altitude
-    fill, and the unassigned-format panic."""
-    import pytest
-
-    from jgdtrans_rs_spark.grid import GridBuilder
-
-    g = (
-        GridBuilder()
-        .format("SemiDynaEXE")
-        .parameter(54401005, (-0.00622, 0.01516, 0.0946))
-        .parameters([
-            (54401055, (-0.0062, 0.01529, 0.08972)),
-            (54401100, (-0.00663, 0.01492, 0.10374)),
-            (54401150, (-0.00664, 0.01506, 0.10087)),
-        ])
-        .build()
-    )
-    ref = MeshGrid.from_dict({
-        54401005: (-0.00622, 0.01516, 0.0946),
-        54401055: (-0.0062, 0.01529, 0.08972),
-        54401100: (-0.00663, 0.01492, 0.10374),
-        54401150: (-0.00664, 0.01506, 0.10087),
-    }, "SemiDynaEXE")
-    assert (g.codes == ref.codes).all()
-    assert (g.dlat_sec == ref.dlat_sec).all() and g.mesh_unit == ref.mesh_unit
-
-    # last insert wins (HashMap semantics); 2-tuple fills altitude 0.0
-    g2 = (
-        GridBuilder().format("TKY2JGD")
-        .parameter(46303582, (1.0, 2.0, 3.0))
-        .parameter(46303582, (11.49105, -9.88759))
-        .build()
-    )
-    assert g2.dlat_sec[0] == 11.49105 and g2.dalt_m[0] == 0.0
-
-    with pytest.raises(ValueError, match="mesh_unit is not assigned"):
-        GridBuilder().parameter(54401005, (0.0, 0.0, 0.0)).build()
-    with pytest.raises(ValueError, match="unknown format"):
-        GridBuilder().format("NotAFormat")
-
-
-def test_grid_builder_engine(spark):
-    from jgdtrans_rs_spark.grid import GridBuilder
-
-    eng = (
-        GridBuilder().format("SemiDynaEXE")
-        .parameters(SEMIDYNA)
-        .build_engine(spark)
-    )
-    df = spark.createDataFrame(
-        [(1, 36.103774791666666, 140.087855041666666, 2.34)],
-        "pkey long, lat double, lon double, alt double")
-    r = eng.forward(df).collect()[0]
-    assert r["status"] == 0
-    # bit-identical to the kernel path (itself pinned to trans.rs
-    # doctest constants in test_kernel.py)
-    import numpy as np
-
-    from jgdtrans_rs_spark import kernel
-
-    want = kernel.forward(np.array([36.103774791666666]),
-                          np.array([140.087855041666666]),
-                          np.array([2.34]),
-                          eng.grid)[0][0]
-    assert r["out_lat"] == want
-
-
 def test_par_numeric_parsing_rust_strictness():
     """Python's int()/float() are looser than Rust's u32/f64 parse:
     underscore separators, Unicode digits, and negative meshcodes must
@@ -310,15 +241,6 @@ def test_par_numeric_parsing_rust_strictness():
     with pytest.raises(ParseParError) as e:
         parse_par(line(lat="    1_0.50"), "TKY2JGD")
     assert e.value.kind == "ParseFloat"
-
-
-def test_grid_json_roundtrip(semidyna_grid):
-    s = semidyna_grid.to_json()
-    g2 = MeshGrid.from_json(s)
-    assert (g2.codes == semidyna_grid.codes).all()
-    assert (g2.dlat_sec == semidyna_grid.dlat_sec).all()
-    assert g2.format == semidyna_grid.format
-    assert g2.mesh_unit == semidyna_grid.mesh_unit
 
 
 def _searchsorted_lookup(g, codes):

@@ -491,17 +491,29 @@ def test_oracle_sql_survives_non_finite_rows(spark, duck):
     """One NaN/Inf coordinate must not abort a whole oracle statement:
     DuckDB hard-errors on CAST(NaN AS BIGINT), so the digit math runs
     over finite-guarded twins while validity still tests the raw
-    values — both engines mark the lane invalid and keep running."""
+    values — both engines mark the lane invalid and keep running.
+    Quadkeys of every row, finite values past the int64 range
+    included, equal mesh.quadkey's."""
+    import numpy as np
+
+    from jgdtrans_rs_spark import mesh
     from jgdtrans_rs_spark.plans import oracle as osql
 
-    src = ("(SELECT 1 AS pkey, CAST('nan' AS DOUBLE) AS lat, 140.0e0 AS lon, 0.0e0 AS alt "
-           "UNION ALL SELECT 2, 36.09e0, CAST('inf' AS DOUBLE), 0.0e0 "
-           "UNION ALL SELECT 3, 36.09e0, 140.08e0, 0.0e0) _nf")
+    rows = [(1, "nan", "140.0"), (2, "36.09", "inf"), (3, "36.09", "140.08"),
+            (4, "1e300", "140.1"), (5, "-1e300", "140.1"), (6, "1e17", "140.1"),
+            (7, "36.09", "1e300")]
+    src = "(" + " UNION ALL ".join(
+        f"SELECT {k} AS pkey, CAST('{la}' AS DOUBLE) AS lat, "
+        f"CAST('{lo}' AS DOUBLE) AS lon, 0.0e0 AS alt" for k, la, lo in rows) + ") _nf"
     sql = osql.tile_sql(src, 5)
-    a = {r.pkey: r.meshcode for r in spark.sql(sql).collect()}
-    b = {r[0]: r[1] for r in duck.sql(sql).fetchall()}
+    a = {r.pkey: (r.meshcode, r.quadkey) for r in spark.sql(sql).collect()}
+    b = {r[0]: (r[1], r[2]) for r in duck.sql(sql).fetchall()}
     assert a == b
-    assert a[1] == -1 and a[2] == -1 and a[3] != -1
+    assert a[1][0] == -1 and a[2][0] == -1 and a[3][0] != -1
+    assert all(a[k][0] == -1 for k in (4, 5, 6, 7))
+    qk = mesh.quadkey(np.array([float(la) for _, la, _ in rows]),
+                      np.array([float(lo) for _, _, lo in rows]))
+    assert [a[k][1] for k, _, _ in rows] == qk.tolist()
 
 
 def test_norm_exprs_match_numpy_both_engines(spark, duck):

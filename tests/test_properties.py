@@ -119,7 +119,8 @@ def test_knn_window_matches_brute_force(lat, lon, unit, k):
     anisotropy counterexamples the 4-corner candidate set misses."""
     from jgdtrans_rs_spark.operators import spatial
 
-    got = spatial.knn_codes_np(np.array([lat]), np.array([lon]), unit, k)[0]
+    top, keep = spatial.knn_topk_np(np.array([lat]), np.array([lon]), unit, k)
+    got = top[keep]
     want = _knn_brute(lat, lon, unit, k)
     assert list(got) == want, (lat, lon, unit, k)
 
@@ -173,7 +174,8 @@ def test_knn_anisotropy_counterexample():
     w = (1.0 / 80.0) * unit
     lat = mesh.digits_to_lat(lat_d)[0] + 0.1 * h
     lon = mesh.digits_to_lon(lon_d)[0] + 0.9 * w
-    got = spatial.knn_codes_np(np.array([lat]), np.array([lon]), unit, 3)[0]
+    top, keep = spatial.knn_topk_np(np.array([lat]), np.array([lon]), unit, 3)
+    got = top[keep]
     assert list(got) == _knn_brute(lat, lon, unit, 3)
     south_of_se = mesh.digits_to_meshcode(
         mesh.next_south(lat_d, unit), mesh.next_east(lon_d, unit))[0]

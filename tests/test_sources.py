@@ -1,4 +1,4 @@
-"""Source-layer tests: par files on disk (load_par, Engine.from_par),
+"""Source-layer tests: par files on disk (load_par),
 table reader, sink, geotag extraction, binary payload metadata."""
 
 from pyspark.sql import functions as F
@@ -19,9 +19,10 @@ PAR_TEXT = (
 
 
 def test_engine_from_par(spark, tmp_path):
+    """``Transformer::from_str`` on a file: ``load_par`` + ``Engine``."""
     p = tmp_path / "semidyna.par"
     p.write_text(PAR_TEXT)
-    eng = Engine.from_par(spark, str(p), "SemiDynaEXE")
+    eng = Engine(spark, load_par(str(p), "SemiDynaEXE"))
     df = spark.createDataFrame(
         [(1, 36.10377479, 140.087855041, 2.34)], "pkey long, lat double, lon double, alt double"
     )

@@ -37,12 +37,18 @@ def _masked(df, cols):
     ("backward_compat", ("out_lat", "out_lon", "out_alt")),
     ("backward", ("out_lat", "out_lon", "out_alt")),
 ])
-def test_sql_engine_bit_identical_to_kernel(engines, pts, op, cols):
+def test_sql_engine_bit_identical_to_kernel(spark, engines, pts, op, cols):
+    """Also over a NULL latitude and a NULL longitude: the kernel reads
+    NULL as NaN (OutOfBounds, -1, -1), and the SQL verdict must too."""
     eng, sql_eng = engines
-    a = _masked(getattr(eng, op)(pts, "lat", "lon", "alt")
+    nulls = spark.createDataFrame(
+        [(-1, None, 140.1, 0.0), (-2, 36.1, None, 0.0)], pts.schema)
+    src = pts.unionByName(nulls)
+    a = _masked(getattr(eng, op)(src, "lat", "lon", "alt")
                 .select("pkey", *cols, "status", "err_meshcode", "err_corner"), cols)
-    b = _masked(getattr(sql_eng, op)(pts), cols)
+    b = _masked(getattr(sql_eng, op)(src), cols)
     assert len(a) == len(b) and len(a) > 0
+    assert (a.loc[a["pkey"] < 0, "status"] == 1).all()
     for c in ["pkey", *cols, "status", "err_meshcode", "err_corner"]:
         x = a[c].to_numpy()
         y = b[c].to_numpy()

@@ -376,6 +376,8 @@ def test_warc_crawl_near_dup_detection(spark, tmp_path):
     import random
 
     from jgdtrans_rs_spark.operators import dedup as dedup_ops
+    from jgdtrans_rs_spark.plans import webops
+    from jgdtrans_rs_spark.plans.textsql import SPARK
 
     rng = random.Random(7)
     texts = {}
@@ -409,8 +411,8 @@ def test_warc_crawl_near_dup_detection(spark, tmp_path):
         # the builders augment the corpus with their own +1000000 /
         # +2000000 fixture copies; assert over the raw crawl ids only
         ex = {r.doc_id: (r.canonical_id, r.group_size)
-              for r in dedup_ops.exact_duplicates(
-                  spark, docs="_warc_dedup_src").collect()
+              for r in spark.sql(webops.dedup_exact_sql(
+                  SPARK, docs="_warc_dedup_src")).collect()
               if r.doc_id < 1_000_000}
         assert ex[1][0] == 0 and ex[1][1] >= 2  # re-crawl -> doc 0
         assert all(ex[i][0] == i for i in range(2, 10))
