@@ -247,16 +247,16 @@ def _q_knn(spark, sf_dir):
 def _q_pip_spatial(spark, sf_dir):
     """BOTH point-in-polygon join strategies under one oracle row
     (round-4 consolidation — they shared an identical oracle): the
-    broadcast bit-mask path and the meshcode-bucketed salted-join
-    path, tagged by a ``method`` column; each must reproduce the
-    crossing-number oracle exactly."""
+    broadcast bit-mask path and the meshcode-bucketed path (candidates
+    broadcast, refined in codegen), tagged by a ``method`` column
+    whose ``"salted"`` value is kept as hashed data; each must
+    reproduce the crossing-number oracle exactly."""
     pts = _points(spark, sf_dir)
     b = spatial.point_in_polygon(pts, POLYGONS).withColumn(
         "method", F.lit("broadcast"))
     tiled = _engine(spark).assign_tiles(pts)
-    s = spatial.bucketed_spatial_join(
-        tiled, POLYGONS, _UNIT, hot_threshold=1000, num_salts=8
-    ).withColumn("method", F.lit("salted"))
+    s = spatial.bucketed_spatial_join(tiled, POLYGONS, _UNIT).withColumn(
+        "method", F.lit("salted"))
     return b.unionByName(s)
 
 

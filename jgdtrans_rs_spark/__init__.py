@@ -5,9 +5,9 @@ A from-scratch Spark re-expression of the semantics of
 JGD mesh tiling) extended into a web-scale spatial engine: broadcast
 Arrow mesh grids, vectorized pandas/Arrow UDF transform kernels,
 meshcode/quadkey tile assignment, point-in-polygon + bucketed spatial
-joins with explicit skew salting, kNN over mesh nodes, and the
-training-data pipeline operators (dedup, similarity search, text
-analysis) a 100 TB corpus needs.
+joins (candidates broadcast, refined in codegen), kNN over mesh nodes,
+and the training-data pipeline operators (dedup, similarity search,
+text analysis) a 100 TB corpus needs.
 
 Layout:
     mesh.py      vectorized JGD mesh kernels (numpy)

@@ -41,6 +41,11 @@ MAX_ERROR = 5e-14         # transformer.rs:318
 ITERATION = 4             # trans.rs:588
 DELTA = 1.0 / 300.0       # trans.rs:492
 
+# np.errstate of the public kernel entries: ±inf and huge-finite lanes
+# overflow or go NaN in the arithmetic and then fail with a status, so
+# computing them must not warn
+_QUIET = {"invalid": "ignore", "over": "ignore"}
+
 
 def bilinear(sw, se, nw, ne, lat, lng):
     """``bilinear_interpol`` (trans.rs:10-19) with the exact non-fma
@@ -261,7 +266,8 @@ def forward_corr(lat, lon, grid: MeshGrid, strict_bounds: bool = True) -> CorrRe
     the one reachable divergence; see mesh.point_bounds_mask and the
     mesh.py header for the full boundary map.
     """
-    return _forward_corr_cell(lat, lon, grid, strict_bounds=strict_bounds)[0]
+    with np.errstate(**_QUIET):
+        return _forward_corr_cell(lat, lon, grid, strict_bounds=strict_bounds)[0]
 
 
 def _add_normalized(lat, lon, dlat, dlon):
@@ -284,28 +290,29 @@ def forward(lat, lon, alt, grid: MeshGrid, strict_bounds: bool = True):
 def backward_compat_corr(lat, lon, grid: MeshGrid, strict_bounds: bool = True) -> CorrResult:
     """``Transformer::backward_compat_corr`` (trans.rs:491-512): the
     GIAJ-web-compatible two-step fixed point (non-iterative)."""
-    lat = np.ascontiguousarray(lat, dtype=np.float64)
-    lon = np.ascontiguousarray(lon, dtype=np.float64)
+    with np.errstate(**_QUIET):
+        lat = np.ascontiguousarray(lat, dtype=np.float64)
+        lon = np.ascontiguousarray(lon, dtype=np.float64)
 
-    t_lat, t_lon = _add_normalized(lat, lon, -DELTA, DELTA)
-    c1, cell1 = _forward_corr_cell(t_lat, t_lon, grid, strict_bounds=strict_bounds)
+        t_lat, t_lon = _add_normalized(lat, lon, -DELTA, DELTA)
+        c1, cell1 = _forward_corr_cell(t_lat, t_lon, grid, strict_bounds=strict_bounds)
 
-    # step 2 sits ~DELTA away from step 1 (corrections are ~1e-5 deg),
-    # so most lanes keep their cell and skip the probe
-    c2, _ = _forward_corr_cell(*_add_normalized(lat, lon, -c1.dlat, -c1.dlon),
-                               grid, carry=cell1, strict_bounds=strict_bounds)
+        # step 2 sits ~DELTA away from step 1 (corrections are ~1e-5 deg),
+        # so most lanes keep their cell and skip the probe
+        c2, _ = _forward_corr_cell(*_add_normalized(lat, lon, -c1.dlat, -c1.dlon),
+                                   grid, carry=cell1, strict_bounds=strict_bounds)
 
-    # first failure wins (reference short-circuits on c1's error)
-    status = np.where(c1.status != STATUS_OK, c1.status, c2.status).astype(np.int8)
-    err_code = np.where(c1.status != STATUS_OK, c1.err_meshcode, c2.err_meshcode)
-    err_corner = np.where(c1.status != STATUS_OK, c1.err_corner, c2.err_corner).astype(np.int8)
+        # first failure wins (reference short-circuits on c1's error)
+        status = np.where(c1.status != STATUS_OK, c1.status, c2.status).astype(np.int8)
+        err_code = np.where(c1.status != STATUS_OK, c1.err_meshcode, c2.err_meshcode)
+        err_corner = np.where(c1.status != STATUS_OK, c1.err_corner, c2.err_corner).astype(np.int8)
 
-    dlat, dlon, dalt = -c2.dlat, -c2.dlon, -c2.dalt
-    bad = status != STATUS_OK
-    dlat[bad] = np.nan
-    dlon[bad] = np.nan
-    dalt[bad] = np.nan
-    return CorrResult(dlat, dlon, dalt, status, err_code, err_corner)
+        dlat, dlon, dalt = -c2.dlat, -c2.dlon, -c2.dalt
+        bad = status != STATUS_OK
+        dlat[bad] = np.nan
+        dlon[bad] = np.nan
+        dalt[bad] = np.nan
+        return CorrResult(dlat, dlon, dalt, status, err_code, err_corner)
 
 
 def backward_compat(lat, lon, alt, grid: MeshGrid, strict_bounds: bool = True):
@@ -327,88 +334,89 @@ def backward_corr(lat, lon, grid: MeshGrid, strict_bounds: bool = True) -> CorrR
     iterate every round (it can change between iterations), re-probing
     only the lanes whose floor key moved.
     """
-    q_lat = np.ascontiguousarray(lat, dtype=np.float64)
-    q_lon = np.ascontiguousarray(lon, dtype=np.float64)
-    n = q_lat.shape[0]
+    # a singular Jacobian divides by zero on lanes that then fail
+    with np.errstate(divide="ignore", **_QUIET):
+        q_lat = np.ascontiguousarray(lat, dtype=np.float64)
+        q_lon = np.ascontiguousarray(lon, dtype=np.float64)
+        n = q_lat.shape[0]
 
-    yn = q_lat.copy()
-    xn = q_lon.copy()
+        yn = q_lat.copy()
+        xn = q_lon.copy()
 
-    out_dlat = np.full(n, np.nan)
-    out_dlon = np.full(n, np.nan)
-    out_dalt = np.full(n, np.nan)
-    status = np.full(n, STATUS_CORRECTION_NOT_FOUND, dtype=np.int8)  # default: CNF (trans.rs:671)
-    err_code = np.full(n, -1, dtype=np.int64)
-    err_corner = np.full(n, CORNER_NONE, dtype=np.int8)
-    active = np.ones(n, dtype=bool)
+        out_dlat = np.full(n, np.nan)
+        out_dlon = np.full(n, np.nan)
+        out_dalt = np.full(n, np.nan)
+        status = np.full(n, STATUS_CORRECTION_NOT_FOUND, dtype=np.int8)  # default: CNF (trans.rs:671)
+        err_code = np.full(n, -1, dtype=np.int64)
+        err_corner = np.full(n, CORNER_NONE, dtype=np.int8)
+        active = np.ones(n, dtype=bool)
 
-    def fail(cell, mask):
-        idx = np.flatnonzero(mask)
-        if idx.size:
-            status[idx], err_code[idx], err_corner[idx] = _cell_errors(cell, idx, grid)
-            active[idx] = False
+        def fail(cell, mask):
+            idx = np.flatnonzero(mask)
+            if idx.size:
+                status[idx], err_code[idx], err_corner[idx] = _cell_errors(cell, idx, grid)
+                active[idx] = False
 
-    # Each iteration resolves once, at the verify iterate: the next
-    # iteration's prepare sits at the same point, so it re-bounds that
-    # resolve and reuses its corrections and residuals (same cell, same
-    # expressions, same floats).  dalt is interpolated on converging
-    # lanes alone.
-    bounds = _bounds_mode(strict_bounds)
-    cell = _resolve_cell(yn, xn, grid, bounds=bounds)
-    fx = q_lon - (xn + _corr(cell, 1) / SCALE)
-    fy = q_lat - (yn + _corr(cell, 0) / SCALE)
-    for _ in range(ITERATION):
-        if not active.any():
-            break
-        fail(cell, active & ~cell.ok)
+        # Each iteration resolves once, at the verify iterate: the next
+        # iteration's prepare sits at the same point, so it re-bounds that
+        # resolve and reuses its corrections and residuals (same cell, same
+        # expressions, same floats).  dalt is interpolated on converging
+        # lanes alone.
+        bounds = _bounds_mode(strict_bounds)
+        cell = _resolve_cell(yn, xn, grid, bounds=bounds)
+        fx = q_lon - (xn + _corr(cell, 1) / SCALE)
+        fy = q_lat - (yn + _corr(cell, 0) / SCALE)
+        for _ in range(ITERATION):
+            if not active.any():
+                break
+            fail(cell, active & ~cell.ok)
 
-        (sw0, se0, nw0, ne0), (sw1, se1, nw1, ne1) = cell.corners[:2]
+            (sw0, se0, nw0, ne0), (sw1, se1, nw1, ne1) = cell.corners[:2]
 
-        # Jacobian in terms of the absolute iterate (trans.rs:624-648);
-        # fma(a, b, c) == a*b + c on the non-fma path.
-        fx_x = -1.0 - ((se1 - sw1) * (1.0 - yn) + (ne1 - nw1) * yn) / SCALE
-        fx_y = -((nw1 - sw1) * (1.0 - xn) + (ne1 - se1) * xn) / SCALE
-        fy_x = -((se0 - sw0) * (1.0 - yn) + (ne0 - nw0) * yn) / SCALE
-        fy_y = -1.0 - ((nw0 - sw0) * (1.0 - xn) + (ne0 - se0) * xn) / SCALE
+            # Jacobian in terms of the absolute iterate (trans.rs:624-648);
+            # fma(a, b, c) == a*b + c on the non-fma path.
+            fx_x = -1.0 - ((se1 - sw1) * (1.0 - yn) + (ne1 - nw1) * yn) / SCALE
+            fx_y = -((nw1 - sw1) * (1.0 - xn) + (ne1 - se1) * xn) / SCALE
+            fy_x = -((se0 - sw0) * (1.0 - yn) + (ne0 - nw0) * yn) / SCALE
+            fy_y = -1.0 - ((nw0 - sw0) * (1.0 - xn) + (ne0 - se0) * xn) / SCALE
 
-        det = fx_x * fy_y + (-fx_y) * fy_x  # trans.rs:651
+            det = fx_x * fy_y + (-fx_y) * fy_x  # trans.rs:651
 
-        with np.errstate(invalid="ignore", divide="ignore"):
             new_xn = xn - (fy_y * fx - fx_y * fy) / det
             new_yn = yn - (fx_x * fy - fy_x * fx) / det
-        xn = np.where(active, new_xn, xn)
-        yn = np.where(active, new_yn, yn)
+            xn = np.where(active, new_xn, xn)
+            yn = np.where(active, new_yn, yn)
 
-        # verification step: forward_corr_UNCHECKED at the updated
-        # iterate (trans.rs:657-668) — reference-exact as of round 3
-        # (closes the r01/r02 documented divergence): the unchecked
-        # MeshCode path has no domain check, so an iterate that
-        # stepped outside the domain fails here as ParameterNotFound
-        # with the digit-wrapped meshcode (Params::new_unchecked
-        # probe), never OUT_OF_BOUNDS.  Reachable only when Newton
-        # diverges — no fixture value changes.
-        # The Newton step moved each lane by ~the residual, so the cell
-        # rarely changes: only lanes whose floor key moved re-probe.
-        cell = _resolve_cell(yn, xn, grid, carry=cell, bounds=mesh.BOUNDS_UNCHECKED)
-        fail(cell, active & ~cell.ok)
+            # verification step: forward_corr_UNCHECKED at the updated
+            # iterate (trans.rs:657-668) — reference-exact as of round 3
+            # (closes the r01/r02 documented divergence): the unchecked
+            # MeshCode path has no domain check, so an iterate that
+            # stepped outside the domain fails here as ParameterNotFound
+            # with the digit-wrapped meshcode (Params::new_unchecked
+            # probe), never OUT_OF_BOUNDS.  Reachable only when Newton
+            # diverges — no fixture value changes.
+            # The Newton step moved each lane by ~the residual, so the cell
+            # rarely changes: only lanes whose floor key moved re-probe.
+            cell = _resolve_cell(yn, xn, grid, carry=cell, bounds=mesh.BOUNDS_UNCHECKED)
+            fail(cell, active & ~cell.ok)
 
-        vlat = _corr(cell, 0) / SCALE
-        vlon = _corr(cell, 1) / SCALE
-        fx = q_lon - (xn + vlon)
-        fy = q_lat - (yn + vlat)
+            vlat = _corr(cell, 0) / SCALE
+            vlon = _corr(cell, 1) / SCALE
+            fx = q_lon - (xn + vlon)
+            fy = q_lat - (yn + vlat)
 
-        conv = np.flatnonzero(active & (np.abs(fy) < MAX_ERROR) & (np.abs(fx) < MAX_ERROR))
-        if conv.size:
-            out_dlat[conv] = -vlat[conv]
-            out_dlon[conv] = -vlon[conv]
-            out_dalt[conv] = -_corr(cell, 2, conv)
-            status[conv] = STATUS_OK
-            active[conv] = False
-        # the next iteration's PREPARE is checked (trans.rs:600-602):
-        # same resolve, re-bounded
-        cell = _rebound_cell(cell, grid.mesh_unit, bounds)
+            conv = np.flatnonzero(active & (np.abs(fy) < MAX_ERROR) & (np.abs(fx) < MAX_ERROR))
+            if conv.size:
+                out_dlat[conv] = -vlat[conv]
+                out_dlon[conv] = -vlon[conv]
+                out_dalt[conv] = -_corr(cell, 2, conv)
+                status[conv] = STATUS_OK
+                active[conv] = False
+            # the next iteration's PREPARE is checked (trans.rs:600-602):
+            # same resolve, re-bounded
+            cell = _rebound_cell(cell, grid.mesh_unit, bounds)
 
-    return CorrResult(out_dlat, out_dlon, out_dalt, status, err_code, err_corner)
+        return CorrResult(out_dlat, out_dlon, out_dalt, status, err_code, err_corner)
 
 
 def backward(lat, lon, alt, grid: MeshGrid, strict_bounds: bool = True):

@@ -286,7 +286,8 @@ def normalize_latitude(t: np.ndarray) -> np.ndarray:
     need = ~(np.isnan(t) | ((t >= -90.0) & (t <= 90.0)))
     if not need.any():
         return out
-    s = np.where(need, np.fmod(t, 360.0), 0.0)
+    with np.errstate(invalid="ignore"):  # fmod(±inf) is NaN
+        s = np.where(need, np.fmod(t, 360.0), 0.0)
     case1 = need & ~((s >= -270.0) & (s <= 270.0))
     r = np.where(case1, s - np.copysign(360.0, s), s)
     case2 = need & ~case1 & ~((s >= -90.0) & (s <= 90.0))
@@ -301,7 +302,8 @@ def normalize_longitude(t: np.ndarray) -> np.ndarray:
     need = ~(np.isnan(t) | ((t >= -180.0) & (t <= 180.0)))
     if not need.any():
         return out
-    s = np.where(need, np.fmod(t, 360.0), 0.0)
+    with np.errstate(invalid="ignore"):  # fmod(±inf) is NaN
+        s = np.where(need, np.fmod(t, 360.0), 0.0)
     case1 = need & ~((s >= -180.0) & (s < 180.0))
     r = np.where(case1, s - np.copysign(360.0, s), s)
     return np.where(need, r, out)

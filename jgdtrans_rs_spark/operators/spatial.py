@@ -1,4 +1,4 @@
-"""Spatial operators: point-in-polygon, bucketed/salted spatial join,
+"""Spatial operators: point-in-polygon, meshcode-bucketed spatial join,
 kNN over mesh nodes.
 
 The reference has no joins beyond its 4-corner HashMap probe
@@ -13,13 +13,12 @@ Scale design:
   one bit-test expansion (``poly_mask_rows``); from scratch, no shapely.
   ``point_in_polygon`` is the broadcast path: the mask kernel in a
   scalar pandas UDF, one narrow stage, no shuffle.
-* ``bucketed_spatial_join`` — shuffle path for large polygon sets:
-  polygons are exploded onto the meshcodes their bbox covers, points
-  shuffle on meshcode; hot cells (dense Tokyo/Osaka buckets) are
-  salted explicitly: hot points get a deterministic salt from their
-  key, the polygon side is replicated per salt — bounded reducer fan-in
-  regardless of skew.  Output is a set of (key, poly_id) pairs,
-  identical across parallelism levels.
+* ``bucketed_spatial_join`` — the path for large polygon sets:
+  polygons are exploded onto the meshcodes their bbox covers, the
+  candidates are broadcast and joined on the tile column, and the
+  exact containment refine runs in codegen.  No shuffle, so a dense
+  cell has no reducer to overload.  Output is a set of (key, poly_id)
+  pairs, identical across parallelism levels.
 * ``knn_mesh_nodes`` — for a point inside a rectangular lattice cell
   the 4 nearest nodes are exactly the cell corners, so the candidate
   set is local: compute 4 distances per point in the batch kernel and
@@ -232,30 +231,19 @@ def bucketed_spatial_join(points: DataFrame, polygons: Sequence[Polygon], unit: 
                           mesh_col: str = "meshcode",
                           hot_threshold: int = 50_000, num_salts: int = 16,
                           hot_codes: Sequence[int] | None = None) -> DataFrame:
-    """Meshcode-bucketed spatial join with explicit skew salting.
+    """Meshcode-bucketed spatial join: candidates broadcast, refined in
+    codegen.
 
     points must carry a ``mesh_col`` tile column (engine.assign_tiles /
-    transform_and_tile).  Hot buckets get ``salt = pmod(hash(key), n)``
-    and the polygon candidate side is replicated across all salts, so
-    no single reducer receives an entire dense city cell.  Output rows
-    are (key, poly_id), independent of parallelism.
+    transform_and_tile).  The polygon cover ships as one broadcast
+    LocalRelation (localrel.py) joined on ``mesh_col`` alone: a
+    BroadcastHashJoin reads ``points`` once and shuffles nothing, so a
+    dense cell has no reducer to overload.  Output rows are
+    (key, poly_id), independent of parallelism.
 
-    Pass ``hot_codes`` (known dense cells) to skip the detection
-    aggregation; otherwise it is computed with one extra pass over
-    ``points``, so persist the input if its lineage is expensive.  The
-    standing feeder at scale is the sink's write-time statistics:
-    ``sink.hot_codes_from_manifests(out_dir)`` returns the dense codes
-    recorded by ``run_checkpointed`` (VERDICT r04 #3) — with it the
-    salted join runs with ZERO extra passes over ``points`` (pinned by
-    test_salted_join_zero_extra_passes_with_stats).
+    ``hot_threshold``, ``num_salts`` and ``hot_codes`` are accepted and
+    ignored; they remain for callers written against the salted join.
     """
-    spark = points.sparkSession
-    cover = polygon_mesh_cover(polygons, unit)
-    if not cover:
-        # schema derived from the points frame so the empty result
-        # unions cleanly with the non-empty path whatever the key type
-        return points.select(key).limit(0).withColumn(
-            "poly_id", F.lit(None).cast("string"))
     # the candidate side carries BOTH the integer dispatch index (the
     # containment refine dispatches on it — int compare in codegen,
     # and the pandas fallback ships only (lat, lon, poly_idx) through
@@ -269,34 +257,18 @@ def bucketed_spatial_join(points: DataFrame, polygons: Sequence[Polygon], unit: 
         # for identical input; fail loudly instead
         raise ValueError("bucketed_spatial_join: duplicate poly_id in "
                          "polygons — ids must be unique")
-    if hot_codes is None:
-        hot_codes = [
-            r[mesh_col]
-            for r in points.groupBy(mesh_col).count()
-            .filter(F.col("count") > hot_threshold).collect()
-        ]
-    hot_codes = [int(c) for c in hot_codes]
-    is_hot = F.col(mesh_col).isin(hot_codes) if hot_codes else F.lit(False)
-
-    pts = points.withColumn(
-        "_salt",
-        F.when(is_hot, F.pmod(F.hash(F.col(key)), F.lit(num_salts)))
-        .otherwise(F.lit(0)),
+    cover = polygon_mesh_cover(polygons, unit)
+    if not cover:
+        # schema derived from the points frame so the empty result
+        # unions cleanly with the non-empty path whatever the key type
+        return points.select(key).limit(0).withColumn(
+            "poly_id", F.lit(None).cast("string"))
+    cand = local_rows_df(
+        points.sparkSession,
+        [(c, pid_to_idx[p], p) for c, p in cover],
+        schema=f"{mesh_col} long, poly_idx int, poly_id string",
     )
-    # the salt replication of the candidate side happens DRIVER-side:
-    # the cover is a driver list anyway, so hot rows explode across
-    # salts in Python and the candidate relation ships as ONE
-    # LocalRelation (localrel.py), whose broadcast build runs no job
-    hot_set = set(hot_codes)
-    cand_salted = local_rows_df(
-        spark,
-        [(c, pid_to_idx[p], p, s)
-         for c, p in cover
-         for s in (range(num_salts) if c in hot_set else (0,))],
-        schema=f"{mesh_col} long, poly_idx int, poly_id string, _salt int",
-    )
-
-    joined = pts.join(F.broadcast(cand_salted), [mesh_col, "_salt"])
+    joined = points.join(F.broadcast(cand), mesh_col)
 
     # exact containment test on the surviving candidates.  The rings
     # are driver-side constants, so for normal-size polygon sets the

@@ -109,15 +109,15 @@ def completed_groups(out_dir: str, spark: SparkSession | None = None) -> set[int
 
 def hot_codes_from_manifests(out_dir: str, spark: SparkSession | None = None,
                              threshold: int = 50_000) -> list[int]:
-    """Dense tile codes recorded in the sink manifests — the
-    statistics feeder for ``spatial.bucketed_spatial_join(...,
-    hot_codes=)`` (VERDICT r04 #3): skew detection is paid ONCE at
-    write time (per-group top-tile counts over the freshly-written
-    columnar output), then every later salted join over that corpus
-    reads the hot set from the manifests with ZERO passes over the
+    """Dense tile codes recorded in the sink manifests: run
+    observability for where a corpus is hot.  The counts are paid ONCE
+    at write time (per-group top-tile counts over the freshly-written
+    columnar output) and read back here with ZERO passes over the
     data.  Codes whose recorded count exceeds ``threshold`` are
-    returned sorted; -1 (untiled/error rows) is never a join key and
-    is excluded.
+    returned sorted; -1 (untiled/error rows) is never a tile and is
+    excluded.  ``spatial.bucketed_spatial_join`` still accepts the
+    result as ``hot_codes`` and ignores it: its candidates are
+    broadcast, so a dense cell has no reducer to overload.
 
     The manifests record only the ``TOP_TILES`` most populous tiles per
     group, and that cap must not be silent: a group's hidden tiles all
@@ -126,9 +126,8 @@ def hot_codes_from_manifests(out_dir: str, spark: SparkSession | None = None,
     smallest recorded count is <= ``threshold``.  When a truncated
     group's recorded floor is still above the threshold,
     hotter-than-threshold tiles may be hidden — that exact condition
-    raises a warning naming the groups (run
-    ``spatial.bucketed_spatial_join(..., hot_codes=None)``, which
-    counts every tile in a full pass)."""
+    raises a warning naming the groups (count the tiles of the
+    written output directly for a complete set)."""
     hot: set[int] = set()
     suspect: list[int] = []
     for m in read_manifests(out_dir, spark):
@@ -149,9 +148,9 @@ def hot_codes_from_manifests(out_dir: str, spark: SparkSession | None = None,
             f"hot_codes_from_manifests({out_dir}): groups {sorted(suspect)} "
             f"were truncated at top_tiles ({TOP_TILES} per group) with every "
             f"recorded count above threshold={threshold}; "
-            f"hotter-than-threshold tiles may be missing — run "
-            f"spatial.bucketed_spatial_join(..., hot_codes=None) for a "
-            f"full pass", stacklevel=2)
+            f"hotter-than-threshold tiles may be missing — count the "
+            f"tiles of {out_dir} directly for a complete set",
+            stacklevel=2)
     return sorted(hot)
 
 
@@ -190,10 +189,9 @@ def run_checkpointed(df: DataFrame, out_dir: str, mesh_col: str = "meshcode",
     ``top_tiles`` — the ``TOP_TILES`` most populous (meshcode, n_rows)
     pairs — and its distinct-tile count ``n_tiles``, computed by the
     same aggregation over the WRITTEN parquet (map-side partials + a
-    bounded n_groups×TOP_TILES driver collect).  This is the skew
-    statistic ``hot_codes_from_manifests`` feeds to
-    ``spatial.bucketed_spatial_join``: detection paid once per write,
-    never re-aggregated at join time.
+    bounded n_groups×TOP_TILES driver collect).  This is the hot-tile
+    statistic ``hot_codes_from_manifests`` reads back: paid once per
+    write, never re-aggregated.
     """
     spark = df.sparkSession
     done = completed_groups(out_dir, spark)

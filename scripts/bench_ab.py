@@ -9,8 +9,9 @@ Usage:
 
 Unpacks <ref-commit> like ``--perfbench`` does (below; the directory
 is ``$TMPDIR/bench_ab``), then runs the FROZEN bench (``bench.py
---single``, fresh JVM per run) interleaved A,B,A,B,... so both trees
-sample the same host phases, and prints the per-query best-of deltas.
+--single``, fresh JVM per run) in pairs, alternating which side runs
+first, so both trees sample the same host phases, and prints the
+per-query best-of deltas.
 Use whenever a round's totals drift >15%: on this host a single-run
 comparison is noise (documented 3-4x minute-to-minute swings), while
 an interleaved best-of pair is the cheapest defensible statistic.
@@ -28,9 +29,14 @@ i (default 10 pairs) uses seed ``--seed + i`` on both sides, the
 reference first on odd seeds, one run at a time.  It prints, per
 metric, both medians, the reference's interquartile range and how many
 pairs the working tree won (direction from BENCHMARK.json), plus each
-side's failed operations; the closing JSON line adds both sides'
-quartiles and every run's result line.  A claimed gain needs 9 of 10
-pairs won and a median gap above the reference's IQR.
+side's failed operations.  Each end-to-end metric also gets a verdict
+against its BENCHMARK.json ``bound`` (a fraction of the reference
+median): "WORSE" when the working tree's median is worse by more than
+the bound, "unresolved" when the reference IQR is wider than the bound
+(unless every working-tree run beats every reference run), else "ok".
+The closing JSON line adds both sides' quartiles and every run's
+result line.  A claimed gain needs 9 of 10 pairs won and a median gap
+above the reference's IQR.
 """
 
 from __future__ import annotations
@@ -98,11 +104,27 @@ def _quartiles(xs: list[float]) -> list[float]:
     return statistics.quantiles(xs, n=4) if len(xs) > 1 else [xs[0]] * 3
 
 
+def _verdict(a: list[float], b: list[float], sign: float, bound: float) -> str:
+    """No-regression verdict of working-tree runs ``b`` against
+    reference runs ``a`` for one end-to-end metric (``sign`` +1 when
+    higher is better): a spread wider than the bound cannot tell
+    "within the bound" from "worse", unless the sides do not overlap."""
+    qa = _quartiles(a)
+    if min(sign * y for y in b) > max(sign * x for x in a):
+        return "ok"
+    if qa[2] - qa[0] > bound * abs(qa[1]):
+        return "unresolved"
+    if sign * (qa[1] - statistics.median(b)) > bound * abs(qa[1]):
+        return "WORSE"
+    return "ok"
+
+
 def summarize(ref_runs: list[dict], head_runs: list[dict]) -> dict:
     """Per metric: each side's quartiles, the reference's IQR and the
     working tree's pair wins (ties count for neither); plus failed
     operations per side."""
     better = _better()
+    bounds = {m["name"]: m["bound"] for m in _spec()["end_to_end"]}
     out = {"pairs": len(ref_runs),
            "failed": {"ref": [r["failed"] for r in ref_runs],
                       "head": [r["failed"] for r in head_runs]},
@@ -118,6 +140,8 @@ def summarize(ref_runs: list[dict], head_runs: list[dict]) -> dict:
             "ref_iqr": qa[2] - qa[0],
             "wins": sum(sign * (y - x) > 0 for x, y in zip(a, b)),
         }
+        if name in bounds:
+            out["metrics"][name]["verdict"] = _verdict(a, b, sign, bounds[name])
     return out
 
 
@@ -136,12 +160,13 @@ def perfbench_mode(ref: str, ref_dir: str, pairs: int, workload: str, first_seed
     s = summarize(ref_runs, head_runs)
     print(f"\n{workload}, {pairs} pairs, seeds {first_seed}-{first_seed + pairs - 1}, "
           f"failed ref {sum(s['failed']['ref'])} head {sum(s['failed']['head'])}")
-    print(f"{'metric':36} {ref[:10]:>12} {'HEAD':>12} {'delta':>8} {'ref IQR':>10} {'wins':>5}")
+    print(f"{'metric':36} {ref[:10]:>12} {'HEAD':>12} {'delta':>8} {'ref IQR':>10} {'wins':>5}"
+          f"  verdict")
     for name, m in s["metrics"].items():
         base, head = m["ref_quartiles"][1], m["head_quartiles"][1]
         delta = (head / base - 1.0) if base else 0.0
         print(f"{name:36} {base:12.4g} {head:12.4g} {delta:+7.1%} "
-              f"{m['ref_iqr']:10.3g} {m['wins']:>2}/{pairs}")
+              f"{m['ref_iqr']:10.3g} {m['wins']:>2}/{pairs}  {m.get('verdict', '')}")
     print(json.dumps({**s, "workload": workload, "ref": ref, "first_seed": first_seed,
                       "samples_ref": ref_runs, "samples_head": head_runs}))
 
@@ -174,10 +199,12 @@ def main():
     wt = checkout(ref, os.path.join(tempfile.gettempdir(), "bench_ab"))
     runs_a, runs_b = [], []
     for i in range(pairs):
-        print(f"pair {i + 1}/{pairs}: HEAD ...", flush=True)
-        runs_a.append(run_single(ROOT, only, sf_dir))
-        print(f"pair {i + 1}/{pairs}: {ref} ...", flush=True)
-        runs_b.append(run_single(wt, only, sf_dir))
+        order = [("HEAD", ROOT, runs_a), (ref, wt, runs_b)]
+        if i % 2:
+            order.reverse()
+        for side, cwd, runs in order:
+            print(f"pair {i + 1}/{pairs}: {side} ...", flush=True)
+            runs.append(run_single(cwd, only, sf_dir))
     best_a = {k: min(r[k] for r in runs_a) for k in runs_a[0]}
     best_b = {k: min(r[k] for r in runs_b) for k in runs_b[0]}
     print(f"\n{'query':24} {'HEAD':>8} {ref[:10]:>10} {'delta':>8}")

@@ -123,7 +123,7 @@ def test_salted_join_equals_broadcast(engine, points):
     ]
     a = spatial.point_in_polygon(points, polys).toPandas()
     tiled = engine.assign_tiles(points)
-    b = spatial.bucketed_spatial_join(tiled, polys, 5, hot_threshold=10, num_salts=4).toPandas()
+    b = spatial.bucketed_spatial_join(tiled, polys, 5).toPandas()
     sa = set(map(tuple, a[["pkey", "poly_id"]].itertuples(index=False)))
     sb = set(map(tuple, b[["pkey", "poly_id"]].itertuples(index=False)))
     assert sa == sb and len(sa) > 0
@@ -160,8 +160,7 @@ def test_salted_join_equals_broadcast_on_edge_rings(spark, ring, unit):
         "meshcode": mesh.digits_to_meshcode(lat_d, lon_d)}))
     polys = [("p", ring)]
     want = {tuple(r) for r in spatial.point_in_polygon(pts, polys).collect()}
-    got = {tuple(r) for r in spatial.bucketed_spatial_join(
-        pts, polys, unit, hot_threshold=100, num_salts=4).collect()}
+    got = {tuple(r) for r in spatial.bucketed_spatial_join(pts, polys, unit).collect()}
     assert got == want and len(want) > 1000
 
 
@@ -525,49 +524,35 @@ def test_tile_bounds_node_mode_reference_parity(spark, semidyna_grid):
 
 
 def test_salted_join_zero_extra_passes_with_stats(spark, engine, points):
-    """VERDICT r04 #3: with hot_codes supplied, bucketed_spatial_join
-    must consume its input exactly ONCE (the join itself) — the skew
-    detection aggregation must not run.  Without stats it is allowed
-    its one documented extra pass.  Counted with an accumulator inside
-    a pass-through pandas_udf on the tile column (detection groups by
-    exactly that column, so pruning cannot skip the probe)."""
+    """bucketed_spatial_join consumes its input exactly ONCE (the
+    broadcast join itself), with or without ``hot_codes``: no skew
+    detection aggregation runs.  Counted with an accumulator inside a
+    pass-through pandas_udf on the tile column (the join keys on that
+    column, so pruning cannot skip the probe)."""
     import pandas as pd
 
     polys = [("p0", [(36.0833, 140.0625), (36.0833, 140.125),
                      (36.125, 140.125), (36.125, 140.0625)])]
     tiled = engine.assign_tiles(points)
     n = tiled.count()
-    acc = spark.sparkContext.accumulator(0)
 
-    @F.pandas_udf("long")
-    def counted(x: pd.Series) -> pd.Series:
-        acc.add(len(x))
-        return x
+    def passes(hot_codes):
+        acc = spark.sparkContext.accumulator(0)
 
-    counted = counted.asNondeterministic()
-    probe = tiled.withColumn("meshcode", counted(F.col("meshcode")))
+        @F.pandas_udf("long")
+        def counted(x: pd.Series) -> pd.Series:
+            acc.add(len(x))
+            return x
 
-    # stats supplied -> exactly one pass
-    out = spatial.bucketed_spatial_join(
-        probe, polys, 5, hot_threshold=10, num_salts=4,
-        hot_codes=[54401005])
-    rows_with = out.count()
-    assert acc.value == n, f"{acc.value / n:.1f} passes with stats supplied"
+        probe = tiled.withColumn(
+            "meshcode", counted.asNondeterministic()(F.col("meshcode")))
+        rows = spatial.bucketed_spatial_join(
+            probe, polys, 5, hot_codes=hot_codes).count()
+        return acc.value / n, rows
 
-    # auto-detection -> exactly one extra pass (the documented cost)
-    acc2 = spark.sparkContext.accumulator(0)
-
-    @F.pandas_udf("long")
-    def counted2(x: pd.Series) -> pd.Series:
-        acc2.add(len(x))
-        return x
-
-    counted2 = counted2.asNondeterministic()
-    probe2 = tiled.withColumn("meshcode", counted2(F.col("meshcode")))
-    out2 = spatial.bucketed_spatial_join(
-        probe2, polys, 5, hot_threshold=10, num_salts=4)
-    rows_without = out2.count()
-    assert acc2.value == 2 * n, f"{acc2.value / n:.1f} passes on auto-detect"
+    (with_stats, rows_with), (without, rows_without) = passes([54401005]), passes(None)
+    assert with_stats == 1.0, f"{with_stats:.1f} passes with hot_codes"
+    assert without == 1.0, f"{without:.1f} passes without hot_codes"
     assert rows_with == rows_without > 0
 
 
@@ -593,8 +578,7 @@ def test_hot_codes_from_manifests_feeds_salted_join(spark, engine, points, tmp_p
     hot = sink.hot_codes_from_manifests(out_dir, spark, threshold=10)
     assert hot and -1 not in hot
     got = spatial.bucketed_spatial_join(
-        engine.assign_tiles(points), polys, 5, num_salts=4,
-        hot_codes=hot).toPandas()
+        engine.assign_tiles(points), polys, 5, hot_codes=hot).toPandas()
     want = spatial.point_in_polygon(points, polys).toPandas()
     assert (set(map(tuple, got[["pkey", "poly_id"]].itertuples(index=False)))
             == set(map(tuple, want[["pkey", "poly_id"]].itertuples(index=False))))
@@ -689,14 +673,16 @@ def test_sink_null_meshcode_and_status_accounting(spark, tmp_path):
 def test_bucketed_join_rejects_duplicate_poly_ids(spark):
     """pid_to_idx would silently collapse duplicate poly_ids onto one
     ring (last wins), diverging from point_in_polygon's per-entry
-    masks on identical input — must fail loudly (round-5 review)."""
+    masks on identical input — must fail loudly (round-5 review), also
+    when no polygon covers a mesh cell and the cover is empty."""
     pts = spark.createDataFrame([(1, 36.1, 140.09, 54401005)],
                                 "pkey long, lat double, lon double, "
                                 "meshcode long")
     ring = [(36.0, 140.0), (36.2, 140.0), (36.2, 140.2), (36.0, 140.2)]
-    with pytest.raises(ValueError, match="duplicate poly_id"):
-        spatial.bucketed_spatial_join(pts, [("A", ring), ("A", ring)],
-                                      unit=1)
+    south = [(-2.0, 140.0), (-1.0, 140.0), (-1.0, 140.2), (-2.0, 140.2)]
+    for r in (ring, south):
+        with pytest.raises(ValueError, match="duplicate poly_id"):
+            spatial.bucketed_spatial_join(pts, [("A", r), ("A", r)], unit=1)
 
 
 def test_raster_roundtrip(engine, points, semidyna_grid):

@@ -555,10 +555,28 @@ def test_one_probe_matches_four_probes(fn, strict_bounds):
     grids with edge nodes, a diverging grid and the crafted unchecked
     grid of test_newton_verify_unchecked_parity."""
     for name, grid, la, lo in _differential_cases():
+        got = getattr(kernel, fn)(la, lo, grid, strict_bounds=strict_bounds)
         with np.errstate(over="ignore", invalid="ignore"):  # inf and 1e300 inputs
-            got = getattr(kernel, fn)(la, lo, grid, strict_bounds=strict_bounds)
             want = _FOUR_PROBE[fn](la, lo, grid, strict_bounds=strict_bounds)
         _assert_same_corr(got, want, (fn, name))
+
+
+@pytest.mark.filterwarnings("error::RuntimeWarning")
+@pytest.mark.parametrize("fn", ["forward", "backward_compat", "backward"])
+def test_special_inputs_raise_no_runtime_warning(semi, fn):
+    """±inf, ±1e300, NaN, -0.0 and subnormal coordinates, against an
+    in-grid coordinate and against each other, go through the kernels
+    without a numpy RuntimeWarning: their lanes fail with a status,
+    the in-grid lane still transforms."""
+    ok_lat, ok_lon = 36.10377479, 140.087855041
+    la = np.concatenate([[ok_lat], _SPECIALS, np.full(_SPECIALS.size, ok_lat), _SPECIALS])
+    lo = np.concatenate([[ok_lon], np.full(_SPECIALS.size, ok_lon), _SPECIALS,
+                         _SPECIALS[::-1]])
+    for strict_bounds in (True, False):
+        out_lat, out_lon, out_alt, c = getattr(kernel, fn)(
+            la, lo, np.zeros(la.size), semi, strict_bounds=strict_bounds)
+        assert c.status[0] == kernel.STATUS_OK and np.isfinite(out_lat[0])
+        assert (c.status[1:] != kernel.STATUS_OK).all()
 
 
 def test_one_probe_unchecked_saturated_digits():

@@ -1,6 +1,6 @@
 """localrel.local_rows_df — the VALUES-backed LocalRelation builder
 behind the r06 zero-job broadcast-build optimization (grid view, poly
-name relations, salted candidate side).
+name relations, the bucketed join's candidate side).
 
 Pins (a) bit-exactness of the DOUBLE round trip including the values a
 decimal literal would corrupt (-0.0) or reject (NaN/inf/denormals),
@@ -10,6 +10,7 @@ decimal literal would corrupt (-0.0) or reject (NaN/inf/denormals),
 
 from __future__ import annotations
 
+import re
 import struct
 
 import pytest
@@ -55,7 +56,7 @@ def test_unsupported_type_raises(spark):
 def test_hot_call_sites_have_no_rdd_scan(spark, semidyna_grid):
     """The three per-action broadcast builds the optimization targets —
     SqlEngine's grid view joins, poly_mask_rows' name relation and
-    bucketed_spatial_join's salted candidate side — must all plan as
+    bucketed_spatial_join's candidate side — must all plan as
     LocalRelation builds (no ExistingRDD scan = no job per build)."""
     from pyspark.sql import functions as F
 
@@ -87,34 +88,12 @@ def test_hot_call_sites_have_no_rdd_scan(spark, semidyna_grid):
     q4b = spatial.bucketed_spatial_join(
         tiled, polys, 5, lat="out_lat", lon="out_lon",
         hot_codes=[54401005])
-    assert "ExistingRDD" not in q4b._jdf.queryExecution().executedPlan().toString()
-
-
-def test_salted_candidate_rows_match_replication_contract(spark, semidyna_grid):
-    """Driver-side salting must reproduce the documented relation: hot
-    cover rows replicated across ALL salts, non-hot rows at salt 0."""
-    from pyspark.sql import functions as F
-
-    from jgdtrans_rs_spark.operators.spatial import polygon_mesh_cover
-
-    polys = [("p1", [(36.0, 140.0), (36.0, 140.2), (36.2, 140.2), (36.2, 140.0)])]
-    cover = polygon_mesh_cover(polys, 5)
-    hot = {cover[0][0]}
-    num_salts = 4
-    expected = sorted(
-        (c, 0, p, s)
-        for c, p in cover
-        for s in (range(num_salts) if c in hot else (0,))
-    )
-    # rebuild exactly what bucketed_spatial_join builds
-    from jgdtrans_rs_spark.localrel import local_rows_df as lrd
-
-    cand = lrd(
-        spark,
-        [(c, 0, p, s)
-         for c, p in cover
-         for s in (range(num_salts) if c in hot else (0,))],
-        schema="meshcode long, poly_idx int, poly_id string, _salt int",
-    )
-    got = sorted(tuple(r) for r in cand.collect())
-    assert got == expected
+    assert q4b.collect()
+    plan = q4b._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan
+    # executed q4b: one broadcast hash join keyed on the tile column
+    # alone, no salt column, no shuffle exchange on the point side
+    assert re.search(r"BroadcastHashJoin \[meshcode#\d+L?\], \[meshcode#\d+L?\], Inner",
+                     plan), plan
+    assert "_salt" not in plan, plan
+    assert not re.search(r"(?<!Broadcast)Exchange", plan), plan
