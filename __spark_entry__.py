@@ -65,18 +65,23 @@ def _evict_stopped(cache: dict) -> None:
             del cache[k]
 
 
-def _engine(spark: SparkSession) -> Engine:
-    # keyed by applicationId: id(spark) can be reused by a NEW session
-    # after the old one stops, which would serve an Engine whose
-    # broadcast belongs to a destroyed SparkContext.  The contract also
-    # pins the session timezone here so every query computes in UTC
-    # regardless of execution order.
+def _cached(spark: SparkSession, cache: dict, build: Callable):
+    """One engine per live applicationId.  Keyed by applicationId, not
+    id(spark): id(spark) can be reused by a NEW session after the old
+    one stops, which would serve an engine whose broadcast belongs to a
+    destroyed SparkContext.  The contract also pins the session
+    timezone here so every query computes in UTC regardless of
+    execution order."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     key = spark.sparkContext.applicationId
-    if key not in _ENGINES:
-        _evict_stopped(_ENGINES)
-        _ENGINES[key] = Engine(spark, _GRID)
-    return _ENGINES[key]
+    if key not in cache:
+        _evict_stopped(cache)
+        cache[key] = build(spark, _GRID)
+    return cache[key]
+
+
+def _engine(spark: SparkSession) -> Engine:
+    return _cached(spark, _ENGINES, Engine)
 
 
 def _engine_ref(spark: SparkSession) -> Engine:
@@ -84,22 +89,14 @@ def _engine_ref(spark: SparkSession) -> Engine:
     (strict_bounds=False -> BOUNDS_INCLUSIVE kernels; see mesh.py
     header) — the boundary_error_kinds contract query runs it next to
     the strict default."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    key = spark.sparkContext.applicationId
-    if key not in _ENGINES_REF:
-        _evict_stopped(_ENGINES_REF)
-        _ENGINES_REF[key] = Engine(spark, _GRID, strict_bounds=False)
-    return _ENGINES_REF[key]
+    return _cached(spark, _ENGINES_REF,
+                   lambda s, g: Engine(s, g, strict_bounds=False))
 
 
 def _sql_engine(spark: SparkSession):
     from jgdtrans_rs_spark.plans.spark_sql import SqlEngine
 
-    key = spark.sparkContext.applicationId
-    if key not in _SQL_ENGINES:
-        _evict_stopped(_SQL_ENGINES)
-        _SQL_ENGINES[key] = SqlEngine(spark, _GRID)
-    return _SQL_ENGINES[key]
+    return _cached(spark, _SQL_ENGINES, SqlEngine)
 
 
 # Module-private temp-view names for the source tables (ADVICE r04:
@@ -219,9 +216,9 @@ def _q_tile_rollup(spark, sf_dir):
 
 def _q_fused_pip_sqlonly(spark, sf_dir):
     """JVM-only fused transform + point-in-polygon spatial join
-    (SqlEngine.transform_pip): forward in SQL, containment as one
-    codegen crossing-number mask column expanded by a bit-test join —
-    zero Python workers in the whole chain."""
+    (SqlEngine.transform_pip): forward in SQL, broadcast bounding-box
+    candidates refined by one codegen crossing-number dispatch — zero
+    Python workers in the whole chain."""
     return _sql_engine(spark).transform_pip(_points(spark, sf_dir), POLYGONS)
 
 
@@ -315,14 +312,14 @@ def _q_skew_topk(spark, sf_dir):
 def _q_grid_stats(spark, sf_dir):
     """Grid statistics, BOTH implementations under one oracle row
     (round-4 consolidation): the exact driver-side ksum
-    (``Transformer::statistics``, method='ksum') and the distributed
-    Spark-aggregate twin for grids too large to collect
+    (``Transformer::statistics``, method='ksum') and its
+    Spark-aggregate twin over the same driver-held grid
     (method='spark'; statistics_df computes in a single
     meshcode-ordered partition — deterministic, same serial order as
     the oracle).  The 12dp rounding only absorbs hypot-vs-sqrt style
     last-ulp differences."""
     rows = []
-    for comp, s in _engine(spark).statistics().items():
+    for comp, s in _GRID.statistics().items():
         rows.append((comp, s["count"], *[round(s[k], 12) for k in
                                          ("mean", "std", "abs", "min", "max")]))
     drv = spark.createDataFrame(
@@ -337,59 +334,6 @@ def _q_grid_stats(spark, sf_dir):
     return drv.unionByName(spk)
 
 
-def _q_dms_parts(spark, sf_dir):
-    """DMS decomposition parts (dms.rs:329-352) of point latitudes."""
-    pts = _points(spark, sf_dir)
-    lat = F.col("lat")
-    mm = (lat - lat.cast("long").cast("double")) * 60.0
-    trunc_mm = mm.cast("long").cast("double")
-    ss = (mm - trunc_mm) * 60.0
-    # half-up rounding via the shared floor formula: Spark's round()
-    # (BigDecimal over the shortest string repr) and DuckDB's round()
-    # (scale-then-round) disagree on boundary doubles; floor(x*1e6+0.5)
-    # is the same float ops in both engines -> bit-identical always
-    fract = F.abs(ss - ss.cast("long").cast("double"))
-    return pts.select(
-        "pkey",
-        lat.cast("long").cast("int").alias("deg"),
-        F.abs(mm.cast("long")).cast("int").alias("minute"),
-        F.abs(ss.cast("long")).cast("int").alias("second"),
-        (F.floor(fract * 1000000.0 + 0.5) / 1000000.0).alias("fract6"),
-    )
-
-
-def _q_dms_roundtrip(spark, sf_dir):
-    """Contract-level proof of the pure-Column DMS parser
-    (functions/columns.dms_to_degree): build the compact numeric DMS
-    string from the latitude decomposition entirely in Column ops,
-    parse it back, emit both.  The oracle mirrors the string build and
-    the parser arithmetic in SQL — bit-exact by pinned op order.
-    Fixture latitudes are all positive, so no sign branch is needed
-    in the string build."""
-    from jgdtrans_rs_spark.functions import columns as C
-
-    pts = _points(spark, sf_dir)
-    lat = F.col("lat")
-    deg = lat.cast("long")
-    mm = (lat - deg.cast("double")) * 60.0
-    mi = mm.cast("long")
-    ss = (mm - mi.cast("double")) * 60.0
-    sec = ss.cast("long")
-    fract6 = F.floor((ss - sec.cast("double")) * 1000000.0).cast("long")
-    dms_str = F.concat(
-        deg.cast("string"),
-        F.lpad(mi.cast("string"), 2, "0"),
-        F.lpad(sec.cast("string"), 2, "0"),
-        F.lit("."),
-        F.lpad(fract6.cast("string"), 6, "0"),
-    )
-    return pts.select(
-        "pkey",
-        dms_str.alias("dms_str"),
-        C.dms_to_degree(dms_str).alias("parsed_deg"),
-    )
-
-
 def _q_dms(spark, sf_dir):
     """DMS parts + compact-string round-trip in ONE contract row
     (round-4 consolidation): the decomposition (dms.rs:329-352)
@@ -399,18 +343,22 @@ def _q_dms(spark, sf_dir):
     instead of joining the two arms on pkey — pkey is unique, so the
     join was an Exchange + sort-merge of two scans of the same rows
     producing the identical relation (guide §2.4: remove shuffles
-    outright).  Expressions are the arms' own, verbatim (the
-    standalone arm builders remain below, value-subsumed)."""
+    outright)."""
     from jgdtrans_rs_spark.functions import columns as C
 
     pts = _points(spark, sf_dir)
     lat = F.col("lat")
-    # parts arm (_q_dms_parts expressions, verbatim)
+    # parts arm: deg/minute/second truncate, fract6 rounds half-up
+    # through floor(x*1e6+0.5) — Spark's round() (BigDecimal over the
+    # shortest repr) and DuckDB's (scale-then-round) disagree on
+    # boundary doubles, the floor formula is the same float ops in both
     mm_p = (lat - lat.cast("long").cast("double")) * 60.0
     trunc_mm = mm_p.cast("long").cast("double")
     ss_p = (mm_p - trunc_mm) * 60.0
     fract = F.abs(ss_p - ss_p.cast("long").cast("double"))
-    # roundtrip arm (_q_dms_roundtrip expressions, verbatim)
+    # roundtrip arm: the compact numeric DMS string built in Column
+    # ops, then parsed back by functions/columns.dms_to_degree (fixture
+    # latitudes are all positive, so the build needs no sign branch)
     deg_r = lat.cast("long")
     mm = (lat - deg_r.cast("double")) * 60.0
     mi = mm.cast("long")
@@ -928,8 +876,8 @@ def oracle_sql() -> dict[str, str]:
         FROM __PTS__
       ) _d
     """.replace("__PTS__", _P)
-    # mirror of _q_dms_roundtrip: identical string build, then the
-    # parser arithmetic re-derived from the string (pinned op order)
+    # the roundtrip arm's string build in SQL, then the parser
+    # arithmetic re-derived from the string (pinned op order)
     dms_roundtrip_sql = """
       SELECT pkey, dms_str,
              (CAST(acc % 100 AS DOUBLE) + fract) * (1.0e0 / 3600.0e0)

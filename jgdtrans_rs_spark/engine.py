@@ -436,15 +436,12 @@ class Engine:
             schema="meshcode long, dlat_sec double, dlon_sec double, dalt_m double",
         )
 
-    def statistics(self) -> dict:
-        """Exact compensated grid statistics (transformer.rs:504-528)."""
-        return self.grid.statistics()
-
     def statistics_df(self) -> DataFrame:
-        """Distributed statistics twin (SURVEY §2.5) for parameter
-        grids too large to collect: the same four components as
-        ``Transformer::statistics`` computed with Spark aggregates —
-        one shuffle on the 4-way component key.
+        """Spark-aggregate twin of ``MeshGrid.statistics`` (SURVEY
+        §2.5), the arm the contract's ``grid_statistics`` query checks
+        as method='spark': the same four components over ``grid_df()``
+        (built from the driver-held grid) computed with Spark
+        aggregates — one shuffle on the 4-way component key.
 
         Caveats vs the exact path (documented, tested to agree within
         ~1e-12 relative on the fixture grids): plain double sums (not

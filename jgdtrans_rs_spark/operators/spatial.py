@@ -8,17 +8,20 @@ semantics anchored to the JGD mesh system.
 Scale design:
 
 * Containment is decided here only: one crossing-number kernel per
-  backend (``_crossings`` numpy, ``_ring_parity_col`` codegen), one
-  63-bit mask over them (``polygon_mask`` / ``polygon_mask_col``) and
-  one bit-test expansion (``poly_mask_rows``); from scratch, no shapely.
-  ``point_in_polygon`` is the broadcast path: the mask kernel in a
-  scalar pandas UDF, one narrow stage, no shuffle.
+  backend (``_crossings`` numpy, ``_ring_parity_col`` codegen), from
+  scratch, no shapely.  ``point_in_polygon`` is the broadcast path: a
+  63-bit numpy mask (``polygon_mask``) in a scalar pandas UDF, one
+  narrow stage, no shuffle, expanded by one bit-test join
+  (``poly_mask_rows``).  The JVM paths refine broadcast candidate
+  pairs with one ``poly_idx`` dispatch (``refine_pairs``).  A
+  non-finite vertex raises: numpy compares NaN false and Spark sorts
+  it above every double, so the backends would disagree on it.
 * ``bucketed_spatial_join`` — the path for large polygon sets:
   polygons are exploded onto the meshcodes their bbox covers, the
-  candidates are broadcast and joined on the tile column, and the
-  exact containment refine runs in codegen.  No shuffle, so a dense
-  cell has no reducer to overload.  Output is a set of (key, poly_id)
-  pairs, identical across parallelism levels.
+  candidates are broadcast and joined on the tile column, and
+  ``refine_pairs`` runs in codegen.  No shuffle, so a dense cell has
+  no reducer to overload.  Output is a set of (key, poly_id) pairs,
+  identical across parallelism levels.
 * ``knn_mesh_nodes`` — for a point inside a rectangular lattice cell
   the 4 nearest nodes are exactly the cell corners, so the candidate
   set is local: compute 4 distances per point in the batch kernel and
@@ -43,7 +46,12 @@ Polygon = tuple[str, list[tuple[float, float]]]  # (poly_id, [(lat, lon), ...])
 
 
 def _float_rings(polygons: Sequence[Polygon]) -> list[list[tuple[float, float]]]:
-    return [[(float(a), float(b)) for a, b in ring] for _, ring in polygons]
+    """The rings as float vertices; a NaN or infinite vertex raises."""
+    rings = [[(float(a), float(b)) for a, b in ring] for _, ring in polygons]
+    for (pid, _), ring in zip(polygons, rings):
+        if not np.isfinite(np.asarray(ring, dtype=np.float64)).all():
+            raise ValueError(f"polygon {pid!r} has a non-finite vertex")
+    return rings
 
 
 def _bbox(ring: list[tuple[float, float]]) -> tuple[float, float, float, float]:
@@ -102,14 +110,36 @@ def _containment_col(rings: list[list[tuple[float, float]]],
     return F.lit(False) if out is None else out.otherwise(F.lit(False))
 
 
-def _mask_polygons(polygons: Sequence[Polygon]):
-    """(float ring, bbox) per polygon of a set that must fit a 63-bit
-    mask."""
-    if len(polygons) > 63:
-        raise ValueError(
-            f"{len(polygons)} polygons exceed the 63-bit containment mask; "
-            "use operators.spatial.bucketed_spatial_join for large polygon sets")
-    return [(ring, _bbox(ring)) for ring in _float_rings(polygons)]
+def refine_pairs(pairs: DataFrame, rings: list[list[tuple[float, float]]],
+                 key: str, lat: str, lon: str) -> DataFrame:
+    """(key, poly_id) of the candidate ``pairs`` whose point is inside
+    ``rings[poly_idx]``.  The rings are driver-side constants, so the
+    parity compiles to a pure Column expression and stays in codegen;
+    past 512 edges it runs in a pandas_udf, because the Column form of
+    one 600-edge ring already overflows the JVM stack."""
+    if sum(len(r) for r in rings) <= 512:
+        contains_col = _containment_col(
+            rings, F.col(lat), F.col(lon), F.col("poly_idx"))
+    else:
+        @F.pandas_udf(BooleanType())
+        def contains(lat_s: pd.Series, lon_s: pd.Series, pidx_s: pd.Series) -> pd.Series:
+            la = lat_s.to_numpy(dtype=np.float64, na_value=np.nan)
+            lo = lon_s.to_numpy(dtype=np.float64, na_value=np.nan)
+            pidx = pidx_s.to_numpy(dtype=np.int32)
+            keep = np.zeros(la.shape[0], dtype=bool)
+            for i, ring in enumerate(rings):
+                mask = pidx == i
+                if mask.any():
+                    keep[mask] = _crossings(la[mask], lo[mask], ring) == 1
+            return pd.Series(keep)
+
+        contains_col = contains(F.col(lat), F.col(lon), F.col("poly_idx"))
+
+    return (
+        pairs.select(key, lat, lon, "poly_idx", "poly_id")
+        .filter(contains_col)
+        .select(key, "poly_id")
+    )
 
 
 def polygon_mask(polygons: Sequence[Polygon]):
@@ -121,7 +151,11 @@ def polygon_mask(polygons: Sequence[Polygon]):
     the mask cost a Python loop over every row (~70 s of q4's 82 s at
     18M rows) plus the Arrow list writer.  >63 polygons raises: use
     bucketed_spatial_join for large polygon sets."""
-    polys = _mask_polygons(polygons)
+    if len(polygons) > 63:
+        raise ValueError(
+            f"{len(polygons)} polygons exceed the 63-bit containment mask; "
+            "use operators.spatial.bucketed_spatial_join for large polygon sets")
+    polys = [(ring, _bbox(ring)) for ring in _float_rings(polygons)]
 
     def mask(la: np.ndarray, lo: np.ndarray) -> np.ndarray:
         out = np.zeros(la.shape[0], dtype=np.int64)
@@ -134,19 +168,6 @@ def polygon_mask(polygons: Sequence[Polygon]):
         return out
 
     return mask
-
-
-def polygon_mask_col(polygons: Sequence[Polygon], lat, lon) -> "F.Column":
-    """The codegen twin of ``polygon_mask``: the same 63-bit mask as a
-    pure Column expression (bbox conjunct + ``_ring_parity_col`` per
-    polygon, bit-identical float64 ops), so a JVM-only plan decides
-    containment in one projection."""
-    out = F.lit(0).cast("long")
-    for i, (ring, (la0, la1, lo0, lo1)) in enumerate(_mask_polygons(polygons)):
-        inside = ((lat >= la0) & (lat <= la1) & (lon >= lo0) & (lon <= lo1)
-                  & _ring_parity_col(ring, lat, lon))
-        out = out.bitwiseOR(F.when(inside, F.lit(1 << i).cast("long")).otherwise(0))
-    return out
 
 
 def poly_mask_rows(df: DataFrame, polygons: Sequence[Polygon], mask_col: str = "poly_mask",
@@ -257,6 +278,7 @@ def bucketed_spatial_join(points: DataFrame, polygons: Sequence[Polygon], unit: 
         # for identical input; fail loudly instead
         raise ValueError("bucketed_spatial_join: duplicate poly_id in "
                          "polygons — ids must be unique")
+    rings = _float_rings(polygons)  # validates before the cover reads the rings
     cover = polygon_mesh_cover(polygons, unit)
     if not cover:
         # schema derived from the points frame so the empty result
@@ -268,40 +290,7 @@ def bucketed_spatial_join(points: DataFrame, polygons: Sequence[Polygon], unit: 
         [(c, pid_to_idx[p], p) for c, p in cover],
         schema=f"{mesh_col} long, poly_idx int, poly_id string",
     )
-    joined = points.join(F.broadcast(cand), mesh_col)
-
-    # exact containment test on the surviving candidates.  The rings
-    # are driver-side constants, so for normal-size polygon sets the
-    # crossing-number parity compiles to a pure Column expression —
-    # the whole refine step stays in codegen (no second Python stage
-    # after the transform UDF).  Very large rings fall back to the
-    # vectorized pandas_udf: the Column form of one 600-edge ring
-    # already overflows the JVM stack at ``.filter``.
-    rings = _float_rings(polygons)
-    n_edges = sum(len(r) for r in rings)
-    if n_edges <= 512:
-        contains_col = _containment_col(
-            rings, F.col(lat), F.col(lon), F.col("poly_idx"))
-    else:
-        @F.pandas_udf(BooleanType())
-        def contains(lat_s: pd.Series, lon_s: pd.Series, pidx_s: pd.Series) -> pd.Series:
-            la = lat_s.to_numpy(dtype=np.float64, na_value=np.nan)
-            lo = lon_s.to_numpy(dtype=np.float64, na_value=np.nan)
-            pidx = pidx_s.to_numpy(dtype=np.int32)
-            keep = np.zeros(la.shape[0], dtype=bool)
-            for i, ring in enumerate(rings):
-                mask = pidx == i
-                if mask.any():
-                    keep[mask] = _crossings(la[mask], lo[mask], ring) == 1
-            return pd.Series(keep)
-
-        contains_col = contains(F.col(lat), F.col(lon), F.col("poly_idx"))
-
-    return (
-        joined.select(key, lat, lon, "poly_idx", "poly_id")
-        .filter(contains_col)
-        .select(key, "poly_id")
-    )
+    return refine_pairs(points.join(F.broadcast(cand), mesh_col), rings, key, lat, lon)
 
 
 def knn_candidate_rows_cols(lat_d, lon_d, unit: int):

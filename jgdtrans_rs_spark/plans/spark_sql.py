@@ -21,7 +21,10 @@ Arrow kernel path on the fixture inputs.
 
 The parameter grid rides a broadcast-hinted temp view — the SQL twin
 of the engine's ``sc.broadcast`` HashMap probe (par.rs:283-285): four
-broadcast-hash joins, no shuffle.
+broadcast-hash joins, no shuffle.  ``transform_pip`` decides
+containment as ``operators.spatial.bucketed_spatial_join`` does:
+broadcast candidate pairs (here a bounding-box nested-loop join), then
+the shared ``spatial.refine_pairs`` step.
 """
 
 from __future__ import annotations
@@ -41,14 +44,14 @@ _view_ids = itertools.count()
 
 class SqlEngine:
     """Pure-SQL twin of ``engine.Engine`` for the SQL-expressible
-    operators (forward / backward_compat / backward Newton / tiling /
-    cell position)."""
+    operators (forward / backward Newton / tiling / fused transform +
+    point-in-polygon)."""
 
-    def __init__(self, spark: SparkSession, grid: MeshGrid, grid_view: str | None = None):
+    def __init__(self, spark: SparkSession, grid: MeshGrid):
         self.spark = spark
         self.grid = grid
         self.unit = grid.mesh_unit
-        self.grid_view = grid_view or f"_mesh_grid_{next(_view_ids)}"
+        self._view = f"_mesh_grid_{next(_view_ids)}"
         # LocalRelation-backed for broadcastable grids (localrel.py):
         # each downstream ACTION rebuilds the corner-join broadcasts,
         # and over a pickled-RDD frame every build is a full job of
@@ -60,9 +63,9 @@ class SqlEngine:
         )
         # the broadcast hint is part of the view's logical plan, so every
         # corner join below becomes a BroadcastHashJoin (no shuffle)
-        gdf.hint("broadcast").createOrReplaceTempView(self.grid_view)
+        gdf.hint("broadcast").createOrReplaceTempView(self._view)
         self.grid_rel = (
-            f"(SELECT meshcode, dlat_sec, dlon_sec, dalt_m FROM {self.grid_view})"
+            f"(SELECT meshcode, dlat_sec, dlon_sec, dalt_m FROM {self._view})"
         )
 
     def _input_rel(self, df: DataFrame) -> str:
@@ -70,7 +73,7 @@ class SqlEngine:
         # (and resolves the view) eagerly, so later replacement cannot
         # disturb previously built DataFrames — and the session catalog
         # stays bounded instead of accreting one view per call
-        name = f"{self.grid_view}_in"
+        name = f"{self._view}_in"
         df.createOrReplaceTempView(name)
         return name
 
@@ -78,15 +81,6 @@ class SqlEngine:
         """``Transformer::forward`` (trans.rs:134-136), JVM-only."""
         return self.spark.sql(
             oracle.forward_sql(self._input_rel(df), self.grid_rel, self.unit, key))
-
-    def forward_corr(self, df: DataFrame, key: str = "pkey") -> DataFrame:
-        return self.spark.sql(
-            oracle.forward_corr_only_sql(self._input_rel(df), self.grid_rel, self.unit, key))
-
-    def backward_compat(self, df: DataFrame, key: str = "pkey") -> DataFrame:
-        """``Transformer::backward_compat`` (trans.rs:179-181)."""
-        return self.spark.sql(
-            oracle.backward_compat_sql(self._input_rel(df), self.grid_rel, self.unit, key))
 
     def backward(self, df: DataFrame, key: str = "pkey") -> DataFrame:
         """Verified Newton inverse (trans.rs:556-672) as 4 unrolled SQL
@@ -111,7 +105,7 @@ class SqlEngine:
         state = self.spark.sql(stages[0])
         last = len(stages) - 2
         for i, st in enumerate(stages[1:]):
-            name = f"{self.grid_view}_newton_{i}"  # fixed names, see _input_rel
+            name = f"{self._view}_newton_{i}"  # fixed names, see _input_rel
             state.createOrReplaceTempView(name)
             state = self.spark.sql(st.replace("__STATE__", name))
             if i < last:
@@ -124,37 +118,39 @@ class SqlEngine:
         return self.spark.sql(
             oracle.tile_sql(self._input_rel(df), self.unit, level, key))
 
-    def cell_position(self, df: DataFrame, key: str = "pkey") -> DataFrame:
-        return self.spark.sql(
-            oracle.cell_position_sql(self._input_rel(df), self.unit, key))
-
     def transform_pip(self, df: DataFrame, polygons, key: str = "pkey") -> DataFrame:
         """JVM-only fused forward transform + point-in-polygon spatial
         join -> (key, poly_id) hit pairs: the headline chain with ZERO
         Python workers — whole-stage codegen end to end, so it rides
         the JVM scaling curve instead of the Arrow channel.
 
-        Containment is one codegen mask column
-        (``operators.spatial.polygon_mask_col``, the DuckDB oracle's
-        edge formula in the same float64 op order) expanded by the
-        bit-test join ``poly_mask_rows``: one scan of the cached
-        projection, no Union.  >63 polygons raises, as in the Arrow
-        engine; use ``operators.spatial.bucketed_spatial_join`` there.
-
-        The (key, lat, lon) input is PERSISTED before the mask: the
-        parity expression reads lat/lon once per (point, edge), and
-        through a purely logical view Catalyst inlines the transform's
-        output expressions (bilinear CASE + wrapping normalize) into it
-        — measured 3.2 s vs 1.2 s at 600k x 20 edges.  At corpus scale
-        this 3-column projection is the stage boundary you would
-        materialize anyway."""
-        mask = spatial.polygon_mask_col(polygons, F.col("lat"), F.col("lon"))
-        fwd = self.forward(df, key)
-        name = f"{self.grid_view}_fwd"  # fixed name, see _input_rel
-        fwd.createOrReplaceTempView(name)
-        ok = self.spark.sql(
-            f"SELECT {key}, out_lat AS lat, out_lon AS lon "
-            f"FROM {name} WHERE status = 0").persist()
-        return spatial.poly_mask_rows(
-            ok.select(key, mask.alias("poly_mask")), polygons, how="inner",
-        ).select(key, "poly_id")
+        The same two steps as ``operators.spatial.bucketed_spatial_join``:
+        the transformed OK points nested-loop-join a broadcast
+        LocalRelation of polygon bounding boxes, and
+        ``spatial.refine_pairs`` keeps the pairs inside the ring (the
+        DuckDB oracle's edge formula in the same float64 op order).
+        Any number of polygons; above 512 edges the refine runs in a
+        pandas UDF."""
+        rings = spatial._float_rings(polygons)
+        boxes = local_rows_df(
+            self.spark,
+            [(i, pid, *spatial._bbox(ring))
+             for i, ((pid, _), ring) in enumerate(zip(polygons, rings))],
+            schema="poly_idx int, poly_id string, lat_min double, lat_max double, "
+                   "lon_min double, lon_max double",
+        )
+        # Two guards keep the fused stage's generated method under
+        # HotSpot's 8,000-byte JIT limit (without them 26.5 KB: 7 s
+        # against 0.6 s at sf0.1).  The point rides as one struct, so
+        # the join reads all of its streamed side and codegen gives the
+        # join + refine a method of their own; the bbox test is
+        # null-tolerant, so Catalyst infers no isnotnull(lat) to push
+        # below the transform as a copy of the transform expression.
+        pts = self.forward(df, key).filter(F.col("status") == 0).select(F.struct(
+            key, F.col("out_lat").alias("lat"), F.col("out_lon").alias("lon")).alias("_pt"))
+        lat, lon = F.col("_pt.lat"), F.col("_pt.lon")
+        in_box = ((lat >= F.col("lat_min")) & (lat <= F.col("lat_max"))
+                  & (lon >= F.col("lon_min")) & (lon <= F.col("lon_max")))
+        pairs = pts.join(F.broadcast(boxes), F.coalesce(in_box, F.lit(False)))
+        return spatial.refine_pairs(pairs.select("_pt.*", "poly_idx", "poly_id"),
+                                    rings, key, "lat", "lon")

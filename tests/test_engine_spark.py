@@ -363,7 +363,9 @@ def test_fused_fields_pruning(spark, semidyna_grid, engine, points, op):
     """fields= must (a) reject unknown names, (b) emit the kept fields
     in the caller's order, (c) produce values identical to the full
     output on the kept columns; transform_tile_pip must also (d)
-    enforce the 63-bit mask bound, as its two mask-based twins do."""
+    enforce the 63-bit mask bound, as point_in_polygon does, while
+    SqlEngine.transform_pip, which keeps no mask, returns the same
+    hits for 64 polygons as for one."""
     import __spark_entry__ as entry_mod
     from jgdtrans_rs_spark.plans.spark_sql import SqlEngine
 
@@ -376,10 +378,15 @@ def test_fused_fields_pruning(spark, semidyna_grid, engine, points, op):
     if pip:
         many = [(f"p{i}", polys[0][1]) for i in range(64)]
         for build in (lambda: engine.transform_tile_pip(points, many),
-                      lambda: spatial.point_in_polygon(points, many),
-                      lambda: SqlEngine(spark, semidyna_grid).transform_pip(points, many)):
+                      lambda: spatial.point_in_polygon(points, many)):
             with pytest.raises(ValueError, match="63-bit"):
                 build()
+        fwd = engine.forward(points).filter(F.col("status") == 0)
+        one = {r.pkey for r in spatial.point_in_polygon(
+            fwd, polys[:1], lat="out_lat", lon="out_lon").collect()}
+        got = {(r.pkey, r.poly_id) for r in
+               SqlEngine(spark, semidyna_grid).transform_pip(points, many).collect()}
+        assert one and got == {(k, pid) for k in one for pid, _ in many}
 
     kept = ["poly_mask" if pip else "quadkey", "status"]  # not schema order
     pts = points.limit(500)
@@ -683,6 +690,28 @@ def test_bucketed_join_rejects_duplicate_poly_ids(spark):
     for r in (ring, south):
         with pytest.raises(ValueError, match="duplicate poly_id"):
             spatial.bucketed_spatial_join(pts, [("A", r), ("A", r)], unit=1)
+
+
+@pytest.mark.parametrize("bad", [float("nan"), float("inf"), float("-inf")])
+def test_non_finite_vertex_raises_on_every_path(spark, semidyna_grid, engine, points, bad):
+    """A non-finite vertex is malformed input: numpy compares NaN false
+    while Spark sorts it above every double, so the Arrow and JVM
+    containment paths would return different pairs for the same ring.
+    Every path must reject it, naming the polygon."""
+    from jgdtrans_rs_spark.plans.spark_sql import SqlEngine
+
+    polys = [("ok", [(36.05, 140.05), (36.05, 140.15), (36.15, 140.15)]),
+             ("bad", [(36.05, 140.05), (36.05, 140.15), (bad, 140.15), (36.15, 140.05)]),
+             ("bad_lon", [(36.05, 140.05), (36.05, bad), (36.15, 140.05)])]
+    tiled = engine.assign_tiles(points)
+    for polygons, name in ((polys[:2], "'bad'"), (polys[::2], "'bad_lon'")):
+        for build in (
+                lambda: spatial.point_in_polygon(points, polygons),
+                lambda: engine.transform_tile_pip(points, polygons),
+                lambda: spatial.bucketed_spatial_join(tiled, polygons, semidyna_grid.mesh_unit),
+                lambda: SqlEngine(spark, semidyna_grid).transform_pip(points, polygons)):
+            with pytest.raises(ValueError, match=f"polygon {name} has a non-finite vertex"):
+                build()
 
 
 def test_raster_roundtrip(engine, points, semidyna_grid):

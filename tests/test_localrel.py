@@ -54,10 +54,11 @@ def test_unsupported_type_raises(spark):
 
 
 def test_hot_call_sites_have_no_rdd_scan(spark, semidyna_grid):
-    """The three per-action broadcast builds the optimization targets —
-    SqlEngine's grid view joins, poly_mask_rows' name relation and
-    bucketed_spatial_join's candidate side — must all plan as
-    LocalRelation builds (no ExistingRDD scan = no job per build)."""
+    """The per-action broadcast builds the optimization targets —
+    SqlEngine's grid view joins, its transform_pip bounding-box side,
+    poly_mask_rows' name relation and bucketed_spatial_join's
+    candidate side — must all plan as LocalRelation builds (no
+    ExistingRDD scan = no job per build)."""
     from pyspark.sql import functions as F
 
     from jgdtrans_rs_spark.engine import Engine
@@ -72,9 +73,12 @@ def test_hot_call_sites_have_no_rdd_scan(spark, semidyna_grid):
     )
     polys = [("p1", [(36.0, 140.0), (36.0, 140.2), (36.2, 140.2), (36.2, 140.0)])]
 
-    sql_eng = SqlEngine(spark, semidyna_grid, grid_view="_localrel_test_grid")
+    sql_eng = SqlEngine(spark, semidyna_grid)
     fwd_plan = sql_eng.forward(pts)._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" not in fwd_plan
+    q4s = sql_eng.transform_pip(pts, polys)
+    assert q4s.collect()
+    assert "ExistingRDD" not in q4s._jdf.queryExecution().executedPlan().toString()
 
     eng = Engine(spark, semidyna_grid)
     masked = eng.transform_tile_pip(pts, polys, fields=["status", "poly_mask"])

@@ -2,6 +2,8 @@
 kernel path on fixture inputs, and its plan must be pure codegen:
 broadcast joins for the grid probe, no Python stage."""
 
+import re
+
 import numpy as np
 import pytest
 
@@ -34,7 +36,6 @@ def _masked(df, cols):
 
 @pytest.mark.parametrize("op,cols", [
     ("forward", ("out_lat", "out_lon", "out_alt")),
-    ("backward_compat", ("out_lat", "out_lon", "out_alt")),
     ("backward", ("out_lat", "out_lon", "out_alt")),
 ])
 def test_sql_engine_bit_identical_to_kernel(spark, engines, pts, op, cols):
@@ -81,24 +82,74 @@ def test_sql_engine_plan_is_jvm_only(engines, pts):
 
 
 def test_transform_pip_jvm_only_and_matches_arrow_chain(engines, pts):
-    """The fused SQL transform+PIP must carry no Python stage and no
-    per-polygon Union, and its hit set must equal the Arrow engine's
-    broadcast PIP over the same transformed points."""
+    """The fused SQL transform+PIP must plan as one broadcast
+    nested-loop join against the polygon bounding-box LocalRelation,
+    with no Python stage, no persisted stage and no per-polygon Union,
+    and its hit set must equal the Arrow engine's broadcast PIP over
+    the same transformed points."""
     import __spark_entry__ as entry_mod
     from pyspark.sql import functions as F
     from jgdtrans_rs_spark.operators import spatial
 
     eng, sql_eng = engines
-    out = sql_eng.transform_pip(pts, entry_mod.POLYGONS)
+    spark = pts.sparkSession
+    # the fixture is persisted (and Spark swaps its cache in for any
+    # equal plan), so feed its rows as a fresh frame: any InMemory
+    # node left in the plan is one transform_pip added
+    src = spark.createDataFrame(pts.collect(), pts.schema)
+    out = sql_eng.transform_pip(src, entry_mod.POLYGONS)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" not in plan and "PythonUDF" not in plan
-    assert "Union" not in plan
+    assert plan.count("BroadcastNestedLoopJoin") == 1, plan
+    assert re.search(r"LocalTableScan \[poly_idx#\d+, poly_id#\d+, lat_min#", plan), plan
+    assert "InMemory" not in plan and "Union" not in plan, plan
+    assert "Python" not in plan, plan
+    # HotSpot never JIT-compiles a method over 8,000 bytes of bytecode;
+    # the struct + null-tolerant bbox guards in transform_pip keep the
+    # fused forward + join + refine stage under it
+    dbg = getattr(getattr(spark._jvm.org.apache.spark.sql.execution.debug, "package$"),
+                  "MODULE$")
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")  # codegen stages in the plan
+    try:
+        seq = dbg.codegenStringSeq(sql_eng.transform_pip(src, entry_mod.POLYGONS)
+                                   ._jdf.queryExecution().executedPlan())
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    sizes = [seq.apply(i)._3().maxMethodCodeSize() for i in range(seq.size())]
+    assert sizes and max(sizes) < 8000, sizes
     got = {(r.pkey, r.poly_id) for r in out.collect()}
 
     fwd = eng.forward(pts, "lat", "lon", None).filter(F.col("status") == 0)
     want = {(r.pkey, r.poly_id) for r in spatial.point_in_polygon(
         fwd, entry_mod.POLYGONS, lat="out_lat", lon="out_lon").collect()}
     assert got == want and len(got) > 0
+
+
+def test_transform_pip_large_ring_falls_back(spark, engines):
+    """Past 512 edges the Column refine would overflow the JVM stack;
+    transform_pip takes the shared pandas fallback and still returns
+    exactly the Arrow chain's hits."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+    from jgdtrans_rs_spark.operators import spatial
+
+    eng, sql_eng = engines
+    t = np.arange(600) * (2 * np.pi / 600)
+    r = np.where(np.arange(600) % 2 == 0, 0.015, 0.008)
+    ring = [(float(a), float(b)) for a, b in
+            zip(36.104 + r * np.sin(t), 140.094 + r * np.cos(t))]
+    rng = np.random.default_rng(3)
+    pts = spark.createDataFrame(pd.DataFrame({
+        "pkey": np.arange(3000), "lat": rng.uniform(36.089, 36.119, 3000),
+        "lon": rng.uniform(140.079, 140.109, 3000), "alt": np.zeros(3000)}))
+    polys = [("star", ring)]
+    out = sql_eng.transform_pip(pts, polys)
+    assert "ArrowEvalPython" in out._jdf.queryExecution().executedPlan().toString()
+    got = {(r.pkey, r.poly_id) for r in out.collect()}
+    fwd = eng.forward(pts).filter(F.col("status") == 0)
+    want = {(r.pkey, r.poly_id) for r in spatial.point_in_polygon(
+        fwd, polys, lat="out_lat", lon="out_lon").collect()}
+    assert got == want and len(want) > 500
 
 
 def test_forward_normalizes_output_across_lon_wrap(spark):
