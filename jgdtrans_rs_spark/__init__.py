@@ -5,7 +5,7 @@ A from-scratch Spark re-expression of the semantics of
 JGD mesh tiling) extended into a web-scale spatial engine: broadcast
 Arrow mesh grids, vectorized pandas/Arrow UDF transform kernels,
 meshcode/quadkey tile assignment, point-in-polygon + bucketed spatial
-joins (candidates broadcast, refined in codegen), kNN over mesh nodes,
+joins (candidates broadcast, refined in the JVM), kNN over mesh nodes,
 and the training-data pipeline operators (dedup, similarity search,
 text analysis) a 100 TB corpus needs.
 
@@ -13,7 +13,6 @@ Layout:
     mesh.py      vectorized JGD mesh kernels (numpy)
     grid.py      par parser + broadcastable MeshGrid + exact statistics
     kernel.py    forward/backward transform kernels (numpy)
-    dms.py       degree-minute-second scalar functions
     engine.py    the Spark layer (broadcast grid, pandas_udf transforms)
     functions/   pure Column expression helpers (JVM-side, codegen-friendly)
     operators/   spatial joins, kNN, dedup, similarity, text, raster

@@ -1,9 +1,9 @@
 """Pure Column expression helpers — JVM-side, whole-stage-codegen
 friendly (no Python in the plan).
 
-These are the declarative twins of numpy / UDF kernels: DMS
-parse/format and cosine similarity.  Use them when staying inside
-codegen matters (no Arrow hop).  Angle normalization (point.rs:9-32)
+These are the declarative forms of DMS parse/format (held to the
+scalar reference ``tests/dms_reference.py``) and cosine similarity.
+Use them when staying inside codegen matters (no Arrow hop).  Angle normalization (point.rs:9-32)
 has one SQL form for both Spark and DuckDB,
 ``plans.oracle.norm_lat_expr``/``norm_lon_expr``; wrap it in
 ``F.expr``.
@@ -16,9 +16,9 @@ from pyspark.sql import functions as F
 
 
 def dms_to_degree(c: Column) -> Column:
-    """Pure-Column DMS-string parser — the zero-Python fast path for
-    ``dms.dms_to_degree_scalar`` (identical output, including NaN on
-    the grammar/bounds errors of dms.rs:194-299 FromStr).
+    """Pure-Column DMS-string parser: dms.rs:194-299 FromStr, NaN on
+    its grammar/bounds errors (the tests hold it to the scalar
+    reference ``dms_to_degree_scalar``, identical output).
 
     Grammar: optional +/-, '_' separators allowed anywhere except
     leading a digit group, integer or fraction part may be absent (not
@@ -76,10 +76,11 @@ def degree_to_dms_compact(c: Column) -> Column:
     """Pure-Column compact DMS formatter (dms.rs:115-163) for the
     common case: values whose seconds-fraction is EXACTLY a <= 6-digit
     decimal (fract parses back bit-equal from its 6-digit rounding).
-    Returns NULL outside that case — callers needing full
-    shortest-round-trip parity use ``degree_to_dms_hybrid`` (or the
-    UDF directly); hot pipelines formatting tile labels / web output
-    stay entirely in codegen here.
+    Returns NULL outside that case: full shortest-round-trip parity
+    needs Rust's Display, which no Spark string builtin reproduces
+    (CAST(double AS STRING) switches to scientific notation below
+    1e-3).  Hot pipelines formatting tile labels / web output stay
+    entirely in codegen here.
 
     Decomposition is bit-pinned to dms.rs:329-352 (trunc/fract
     two-step, magnitudes via abs — float-symmetric, so identical bits
@@ -117,16 +118,3 @@ def degree_to_dms_compact(c: Column) -> Column:
     negative = c.cast("string").startswith("-")
     out = F.when(negative, F.concat(F.lit("-"), body)).otherwise(body)
     return F.when(in_bounds & roundtrip_ok, out).otherwise(F.lit(None).cast("string"))
-
-
-def degree_to_dms_hybrid(c: Column) -> Column:
-    """Column formatter with shortest-round-trip UDF fallback: exact
-    <= 6-digit fractions format in codegen, the rest through
-    dms.degree_to_dms_udf.  NOTE: Spark extracts Python UDFs into an
-    unconditional ArrowEvalPython stage, so the fallback EXECUTES for
-    every row even when the Column branch wins — use
-    degree_to_dms_compact alone when the corpus is known 6-digit-exact
-    and the Arrow hop matters."""
-    from ..dms import degree_to_dms_udf
-
-    return F.coalesce(degree_to_dms_compact(c), degree_to_dms_udf(c))

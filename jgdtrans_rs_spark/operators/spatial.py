@@ -7,21 +7,23 @@ semantics anchored to the JGD mesh system.
 
 Scale design:
 
-* Containment is decided here only: one crossing-number kernel per
-  backend (``_crossings`` numpy, ``_ring_parity_col`` codegen), from
+* Containment is decided here only: one crossing-number formula per
+  backend (``_crossings`` numpy, ``refine_pairs`` Spark SQL), from
   scratch, no shapely.  ``point_in_polygon`` is the broadcast path: a
   63-bit numpy mask (``polygon_mask``) in a scalar pandas UDF, one
   narrow stage, no shuffle, expanded by one bit-test join
   (``poly_mask_rows``).  The JVM paths refine broadcast candidate
-  pairs with one ``poly_idx`` dispatch (``refine_pairs``).  A
-  non-finite vertex raises: numpy compares NaN false and Spark sorts
-  it above every double, so the backends would disagree on it.
+  pairs with ``refine_pairs``: a fold over the candidate's ring, held
+  as a literal edge array, so the refine stays in the JVM at any edge
+  count.  A non-finite vertex raises: numpy compares NaN false and
+  Spark sorts it above every double, so the backends would disagree
+  on it.
 * ``bucketed_spatial_join`` — the path for large polygon sets:
   polygons are exploded onto the meshcodes their bbox covers, the
   candidates are broadcast and joined on the tile column, and
-  ``refine_pairs`` runs in codegen.  No shuffle, so a dense cell has
-  no reducer to overload.  Output is a set of (key, poly_id) pairs,
-  identical across parallelism levels.
+  ``refine_pairs`` keeps the pairs inside the ring.  No shuffle, so a
+  dense cell has no reducer to overload.  Output is a set of
+  (key, poly_id) pairs, identical across parallelism levels.
 * ``knn_mesh_nodes`` — for a point inside a rectangular lattice cell
   the 4 nearest nodes are exactly the cell corners, so the candidate
   set is local: compute 4 distances per point in the batch kernel and
@@ -37,10 +39,10 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType, LongType, StructField, StructType
+from pyspark.sql.types import LongType, StructField, StructType
 
 from .. import mesh
-from ..localrel import local_rows_df
+from ..localrel import _scalar, local_rows_df
 
 Polygon = tuple[str, list[tuple[float, float]]]  # (poly_id, [(lat, lon), ...])
 
@@ -81,63 +83,49 @@ def _crossings(lat: np.ndarray, lon: np.ndarray, ring: list[tuple[float, float]]
     return inside % 2
 
 
-def _ring_parity_col(ring: list[tuple[float, float]], lat, lon) -> "F.Column":
-    """Crossing-number parity of ONE ring as a pure Column expression
-    (same edge formula as _crossings and the SQL oracle, bit-identical
-    float64 ops).  Stays entirely inside whole-stage codegen."""
-    crossings = None
+_EDGE = "struct<y1: double, x1: double, y2: double, x2: double>"
+
+
+def _array_sql(items: list[str], elem: str) -> str:
+    """A SQL array literal; an empty one is typed, so it still unifies
+    with its non-empty siblings."""
+    return f"array({', '.join(items)})" if items else f"CAST(array() AS array<{elem}>)"
+
+
+def _edges_sql(ring: list[tuple[float, float]]) -> str:
+    """One ring's edges as a SQL array of exact vertex literals,
+    horizontal ones dropped as in ``_crossings`` (they never cross the
+    ray).  The differences are left to the filter: a difference of two
+    finite vertices may overflow to an infinity, which has no
+    literal."""
+    def d(v: float) -> str:
+        return _scalar(v, "DOUBLE")
+
     n = len(ring)
-    for j in range(n):
-        y1, x1 = ring[j]
-        y2, x2 = ring[(j + 1) % n]
-        if y1 == y2:
-            continue  # horizontal edge never crosses the test ray
-        hit = ((F.lit(y1) > lat) != (F.lit(y2) > lat)) & (
-            lon < (x2 - x1) * (lat - F.lit(y1)) / (y2 - y1) + x1
-        )
-        term = F.when(hit, 1).otherwise(0)
-        crossings = term if crossings is None else crossings + term
-    return (crossings % 2 == 1) if crossings is not None else F.lit(False)
-
-
-def _containment_col(rings: list[list[tuple[float, float]]],
-                     lat, lon, pidx) -> "F.Column":
-    """Per-polygon ring parity dispatched on the candidate's poly_idx."""
-    out = None
-    for i, ring in enumerate(rings):
-        inside = _ring_parity_col(ring, lat, lon)
-        out = F.when(pidx == i, inside) if out is None else out.when(pidx == i, inside)
-    return F.lit(False) if out is None else out.otherwise(F.lit(False))
+    return _array_sql([
+        f"named_struct('y1', {d(y1)}, 'x1', {d(x1)}, 'y2', {d(y2)}, 'x2', {d(x2)})"
+        for (y1, x1), (y2, x2) in ((ring[i], ring[(i + 1) % n]) for i in range(n))
+        if y1 != y2
+    ], _EDGE)
 
 
 def refine_pairs(pairs: DataFrame, rings: list[list[tuple[float, float]]],
                  key: str, lat: str, lon: str) -> DataFrame:
     """(key, poly_id) of the candidate ``pairs`` whose point is inside
-    ``rings[poly_idx]``.  The rings are driver-side constants, so the
-    parity compiles to a pure Column expression and stays in codegen;
-    past 512 edges it runs in a pandas_udf, because the Column form of
-    one 600-edge ring already overflows the JVM stack."""
-    if sum(len(r) for r in rings) <= 512:
-        contains_col = _containment_col(
-            rings, F.col(lat), F.col(lon), F.col("poly_idx"))
-    else:
-        @F.pandas_udf(BooleanType())
-        def contains(lat_s: pd.Series, lon_s: pd.Series, pidx_s: pd.Series) -> pd.Series:
-            la = lat_s.to_numpy(dtype=np.float64, na_value=np.nan)
-            lo = lon_s.to_numpy(dtype=np.float64, na_value=np.nan)
-            pidx = pidx_s.to_numpy(dtype=np.int32)
-            keep = np.zeros(la.shape[0], dtype=bool)
-            for i, ring in enumerate(rings):
-                mask = pidx == i
-                if mask.any():
-                    keep[mask] = _crossings(la[mask], lo[mask], ring) == 1
-            return pd.Series(keep)
-
-        contains_col = contains(F.col(lat), F.col(lon), F.col("poly_idx"))
-
+    ``rings[poly_idx]``.  The rings ride as one literal array of edge
+    arrays and the crossing parity folds over the candidate's ring with
+    ``aggregate``: the ``_crossings`` formula with its float64 ops in
+    the same order.  The rings are data, not code, so the generated
+    method does not grow with the edge count and the refine stays in
+    the JVM at any size."""
+    cross = (f"CASE WHEN ((_e.y1 > `{lat}`) != (_e.y2 > `{lat}`)) AND `{lon}` < (_e.x2 - _e.x1)"
+             f" * (`{lat}` - _e.y1) / (_e.y2 - _e.y1) + _e.x1 THEN 1 ELSE 0 END")
+    edges = _array_sql([_edges_sql(r) for r in rings], f"array<{_EDGE}>")
+    inside = F.expr(f"aggregate(element_at({edges}, poly_idx + 1), 0, "
+                    f"(_n, _e) -> _n + {cross}) % 2 = 1")
     return (
         pairs.select(key, lat, lon, "poly_idx", "poly_id")
-        .filter(contains_col)
+        .filter(inside)
         .select(key, "poly_id")
     )
 
@@ -252,8 +240,8 @@ def bucketed_spatial_join(points: DataFrame, polygons: Sequence[Polygon], unit: 
                           mesh_col: str = "meshcode",
                           hot_threshold: int = 50_000, num_salts: int = 16,
                           hot_codes: Sequence[int] | None = None) -> DataFrame:
-    """Meshcode-bucketed spatial join: candidates broadcast, refined in
-    codegen.
+    """Meshcode-bucketed spatial join: candidates broadcast, refined by
+    ``refine_pairs``.
 
     points must carry a ``mesh_col`` tile column (engine.assign_tiles /
     transform_and_tile).  The polygon cover ships as one broadcast
@@ -265,11 +253,9 @@ def bucketed_spatial_join(points: DataFrame, polygons: Sequence[Polygon], unit: 
     ``hot_threshold``, ``num_salts`` and ``hot_codes`` are accepted and
     ignored; they remain for callers written against the salted join.
     """
-    # the candidate side carries BOTH the integer dispatch index (the
-    # containment refine dispatches on it — int compare in codegen,
-    # and the pandas fallback ships only (lat, lon, poly_idx) through
-    # Arrow) and the poly_id string, so no name-reattach join is
-    # needed after the refine
+    # the candidate side carries BOTH the integer ring index (the
+    # refine picks the candidate's ring with it) and the poly_id
+    # string, so no name-reattach join is needed after the refine
     pid_to_idx = {pid: i for i, (pid, _) in enumerate(polygons)}
     if len(pid_to_idx) != len(polygons):
         # a duplicate id would silently collapse onto ONE ring here

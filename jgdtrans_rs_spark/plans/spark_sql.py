@@ -24,7 +24,8 @@ of the engine's ``sc.broadcast`` HashMap probe (par.rs:283-285): four
 broadcast-hash joins, no shuffle.  ``transform_pip`` decides
 containment as ``operators.spatial.bucketed_spatial_join`` does:
 broadcast candidate pairs (here a bounding-box nested-loop join), then
-the shared ``spatial.refine_pairs`` step.
+the shared ``spatial.refine_pairs`` step, which keeps the plan
+JVM-only at any polygon edge count.
 """
 
 from __future__ import annotations
@@ -129,8 +130,7 @@ class SqlEngine:
         LocalRelation of polygon bounding boxes, and
         ``spatial.refine_pairs`` keeps the pairs inside the ring (the
         DuckDB oracle's edge formula in the same float64 op order).
-        Any number of polygons; above 512 edges the refine runs in a
-        pandas UDF."""
+        Any number of polygons and edges, with no Python stage."""
         rings = spatial._float_rings(polygons)
         boxes = local_rows_df(
             self.spark,
@@ -139,18 +139,16 @@ class SqlEngine:
             schema="poly_idx int, poly_id string, lat_min double, lat_max double, "
                    "lon_min double, lon_max double",
         )
-        # Two guards keep the fused stage's generated method under
-        # HotSpot's 8,000-byte JIT limit (without them 26.5 KB: 7 s
-        # against 0.6 s at sf0.1).  The point rides as one struct, so
-        # the join reads all of its streamed side and codegen gives the
-        # join + refine a method of their own; the bbox test is
-        # null-tolerant, so Catalyst infers no isnotnull(lat) to push
-        # below the transform as a copy of the transform expression.
-        pts = self.forward(df, key).filter(F.col("status") == 0).select(F.struct(
-            key, F.col("out_lat").alias("lat"), F.col("out_lon").alias("lon")).alias("_pt"))
-        lat, lon = F.col("_pt.lat"), F.col("_pt.lon")
+        # The bbox test is null-tolerant, so Catalyst infers no
+        # isnotnull(lat) to push below the transform as a copy of the
+        # transform expression.  With that copy the fused stage's
+        # largest generated method read 22,551 bytes on the contract's
+        # sf0.01 points (7,853 without), past HotSpot's 8,000-byte JIT
+        # limit: the stage would run interpreted.
+        pts = self.forward(df, key).filter(F.col("status") == 0).select(
+            key, F.col("out_lat").alias("lat"), F.col("out_lon").alias("lon"))
+        lat, lon = F.col("lat"), F.col("lon")
         in_box = ((lat >= F.col("lat_min")) & (lat <= F.col("lat_max"))
                   & (lon >= F.col("lon_min")) & (lon <= F.col("lon_max")))
         pairs = pts.join(F.broadcast(boxes), F.coalesce(in_box, F.lit(False)))
-        return spatial.refine_pairs(pairs.select("_pt.*", "poly_idx", "poly_id"),
-                                    rings, key, "lat", "lon")
+        return spatial.refine_pairs(pairs, rings, key, "lat", "lon")

@@ -72,3 +72,25 @@ def reference_origins(marker_start: str, marker_end: str):
     seg = src[src.index(marker_start):src.index(marker_end)]
     pts = re.findall(r"Point::new_unchecked\(([0-9.]+), ([0-9.]+), 0.0\)", seg)
     return [(float(a), float(b)) for a, b in pts]
+
+
+def max_method_bytes(build) -> int:
+    """Bytecode size of the largest whole-stage-codegen method in the
+    executed plan of ``build()``, planned with AQE off so the codegen
+    stages are in the plan.  HotSpot never JIT-compiles a method over
+    8,000 bytes, so a stage above that runs interpreted; a stage that
+    fails to compile (size -1) runs interpreted too and fails here."""
+    from pyspark.sql import SparkSession
+
+    spark = SparkSession.getActiveSession()
+    dbg = getattr(getattr(spark._jvm.org.apache.spark.sql.execution.debug, "package$"),
+                  "MODULE$")
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        seq = dbg.codegenStringSeq(build()._jdf.queryExecution().executedPlan())
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    sizes = [seq.apply(i)._3().maxMethodCodeSize() for i in range(seq.size())]
+    assert sizes and min(sizes) >= 0, sizes
+    return max(sizes)

@@ -1,6 +1,7 @@
-"""Degree-minute-second scalar functions (reference dms.rs).
-
-Vectorized numpy kernels plus pandas-UDF wrappers.  Semantics pinned:
+"""Degree-minute-second scalar reference (reference dms.rs): the
+functions the pure-Column DMS parser and formatter
+(``jgdtrans_rs_spark/functions/columns.py``) are checked against.
+Semantics pinned:
 
 * ``dms_to_degree`` — dms.rs:513-522: ``(min*(1/60) + deg) +
   (sec+fract)*(1/3600)`` non-fma order, sign applied last.
@@ -14,9 +15,6 @@ Vectorized numpy kernels plus pandas-UDF wrappers.  Semantics pinned:
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
 
 
 def dms_to_degree_np(sign: np.ndarray, degree: np.ndarray, minute: np.ndarray,
@@ -144,14 +142,3 @@ def format_dms_scalar(value: float, alternate: bool = False) -> str | None:
     else:
         body = f"{deg}{minute:02d}{sec:02d}{fs}"
     return ("-" if sign < 0 else "") + body
-
-
-@F.pandas_udf(StringType())
-def degree_to_dms_udf(v: pd.Series) -> pd.Series:
-    """Compact DMS formatting.  Inherently per-row at the final string
-    assembly: Rust's ``{}`` Display emits the shortest round-trip
-    positional decimal, which no Spark string builtin reproduces
-    (CAST(double AS STRING) switches to scientific notation below
-    1e-3).  Not a hot-path function — formatting is for human output."""
-    return v.map(lambda x: format_dms_scalar(x) if x == x else None)
-

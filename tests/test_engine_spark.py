@@ -1,6 +1,7 @@
 """Spark-layer end-to-end tests: entry pipeline, extraction invariant,
 DataFrame kernels vs numpy, spatial operators, checkpoint/resume."""
 
+import itertools
 import os
 import re
 
@@ -14,7 +15,7 @@ from jgdtrans_rs_spark.operators import spatial
 from jgdtrans_rs_spark.plans import oracle
 from jgdtrans_rs_spark.sources import pages as pages_src
 from jgdtrans_rs_spark.sources import sink
-from tests.conftest import SF_TINY
+from tests.conftest import SF_TINY, max_method_bytes
 
 
 @pytest.fixture(scope="module")
@@ -135,33 +136,124 @@ def _star(n: int, lat: float, lon: float, r_in: float, r_out: float):
     return [(float(a), float(b)) for a, b in zip(lat + r * np.sin(t), lon + r * np.cos(t))]
 
 
+def _ulp_quad(lat0: float, lon0: float):
+    """A quadrilateral whose vertices sit 1 ulp off unit-1 mesh nodes,
+    so their literals need 16-17 significant digits; two of its edges
+    are 2 ulps short of horizontal."""
+    up, dn = np.inf, -np.inf
+    nodes = [(lat0, lon0, up, dn), (lat0, lon0 + 3 / 80, dn, up),
+             (lat0 + 3 / 120, lon0 + 2 / 80, up, dn), (lat0 + 3 / 120, lon0, dn, up)]
+    return [(float(np.nextafter(a, da)), float(np.nextafter(b, db))) for a, b, da, db in nodes]
+
+
+def _edge_points(ring, rng, n: int = 400):
+    """n points on the ring's edges (on the crossing formula's
+    intercept where the edge is not horizontal), each with its 8
+    neighbours 1 ulp off in lat and/or lon."""
+    r = np.asarray(ring)
+    i = rng.integers(len(ring), size=n)
+    (y1, x1), (y2, x2) = r[i].T, r[(i + 1) % len(ring)].T
+    t = rng.uniform(0.0, 1.0, n)
+    lat = y1 + t * (y2 - y1)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        lon = np.where(y1 == y2, x1 + t * (x2 - x1), (x2 - x1) * (lat - y1) / (y2 - y1) + x1)
+    steps = (lambda v: np.nextafter(v, -np.inf), lambda v: v, lambda v: np.nextafter(v, np.inf))
+    return (np.concatenate([f(lat) for f in steps for _ in steps]),
+            np.concatenate([g(lon) for _ in steps for g in steps]))
+
+
 @pytest.mark.parametrize("ring,unit", [
     # mesh-aligned unit-1 rectangle: the bbox float sampling of the
     # cover used to land on cell boundaries and drop a third of its cells
     ([(37.68333333333333, 132.1125), (37.68333333333333, 132.1875),
       (37.74166666666666, 132.1875), (37.74166666666666, 132.1125)], 1),
-    # 600 edges: past the 512-edge Column bound, so the refine runs
-    # the pandas fallback
+    # 600 edges in one ring
     (_star(600, 36.1, 140.1, 0.05, 0.09), 5),
-], ids=["aligned_rect_unit1", "star600_fallback"])
+    # vertices 1 ulp off mesh nodes: the edge literals must carry every
+    # significant digit
+    (_ulp_quad(36 + 5 / 120, 140 + 3 / 80), 1),
+], ids=["aligned_rect_unit1", "star600", "ulp_quad_unit1"])
 def test_salted_join_equals_broadcast_on_edge_rings(spark, ring, unit):
     """bucketed_spatial_join returns exactly point_in_polygon's hits on
-    rings that stress the cell cover and the large-ring refine."""
+    rings that stress the cell cover and the refine, over uniform
+    points plus points on the edges and 1 ulp off them, with no Python
+    stage in its plan."""
     import pandas as pd
     from jgdtrans_rs_spark import mesh
 
     rng = np.random.default_rng(7)
     la0, la1 = min(p[0] for p in ring), max(p[0] for p in ring)
     lo0, lo1 = min(p[1] for p in ring), max(p[1] for p in ring)
-    la, lo = rng.uniform(la0, la1, 3000), rng.uniform(lo0, lo1, 3000)
+    e_la, e_lo = _edge_points(ring, rng)
+    la = np.concatenate([rng.uniform(la0, la1, 3000), e_la])
+    lo = np.concatenate([rng.uniform(lo0, lo1, 3000), e_lo])
     lat_d, lon_d, _ = mesh.point_to_digits(la, lo, unit)
     pts = spark.createDataFrame(pd.DataFrame({
         "pkey": np.arange(la.size), "lat": la, "lon": lo,
         "meshcode": mesh.digits_to_meshcode(lat_d, lon_d)}))
     polys = [("p", ring)]
     want = {tuple(r) for r in spatial.point_in_polygon(pts, polys).collect()}
-    got = {tuple(r) for r in spatial.bucketed_spatial_join(pts, polys, unit).collect()}
+    out = spatial.bucketed_spatial_join(pts, polys, unit)
+    assert "Python" not in out._jdf.queryExecution().executedPlan().toString()
+    got = {tuple(r) for r in out.collect()}
     assert got == want and len(want) > 1000
+
+
+@pytest.mark.parametrize("n_polys", [2, 8, 47], ids=["16_edges", "64_edges", "376_edges"])
+def test_bucketed_join_method_size_flat_in_edges(spark, n_polys):
+    """The refine's generated code does not grow with the polygons:
+    over 1,000 tiled points its largest method stays under HotSpot's
+    8,000-byte JIT limit at the pages_pipeline shape (8 octagons) and
+    the national one (47), with no Python stage and the numpy
+    kernel's hits."""
+    import pandas as pd
+    from jgdtrans_rs_spark import mesh
+
+    polys = [(f"p{k}", _star(8, 36.0 + 0.1 * (k // 8), 140.0 + 0.1 * (k % 8), 0.03, 0.06))
+             for k in range(n_polys)]
+    rng = np.random.default_rng(5)
+    la = rng.uniform(35.95, 36.05 + 0.1 * ((n_polys - 1) // 8), 1000)
+    lo = rng.uniform(139.95, 140.05 + 0.1 * min(n_polys - 1, 7), 1000)
+    lat_d, lon_d, _ = mesh.point_to_digits(la, lo, 5)
+    pts = spark.createDataFrame(pd.DataFrame({
+        "pkey": np.arange(la.size), "lat": la, "lon": lo,
+        "meshcode": mesh.digits_to_meshcode(lat_d, lon_d)}))
+    assert max_method_bytes(lambda: spatial.bucketed_spatial_join(pts, polys, 5)) < 8000
+    out = spatial.bucketed_spatial_join(pts, polys, 5)
+    assert "Python" not in out._jdf.queryExecution().executedPlan().toString()
+    got = {tuple(r) for r in out.collect()}
+    assert got == {tuple(r) for r in spatial.point_in_polygon(pts, polys).collect()}
+    assert len(got) > 50
+
+
+def test_refine_pairs_matches_numpy_crossings_on_extreme_vertices(spark):
+    """The literal edge array carries every vertex bit for bit and the
+    fold computes ``_crossings``' float64 formula: vertices at -0.0,
+    5e-324 and 1e+300, a ring of horizontal edges only (a typed empty
+    edge array) and an edge whose x2 - x1 overflows to inf (its
+    intercept is +inf).  Where that overflow meets lat == y1 the
+    intercept is inf * 0 = NaN, which Spark (and DuckDB) rank above
+    every double and numpy compares false; no point here sits there."""
+    rings = [
+        [(-0.0, 0.0), (1.0, -0.0), (1.0, 1.0), (5e-324, 1.0)],
+        [(0.25, -1e308), (1.25, 1e308), (2.0, 0.0)],
+        [(3.0, 0.0), (3.0, 1.0), (3.0, 2.0)],
+        [(1e300, -1e300), (-1e300, 0.0), (0.0, 1e300)],
+    ]
+    lats = [-0.0, 0.0, 5e-324, 1e-300, 0.5, 0.75, 1.0, 1.5, 3.0, 1e299, -5e299]
+    lons = [-0.0, 0.0, 5e-324, 0.5, 1.0, 2.0, -1e307, 1e307, 1e298]
+    rows = [(k, la, lo, i, f"r{i}") for k, (la, lo, i) in
+            enumerate(itertools.product(lats, lons, range(len(rings))))]
+    pairs = spark.createDataFrame(
+        rows, "pkey long, lat double, lon double, poly_idx int, poly_id string")
+    got = {r.pkey for r in spatial.refine_pairs(pairs, rings, "pkey", "lat", "lon").collect()}
+    key, la, lo, idx = (np.array(c) for c in list(zip(*rows))[:4])
+    want = set()
+    with np.errstate(over="ignore", invalid="ignore"):
+        for i, ring in enumerate(rings):
+            m = idx == i
+            want |= set(key[m][spatial._crossings(la[m], lo[m], ring) == 1].tolist())
+    assert got == want and len(want) > 50
 
 
 def test_knn_spark_matches_numpy_kernel(points):
@@ -332,7 +424,7 @@ def test_dms_column_parser_matches_scalar(spark):
 
     from pyspark.sql import functions as F
 
-    from jgdtrans_rs_spark import dms
+    from tests import dms_reference as dms
     from jgdtrans_rs_spark.functions import columns as C
 
     corpus = [

@@ -4,8 +4,9 @@ import numpy as np
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
-from jgdtrans_rs_spark import dms, kernel, mesh
+from jgdtrans_rs_spark import kernel, mesh
 from jgdtrans_rs_spark.grid import MeshGrid
+from tests import dms_reference as dms
 from tests.conftest import SEMIDYNA
 
 finite_angle = st.floats(allow_nan=False, allow_infinity=False,

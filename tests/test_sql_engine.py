@@ -11,7 +11,7 @@ from jgdtrans_rs_spark.engine import Engine
 from jgdtrans_rs_spark.plans import oracle
 from jgdtrans_rs_spark.plans.spark_sql import SqlEngine
 
-from tests.conftest import SF_TINY
+from tests.conftest import SF_SMALL, SF_TINY, max_method_bytes
 
 
 @pytest.fixture(scope="module")
@@ -103,20 +103,12 @@ def test_transform_pip_jvm_only_and_matches_arrow_chain(engines, pts):
     assert re.search(r"LocalTableScan \[poly_idx#\d+, poly_id#\d+, lat_min#", plan), plan
     assert "InMemory" not in plan and "Union" not in plan, plan
     assert "Python" not in plan, plan
-    # HotSpot never JIT-compiles a method over 8,000 bytes of bytecode;
-    # the struct + null-tolerant bbox guards in transform_pip keep the
-    # fused forward + join + refine stage under it
-    dbg = getattr(getattr(spark._jvm.org.apache.spark.sql.execution.debug, "package$"),
-                  "MODULE$")
-    aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")  # codegen stages in the plan
-    try:
-        seq = dbg.codegenStringSeq(sql_eng.transform_pip(src, entry_mod.POLYGONS)
-                                   ._jdf.queryExecution().executedPlan())
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    sizes = [seq.apply(i)._3().maxMethodCodeSize() for i in range(seq.size())]
-    assert sizes and max(sizes) < 8000, sizes
+    # under HotSpot's 8,000-byte JIT limit on this input and on the one
+    # the fused_pip_sqlonly query feeds it (sf0.01 contract points)
+    assert max_method_bytes(lambda: sql_eng.transform_pip(src, entry_mod.POLYGONS)) < 8000
+    spark.read.parquet(f"{SF_SMALL}/orders.parquet").createOrReplaceTempView("orders_small")
+    assert max_method_bytes(lambda: sql_eng.transform_pip(
+        spark.sql(oracle.points_sql("orders_small")), entry_mod.POLYGONS)) < 8000
     got = {(r.pkey, r.poly_id) for r in out.collect()}
 
     fwd = eng.forward(pts, "lat", "lon", None).filter(F.col("status") == 0)
@@ -125,10 +117,9 @@ def test_transform_pip_jvm_only_and_matches_arrow_chain(engines, pts):
     assert got == want and len(got) > 0
 
 
-def test_transform_pip_large_ring_falls_back(spark, engines):
-    """Past 512 edges the Column refine would overflow the JVM stack;
-    transform_pip takes the shared pandas fallback and still returns
-    exactly the Arrow chain's hits."""
+def test_transform_pip_large_ring_stays_jvm_only(spark, engines):
+    """A 600-edge ring keeps the plan free of Python stages, and
+    transform_pip still returns exactly the Arrow chain's hits."""
     import pandas as pd
     from pyspark.sql import functions as F
     from jgdtrans_rs_spark.operators import spatial
@@ -144,7 +135,7 @@ def test_transform_pip_large_ring_falls_back(spark, engines):
         "lon": rng.uniform(140.079, 140.109, 3000), "alt": np.zeros(3000)}))
     polys = [("star", ring)]
     out = sql_eng.transform_pip(pts, polys)
-    assert "ArrowEvalPython" in out._jdf.queryExecution().executedPlan().toString()
+    assert "Python" not in out._jdf.queryExecution().executedPlan().toString()
     got = {(r.pkey, r.poly_id) for r in out.collect()}
     fwd = eng.forward(pts).filter(F.col("status") == 0)
     want = {(r.pkey, r.poly_id) for r in spatial.point_in_polygon(
