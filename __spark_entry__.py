@@ -244,15 +244,14 @@ def _q_knn(spark, sf_dir):
 def _q_pip_spatial(spark, sf_dir):
     """BOTH point-in-polygon join strategies under one oracle row
     (round-4 consolidation — they shared an identical oracle): the
-    broadcast bit-mask path and the meshcode-bucketed path (candidates
-    broadcast, refined in codegen), tagged by a ``method`` column
-    whose ``"salted"`` value is kept as hashed data; each must
+    broadcast bit-mask path and the JVM bounding-box path (box
+    candidates broadcast, refined in the JVM), tagged by a ``method``
+    column whose ``"salted"`` value is kept as hashed data; each must
     reproduce the crossing-number oracle exactly."""
     pts = _points(spark, sf_dir)
     b = spatial.point_in_polygon(pts, POLYGONS).withColumn(
         "method", F.lit("broadcast"))
-    tiled = _engine(spark).assign_tiles(pts)
-    s = spatial.bucketed_spatial_join(tiled, POLYGONS, _UNIT).withColumn(
+    s = spatial.bucketed_spatial_join(pts, POLYGONS).withColumn(
         "method", F.lit("salted"))
     return b.unionByName(s)
 

@@ -334,9 +334,10 @@ class Engine:
         on this box (BENCH/BASELINE.md), so pruning here is worth
         more than pruning after any JVM operator.
 
-        This is the 100 TB plan when the polygon side fits a broadcast:
-        zero shuffles, one Python stage.  Use
-        operators.spatial.bucketed_spatial_join when it doesn't.
+        This is the 100 TB plan for up to 63 polygons: zero shuffles,
+        one Python stage.  operators.spatial.bucketed_spatial_join
+        takes more, with no Python stage of its own; its box test costs
+        points x polygons and is benchmarked with at most 8 polygons.
         """
         return self._forward_tiled(df, lat, lon, alt, level, fields,
                                    spatial.polygon_mask(polygons))

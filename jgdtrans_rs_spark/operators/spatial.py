@@ -1,5 +1,5 @@
-"""Spatial operators: point-in-polygon, meshcode-bucketed spatial join,
-kNN over mesh nodes.
+"""Spatial operators: point-in-polygon, broadcast bounding-box spatial
+join, kNN over mesh nodes.
 
 The reference has no joins beyond its 4-corner HashMap probe
 (trans.rs:34-53); these operators are the north-rule additions, with
@@ -9,21 +9,20 @@ Scale design:
 
 * Containment is decided here only: one crossing-number formula per
   backend (``_crossings`` numpy, ``refine_pairs`` Spark SQL), from
-  scratch, no shapely.  ``point_in_polygon`` is the broadcast path: a
-  63-bit numpy mask (``polygon_mask``) in a scalar pandas UDF, one
-  narrow stage, no shuffle, expanded by one bit-test join
-  (``poly_mask_rows``).  The JVM paths refine broadcast candidate
-  pairs with ``refine_pairs``: a fold over the candidate's ring, held
-  as a literal edge array, so the refine stays in the JVM at any edge
-  count.  A non-finite vertex raises: numpy compares NaN false and
-  Spark sorts it above every double, so the backends would disagree
-  on it.
-* ``bucketed_spatial_join`` — the path for large polygon sets:
-  polygons are exploded onto the meshcodes their bbox covers, the
-  candidates are broadcast and joined on the tile column, and
-  ``refine_pairs`` keeps the pairs inside the ring.  No shuffle, so a
-  dense cell has no reducer to overload.  Output is a set of
-  (key, poly_id) pairs, identical across parallelism levels.
+  scratch, no shapely, each behind the same closed-bbox prefilter.
+  ``point_in_polygon`` is the broadcast path: a 63-bit numpy mask
+  (``polygon_mask``) in a scalar pandas UDF, one narrow stage, no
+  shuffle, expanded by one bit-test join (``poly_mask_rows``).  A
+  non-finite vertex raises: numpy compares NaN false and Spark sorts
+  it above every double, so the backends would disagree on it.
+* ``bucketed_spatial_join`` — the JVM path, also the containment step
+  of ``SqlEngine.transform_pip``: the points nested-loop-join a
+  broadcast LocalRelation of polygon bounding boxes and
+  ``refine_pairs`` keeps the pairs inside the ring, a fold over the
+  candidate's ring held as a literal edge array, so the refine stays
+  in the JVM at any edge count.  No shuffle, so a dense cell has no
+  reducer to overload.  Output is a set of (key, poly_id) pairs,
+  identical across parallelism levels.
 * ``knn_mesh_nodes`` — for a point inside a rectangular lattice cell
   the 4 nearest nodes are exactly the cell corners, so the candidate
   set is local: compute 4 distances per point in the batch kernel and
@@ -68,19 +67,23 @@ def _bbox(ring: list[tuple[float, float]]) -> tuple[float, float, float, float]:
 def _crossings(lat: np.ndarray, lon: np.ndarray, ring: list[tuple[float, float]]) -> np.ndarray:
     """Crossing-number parity, edge formula pinned to the SQL oracle
     (plans/oracle.py::point_in_polygon_sql): for each edge,
-    ((y1 > lat) != (y2 > lat)) and lon < (x2-x1)*(lat-y1)/(y2-y1)+x1."""
-    inside = np.zeros(lat.shape[0], dtype=np.int64)
+    ((y1 > lat) != (y2 > lat)) and lon < (x2-x1)*(lat-y1)/(y2-y1)+x1.
+    The test is written ``~(lon >= x)``: a NaN intercept (a vertex
+    difference overflowed to inf, times 0 or over inf) then ranks above
+    every double, as in Spark and DuckDB.  Callers' bbox prefilter never
+    passes a NaN ``lon``.  The parity is a bool XOR (True = inside): an
+    int64 count and ``% 2`` took 1.3-2x as long on 100k lanes."""
+    inside = np.zeros(lat.shape[0], dtype=bool)
     n = len(ring)
-    for i in range(n):
-        y1, x1 = ring[i]
-        y2, x2 = ring[(i + 1) % n]
-        if y1 == y2:
-            continue  # horizontal edge never crosses the test ray
-        cross = ((y1 > lat) != (y2 > lat)) & (
-            lon < (x2 - x1) * (lat - y1) / (y2 - y1) + x1
-        )
-        inside += cross
-    return inside % 2
+    with np.errstate(over="ignore", invalid="ignore"):
+        for i in range(n):
+            y1, x1 = ring[i]
+            y2, x2 = ring[(i + 1) % n]
+            if y1 == y2:
+                continue  # horizontal edge never crosses the test ray
+            inside ^= ((y1 > lat) != (y2 > lat)) & ~(
+                lon >= (x2 - x1) * (lat - y1) / (y2 - y1) + x1)
+    return inside
 
 
 _EDGE = "struct<y1: double, x1: double, y2: double, x2: double>"
@@ -138,7 +141,8 @@ def polygon_mask(polygons: Sequence[Polygon]):
     test.  Pure vectorized numpy: a per-row index array in place of
     the mask cost a Python loop over every row (~70 s of q4's 82 s at
     18M rows) plus the Arrow list writer.  >63 polygons raises: use
-    bucketed_spatial_join for large polygon sets."""
+    bucketed_spatial_join for large polygon sets, whose box test costs
+    points x polygons and is benchmarked with at most 8 polygons."""
     if len(polygons) > 63:
         raise ValueError(
             f"{len(polygons)} polygons exceed the 63-bit containment mask; "
@@ -151,7 +155,7 @@ def polygon_mask(polygons: Sequence[Polygon]):
             cand = (la >= la0) & (la <= la1) & (lo >= lo0) & (lo <= lo1)
             if cand.any():
                 h = np.zeros(la.shape[0], dtype=bool)
-                h[cand] = _crossings(la[cand], lo[cand], ring) == 1
+                h[cand] = _crossings(la[cand], lo[cand], ring)
                 out |= h.astype(np.int64) << i
         return out
 
@@ -199,84 +203,57 @@ def point_in_polygon(df: DataFrame, polygons: Sequence[Polygon],
     return poly_mask_rows(masked, polygons, "_pmask", how="inner").select(key, "poly_id")
 
 
-# largest latitude / longitude whose cell point_to_digits accepts
-_LAT_TOP = 66.66666666666666
-_LON_TOP = float(np.nextafter(180.0, 0.0))
-
-
-def polygon_mesh_cover(polygons: Sequence[Polygon], unit: int) -> list[tuple[int, str]]:
-    """Explode each polygon's bbox onto the meshcodes it covers:
-    (meshcode, poly_id) candidate pairs for the bucketed join.
-
-    Every cell between the cells of the bbox's SW and NE corners is
-    enumerated in digit space, widened by one cell on each side: the
-    ulp-parity bump of ``mesh.point_to_digits`` is not monotone within
-    an ulp of a cell boundary, so a point just inside the bbox may sit
-    in the cell next to its corner's.  (Float samples of the bbox land
-    on cell boundaries and drop cells.)"""
-    out: list[tuple[int, str]] = []
-    for pid, ring in polygons:
-        la0, la1, lo0, lo1 = _bbox(ring)
-        if la1 < 0.0 or la0 > _LAT_TOP or lo1 < 100.0 or lo0 > _LON_TOP:
-            continue  # no point of the bbox has a cell
-        lat_d, lon_d, _ = mesh.point_to_digits(
-            np.clip([la0, la1], 0.0, _LAT_TOP), np.clip([lo0, lo1], 100.0, _LON_TOP), unit)
-        # axis position first*80 + second*10 + third: adjacent cells are
-        # `unit` apart, so -unit/+unit is next_south/next_north (west/
-        # east); lat digits stop at (99, 7, x), lon at the (80, 0, 0) node
-        axes = []
-        for (f, sec, t), top in ((lat_d, 99 * 80 + 79), (lon_d, 80 * 80)):
-            i = f * 80 + sec * 10 + t
-            axes.append(np.arange(max(i[0] - unit, 0), min(i[1] + unit, top) + 1, unit))
-        gl, gn = (g.ravel() for g in np.meshgrid(*axes, indexing="ij"))
-        codes = mesh.digits_to_meshcode((gl // 80, gl % 80 // 10, gl % 10),
-                                        (gn // 80, gn % 80 // 10, gn % 10))
-        out.extend((int(c), pid) for c in codes)
-    return out
-
-
-def bucketed_spatial_join(points: DataFrame, polygons: Sequence[Polygon], unit: int,
+def bucketed_spatial_join(points: DataFrame, polygons: Sequence[Polygon], unit: int | None = None,
                           key: str = "pkey", lat: str = "lat", lon: str = "lon",
                           mesh_col: str = "meshcode",
                           hot_threshold: int = 50_000, num_salts: int = 16,
                           hot_codes: Sequence[int] | None = None) -> DataFrame:
-    """Meshcode-bucketed spatial join: candidates broadcast, refined by
+    """Broadcast bounding-box spatial join -> (key, poly_id) pairs: the
+    candidate step of both JVM containment paths, refined by
     ``refine_pairs``.
 
-    points must carry a ``mesh_col`` tile column (engine.assign_tiles /
-    transform_and_tile).  The polygon cover ships as one broadcast
-    LocalRelation (localrel.py) joined on ``mesh_col`` alone: a
-    BroadcastHashJoin reads ``points`` once and shuffles nothing, so a
-    dense cell has no reducer to overload.  Output rows are
-    (key, poly_id), independent of parallelism.
+    The polygons' bounding boxes ship as one broadcast LocalRelation
+    (localrel.py), nested-loop-joined on the closed-box test that
+    ``polygon_mask`` prefilters with, so every point, inside the JGD
+    mesh domain or not, gets ``point_in_polygon``'s verdict.
+    ``points`` is read once and nothing is shuffled, so a dense cell
+    has no reducer to overload.  Output rows are independent of
+    parallelism.  Every point is box-tested against every polygon, so
+    the cost grows with points x polygons; the benchmarks run it with
+    at most 8 polygons.
 
-    ``hot_threshold``, ``num_salts`` and ``hot_codes`` are accepted and
-    ignored; they remain for callers written against the salted join.
+    ``unit``, ``mesh_col``, ``hot_threshold``, ``num_salts`` and
+    ``hot_codes`` are accepted and ignored; they remain for callers
+    written against the salted meshcode join.
     """
-    # the candidate side carries BOTH the integer ring index (the
-    # refine picks the candidate's ring with it) and the poly_id
-    # string, so no name-reattach join is needed after the refine
-    pid_to_idx = {pid: i for i, (pid, _) in enumerate(polygons)}
-    if len(pid_to_idx) != len(polygons):
-        # a duplicate id would silently collapse onto ONE ring here
-        # (last wins) while point_in_polygon bit-masks each entry
-        # separately — the two strategies would return different rows
-        # for identical input; fail loudly instead
+    if len({pid for pid, _ in polygons}) != len(polygons):
+        # the (key, poly_id) output could not tell two rings with one
+        # id apart; fail loudly instead
         raise ValueError("bucketed_spatial_join: duplicate poly_id in "
                          "polygons — ids must be unique")
-    rings = _float_rings(polygons)  # validates before the cover reads the rings
-    cover = polygon_mesh_cover(polygons, unit)
-    if not cover:
-        # schema derived from the points frame so the empty result
-        # unions cleanly with the non-empty path whatever the key type
-        return points.select(key).limit(0).withColumn(
-            "poly_id", F.lit(None).cast("string"))
-    cand = local_rows_df(
+    rings = _float_rings(polygons)
+    boxes = local_rows_df(
         points.sparkSession,
-        [(c, pid_to_idx[p], p) for c, p in cover],
-        schema=f"{mesh_col} long, poly_idx int, poly_id string",
+        [(i, pid, *_bbox(ring)) for i, ((pid, _), ring) in enumerate(zip(polygons, rings))],
+        schema="poly_idx int, poly_id string, lat_min double, lat_max double, "
+               "lon_min double, lon_max double",
     )
-    return refine_pairs(points.join(F.broadcast(cand), mesh_col), rings, key, lat, lon)
+    # The box test is null-tolerant, so Catalyst infers no
+    # isnotnull(lat) to push below an upstream transform as a copy of
+    # the transform expression.  With that copy the fused stage of
+    # SqlEngine.transform_pip read a 22,551-byte largest generated
+    # method on the contract's sf0.01 points (7,853 without), past
+    # HotSpot's 8,000-byte JIT limit: the stage would run interpreted.
+    la, lo = F.col(lat), F.col(lon)
+    in_box = ((la >= F.col("lat_min")) & (la <= F.col("lat_max"))
+              & (lo >= F.col("lon_min")) & (lo <= F.col("lon_max")))
+    # A filter, not a join condition: Catalyst folds it and then the
+    # refine's filter into the join condition in that order, so the
+    # interpreted fold runs on box candidates only.  Under a join
+    # condition the refine's filter lands in front of it and the fold
+    # runs on every (point, polygon) pair.
+    pairs = points.crossJoin(F.broadcast(boxes)).filter(F.coalesce(in_box, F.lit(False)))
+    return refine_pairs(pairs, rings, key, lat, lon)
 
 
 def knn_candidate_rows_cols(lat_d, lon_d, unit: int):

@@ -22,9 +22,8 @@ Arrow kernel path on the fixture inputs.
 The parameter grid rides a broadcast-hinted temp view — the SQL twin
 of the engine's ``sc.broadcast`` HashMap probe (par.rs:283-285): four
 broadcast-hash joins, no shuffle.  ``transform_pip`` decides
-containment as ``operators.spatial.bucketed_spatial_join`` does:
-broadcast candidate pairs (here a bounding-box nested-loop join), then
-the shared ``spatial.refine_pairs`` step, which keeps the plan
+containment with ``operators.spatial.bucketed_spatial_join`` (a
+broadcast bounding-box join, then ``refine_pairs``), so the plan stays
 JVM-only at any polygon edge count.
 """
 
@@ -125,30 +124,11 @@ class SqlEngine:
         Python workers — whole-stage codegen end to end, so it rides
         the JVM scaling curve instead of the Arrow channel.
 
-        The same two steps as ``operators.spatial.bucketed_spatial_join``:
-        the transformed OK points nested-loop-join a broadcast
-        LocalRelation of polygon bounding boxes, and
-        ``spatial.refine_pairs`` keeps the pairs inside the ring (the
-        DuckDB oracle's edge formula in the same float64 op order).
-        Any number of polygons and edges, with no Python stage."""
-        rings = spatial._float_rings(polygons)
-        boxes = local_rows_df(
-            self.spark,
-            [(i, pid, *spatial._bbox(ring))
-             for i, ((pid, _), ring) in enumerate(zip(polygons, rings))],
-            schema="poly_idx int, poly_id string, lat_min double, lat_max double, "
-                   "lon_min double, lon_max double",
-        )
-        # The bbox test is null-tolerant, so Catalyst infers no
-        # isnotnull(lat) to push below the transform as a copy of the
-        # transform expression.  With that copy the fused stage's
-        # largest generated method read 22,551 bytes on the contract's
-        # sf0.01 points (7,853 without), past HotSpot's 8,000-byte JIT
-        # limit: the stage would run interpreted.
+        Containment is ``operators.spatial.bucketed_spatial_join`` over
+        the transformed OK points: a broadcast bounding-box join, then
+        ``spatial.refine_pairs`` (the DuckDB oracle's edge formula in
+        the same float64 op order).  Any number of polygons and edges,
+        with no Python stage."""
         pts = self.forward(df, key).filter(F.col("status") == 0).select(
             key, F.col("out_lat").alias("lat"), F.col("out_lon").alias("lon"))
-        lat, lon = F.col("lat"), F.col("lon")
-        in_box = ((lat >= F.col("lat_min")) & (lat <= F.col("lat_max"))
-                  & (lon >= F.col("lon_min")) & (lon <= F.col("lon_max")))
-        pairs = pts.join(F.broadcast(boxes), F.coalesce(in_box, F.lit(False)))
-        return spatial.refine_pairs(pairs, rings, key, "lat", "lon")
+        return spatial.bucketed_spatial_join(pts, polygons, key=key)

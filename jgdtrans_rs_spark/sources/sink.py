@@ -116,8 +116,8 @@ def hot_codes_from_manifests(out_dir: str, spark: SparkSession | None = None,
     data.  Codes whose recorded count exceeds ``threshold`` are
     returned sorted; -1 (untiled/error rows) is never a tile and is
     excluded.  ``spatial.bucketed_spatial_join`` still accepts the
-    result as ``hot_codes`` and ignores it: its candidates are
-    broadcast, so a dense cell has no reducer to overload.
+    result as ``hot_codes`` and ignores it: it broadcasts the polygons'
+    bounding boxes, so a dense cell has no reducer to overload.
 
     The manifests record only the ``TOP_TILES`` most populous tiles per
     group, and that cap must not be silent: a group's hidden tiles all

@@ -172,12 +172,20 @@ def _edge_points(ring, rng, n: int = 400):
     # vertices 1 ulp off mesh nodes: the edge literals must carry every
     # significant digit
     (_ulp_quad(36 + 5 / 120, 140 + 3 / 80), 1),
-], ids=["aligned_rect_unit1", "star600", "ulp_quad_unit1"])
+    # rings across the JGD mesh domain's west and south edges, and one
+    # wholly outside it: the hits outside the domain have no mesh cell
+    (_star(16, 36.1, 100.0, 0.03, 0.06), 5),
+    (_star(16, 0.0, 140.1, 0.03, 0.06), 5),
+    (_star(16, 70.0, 50.0, 0.03, 0.06), 5),
+], ids=["aligned_rect_unit1", "star600", "ulp_quad_unit1",
+        "lon100_straddle", "lat0_straddle", "outside_domain"])
 def test_salted_join_equals_broadcast_on_edge_rings(spark, ring, unit):
     """bucketed_spatial_join returns exactly point_in_polygon's hits on
-    rings that stress the cell cover and the refine, over uniform
+    rings that stress the candidate step and the refine, over uniform
     points plus points on the edges and 1 ulp off them, with no Python
-    stage in its plan."""
+    stage in its plan.  The points carry the meshcode column
+    ``Engine.assign_tiles`` gives them (-1 outside the mesh domain),
+    which the join does not read."""
     import pandas as pd
     from jgdtrans_rs_spark import mesh
 
@@ -187,10 +195,10 @@ def test_salted_join_equals_broadcast_on_edge_rings(spark, ring, unit):
     e_la, e_lo = _edge_points(ring, rng)
     la = np.concatenate([rng.uniform(la0, la1, 3000), e_la])
     lo = np.concatenate([rng.uniform(lo0, lo1, 3000), e_lo])
-    lat_d, lon_d, _ = mesh.point_to_digits(la, lo, unit)
+    lat_d, lon_d, valid = mesh.point_to_digits(la, lo, unit)
     pts = spark.createDataFrame(pd.DataFrame({
         "pkey": np.arange(la.size), "lat": la, "lon": lo,
-        "meshcode": mesh.digits_to_meshcode(lat_d, lon_d)}))
+        "meshcode": np.where(valid, mesh.digits_to_meshcode(lat_d, lon_d), -1)}))
     polys = [("p", ring)]
     want = {tuple(r) for r in spatial.point_in_polygon(pts, polys).collect()}
     out = spatial.bucketed_spatial_join(pts, polys, unit)
@@ -226,16 +234,20 @@ def test_bucketed_join_method_size_flat_in_edges(spark, n_polys):
     assert len(got) > 50
 
 
+@pytest.mark.filterwarnings("error::RuntimeWarning")
 def test_refine_pairs_matches_numpy_crossings_on_extreme_vertices(spark):
     """The literal edge array carries every vertex bit for bit and the
     fold computes ``_crossings``' float64 formula: vertices at -0.0,
     5e-324 and 1e+300, a ring of horizontal edges only (a typed empty
     edge array) and an edge whose x2 - x1 overflows to inf (its
-    intercept is +inf).  Where that overflow meets lat == y1 the
-    intercept is inf * 0 = NaN, which Spark (and DuckDB) rank above
-    every double and numpy compares false; no point here sits there."""
+    intercept is +inf).  Where that overflow meets lat == y1 (the
+    point (0.0, 0.5) of the second ring) the intercept is
+    inf * 0 = NaN, which Spark and ``_crossings`` both rank above
+    every double, as DuckDB does, and ``_crossings`` raises no
+    RuntimeWarning on the way."""
     rings = [
         [(-0.0, 0.0), (1.0, -0.0), (1.0, 1.0), (5e-324, 1.0)],
+        [(0.0, -1e308), (1.0, 1e308), (2.0, 0.0)],
         [(0.25, -1e308), (1.25, 1e308), (2.0, 0.0)],
         [(3.0, 0.0), (3.0, 1.0), (3.0, 2.0)],
         [(1e300, -1e300), (-1e300, 0.0), (0.0, 1e300)],
@@ -249,10 +261,9 @@ def test_refine_pairs_matches_numpy_crossings_on_extreme_vertices(spark):
     got = {r.pkey for r in spatial.refine_pairs(pairs, rings, "pkey", "lat", "lon").collect()}
     key, la, lo, idx = (np.array(c) for c in list(zip(*rows))[:4])
     want = set()
-    with np.errstate(over="ignore", invalid="ignore"):
-        for i, ring in enumerate(rings):
-            m = idx == i
-            want |= set(key[m][spatial._crossings(la[m], lo[m], ring) == 1].tolist())
+    for i, ring in enumerate(rings):
+        m = idx == i
+        want |= set(key[m][spatial._crossings(la[m], lo[m], ring)].tolist())
     assert got == want and len(want) > 50
 
 
@@ -626,7 +637,7 @@ def test_salted_join_zero_extra_passes_with_stats(spark, engine, points):
     """bucketed_spatial_join consumes its input exactly ONCE (the
     broadcast join itself), with or without ``hot_codes``: no skew
     detection aggregation runs.  Counted with an accumulator inside a
-    pass-through pandas_udf on the tile column (the join keys on that
+    pass-through pandas_udf on the lat column (the box test reads that
     column, so pruning cannot skip the probe)."""
     import pandas as pd
 
@@ -638,13 +649,12 @@ def test_salted_join_zero_extra_passes_with_stats(spark, engine, points):
     def passes(hot_codes):
         acc = spark.sparkContext.accumulator(0)
 
-        @F.pandas_udf("long")
+        @F.pandas_udf("double")
         def counted(x: pd.Series) -> pd.Series:
             acc.add(len(x))
             return x
 
-        probe = tiled.withColumn(
-            "meshcode", counted.asNondeterministic()(F.col("meshcode")))
+        probe = tiled.withColumn("lat", counted.asNondeterministic()(F.col("lat")))
         rows = spatial.bucketed_spatial_join(
             probe, polys, 5, hot_codes=hot_codes).count()
         return acc.value / n, rows
@@ -770,10 +780,9 @@ def test_sink_null_meshcode_and_status_accounting(spark, tmp_path):
 
 
 def test_bucketed_join_rejects_duplicate_poly_ids(spark):
-    """pid_to_idx would silently collapse duplicate poly_ids onto one
-    ring (last wins), diverging from point_in_polygon's per-entry
-    masks on identical input — must fail loudly (round-5 review), also
-    when no polygon covers a mesh cell and the cover is empty."""
+    """Two rings with one poly_id would give (key, poly_id) rows that
+    cannot tell them apart — must fail loudly (round-5 review), also
+    for rings outside the mesh domain."""
     pts = spark.createDataFrame([(1, 36.1, 140.09, 54401005)],
                                 "pkey long, lat double, lon double, "
                                 "meshcode long")

@@ -57,7 +57,7 @@ def test_hot_call_sites_have_no_rdd_scan(spark, semidyna_grid):
     """The per-action broadcast builds the optimization targets —
     SqlEngine's grid view joins, its transform_pip bounding-box side,
     poly_mask_rows' name relation and bucketed_spatial_join's
-    candidate side — must all plan as LocalRelation builds (no
+    bounding-box side — must all plan as LocalRelation builds (no
     ExistingRDD scan = no job per build)."""
     from pyspark.sql import functions as F
 
@@ -95,9 +95,10 @@ def test_hot_call_sites_have_no_rdd_scan(spark, semidyna_grid):
     assert q4b.collect()
     plan = q4b._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" not in plan
-    # executed q4b: one broadcast hash join keyed on the tile column
-    # alone, no salt column, no shuffle exchange on the point side
-    assert re.search(r"BroadcastHashJoin \[meshcode#\d+L?\], \[meshcode#\d+L?\], Inner",
-                     plan), plan
+    # executed q4b: one broadcast nested-loop join over the bounding-box
+    # LocalRelation, its box test ahead of the refine's fold, no salt
+    # column, no shuffle exchange on the point side
+    assert re.search(r"BroadcastNestedLoopJoin BuildRight, \w+, \(coalesce\(", plan), plan
+    assert re.search(r"BroadcastExchange .*\n\s*\+- LocalTableScan \[poly_idx#", plan), plan
     assert "_salt" not in plan, plan
     assert not re.search(r"(?<!Broadcast)Exchange", plan), plan
