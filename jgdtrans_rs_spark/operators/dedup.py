@@ -86,8 +86,7 @@ def _stage(spark: SparkSession, sql: str, base_name: str) -> str:
     return _register_stage_view(spark, df, base_name)
 
 
-def minhash_lsh_pairs(spark: SparkSession, docs: str = "documents",
-                      tau_pct: int = 60) -> DataFrame:
+def minhash_lsh_pairs(spark: SparkSession, docs: str = "documents") -> DataFrame:
     """Near-duplicate pairs (doc_a, doc_b, inter_n, union_n).
 
     Staged with persisted boundaries: the shingle pipeline is computed
@@ -97,7 +96,7 @@ def minhash_lsh_pairs(spark: SparkSession, docs: str = "documents",
     """
     sints = _stage(spark, webops.minhash_sints_sql(SPARK, docs), "_mh_sints")
     sigs = _stage(spark, webops.minhash_sigs_from(SPARK, sints), "_mh_sigs")
-    return spark.sql(webops.minhash_pairs_from(SPARK, sigs, tau_pct))
+    return spark.sql(webops.minhash_pairs_from(SPARK, sigs))
 
 
 def ngram_jaccard_pairs(spark: SparkSession, docs: str = "documents",
@@ -136,18 +135,15 @@ def winnowing_fingerprints(spark: SparkSession, docs: str = "documents",
     """)
 
 
-def simhash_pairs(spark: SparkSession, docs: str = "documents",
-                  tau: int = 1) -> DataFrame:
+def simhash_pairs(spark: SparkSession, docs: str = "documents") -> DataFrame:
     """Banded-Hamming simhash pairs with the signature stage
     materialized (the 32-term signature would otherwise be recomputed
     per band reference through CTE inlining; 26 s -> ~2 s at 5k docs)."""
     sigs = _stage(spark, webops.simhash_sigs_sql(SPARK, docs), "_sh_sigs")
-    return spark.sql(webops.simhash_pairs_from(SPARK, sigs, tau))
+    return spark.sql(webops.simhash_pairs_from(SPARK, sigs))
 
 
-def dedup_incremental(spark: SparkSession, docs: str = "documents",
-                      tau_pct: int = 60, short_shingles: int = 8,
-                      band_size: int = 2) -> DataFrame:
+def dedup_incremental(spark: SparkSession, docs: str = "documents") -> DataFrame:
     """Incremental dedup (webops.dedup_incremental_sql semantics) with
     the sints and signature stages materialized: Spark re-executes a
     multi-referenced CTE per reference (PLANS.md 'Expression staging'
@@ -160,8 +156,7 @@ def dedup_incremental(spark: SparkSession, docs: str = "documents",
                    "_inc_sints")
     sigs = _stage(spark, webops.dedup_incremental_sigs_from(SPARK, sints),
                   "_inc_sigs")
-    body = webops.dedup_incremental_from(SPARK, sigs, sints, tau_pct,
-                                         short_shingles, band_size)
+    body = webops.dedup_incremental_from(SPARK, sigs, sints)
     return spark.sql(f"WITH {body.lstrip()}")
 
 

@@ -326,54 +326,31 @@ def augment_with_near_dups(df: DataFrame, every: int = 17, id_offset: int = 1_00
 def embedding_near_dup(df: DataFrame, threshold: float = 0.9,
                        dim: int | None = None, n_planes: int = 6,
                        n_tables: int = 4,
-                       vec_col: str = "embedding", id_col: str = "vec_id",
-                       hot_threshold: int = 5_000, num_salts: int = 8) -> DataFrame:
+                       vec_col: str = "embedding", id_col: str = "vec_id") -> DataFrame:
     """Embedding-cosine near-duplicate pairs (a < b) above threshold,
     candidates via multi-table LSH buckets (high-threshold pairs agree
     on most hyperplanes, so recall is high at far lower cost than the
     quadratic scan).
 
-    Skew safety: a duplicate-heavy bucket — exactly the near-dup case —
-    self-joins quadratically, so buckets larger than ``hot_threshold``
-    are salted: each left row keeps its own salt, the right side is
-    replicated across all ``num_salts``, and the join keys on
-    (table, bucket, salt).  Every pair still appears exactly once (the
-    inherent per-bucket quadratic verify work is *split* across
-    reducers, not changed), so output is identical to the unsalted
-    join.  Bucket-size detection is one aggregate over the persisted
-    signature stage.
+    A duplicate-heavy bucket — exactly the near-dup case — self-joins
+    quadratically; the bucket join is a plain equi-join on
+    (table, bucket), so under AQE Spark's skew-join handling splits an
+    oversized shuffle partition itself.
     """
-    # persisted: b feeds the hot-bucket aggregate AND both join sides
-    # (a self-join re-executes shared lineage), so caching saves two
-    # recomputes.  Cache contract in _persist_stage (unique temp view
-    # = the reclaim handle).
-    # degenerate rows (sentinel bucket -1) are dropped up front: they
-    # can never clear the cosine threshold, their (t, -1) buckets
-    # would self-join quadratically on a dirty corpus, and -1 makes
-    # the combined key below collide with table t-1's top bucket
+    # persisted: b feeds both join sides (a self-join re-executes
+    # shared lineage).  Cache contract in _persist_stage (unique temp
+    # view = the reclaim handle).  Degenerate rows (sentinel bucket -1)
+    # are dropped up front: they can never clear the cosine threshold,
+    # and their (t, -1) buckets would self-join quadratically on a
+    # dirty corpus.
     b = _persist_stage(
         signature_buckets(df, dim, n_planes, n_tables, vec_col)
         .filter(F.col("bucket") >= 0),
         "_nd_sigs")
-    # combined (table, bucket) key fits an int64: bucket < 2^n_planes
-    bkey = (F.col("table").cast("long") * (1 << n_planes) + F.col("bucket"))
-    hot = [
-        int(r["bk"]) for r in
-        b.groupBy(bkey.alias("bk")).count()
-        .filter(F.col("count") > hot_threshold).collect()
-    ]
-    is_hot = bkey.isin(hot) if hot else F.lit(False)
-    spark = df.sparkSession
-    left = b.select(F.col(id_col).alias("a"), F.col(vec_col).alias("va"), "table", "bucket",
-                    F.when(is_hot, F.pmod(F.hash(F.col(id_col)), F.lit(num_salts)))
-                    .otherwise(F.lit(0)).cast("int").alias("_salt"))
+    left = b.select(F.col(id_col).alias("a"), F.col(vec_col).alias("va"), "table", "bucket")
     right = b.select(F.col(id_col).alias("b"), F.col(vec_col).alias("vb"), "table", "bucket")
-    salts = spark.range(num_salts).select(F.col("id").cast("int").alias("_salt"))
-    right_salted = right.filter(is_hot).crossJoin(salts).unionByName(
-        right.filter(~is_hot).withColumn("_salt", F.lit(0))
-    )
     pairs = (
-        left.join(right_salted, ["table", "bucket", "_salt"])
+        left.join(right, ["table", "bucket"])
         .filter(F.col("a") < F.col("b"))
         .dropDuplicates(["a", "b"])
     )

@@ -184,95 +184,132 @@ def minhash_sigs_from(d: str, sints_rel: str) -> str:
     return f"SELECT doc_id, sints, {sig_cols} FROM {sints_rel}"
 
 
-def minhash_pairs_from(d: str, sigs_rel: str, tau_pct: int = 60) -> str:
+# ---------------------------------------------------------------------------
+# LSH band join, written once for the minhash self-join, the
+# incremental probe and the simhash self-join: one row per (doc, band),
+# a DISTINCT equi-join on the band bucket, and the exact shingle overlap
+# of each candidate pair.  Bands are rows, so the join is a pure
+# equi-join: an OR-of-bands predicate would degenerate to a nested-loop
+# join at scale.  Each builder returns WITH-body items under fixed names
+# (bands, cand, overlap) that the caller composes.
+# ---------------------------------------------------------------------------
+
+
+def _bands_cte(rel: str, bands: list[list[str]], where: str = "",
+               carry: tuple[str, ...] = ()) -> str:
+    """``bands``: (doc_id, *carry, band, k0..k{n-1}), one row per row of
+    ``rel`` passing ``where`` and per band, ``bands[b]`` holding band
+    b's key expressions."""
+    cols = "".join(f"{c}, " for c in carry)
+    cond = f" WHERE {where}" if where else ""
+    rows = " UNION ALL ".join(
+        f"SELECT doc_id, {cols}{b} AS band, "
+        + ", ".join(f"{k} AS k{j}" for j, k in enumerate(keys))
+        + f" FROM {rel}{cond}"
+        for b, keys in enumerate(bands))
+    return f"bands AS ({rows})"
+
+
+def _cand_cte(n_keys: int, pair: str, carry: tuple[str, ...] = ()) -> str:
+    """``cand``: the distinct (doc_a, *carry_a, doc_b, *carry_b) of band
+    rows ``x`` (the a side) and ``y`` that share a bucket (same band,
+    same n_keys keys) and satisfy the pair predicate ``pair``."""
+    def side(t: str, s: str) -> str:
+        return ", ".join([f"{t}.doc_id AS doc_{s}",
+                          *(f"{t}.{c} AS {c}_{s}" for c in carry)])
+
+    keys = " AND ".join(f"x.k{j} = y.k{j}" for j in range(n_keys))
+    return f"""cand AS (
+        SELECT DISTINCT {side('x', 'a')}, {side('y', 'b')}
+        FROM bands x JOIN bands y
+          ON x.band = y.band AND {keys} AND {pair}
+      )"""
+
+
+def _overlap_ctes(d: str, sints_rel: str) -> str:
+    """``overlap``: (doc_a, doc_b, inter_n, na, nb) per ``cand`` pair
+    sharing at least one shingle — the intersection and both set sizes
+    of ``sints_rel``'s distinct shingle arrays (``sints``).  The
+    dialects compute it two ways, so the oracle checks an independent
+    formula:
+
+    * DuckDB explodes every doc's shingles and COUNTs the equi-join
+      matches per candidate pair (so only pairs with a match appear).
+    * Spark joins each candidate pair back to its two materialized
+      shingle rows and takes ``size(array_intersect(...))`` in
+      whole-stage codegen, touching only candidate rows: the relational
+      form shuffled the full exploded shingle relation twice (one
+      Generate + Exchange per join side) to verify O(pairs) candidates,
+      and the r06 pass measured that verify dominating q6.  ``sints``
+      is distinct, so the size is the exact intersection; the
+      ``inter_n > 0`` guard matches the join form's semantics."""
+    if d == SPARK:
+        return f"""
+      overlap AS (
+        SELECT * FROM (
+          SELECT c.doc_a, c.doc_b,
+                 size(array_intersect(sa.sints, sb.sints)) AS inter_n,
+                 size(sa.sints) AS na, size(sb.sints) AS nb
+          FROM cand c
+          JOIN {sints_rel} sa ON sa.doc_id = c.doc_a
+          JOIN {sints_rel} sb ON sb.doc_id = c.doc_b
+        ) _o
+        WHERE inter_n > 0
+      )"""
+    return f"""
+      sizes AS (SELECT doc_id, {T.size('sints', d)} AS n FROM {sints_rel}),
+      sh AS (SELECT doc_id, unnest(sints) AS s FROM {sints_rel}),
+      overlap AS (
+        SELECT i.doc_a, i.doc_b, i.inter_n, sa.n AS na, sb.n AS nb
+        FROM (
+          SELECT c.doc_a, c.doc_b, COUNT(*) AS inter_n
+          FROM cand c
+          JOIN sh x ON x.doc_id = c.doc_a
+          JOIN sh y ON y.doc_id = c.doc_b AND y.s = x.s
+          GROUP BY c.doc_a, c.doc_b
+        ) i
+        JOIN sizes sa ON sa.doc_id = i.doc_a
+        JOIN sizes sb ON sb.doc_id = i.doc_b
+      )"""
+
+
+def _minhash_bands(band_size: int) -> list[list[str]]:
+    """The 12 minhash columns h0..h11 cut into bands of ``band_size``."""
+    return [[f"h{b * band_size + j}" for j in range(band_size)]
+            for b in range(len(T.MINHASH_AB) // band_size)]
+
+
+# Exact-Jaccard threshold (percent) of the minhash near-dup pairs.
+_MINHASH_TAU_PCT = 60
+
+
+def minhash_pairs_from(d: str, sigs_rel: str) -> str:
     """Stage 3: band-bucket candidates + exact-Jaccard verify from a
     materialized signatures relation (columns doc_id, sints, h0..h11)."""
-    return f"WITH {_minhash_pairs_ctes(d, sigs_rel, tau_pct)}"
+    return f"WITH {_minhash_pairs_ctes(d, sigs_rel)}"
 
 
-def _minhash_pairs_ctes(d: str, sigs_rel: str, tau_pct: int) -> str:
+def _minhash_pairs_ctes(d: str, sigs_rel: str) -> str:
     """WITH-body of the band join + verify — shared by the staged Spark
     path (minhash_pairs_from) and the single-statement oracle
-    (minhash_pairs_sql), so the two dialects cannot drift.
-
-    The exact-Jaccard verify differs per dialect (value-identical,
-    oracle-gated):
-
-    * DuckDB keeps the original relational form — explode every doc's
-      distinct shingles and COUNT the equi-join matches per candidate
-      pair.
-    * Spark joins each candidate pair back to the two (already
-      materialized) signature rows and computes
-      ``size(array_intersect(sa.sints, sb.sints))`` in whole-stage
-      codegen.  The relational form shuffled/broadcast the FULL
-      exploded shingle relation twice (one Generate + Exchange per join
-      side, O(corpus shingles) rows) to verify O(pairs) candidates;
-      the array form touches only the candidate rows — the r06
-      optimization pass measured the verify step dominating q6 once
-      the signature stages were cached (guide §2.3: shuffle keys and
-      metadata, not payloads).  ``array_intersect`` deduplicates, and
-      ``sints`` is distinct by construction, so the count is the exact
-      intersection cardinality; the explicit ``inter_n > 0`` guard
-      preserves the join form's implicit at-least-one-shared-shingle
-      semantics for any tau."""
-    nb = len(T.MINHASH_AB) // T.BAND_SIZE
-    band_rows = " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, "
-        + ", ".join(f"h{b * T.BAND_SIZE + j} AS k{j}" for j in range(T.BAND_SIZE))
-        + f" FROM {sigs_rel} WHERE h0 <> -1"
-        for b in range(nb)
-    )
-    band_key_eq = " AND ".join(f"x.k{j} = y.k{j}" for j in range(T.BAND_SIZE))
-    cand = f"""
-      bands AS ({band_rows}),
-      cand AS (
-        SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-        FROM bands x JOIN bands y
-          ON x.band = y.band AND {band_key_eq} AND x.doc_id < y.doc_id
-      ),"""
-    if d == SPARK:
-        return f"""{cand}
-      pair_sets AS (
-        SELECT c.doc_a, c.doc_b,
-               size(array_intersect(sa.sints, sb.sints)) AS inter_n,
-               size(sa.sints) AS na, size(sb.sints) AS nb
-        FROM cand c
-        JOIN {sigs_rel} sa ON sa.doc_id = c.doc_a
-        JOIN {sigs_rel} sb ON sb.doc_id = c.doc_b
-      )
+    (minhash_pairs_sql), so the two cannot drift."""
+    return f"""
+      {_bands_cte(sigs_rel, _minhash_bands(T.BAND_SIZE), where="h0 <> -1")},
+      {_cand_cte(T.BAND_SIZE, "x.doc_id < y.doc_id")},{_overlap_ctes(d, sigs_rel)}
       SELECT doc_a, doc_b,
              CAST(inter_n AS BIGINT) AS inter_n,
              CAST(na + nb - inter_n AS BIGINT) AS union_n
-      FROM pair_sets
-      WHERE inter_n > 0 AND inter_n * 100 >= (na + nb - inter_n) * {tau_pct}
-    """
-    shingle_rows = f"SELECT doc_id, unnest(sints) AS s FROM {sigs_rel}"
-    return f"""{cand}
-      sizes AS (SELECT doc_id, {T.size('sints', d)} AS n FROM {sigs_rel}),
-      sh AS ({shingle_rows}),
-      inter AS (
-        SELECT c.doc_a, c.doc_b, COUNT(*) AS inter_n
-        FROM cand c
-        JOIN sh x ON x.doc_id = c.doc_a
-        JOIN sh y ON y.doc_id = c.doc_b AND y.s = x.s
-        GROUP BY c.doc_a, c.doc_b
-      )
-      SELECT i.doc_a, i.doc_b,
-             CAST(i.inter_n AS BIGINT) AS inter_n,
-             CAST(sa.n + sb.n - i.inter_n AS BIGINT) AS union_n
-      FROM inter i
-      JOIN sizes sa ON sa.doc_id = i.doc_a
-      JOIN sizes sb ON sb.doc_id = i.doc_b
-      WHERE i.inter_n * 100 >= (sa.n + sb.n - i.inter_n) * {tau_pct}
+      FROM overlap
+      WHERE inter_n * 100 >= (na + nb - inter_n) * {_MINHASH_TAU_PCT}
     """
 
 
-def minhash_pairs_sql(d: str, docs: str = "documents", tau_pct: int = 60) -> str:
+def minhash_pairs_sql(d: str, docs: str = "documents") -> str:
     """MinHash + LSH near-duplicate pairs with exact Jaccard verify.
 
     Pipeline (all relational — shuffles on band keys and shingles):
     shingle -> 12 minhashes -> 3 bands of 4 -> band-bucket self-join ->
-    exact |A∩B|/|A∪B| on distinct shingles -> threshold tau_pct.
+    exact |A∩B|/|A∪B| on distinct shingles -> threshold _MINHASH_TAU_PCT.
     Output (doc_a, doc_b, inter_n, union_n) integers.
 
     This single-statement form is for the DuckDB oracle (DuckDB
@@ -283,14 +320,12 @@ def minhash_pairs_sql(d: str, docs: str = "documents", tau_pct: int = 60) -> str
     column and every CTE reference.  COMPOSED from the same staged
     builders (sints / sigs_from / the band-join CTE body), like every
     sibling — a duplicated spelling here could silently drift from the
-    Spark path.  LSH bands are exploded to rows so the self-join is a
-    pure equi-join (an OR-of-bands predicate would degenerate to a
-    nested-loop join at scale).
+    Spark path.
     """
     return (
         f"WITH _mh_sints AS ({minhash_sints_sql(d, docs)}),\n"
         f"_mh_sigs AS ({minhash_sigs_from(d, '_mh_sints')}),\n"
-        f"{_minhash_pairs_ctes(d, '_mh_sigs', tau_pct)}"
+        f"{_minhash_pairs_ctes(d, '_mh_sigs')}"
     )
 
 
@@ -473,20 +508,23 @@ def _hamming(a: str, b: str, d: str) -> str:
     return f"bit_count(xor({a}, {b}))"
 
 
-def simhash_pairs_sql(d: str, docs: str = "documents", tau: int = 1) -> str:
-    """SimHash near-duplicate pairs: Hamming distance <= ``tau`` on the
-    SIMHASH_BITS-bit fingerprint, candidates via banded equi-join.
+# Four bands of SIMHASH_BITS/4 bits: by pigeonhole a pair within
+# Hamming distance 3 agrees on at least one band, so the band join
+# finds every pair the verify keeps only while _SIMHASH_TAU <= 3.
+_SIMHASH_TAU = 1
 
-    The bits split into 4 equal bands; by pigeonhole any pair within
-    Hamming distance 3 agrees on at least one band, so the self-join
-    keys on (band, band_value) — bucketed, never all-pairs — and the
-    exact bit_count verify runs only on candidates (sound for
-    tau <= 3).  Runs over the dup-test corpus (exact copies + prefixed
-    near-copies) so positives exist; exact copies land at distance 0
-    with recall 1.0.
+
+def simhash_pairs_sql(d: str, docs: str = "documents") -> str:
+    """SimHash near-duplicate pairs: Hamming distance <= _SIMHASH_TAU on
+    the SIMHASH_BITS-bit fingerprint, candidates via banded equi-join.
+
+    The bits split into 4 equal bands, and the self-join keys on
+    (band, band_value) — bucketed, never all-pairs — so the exact
+    bit_count verify runs only on candidates.  Runs over the dup-test
+    corpus (exact copies + prefixed near-copies) so positives exist;
+    exact copies land at distance 0 with recall 1.0.
     """
-    return simhash_pairs_from(
-        d, f"({simhash_sigs_sql(d, docs)}) _sg", tau)
+    return simhash_pairs_from(d, f"({simhash_sigs_sql(d, docs)}) _sg")
 
 
 def simhash_sigs_sql(d: str, docs: str = "documents") -> str:
@@ -501,12 +539,11 @@ def simhash_sigs_sql(d: str, docs: str = "documents") -> str:
     """
 
 
-def simhash_pairs_from(d: str, sigs_rel: str, tau: int = 1) -> str:
+def simhash_pairs_from(d: str, sigs_rel: str) -> str:
     """SimHash stage 2 over a MATERIALIZED (doc_id, simhash) relation
     (Spark: persist + temp view — the 32-term signature expression
     would otherwise be recomputed per band reference by CTE inlining;
     measured 26 s -> ~2 s at 5k docs)."""
-    assert tau <= 3, "4-band pigeonhole guarantee only holds for tau <= 3"
     band_bits = T.SIMHASH_BITS // 4
     # Band extraction MUST stay in integer space: the former
     # float-division form (floor(simhash / 2^s.0e0)) promotes the
@@ -516,27 +553,16 @@ def simhash_pairs_from(d: str, sigs_rel: str, tau: int = 1) -> str:
     # silently dropped true near-dups.  Both engines shared the bug,
     # so parity could never catch it (round-5 self-review).
     mask = (1 << band_bits) - 1
-    bands = " UNION ALL ".join(
-        f"SELECT doc_id, simhash, {b} AS band, "
-        + (f"(shiftright(simhash, {band_bits * b}) & {mask}) "
-           if d == SPARK else
-           f"((simhash >> {band_bits * b}) & {mask}) ")
-        + "AS nib FROM sigs"
-        for b in range(4)
-    )
+    shift = "shiftright(simhash, {})" if d == SPARK else "(simhash >> {})"
+    bands = [[f"({shift.format(band_bits * b)} & {mask})"] for b in range(4)]
+    ham = _hamming("simhash_a", "simhash_b", d)
     return f"""
       WITH sigs AS (SELECT * FROM {sigs_rel}),
-      bands AS ({bands}),
-      cand AS (
-        SELECT DISTINCT x.doc_id AS doc_a, x.simhash AS ha,
-                        y.doc_id AS doc_b, y.simhash AS hb
-        FROM bands x JOIN bands y
-          ON x.band = y.band AND x.nib = y.nib AND x.doc_id < y.doc_id
-      )
-      SELECT doc_a, doc_b,
-             CAST({_hamming('ha', 'hb', d)} AS INTEGER) AS hamming
+      {_bands_cte("sigs", bands, carry=("simhash",))},
+      {_cand_cte(1, "x.doc_id < y.doc_id", carry=("simhash",))}
+      SELECT doc_a, doc_b, CAST({ham} AS INTEGER) AS hamming
       FROM cand
-      WHERE {_hamming('ha', 'hb', d)} <= {tau}
+      WHERE {ham} <= {_SIMHASH_TAU}
     """
 
 
@@ -668,9 +694,7 @@ def embedding_near_dup_oracle_sql(embeddings: str = "embeddings",
     ``embedding_near_dup``: the deterministic perturbed duplicates are
     rebuilt positionally (same op order, same float32 cast — the cast
     absorbs cross-engine sin() last-ulp noise), then bucketing /
-    pairing / exact-cosine threshold as in the Spark operator.
-    Salting never changes the pair set, so the unsalted SQL is the
-    oracle for the salted plan too."""
+    pairing / exact-cosine threshold as in the Spark operator."""
     return f"""
 WITH {_lsh_buckets_cte(dim, n_planes, n_tables)},
 pos0 AS (SELECT vec_id, CAST(r.range AS INTEGER) AS i,
@@ -732,7 +756,7 @@ def dup_corpus_sql(d: str, docs: str = "documents") -> str:
     return _dup_corpus(docs, d)
 
 
-def dedup_components_oracle_sql(docs: str = "documents", tau: int = 1) -> str:
+def dedup_components_oracle_sql(docs: str = "documents") -> str:
     """DuckDB oracle for ``operators.dedup.dedup_components``: the
     transitive closure of the simhash near-dup pair graph as a
     recursive CTE, canonical id = min node id reachable (including
@@ -742,7 +766,7 @@ def dedup_components_oracle_sql(docs: str = "documents", tau: int = 1) -> str:
     from .textsql import DUCK
 
     return f"""
-WITH RECURSIVE prs AS ({simhash_pairs_sql(DUCK, docs, tau)}),
+WITH RECURSIVE prs AS ({simhash_pairs_sql(DUCK, docs)}),
 nodes AS (SELECT doc_id FROM ({_dup_corpus(docs, DUCK)}) _c),
 edges AS (SELECT doc_a AS src, doc_b AS dst FROM prs
           UNION SELECT doc_b, doc_a FROM prs),
@@ -1315,9 +1339,15 @@ def corpus_filter_audit_sql(d: str, docs: str = "documents",
     return f"WITH _audit_base AS ({base}),{ctes} {select}"
 
 
-def dedup_incremental_sql(d: str, docs: str = "documents",
-                          tau_pct: int = 60, short_shingles: int = 8,
-                          band_size: int = 2) -> str:
+# Incremental probe: bands of 2 (6 over the 12 minhashes), the
+# exact-Jaccard threshold in percent, and the largest new-doc shingle
+# set the containment arm may flag (dedup_incremental_sql says why).
+_INC_BAND_SIZE = 2
+_INC_TAU_PCT = 60
+_INC_SHORT_SHINGLES = 8
+
+
+def dedup_incremental_sql(d: str, docs: str = "documents") -> str:
     """Incremental dedup — the per-crawl-batch primitive: screen a NEW
     batch of documents against the EXISTING corpus without any
     self-join over the corpus.  The dup-test corpus supplies the
@@ -1332,8 +1362,8 @@ def dedup_incremental_sql(d: str, docs: str = "documents",
     Recall engineering (VERDICT r03 #7 — the round-3 misses were
     measured and fixed at their actual causes):
 
-    * Band geometry: the incremental probe uses ``band_size=2`` — 6
-      bands of 2 over the 12 shared minhashes — instead of the
+    * Band geometry: the incremental probe uses ``_INC_BAND_SIZE`` = 2
+      — 6 bands of 2 over the 12 shared minhashes — instead of the
       self-join generator's 3 bands of 4.  Measured at sf0.01, the 3
       missed injected near-dups (true Jaccard 0.82 / 0.93 / 0.98!)
       were CANDIDATE misses: the 2-token prefix flips 3-4 of the 12
@@ -1345,11 +1375,11 @@ def dedup_incremental_sql(d: str, docs: str = "documents",
       which is the right trade here ONLY because the probe is
       one-sided (new batch x corpus, never corpus x corpus) and
       every candidate is exact-verified.
-    * Length-aware verify: the standard arm is exact-Jaccard >= tau;
-      a short doc that gains a 2-token prefix adds 2 shingles to a
-      set of n, so J = n/(n+2) < 0.6 for n < 3.  The second arm
+    * Length-aware verify: the standard arm is exact-Jaccard >=
+      _INC_TAU_PCT; a short doc that gains a 2-token prefix adds 2
+      shingles to a set of n, so J = n/(n+2) < 0.6 for n < 3.  The second arm
       flags FULL CONTAINMENT of the NEW doc's shingle set when that
-      set is small (<= short_shingles, default 8): inter_n >= |new|
+      set is small (<= _INC_SHORT_SHINGLES = 8): inter_n >= |new|
       means every shingle of the short new doc already occurs in the
       corpus doc — it adds nothing.  The test is deliberately
       ONE-SIDED: a symmetric least(|A|,|B|) form would also discard a
@@ -1360,8 +1390,8 @@ def dedup_incremental_sql(d: str, docs: str = "documents",
     signatures are precomputed tables (this query recomputes them only
     because the sandbox corpus is synthetic); both probes are
     new-batch-sized joins — digest equi-join and band equi-join keyed
-    on (band, k0..k[band_size-1]) — so the corpus is never self-joined
-    and the (small) new batch is the broadcast side.
+    on (band, k0, k1) — so the corpus is never self-joined and the
+    (small) new batch is the broadcast side.
 
     This single-statement form is the DuckDB oracle; the Spark
     operator (operators/dedup.dedup_incremental) materializes the
@@ -1370,8 +1400,7 @@ def dedup_incremental_sql(d: str, docs: str = "documents",
     sf0.1 cost 57 s (full materialization) vs 2.2 s staged."""
     sints_stage = dedup_incremental_sints_sql(d, docs)
     sigs_stage = dedup_incremental_sigs_from(d, "_inc_sints")
-    body = dedup_incremental_from(d, "_inc_sigs", "_inc_sints", tau_pct,
-                                  short_shingles, band_size)
+    body = dedup_incremental_from(d, "_inc_sigs", "_inc_sints")
     return (f"WITH _inc_sints AS ({sints_stage}),\n"
             f"_inc_sigs AS ({sigs_stage}),\n{body}")
 
@@ -1403,78 +1432,31 @@ def dedup_incremental_sigs_from(d: str, sints_rel: str) -> str:
     return f"SELECT doc_id, digest, {sig_cols} FROM {sints_rel}"
 
 
-def dedup_incremental_from(d: str, sigs_rel: str, sints_rel: str,
-                           tau_pct: int = 60, short_shingles: int = 8,
-                           band_size: int = 2) -> str:
+def dedup_incremental_from(d: str, sigs_rel: str, sints_rel: str) -> str:
     """Incremental-dedup stage 3 over the two materialized stages —
     ``sigs_rel`` (doc_id, digest, h0..h11) feeds the digest and band
     probes, ``sints_rel`` (doc_id, digest, sints) feeds the
     exact-Jaccard verify.  Emitted as the WITH-body tail so the
-    single-statement oracle can prepend its own stage CTEs."""
-    nb = len(T.MINHASH_AB) // band_size
-    band_rows = " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, "
-        + ", ".join(f"h{b * band_size + j} AS k{j}" for j in range(band_size))
-        + f" FROM {sigs_rel} WHERE h0 <> -1"
-        for b in range(nb)
-    )
-    key_eq = " AND ".join(f"n.k{j} = o.k{j}" for j in range(band_size))
-    head = f"""
-      bands AS ({band_rows}),
+    single-statement oracle can prepend its own stage CTEs.  The band
+    probe is the shared band join with a one-sided pair predicate:
+    doc_a is the new doc, doc_b the existing one."""
+    bands = _minhash_bands(_INC_BAND_SIZE)
+    new_old = "x.doc_id >= 1000000 AND y.doc_id < 1000000"
+    return f"""
+      {_bands_cte(sigs_rel, bands, where="h0 <> -1")},
       ex AS (
         SELECT DISTINCT n.doc_id
         FROM {sigs_rel} n JOIN {sigs_rel} o
           ON n.digest = o.digest
          AND n.doc_id >= 1000000 AND o.doc_id < 1000000
       ),
-      cand AS (
-        SELECT DISTINCT n.doc_id AS new_id, o.doc_id AS old_id
-        FROM bands n JOIN bands o
-          ON n.band = o.band AND {key_eq}
-         AND n.doc_id >= 1000000 AND o.doc_id < 1000000
-      ),"""
-    if d == SPARK:
-        # Spark verify arm: same array_intersect form as the minhash
-        # pair verify (see _minhash_pairs_ctes — only candidate rows
-        # are touched, no corpus-shingle explode/shuffle); the
-        # inter_n > 0 guard keeps the join form's implicit
-        # at-least-one-shared-shingle semantics.  DuckDB keeps the
-        # relational form below — oracle text byte-identical.
-        near = f"""
+      {_cand_cte(_INC_BAND_SIZE, new_old)},{_overlap_ctes(d, sints_rel)},
       near AS (
-        SELECT DISTINCT _i.new_id AS doc_id
-        FROM (
-          SELECT c.new_id, c.old_id,
-                 size(array_intersect(sa.sints, sb.sints)) AS inter_n,
-                 size(sa.sints) AS na, size(sb.sints) AS nb
-          FROM cand c
-          JOIN {sints_rel} sa ON sa.doc_id = c.new_id
-          JOIN {sints_rel} sb ON sb.doc_id = c.old_id
-        ) _i
-        WHERE _i.inter_n > 0
-          AND (_i.inter_n * 100 >= (_i.na + _i.nb - _i.inter_n) * {tau_pct}
-               OR (_i.na <= {short_shingles} AND _i.inter_n >= _i.na))
-      )"""
-    else:
-        sh = f"SELECT doc_id, unnest(sints) AS s FROM {sints_rel}"
-        near = f"""
-      sizes AS (SELECT doc_id, {T.size('sints', d)} AS n FROM {sints_rel}),
-      sh AS ({sh}),
-      near AS (
-        SELECT DISTINCT _i.new_id AS doc_id
-        FROM (
-          SELECT c.new_id, c.old_id, COUNT(*) AS inter_n
-          FROM cand c
-          JOIN sh x ON x.doc_id = c.new_id
-          JOIN sh y ON y.doc_id = c.old_id AND y.s = x.s
-          GROUP BY c.new_id, c.old_id
-        ) _i
-        JOIN sizes sa ON sa.doc_id = _i.new_id
-        JOIN sizes sb ON sb.doc_id = _i.old_id
-        WHERE _i.inter_n * 100 >= (sa.n + sb.n - _i.inter_n) * {tau_pct}
-           OR (sa.n <= {short_shingles} AND _i.inter_n >= sa.n)
-      )"""
-    return f"""{head}{near}
+        SELECT DISTINCT doc_a AS doc_id
+        FROM overlap
+        WHERE inter_n * 100 >= (na + nb - inter_n) * {_INC_TAU_PCT}
+           OR (na <= {_INC_SHORT_SHINGLES} AND inter_n >= na)
+      )
       SELECT c.doc_id,
              CASE WHEN ex.doc_id IS NOT NULL THEN 'exact_dup'
                   WHEN nr.doc_id IS NOT NULL THEN 'near_dup'

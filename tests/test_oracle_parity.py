@@ -174,21 +174,6 @@ def test_ann_dim_autodetect_non_64(spark):
         similarity.infer_dim(empty)
 
 
-def test_embedding_near_dup_salting_preserves_output(spark):
-    """Forcing every bucket hot (hot_threshold=0) must not change the
-    pair set — salting only splits the reducer work."""
-    from jgdtrans_rs_spark.operators import similarity
-
-    emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
-    aug = similarity.augment_with_near_dups(emb)
-    plain = {(int(r["a"]), int(r["b"]))
-             for r in similarity.embedding_near_dup(aug).collect()}
-    salted = {(int(r["a"]), int(r["b"]))
-              for r in similarity.embedding_near_dup(
-                  aug, hot_threshold=0, num_salts=4).collect()}
-    assert plain == salted and len(plain) > 0
-
-
 def test_lsh_buckets_null_and_short_vectors(spark):
     """NULL / wrong-length embeddings must map to the sentinel bucket
     (-1), not crash the Arrow batch — and a batch made ENTIRELY of
@@ -260,7 +245,7 @@ def test_minhash_near_arm_recall(spark, duck):
 
     spark.read.parquet(f"{SF_SMALL}/documents.parquet") \
         .createOrReplaceTempView("documents")
-    got = dedup_ops.minhash_lsh_pairs(spark, tau_pct=60).toPandas()
+    got = dedup_ops.minhash_lsh_pairs(spark).toPandas()
     gset = {
         (int(a), int(b))
         for a, b in zip(got.doc_a, got.doc_b) if b - a == 2_000_000

@@ -417,7 +417,7 @@ def test_warc_crawl_near_dup_detection(spark, tmp_path):
         assert ex[1][0] == 0 and ex[1][1] >= 2  # re-crawl -> doc 0
         assert all(ex[i][0] == i for i in range(2, 10))
         pairs = {(r.doc_a, r.doc_b) for r in dedup_ops.minhash_lsh_pairs(
-            spark, docs="_warc_dedup_src", tau_pct=60).collect()
+            spark, docs="_warc_dedup_src").collect()
             if r.doc_a < 1_000_000 and r.doc_b < 1_000_000}
         assert pairs == {(0, 1), (0, 2), (1, 2)}
     finally:

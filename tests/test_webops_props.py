@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from jgdtrans_rs_spark.plans import webops
-from jgdtrans_rs_spark.plans.textsql import SPARK
+from jgdtrans_rs_spark.plans.textsql import DUCK, SPARK
 
 SF = "/root/testdata/sf0.001"
 
@@ -145,13 +145,21 @@ def _view_docs(spark, rows, name="_r5_docs"):
     return name
 
 
+def _duck_docs(rows, name="_r5_docs"):
+    """A DuckDB connection holding ``rows`` as table ``name``."""
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute(f"CREATE TABLE {name} (doc_id BIGINT, text VARCHAR, lang VARCHAR)")
+    con.executemany(f"INSERT INTO {name} VALUES (?, ?, ?)", rows)
+    return con
+
+
 def test_minhash_survives_cjk_tokens(spark):
     """ascii() returns the full Unicode codepoint, so a CJK first/last
     character used to push (a*s + b) past 2^63 — ANSI Spark aborted
     the job and DuckDB errored.  The mod-before-multiply form is
     value-identical in range and overflow-safe (round-5 review)."""
-    import duckdb
-
     # tokens vary in FIRST and LAST codepoint (the tid function keys
     # on first/last/length, so same-shaped tokens would collapse)
     base = " ".join(chr(0x4E00 + 7 * i) + "本" + chr(0x8A00 + 5 * i)
@@ -168,13 +176,9 @@ def test_minhash_survives_cjk_tokens(spark):
         if r.doc_a < 1_000_000 and r.doc_b < 1_000_000}
     assert (0, 1) in got and not any(2 in p for p in got)
     # the DuckDB dialect runs the same literals without overflow
-    con = duckdb.connect()
-    con.execute("CREATE TABLE _r5_docs AS SELECT * FROM (VALUES "
-                + ",".join(f"({i}, '{t}', 'ja')" for i, t, _ in rows)
-                + ") t(doc_id, text, lang)")
-    from jgdtrans_rs_spark.plans.textsql import DUCK
+    con = _duck_docs(rows)
     oc = {(int(r[0]), int(r[1])) for r in con.sql(
-        webops.minhash_pairs_sql(DUCK, docs="_r5_docs")).fetchall()
+        webops.minhash_pairs_sql(DUCK, docs=name)).fetchall()
         if r[0] < 1_000_000 and r[1] < 1_000_000}
     assert oc == got
 
@@ -230,6 +234,58 @@ def test_incremental_containment_is_one_sided(spark):
         webops.dedup_incremental_sql(SPARK, docs=name)).collect()}
     assert got[1_000_003] == "new"        # symmetric LEAST() called it near_dup
     assert got[1_000_004] == "near_dup"   # genuine short-containment still fires
+    # the DuckDB arm counts the overlap relationally: same verdicts
+    con = _duck_docs(rows)
+    duck = dict(con.sql(
+        webops.dedup_incremental_sql(DUCK, docs=name)).fetchall())
+    assert duck == got
+
+
+def test_band_join_pinned_on_hand_corpus(spark):
+    """The band join all three LSH builders share, pinned by sets worked
+    out by hand rather than by comparing one builder's two dialects.
+    Every id is off the builder's injection lattice (base%5, base%7) so
+    these rows are the whole corpus.  A holds 20 tokens with distinct
+    first letters, so distinct token ids and 18 distinct 3-shingles;
+    a rotation by r keeps 18 - r of them and adds r.  Simhash sums over
+    the token bag, so A and its rotations share one fingerprint."""
+    a = ("alpha bravo charlie delta echo foxtrot golf hotel india juliet "
+         "kilo lima mike november oscar papa quebec romeo sierra tango")
+    w = a.split()
+    rot1, rot2 = " ".join(w[1:] + w[:1]), " ".join(w[2:] + w[:2])
+    rows = [(1, a, "en"),
+            (2, a, "en"),                     # exact copy
+            (3, rot1, "en"),                  # near copy, J = 17/19
+            (4, "Umbra Vivid Woven Xenon Yodel Zesty Amber Basil", "en"),
+            (6, "Cedar Dune Ember Frost Glade Heron Inlet Jasper", "en"),
+            (8, "hi there", "en"),            # < 3 tokens: no shingles
+            (9, "", "en"),                    # no tokens
+            (1_000_001, a, "en"),             # new: exact copy of 1
+            (1_000_002, rot2, "en"),          # new: near copy, J(A) = 16/20
+            (1_000_003, "Kestrel Lotus Maple Nectar Onyx Pine", "en"),
+            (1_000_004, "hi there", "en"),    # new: short exact copy of 8
+            (1_000_008, "", "en"),            # new: tokenless copy of 9
+            (1_000_009, "hi you", "en")]      # new: short, no shingles
+    same = (1, 2, 1_000_001)
+    minhash = {(x, y, 18, 18) for x in same for y in same if x < y}
+    minhash |= {(min(x, 3), max(x, 3), 17, 19) for x in same}
+    minhash |= {(x, 1_000_002, 16, 20) for x in same}
+    minhash |= {(3, 1_000_002, 17, 19)}
+    bag = (1, 2, 3, 1_000_001, 1_000_002)
+    simhash = {(x, y, 0) for x in bag for y in bag if x < y}
+    simhash |= {(8, 1_000_004, 0)}
+    incremental = {1_000_001: "exact_dup", 1_000_002: "near_dup",
+                   1_000_003: "new", 1_000_004: "exact_dup",
+                   1_000_008: "exact_dup", 1_000_009: "new"}
+
+    name = _view_docs(spark, rows)
+    con = _duck_docs(rows)
+    for d, run in ((SPARK, lambda q: [tuple(r) for r in spark.sql(q).collect()]),
+                   (DUCK, lambda q: con.sql(q).fetchall())):
+        assert set(run(webops.minhash_pairs_sql(d, docs=name))) == minhash, d
+        assert set(run(webops.simhash_pairs_sql(d, docs=name))) == simhash, d
+        assert dict(run(webops.dedup_incremental_sql(d, docs=name))) \
+            == incremental, d
 
 
 def test_stage_view_reclaim_keeps_catalog_flat(spark):
