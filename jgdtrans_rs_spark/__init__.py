@@ -21,6 +21,8 @@ Layout:
     plans/       SQL generators shared with the DuckDB oracle
 """
 
+import os
+
 from .workerenv import patch_zipimport_invalidate_caches
 
 # Applied at import so every Spark Python WORKER that unpickles a
@@ -28,7 +30,10 @@ from .workerenv import patch_zipimport_invalidate_caches
 # every zip directory on sys.path on each per-task
 # importlib.invalidate_caches() — ~165 ms of worker CPU per task on
 # this build; the 3.12-style mtime guard removes it (workerenv.py).
-patch_zipimport_invalidate_caches()
+# It patches zipimport process-wide, so SPARK_GRAFT_ZIPGUARD=0 in the
+# environment leaves zipimport untouched.
+if os.environ.get("SPARK_GRAFT_ZIPGUARD", "1") != "0":
+    patch_zipimport_invalidate_caches()
 
 from .grid import MeshGrid, load_par, parse_par
 from .kernel import (

@@ -6,6 +6,20 @@ columns filled with 0.0 — not NaN — (par.rs:396-466), description =
 first N header lines joined (par.rs:360-366), positional parse errors
 (par.rs:744-859).
 
+``parse_par`` parses an ASCII data section in bulk, where the
+reference slices, trims and parses each line: the section is encoded
+once, the line breaks found with numpy, and each layout field cut as a
+(width, n_lines) uint8 block.  A column mask accepts the fields of the
+grammar blanks (spaces), optional '-', 1-15 digits with at most one
+'.', blanks — meshcodes: no '.' and no '-' — and converts them as
+``mantissa / 10.0**k`` (Clinger's fast path: both operands are exact
+doubles, so the quotient is bit-identical to ``float()``).  A line
+that is too short, or has a field the mask rejects (exponents, inf,
+nan, a '+', tabs, a stray \\r, ...), goes through the per-line
+Rust-parity casts in line order: valid unusual syntax still parses,
+and the earliest bad line raises its positional error.  A data section
+that is not ASCII is parsed line by line throughout.
+
 The grid itself is stored as numpy arrays sorted by meshcode.  Each
 Python worker builds, once per broadcast, a block-dense slot index over
 them (``_slot_index``), so executor-side lookup is one direct slot
@@ -22,6 +36,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 import numpy as np
+from numpy.lib.stride_tricks import sliding_window_view
 
 from .mesh import (
     UNIT_FIVE,
@@ -289,6 +304,23 @@ class MeshGrid:
         ]
 
 
+# Rust's ``str::trim`` set, the Unicode White_Space property
+# (``char::is_whitespace``).  A bare ``str.strip()`` also strips
+# U+001C-U+001F, which Rust keeps: "\x1c6303582" is a ParseInt there.
+_WHITE_SPACE = ("\t\n\x0b\x0c\r \x85\xa0\u1680"
+                + "".join(map(chr, range(0x2000, 0x200B)))
+                + "\u2028\u2029\u202f\u205f\u3000")
+
+_U32_MAX = 4294967295
+
+# Fast-path field grammar: blanks (spaces), an optional '-', 1-15 ASCII
+# digits with at most one '.', blanks.  Such a field is m / 10^k with
+# m < 2^53 and k <= 15, both exact doubles, so one IEEE division is
+# correctly rounded (Clinger's fast path) and bit-identical to float().
+_MAX_DIGITS = 15
+_POW10 = np.array([float(10 ** k) for k in range(_MAX_DIGITS + 1)])
+
+
 def _u32_cast(raw: str) -> int:
     """Rust ``u32::from_str`` parity: optional leading '+', ASCII
     digits only, overflow errors.  Python's bare int() is looser — it
@@ -298,7 +330,7 @@ def _u32_cast(raw: str) -> int:
     if not (s.isascii() and s.isdigit()):
         raise ValueError(raw)
     v = int(s)
-    if v > 4294967295:
+    if v > _U32_MAX:
         raise ValueError(raw)
     return v
 
@@ -315,12 +347,102 @@ def _parse_field(line: str, rng, lineno: int, column: str, caster):
     start, end = rng
     if end > len(line):
         raise ParseParError("ColumnNotFound", lineno, start, end, column)
-    raw = line[start:end].strip()
+    raw = line[start:end].strip(_WHITE_SPACE)
     try:
         return caster(raw)
     except ValueError:
         kind = "ParseInt" if caster is _u32_cast else "ParseFloat"
         raise ParseParError(kind, lineno, start, end, column) from None
+
+
+def _parse_line(line: str, lineno: int, rngs) -> tuple:
+    """One data line's (code, lat, lon, alt), its fields checked in
+    column order; an absent column (``rng`` None) is 0.0."""
+    code_rng, *value_rngs = rngs
+    code = _parse_field(line, code_rng, lineno, "Meshcode", _u32_cast)
+    return (code, *(_parse_field(line, rng, lineno, column, _f64_cast) if rng else 0.0
+                    for rng, column in zip(value_rngs, ("Latitude", "Longitude", "Altitude"))))
+
+
+def _decimal_fields(chars: np.ndarray, integer: bool) -> tuple[np.ndarray, np.ndarray]:
+    """``(ok, value)`` of n fixed-width fields given as a (w, n) uint8
+    array, row ``j`` holding character ``j`` of every field.  ``ok``
+    marks the fields of the fast-path grammar; with ``integer`` it also
+    takes no '.', no '-' and nothing above u32::MAX.  ``value`` is int64
+    with ``integer``, float64 otherwise, and is garbage where not
+    ``ok``.  One pass over the w rows, each a few n-wide vector ops."""
+    n = chars.shape[1]
+    ok = np.ones(n, dtype=bool)
+    started, ended, seen_dot, neg = (np.zeros(n, dtype=bool) for _ in range(4))
+    n_digit, k, m = (np.zeros(n, dtype=np.int64) for _ in range(3))
+    for c in chars:
+        d = c - np.uint8(48)        # wraps below '0': digit iff d < 10
+        digit = d < 10
+        blank = c == 32
+        dot = c == 46
+        minus = c == 45
+        # a non-blank after the trailing blanks, a second '.' or a '-'
+        # that is not the first non-blank fails
+        ok &= blank | (~ended & (digit | (dot & ~seen_dot) | (minus & ~started)))
+        ended |= blank & started
+        started |= ~blank
+        seen_dot |= dot
+        neg |= minus
+        m = np.where(digit, m * 10 + d, m)
+        n_digit += digit
+        k += digit & seen_dot
+    ok &= (n_digit >= 1) & (n_digit <= _MAX_DIGITS)
+    if integer:
+        return ok & ~seen_dot & ~neg & (m <= _U32_MAX), m
+    value = m / _POW10[np.minimum(k, _MAX_DIGITS)]
+    return ok, np.where(neg, -value, value)
+
+
+def _parse_ascii(data: str, lineno: int, rngs) -> list[np.ndarray]:
+    """``[codes, dlat, dlon, dalt]`` of an ASCII data section whose
+    first line is line ``lineno``.  The section is encoded once; each
+    field is cut as a (width, n) uint8 block and converted by
+    ``_decimal_fields``.  A line that is too short, or has a field its
+    mask rejects, goes through ``_parse_line`` in line order, so the
+    earliest bad line raises its positional error."""
+    size = len(data)
+    buf = np.frombuffer(data.encode("ascii") + bytes(max(r[1] for r in rngs if r)),
+                        dtype=np.uint8)
+    breaks = np.flatnonzero(buf[:size] == 10)
+    starts = np.append(0, breaks + 1)
+    ends = np.append(breaks, size)
+    if starts[-1] == size:      # the empty tail after a final \n
+        starts, ends = starts[:-1], ends[:-1]
+    ends -= (ends > starts) & (buf[ends - 1] == 13)   # one trailing \r per line
+    n = starts.size
+    cols, ok = [], np.ones(n, dtype=bool)
+    for i, rng in enumerate(rngs):
+        if rng is None:
+            cols.append(np.zeros(n))
+            continue
+        start, end = rng
+        chars = sliding_window_view(buf, end - start)[starts + start].T
+        good, value = _decimal_fields(np.ascontiguousarray(chars), integer=i == 0)
+        ok &= good & (ends - starts >= end)
+        cols.append(value)
+    for i in np.flatnonzero(~ok).tolist():
+        row = _parse_line(data[starts[i]:ends[i]], lineno + i, rngs)
+        for col, v in zip(cols, row):
+            col[i] = v
+    return cols
+
+
+def _parse_lines(data: str, lineno: int, rngs) -> list[np.ndarray]:
+    """``_parse_ascii``'s result, one ``_parse_line`` per line: for a
+    data section that is not ASCII, where character offsets are not
+    byte offsets."""
+    lines = data.split("\n")
+    if lines[-1] == "":
+        lines.pop()
+    rows = [_parse_line(ln[:-1] if ln.endswith("\r") else ln, lineno + i, rngs)
+            for i, ln in enumerate(lines)]
+    return [np.array(col, dtype=np.int64 if i == 0 else np.float64)
+            for i, col in enumerate(zip(*rows))]
 
 
 def parse_par(text: str, format: str, description: str | None = None) -> MeshGrid:
@@ -332,28 +454,40 @@ def parse_par(text: str, format: str, description: str | None = None) -> MeshGri
     (``ParParser::parse_with_description`` /
     ``Transformer::from_str_with_description``, par.rs:368-394);
     absent component columns fill 0.0.
+
+    An ASCII data section is parsed in bulk (``_parse_ascii``): fields
+    of the form blanks, optional '-', 1-15 digits with at most one '.',
+    blanks (meshcodes: digits only) convert column-wise, bit-identical
+    to ``float()``/``int()``.  Any other field — an exponent, inf/nan,
+    a '+', a tab, a stray \\r — and any short line go through the
+    per-line Rust-parity casts, in line order, so valid unusual syntax
+    still parses and the earliest bad line raises.  A data section with
+    non-ASCII text is parsed line by line throughout.  Later duplicate
+    codes win (the reference's HashMap insert).
     """
-    header, code_rng, lat_rng, lon_rng, alt_rng = PAR_LAYOUTS[format]
-    lines = text.split("\n")
-    if lines and lines[-1] == "":
-        lines = lines[:-1]
+    header, *rngs = PAR_LAYOUTS[format]
+    lines = text.split("\n", header)
+    if len(lines) > header:
+        data = lines.pop()
+    else:                       # no data section: drop the empty tail
+        data = ""
+        if lines[-1] == "":
+            lines.pop()
     lines = [ln[:-1] if ln.endswith("\r") else ln for ln in lines]
     if len(lines) < header:
         last_len = len(lines[-1]) if lines else 0
         raise ParseParError("Header", len(lines), 0, last_len, None)
 
     if description is None:
-        description = "\n".join(lines[:header]) + "\n"
-    parameters: dict[int, tuple] = {}
-    for off, line in enumerate(lines[header:]):
-        lineno = header + off + 1
-        code = _parse_field(line, code_rng, lineno, "Meshcode", _u32_cast)
-        lat = _parse_field(line, lat_rng, lineno, "Latitude", _f64_cast) if lat_rng else 0.0
-        lon = _parse_field(line, lon_rng, lineno, "Longitude", _f64_cast) if lon_rng else 0.0
-        alt = _parse_field(line, alt_rng, lineno, "Altitude", _f64_cast) if alt_rng else 0.0
-        parameters[code] = (lat, lon, alt)
-
-    return MeshGrid.from_dict(parameters, format=format, description=description)
+        description = "\n".join(lines) + "\n"
+    parse = _parse_ascii if data.isascii() else _parse_lines
+    codes, dlat, dlon, dalt = parse(data, header + 1, rngs)
+    # a code's first row in the reversed lines is its last line
+    _, first = np.unique(codes[::-1], return_index=True)
+    keep = codes.size - 1 - first
+    return MeshGrid(codes=codes[keep], dlat_sec=dlat[keep], dlon_sec=dlon[keep],
+                    dalt_m=dalt[keep], mesh_unit=FORMAT_MESH_UNIT[format], format=format,
+                    description=description)
 
 
 def load_par(path: str, format: str) -> MeshGrid:

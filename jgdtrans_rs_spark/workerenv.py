@@ -21,7 +21,8 @@ re-read the moment the file actually changes — so late
 picked up, which is the documented purpose of the call.
 
 Activation: importing this package applies the patch (see
-``__init__``).  Spark workers unpickle the kernel UDFs -> import this
+``__init__``) unless the environment sets ``SPARK_GRAFT_ZIPGUARD=0``.
+Spark workers unpickle the kernel UDFs -> import this
 package -> the patch lands once per (reused) worker process; every
 subsequent task on that worker skips the re-parse.  The driver
 process is patched too, with the same semantics.  On 3.12+ this is a

@@ -34,9 +34,11 @@ against its BENCHMARK.json ``bound`` (a fraction of the reference
 median): "WORSE" when the working tree's median is worse by more than
 the bound, "unresolved" when the reference IQR is wider than the bound
 (unless every working-tree run beats every reference run), else "ok".
-The closing JSON line adds both sides' quartiles and every run's
-result line.  A claimed gain needs 9 of 10 pairs won and a median gap
-above the reference's IQR.
+A metric whose working tree meets the claim rule — at least 9 of 10
+pairs won (the same share of any other pair count) and a median gap,
+in its better direction, larger than the reference's IQR — is marked
+"GAIN"; the verdicts above do not change with it.  The closing JSON
+line adds both sides' quartiles and every run's result line.
 """
 
 from __future__ import annotations
@@ -119,10 +121,18 @@ def _verdict(a: list[float], b: list[float], sign: float, bound: float) -> str:
     return "ok"
 
 
+def _gain(a: list[float], b: list[float], sign: float, wins: int) -> bool:
+    """The claim rule for working-tree runs ``b`` against reference
+    runs ``a``: at least 9/10 of the pairs won, and a median gap in the
+    better direction larger than the reference's IQR."""
+    qa = _quartiles(a)
+    return 10 * wins >= 9 * len(a) and sign * (statistics.median(b) - qa[1]) > qa[2] - qa[0]
+
+
 def summarize(ref_runs: list[dict], head_runs: list[dict]) -> dict:
-    """Per metric: each side's quartiles, the reference's IQR and the
-    working tree's pair wins (ties count for neither); plus failed
-    operations per side."""
+    """Per metric: each side's quartiles, the reference's IQR, the
+    working tree's pair wins (ties count for neither) and whether they
+    make a gain (``_gain``); plus failed operations per side."""
     better = _better()
     bounds = {m["name"]: m["bound"] for m in _spec()["end_to_end"]}
     out = {"pairs": len(ref_runs),
@@ -134,11 +144,13 @@ def summarize(ref_runs: list[dict], head_runs: list[dict]) -> dict:
         b = [r["metrics"][name]["value"] for r in head_runs]
         qa, qb = _quartiles(a), _quartiles(b)
         sign = 1.0 if better.get(name, "lower") == "higher" else -1.0
+        wins = sum(sign * (y - x) > 0 for x, y in zip(a, b))
         out["metrics"][name] = {
             "ref_quartiles": qa,
             "head_quartiles": qb,
             "ref_iqr": qa[2] - qa[0],
-            "wins": sum(sign * (y - x) > 0 for x, y in zip(a, b)),
+            "wins": wins,
+            "gain": _gain(a, b, sign, wins),
         }
         if name in bounds:
             out["metrics"][name]["verdict"] = _verdict(a, b, sign, bounds[name])
@@ -166,7 +178,8 @@ def perfbench_mode(ref: str, ref_dir: str, pairs: int, workload: str, first_seed
         base, head = m["ref_quartiles"][1], m["head_quartiles"][1]
         delta = (head / base - 1.0) if base else 0.0
         print(f"{name:36} {base:12.4g} {head:12.4g} {delta:+7.1%} "
-              f"{m['ref_iqr']:10.3g} {m['wins']:>2}/{pairs}  {m.get('verdict', '')}")
+              f"{m['ref_iqr']:10.3g} {m['wins']:>2}/{pairs}  {m.get('verdict', '')}"
+              f"{' GAIN' if m['gain'] else ''}")
     print(json.dumps({**s, "workload": workload, "ref": ref, "first_seed": first_seed,
                       "samples_ref": ref_runs, "samples_head": head_runs}))
 

@@ -378,3 +378,218 @@ def test_u32_cast_accepts_ascii_digits_only():
             _u32_cast(raw)
     for raw, want in (("+12", 12), ("4294967295", 4294967295), ("007", 7), ("+0", 0)):
         assert _u32_cast(raw) == want
+
+
+def test_parse_trims_rust_white_space_only():
+    """Fields trim what Rust's ``str::trim`` trims (Unicode White_Space).
+    A bare ``str.strip()`` also strips U+001C-U+001F, which let
+    "\\x1c6303582" parse as a meshcode where the reference raises."""
+    head = "JGD2000\nheader\n"
+    with pytest.raises(ParseParError) as e:
+        parse_par(head + "\x1c6303582  11.49105  -9.88759\n", "TKY2JGD")
+    assert (e.value.kind, e.value.lineno, e.value.start, e.value.end, e.value.column) == (
+        "ParseInt", 3, 0, 8, "Meshcode")
+    with pytest.raises(ParseParError) as e:
+        parse_par(head + "46303582 \x1c11.49105  -9.88759\n", "TKY2JGD")
+    assert (e.value.kind, e.value.lineno, e.value.start, e.value.end, e.value.column) == (
+        "ParseFloat", 3, 9, 18, "Latitude")
+    # a tab, or an ideographic space (U+3000), is White_Space and trims
+    for blank in ("\t", chr(0x3000)):
+        g = parse_par(head + f"46303582 {blank}11.49105  -9.88759\n", "TKY2JGD")
+        assert g.codes.tolist() == [46303582] and g.dlat_sec[0] == 11.49105
+
+
+def test_parse_non_ascii_header_keeps_bulk_path(monkeypatch):
+    """A Japanese header leaves the ASCII data section on the bulk path
+    and the description exact; a non-ASCII character in a data field
+    raises the positional error the per-line parser always raised, and
+    one outside every field is ignored as before."""
+    from jgdtrans_rs_spark import grid
+
+    head = "日本測地系 TKY2JGD パラメータ\r\nメッシュコード 緯度 経度\n"
+    data = "46303582  11.49105  -9.88759\n46303592  11.49099  -9.88994\n"
+
+    def per_line(*args):
+        raise AssertionError("ASCII data section parsed line by line")
+
+    monkeypatch.setattr(grid, "_parse_lines", per_line)
+    g = parse_par(head + data, "TKY2JGD")
+    assert g.description == "日本測地系 TKY2JGD パラメータ\nメッシュコード 緯度 経度\n"
+    assert g.codes.tolist() == [46303582, 46303592]
+    assert g.dlon_sec.tolist() == [-9.88759, -9.88994]
+    monkeypatch.undo()
+
+    fullwidth_one = chr(0xFF11)
+    with pytest.raises(ParseParError) as e:
+        parse_par(head + data + f"46303602  {fullwidth_one}1.49105  -9.88759\n", "TKY2JGD")
+    assert (e.value.kind, e.value.lineno, e.value.start, e.value.end, e.value.column) == (
+        "ParseFloat", 5, 9, 18, "Latitude")
+    g = parse_par(head + data + "46303602  11.49105  -9.88759  東京\n", "TKY2JGD")
+    assert g.codes.tolist() == [46303582, 46303592, 46303602]
+
+
+# Field contents the bulk masks must hand to the per-line casts: valid
+# but unusual syntax, and errors.  (chr() spells the non-ASCII ones.)
+_VALUE_TOKENS = (
+    "+1.50000", "-1.50000", "-0.00000", "-0", "+0", "000012.5", ".5", "5.", "-.5",
+    "1.5e+01", "-2E-3", "1e5", "inf", "-inf", "Infinity", "nan", "-nan", "NaN",
+    ".", "-", "--1", "1.2.3", "1-2", "- 1", "1 2", "",
+    "\t1.5", "1.5\t", "\x1c1.5", "1.5\x1f", "1.\r5", "\r1.5", "\x0b1.5",
+    "1_0.5", "1.5d", "2f", chr(0x661) + ".5", chr(0xFF11) + ".5", "1.5" + chr(0xA0),
+)
+_CODE_TOKENS = (
+    "+1234567", "-1234567", "1_234567", "12 34", "00000001", "1.0", "", "0",
+    "\x1c6303582", "6303582\x1c", "\t6303582", chr(0x661) * 3, "99999999",
+)
+# a layout wide enough for 15- and 16-digit mantissas; the last three
+# misround as float(mantissa) / 10.0**k, so only float() may parse them
+_WIDE = (2, (0, 8), (9, 29), (30, 50), None)
+_WIDE_TOKENS = (
+    "123456789012345", "1234567890123456", "0.123456789012345", "0.1234567890123456",
+    "-999999999999999.", "9007199254740993", ".000000000000001", "12345678901234567890",
+    "99180.10360366969", "-93541332002.33449", "405839536162181.58",
+)
+
+
+def _reference_parse(text, fmt):
+    """Line-by-line reference built from ``_parse_field``: ``(codes,
+    value bits, description)``, or the error's ``(kind, lineno, start,
+    end, column)``."""
+    from jgdtrans_rs_spark.grid import PAR_LAYOUTS, _f64_cast, _parse_field, _u32_cast
+
+    header, code_rng, *rngs = PAR_LAYOUTS[fmt]
+    lines = text.split("\n")
+    if lines[-1] == "":
+        lines.pop()
+    lines = [ln[:-1] if ln.endswith("\r") else ln for ln in lines]
+    params = {}
+    try:
+        for lineno, line in enumerate(lines[header:], header + 1):
+            code = _parse_field(line, code_rng, lineno, "Meshcode", _u32_cast)
+            params[code] = [_parse_field(line, rng, lineno, col, _f64_cast) if rng else 0.0
+                            for rng, col in zip(rngs, ("Latitude", "Longitude", "Altitude"))]
+    except ParseParError as e:
+        return e.kind, e.lineno, e.start, e.end, e.column
+    codes = sorted(params)
+    values = np.array([params[c] for c in codes], dtype=np.float64).reshape(-1, 3)
+    return codes, values.T.copy().view(np.int64).tolist(), "\n".join(lines[:header]) + "\n"
+
+
+def _bulk_parse(text, fmt):
+    try:
+        g = parse_par(text, fmt)
+    except ParseParError as e:
+        return e.kind, e.lineno, e.start, e.end, e.column
+    assert g.codes.dtype == np.int64
+    values = np.stack([g.dlat_sec, g.dlon_sec, g.dalt_m])
+    assert values.dtype == np.float64
+    return g.codes.tolist(), values.view(np.int64).tolist(), g.description
+
+
+def _random_par(rng, fmt, n_lines, n_mutations):
+    """A par text of ``fmt`` with ``n_lines`` random data lines, then
+    ``n_mutations`` line mutations at random lines."""
+    from jgdtrans_rs_spark.grid import PAR_LAYOUTS
+
+    header, code_rng, *rngs = PAR_LAYOUTS[fmt]
+    present = [r for r in (code_rng, *rngs) if r]
+    width = max(end for _, end in present)
+    lines = []
+    for _ in range(n_lines):
+        line = [" "] * width
+        code = int(rng.integers(0, 10**8)) if rng.random() < 0.9 else int(rng.integers(0, 10**4))
+        line[0:8] = f"{code:8d}"
+        for start, end in present[1:]:
+            # a sign, at most 15 digits and maybe a '.': the bulk grammar
+            w = end - start
+            n_digits = int(rng.integers(1, min(w - 1, 15) + 1))
+            s = str(int(rng.integers(0, 10**n_digits))).zfill(n_digits)
+            dot = int(rng.integers(0, n_digits + 1))
+            if dot < n_digits:
+                s = s[:dot] + "." + s[dot:]
+            s = ("-" if rng.random() < 0.5 else "") + s
+            line[start:end] = s.rjust(w) if rng.random() < 0.8 else s.ljust(w)
+        lines.append("".join(line))
+    for _ in range(n_mutations):
+        i = int(rng.integers(0, n_lines))
+        line = lines[i]
+        kind = rng.choice(["field", "field", "code", "crlf", "cr", "tab", "short", "empty",
+                           "dup", "gap"])
+        if kind in ("field", "code"):
+            start, end = present[0] if kind == "code" else \
+                present[int(rng.integers(1, len(present)))]
+            pool = (_CODE_TOKENS if kind == "code" else
+                    _WIDE_TOKENS if fmt == "Wide" and rng.random() < 0.5 else _VALUE_TOKENS)
+            tok = pool[int(rng.integers(0, len(pool)))][:end - start]
+            tok = tok.rjust(end - start) if rng.random() < 0.7 else tok.ljust(end - start)
+            line = line[:start] + tok + line[end:]
+        elif kind == "crlf":
+            line += "\r"
+        elif kind in ("cr", "tab"):
+            j = int(rng.integers(0, len(line) + 1))
+            line = line[:j] + ("\r" if kind == "cr" else "\t") + line[j + 1:]
+        elif kind == "short":
+            line = line[:int(rng.integers(0, len(line) + 1))]
+        elif kind == "empty":
+            line = ""
+        elif kind == "dup":
+            line = lines[int(rng.integers(0, n_lines))][:8] + line[8:]
+        else:   # a character outside every field, or text past the last one
+            j = int(rng.integers(8, width))
+            if any(s <= j < e for s, e in present):
+                line += " x"
+            else:
+                line = line[:j] + "x" + line[j + 1:]
+        lines[i] = line
+    text = "".join(f"header {k}\n" for k in range(header)) + "\n".join(lines)
+    end = rng.random()
+    return text + ("\n" if end < 0.8 else "\n\n" if end < 0.9 else "")
+
+
+@pytest.mark.parametrize("fmt", [
+    "TKY2JGD", "PatchJGD", "PatchJGD_H", "HyokoRev", "PatchJGD_HV", "SemiDynaEXE", "geonetF3",
+    "ITRF2014", "Wide"])
+def test_parse_matches_line_by_line_reference(fmt, monkeypatch):
+    """``parse_par`` against a line-by-line ``_parse_field`` reference on
+    seeded random grids of every layout, with mutations injected at
+    random lines (signs, -0, exponents, inf/nan, leading zeros, a bare
+    '.', tabs, \\x1c, a mid-line \\r, CRLF, short and empty lines, '_',
+    '1.5d', non-ASCII digits, duplicate codes; 15- and 16-digit
+    mantissas on a wide layout): the same codes and value bits, or the
+    same error kind, line, range and column.  A text with no mutation
+    never reaches the per-line casts."""
+    from jgdtrans_rs_spark import grid
+
+    monkeypatch.setitem(grid.PAR_LAYOUTS, "Wide", _WIDE)
+    monkeypatch.setitem(grid.FORMAT_MESH_UNIT, "Wide", 1)
+    per_line = []
+    parse_line = grid._parse_line
+    monkeypatch.setattr(grid, "_parse_line", lambda *a: per_line.append(a) or parse_line(*a))
+    rng = np.random.default_rng(sorted(grid.PAR_LAYOUTS).index(fmt))
+    outcomes = {"parsed": 0, "error": 0}
+    for trial in range(60):
+        n_mutations = trial % 4 and int(rng.integers(1, 6))
+        text = _random_par(rng, fmt, 40, n_mutations)
+        per_line.clear()
+        got = _bulk_parse(text, fmt)
+        assert got == _reference_parse(text, fmt), (trial, text)
+        outcomes["error" if isinstance(got[0], str) else "parsed"] += 1
+        if n_mutations == 0 and text.endswith("\n") and not text.endswith("\n\n"):
+            assert per_line == []
+    assert min(outcomes.values()) >= 5, outcomes
+
+
+def test_parse_long_mantissas_match_float(monkeypatch):
+    """On a layout 20 wide, every ``_WIDE_TOKENS`` field parses to
+    ``float()`` of its text bit for bit, right- or left-justified:
+    15-digit mantissas in bulk, longer ones through the per-line casts."""
+    from jgdtrans_rs_spark import grid
+
+    monkeypatch.setitem(grid.PAR_LAYOUTS, "Wide", _WIDE)
+    monkeypatch.setitem(grid.FORMAT_MESH_UNIT, "Wide", 1)
+    text = "h\nh\n" + "".join(f"{i:8d} {tok:>20} {tok:<20}\n" for i, tok in enumerate(_WIDE_TOKENS))
+    g = parse_par(text, "Wide")
+    want = np.array([float(tok) for tok in _WIDE_TOKENS]).view(np.int64).tolist()
+    assert g.codes.tolist() == list(range(len(_WIDE_TOKENS)))
+    assert g.dlat_sec.view(np.int64).tolist() == want
+    assert g.dlon_sec.view(np.int64).tolist() == want

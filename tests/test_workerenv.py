@@ -5,7 +5,8 @@ re-read behind ~165 ms/task of Spark worker CPU; see workerenv.py).
 Pins: (a) importing the package applies the guard, (b) an UNCHANGED
 archive is not re-read on repeated invalidate_caches (the whole point),
 (c) a genuinely rewritten archive IS re-read and new contents become
-importable (the documented purpose of invalidate_caches survives)."""
+importable (the documented purpose of invalidate_caches survives),
+(d) SPARK_GRAFT_ZIPGUARD=0 keeps the import from patching."""
 
 from __future__ import annotations
 
@@ -67,3 +68,23 @@ def test_rewritten_archive_is_reread_and_importable(tmp_path):
     finally:
         sys.path.remove(zp)
         sys.modules.pop("zimod_probe", None)
+
+
+@needs_311
+@pytest.mark.parametrize("env, patched", [({}, True), ({"SPARK_GRAFT_ZIPGUARD": "0"}, False)])
+def test_zipguard_env_switch(env, patched):
+    """The guard is a process-wide side effect, so SPARK_GRAFT_ZIPGUARD=0
+    turns it off: a fresh interpreter that imports the package patches
+    zipimport.zipimporter by default and leaves it untouched with the
+    switch off."""
+    import subprocess
+
+    probe = ("import zipimport; orig = zipimport.zipimporter.invalidate_caches; "
+             "import jgdtrans_rs_spark; "
+             "print(zipimport.zipimporter.invalidate_caches is not orig, "
+             "getattr(zipimport.zipimporter, '_jgdtrans_mtime_guarded', False))")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    full_env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_ZIPGUARD"}
+    out = subprocess.run([sys.executable, "-c", probe], cwd=root, env={**full_env, **env},
+                         capture_output=True, text=True, check=True).stdout.split()
+    assert out == [str(patched)] * 2
