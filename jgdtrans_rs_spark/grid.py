@@ -6,19 +6,19 @@ columns filled with 0.0 — not NaN — (par.rs:396-466), description =
 first N header lines joined (par.rs:360-366), positional parse errors
 (par.rs:744-859).
 
-``parse_par`` parses an ASCII data section in bulk, where the
-reference slices, trims and parses each line: the section is encoded
-once, the line breaks found with numpy, and each layout field cut as a
-(width, n_lines) uint8 block.  A column mask accepts the fields of the
-grammar blanks (spaces), optional '-', 1-15 digits with at most one
-'.', blanks — meshcodes: no '.' and no '-' — and converts them as
+``parse_par`` parses the data section in bulk, where the reference
+slices, trims and parses each line: the section is encoded once (each
+non-ASCII character as one '?', so byte offsets stay character
+offsets), the line breaks found with numpy, and each layout field cut
+as a (width, n_lines) uint8 block.  A column mask accepts the fields
+of the grammar blanks (spaces), optional '-', 1-15 digits with at most
+one '.', blanks — meshcodes: no '.' and no '-' — and converts them as
 ``mantissa / 10.0**k`` (Clinger's fast path: both operands are exact
 doubles, so the quotient is bit-identical to ``float()``).  A line
 that is too short, or has a field the mask rejects (exponents, inf,
-nan, a '+', tabs, a stray \\r, ...), goes through the per-line
-Rust-parity casts in line order: valid unusual syntax still parses,
-and the earliest bad line raises its positional error.  A data section
-that is not ASCII is parsed line by line throughout.
+nan, a '+', tabs, a stray \\r, non-ASCII text, ...), goes through the
+per-line Rust-parity casts in line order: valid unusual syntax still
+parses, and the earliest bad line raises its positional error.
 
 The grid itself is stored as numpy arrays sorted by meshcode.  Each
 Python worker builds, once per broadcast, a block-dense slot index over
@@ -398,15 +398,17 @@ def _decimal_fields(chars: np.ndarray, integer: bool) -> tuple[np.ndarray, np.nd
     return ok, np.where(neg, -value, value)
 
 
-def _parse_ascii(data: str, lineno: int, rngs) -> list[np.ndarray]:
-    """``[codes, dlat, dlon, dalt]`` of an ASCII data section whose
-    first line is line ``lineno``.  The section is encoded once; each
-    field is cut as a (width, n) uint8 block and converted by
-    ``_decimal_fields``.  A line that is too short, or has a field its
-    mask rejects, goes through ``_parse_line`` in line order, so the
-    earliest bad line raises its positional error."""
+def _parse_data(data: str, lineno: int, rngs) -> list[np.ndarray]:
+    """``[codes, dlat, dlon, dalt]`` of a data section whose first line
+    is line ``lineno``.  The section is encoded once, each non-ASCII
+    character as one '?' (which no mask accepts), so byte offsets are
+    character offsets; each field is cut as a (width, n) uint8 block
+    and converted by ``_decimal_fields``.  A line that is too short, or
+    has a field its mask rejects, goes through ``_parse_line`` on the
+    original text in line order, so the earliest bad line raises its
+    positional error."""
     size = len(data)
-    buf = np.frombuffer(data.encode("ascii") + bytes(max(r[1] for r in rngs if r)),
+    buf = np.frombuffer(data.encode("ascii", "replace") + bytes(max(r[1] for r in rngs if r)),
                         dtype=np.uint8)
     breaks = np.flatnonzero(buf[:size] == 10)
     starts = np.append(0, breaks + 1)
@@ -432,19 +434,6 @@ def _parse_ascii(data: str, lineno: int, rngs) -> list[np.ndarray]:
     return cols
 
 
-def _parse_lines(data: str, lineno: int, rngs) -> list[np.ndarray]:
-    """``_parse_ascii``'s result, one ``_parse_line`` per line: for a
-    data section that is not ASCII, where character offsets are not
-    byte offsets."""
-    lines = data.split("\n")
-    if lines[-1] == "":
-        lines.pop()
-    rows = [_parse_line(ln[:-1] if ln.endswith("\r") else ln, lineno + i, rngs)
-            for i, ln in enumerate(lines)]
-    return [np.array(col, dtype=np.int64 if i == 0 else np.float64)
-            for i, col in enumerate(zip(*rows))]
-
-
 def parse_par(text: str, format: str, description: str | None = None) -> MeshGrid:
     """Deserialize par-formatted text (par.rs:335-481, 641-671).
 
@@ -455,15 +444,14 @@ def parse_par(text: str, format: str, description: str | None = None) -> MeshGri
     ``Transformer::from_str_with_description``, par.rs:368-394);
     absent component columns fill 0.0.
 
-    An ASCII data section is parsed in bulk (``_parse_ascii``): fields
-    of the form blanks, optional '-', 1-15 digits with at most one '.',
+    The data section is parsed in bulk (``_parse_data``): fields of
+    the form blanks, optional '-', 1-15 digits with at most one '.',
     blanks (meshcodes: digits only) convert column-wise, bit-identical
     to ``float()``/``int()``.  Any other field — an exponent, inf/nan,
-    a '+', a tab, a stray \\r — and any short line go through the
-    per-line Rust-parity casts, in line order, so valid unusual syntax
-    still parses and the earliest bad line raises.  A data section with
-    non-ASCII text is parsed line by line throughout.  Later duplicate
-    codes win (the reference's HashMap insert).
+    a '+', a tab, a stray \\r, a non-ASCII character — and any short
+    line go through the per-line Rust-parity casts, in line order, so
+    valid unusual syntax still parses and the earliest bad line raises.
+    Later duplicate codes win (the reference's HashMap insert).
     """
     header, *rngs = PAR_LAYOUTS[format]
     lines = text.split("\n", header)
@@ -480,8 +468,7 @@ def parse_par(text: str, format: str, description: str | None = None) -> MeshGri
 
     if description is None:
         description = "\n".join(lines) + "\n"
-    parse = _parse_ascii if data.isascii() else _parse_lines
-    codes, dlat, dlon, dalt = parse(data, header + 1, rngs)
+    codes, dlat, dlon, dalt = _parse_data(data, header + 1, rngs)
     # a code's first row in the reversed lines is its last line
     _, first = np.unique(codes[::-1], return_index=True)
     keep = codes.size - 1 - first

@@ -403,29 +403,31 @@ def test_parse_non_ascii_header_keeps_bulk_path(monkeypatch):
     """A Japanese header leaves the ASCII data section on the bulk path
     and the description exact; a non-ASCII character in a data field
     raises the positional error the per-line parser always raised, and
-    one outside every field is ignored as before."""
+    one outside every field is ignored as before, without leaving the
+    bulk path."""
     from jgdtrans_rs_spark import grid
 
     head = "日本測地系 TKY2JGD パラメータ\r\nメッシュコード 緯度 経度\n"
     data = "46303582  11.49105  -9.88759\n46303592  11.49099  -9.88994\n"
 
-    def per_line(*args):
-        raise AssertionError("ASCII data section parsed line by line")
-
-    monkeypatch.setattr(grid, "_parse_lines", per_line)
+    per_line = []
+    parse_line = grid._parse_line
+    monkeypatch.setattr(grid, "_parse_line", lambda *a: per_line.append(a) or parse_line(*a))
     g = parse_par(head + data, "TKY2JGD")
+    assert per_line == []
     assert g.description == "日本測地系 TKY2JGD パラメータ\nメッシュコード 緯度 経度\n"
     assert g.codes.tolist() == [46303582, 46303592]
     assert g.dlon_sec.tolist() == [-9.88759, -9.88994]
-    monkeypatch.undo()
 
     fullwidth_one = chr(0xFF11)
     with pytest.raises(ParseParError) as e:
         parse_par(head + data + f"46303602  {fullwidth_one}1.49105  -9.88759\n", "TKY2JGD")
     assert (e.value.kind, e.value.lineno, e.value.start, e.value.end, e.value.column) == (
         "ParseFloat", 5, 9, 18, "Latitude")
+    per_line.clear()
     g = parse_par(head + data + "46303602  11.49105  -9.88759  東京\n", "TKY2JGD")
     assert g.codes.tolist() == [46303582, 46303592, 46303602]
+    assert per_line == []
 
 
 # Field contents the bulk masks must hand to the per-line casts: valid
@@ -536,10 +538,11 @@ def _random_par(rng, fmt, n_lines, n_mutations):
             line = lines[int(rng.integers(0, n_lines))][:8] + line[8:]
         else:   # a character outside every field, or text past the last one
             j = int(rng.integers(8, width))
+            ch = "x" if rng.random() < 0.5 else chr(0x6771)
             if any(s <= j < e for s, e in present):
-                line += " x"
+                line += " " + ch
             else:
-                line = line[:j] + "x" + line[j + 1:]
+                line = line[:j] + ch + line[j + 1:]
         lines[i] = line
     text = "".join(f"header {k}\n" for k in range(header)) + "\n".join(lines)
     end = rng.random()
@@ -554,10 +557,10 @@ def test_parse_matches_line_by_line_reference(fmt, monkeypatch):
     seeded random grids of every layout, with mutations injected at
     random lines (signs, -0, exponents, inf/nan, leading zeros, a bare
     '.', tabs, \\x1c, a mid-line \\r, CRLF, short and empty lines, '_',
-    '1.5d', non-ASCII digits, duplicate codes; 15- and 16-digit
-    mantissas on a wide layout): the same codes and value bits, or the
-    same error kind, line, range and column.  A text with no mutation
-    never reaches the per-line casts."""
+    '1.5d', non-ASCII digits, non-ASCII text outside the fields,
+    duplicate codes; 15- and 16-digit mantissas on a wide layout): the
+    same codes and value bits, or the same error kind, line, range and
+    column.  A text with no mutation never reaches the per-line casts."""
     from jgdtrans_rs_spark import grid
 
     monkeypatch.setitem(grid.PAR_LAYOUTS, "Wide", _WIDE)
