@@ -401,20 +401,24 @@ class Engine:
         """``Point::new`` bounds predicate (point.rs:212-223) as a pure
         Column — pushes down to the scan.
 
-        NULL-safe: the leading isNotNull conjuncts force the predicate
-        to FALSE (not NULL) for missing coordinates, so a
-        failed-extraction row lands in the quarantine split instead of
-        silently vanishing from both filter halves (filter(NULL) and
-        filter(NOT NULL) each drop the row)."""
-        lat_col, lon_col = F.col(lat_col), F.col(lon_col)
-        return (
-            lat_col.isNotNull()
-            & lon_col.isNotNull()
-            & lat_col.between(-90.0, 90.0)
-            & lon_col.between(-180.0, 180.0)
-            & ~F.isnan(lat_col)
-            & ~F.isnan(lon_col)
-        )
+        One reference per column: ``coalesce(abs(c) <= bound, false)``
+        for each coordinate.  A coordinate that is an alias of an
+        upstream expression (``extract_geotags``' regex extraction) is
+        copied by Catalyst into every reference of the pushed filter,
+        so the former six conjuncts (isNotNull, between, ~isnan per
+        column) evaluated the extraction 8 times per page, on the valid
+        and the quarantine side alike; this form evaluates it twice.
+        The truth table is the same on every double: NaN compares above
+        every number in Spark, so ``abs(NaN) <= b`` is false; ±inf fail
+        the bound; -0.0 passes; and a NULL coordinate makes the
+        comparison NULL, which ``coalesce`` turns to FALSE (not NULL),
+        so a failed-extraction row lands in the quarantine split
+        instead of silently vanishing from both filter halves
+        (filter(NULL) and filter(NOT NULL) each drop the row)."""
+        def within(c, bound):
+            return F.coalesce(F.abs(F.col(c)) <= bound, F.lit(False))
+
+        return within(lat_col, 90.0) & within(lon_col, 180.0)
 
     def validate(self, df: DataFrame, lat: str = "lat", lon: str = "lon"):
         """Split into (valid, quarantine) — the validate-once-as-filter

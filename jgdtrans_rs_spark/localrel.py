@@ -1,86 +1,85 @@
-"""Driver-local side-table builder: VALUES-backed LocalRelation.
+"""Driver-local side-table builder: Arrow-built LocalRelation.
 
 ``spark.createDataFrame(rows)`` backs the frame with a parallelized RDD
 of pickled Python rows; every evaluation — in particular every
 ``BroadcastExchange`` build, which happens once per downstream ACTION —
 runs a Spark job of ~defaultParallelism tiny tasks and re-deserializes
 the pickled rows in the JVM.  For the small driver-side side tables in
-the hot query paths (the parameter-grid view, polygon name / cover
-relations) that job is pure fixed latency: measured ~0.25 s of every
-q1s action at local[32] (four broadcast builds of a 4-row grid), with
-identical results.  A VALUES inline table analyzes to a LocalRelation
-instead: ``BroadcastExchange`` collects it driver-side with ZERO jobs
-and the build is effectively free (guide §2.4 — remove work per
-action, not resize it).
+the hot query paths (the parameter-grid view, polygon name / box
+relations) that job is fixed latency: measured ~0.25 s of every q1s
+action at local[32] (four broadcast builds of a 4-row grid), and
+2.15 s of the cold ``pages_pipeline`` sql_forward action on 4 CPUs
+(its 20,445-row grid, above the earlier 16,384-row cap).  A
+LocalRelation is collected driver-side by ``BroadcastExchange`` with
+ZERO jobs (guide §2.4 — remove work per action, not resize it).
 
-Exactness: DOUBLE values are emitted as ``CAST('<repr>' AS DOUBLE)`` —
-``repr`` is the shortest round-trip decimal form and the JVM string->
-double parse is correctly rounded, so the stored bits are identical to
-the Python float, including -0.0, NaN and the infinities (a bare
-decimal literal would lose the zero sign: DECIMAL has no signed zero).
+The table is built column by column as a ``pyarrow.Table`` and handed
+to ``spark.createDataFrame(table, schema)``, which Spark 4.1 turns into
+a LocalRelation.  Arrow carries each double's 64 bits unchanged, so
+-0.0, NaN, the infinities, subnormals and NULL survive bit for bit, and
+an empty row list is an empty LocalRelation (not an RDD scan).  The
+SQL ``VALUES`` text this replaces (one exact literal per cell, as
+``refine_pairs`` still renders its ring vertices) put the pages set-up
+at 3.2-4.5 s with a 20k-row grid, against 1.0-1.2 s with the Arrow
+build.
 
-Above ``max_rows`` the builder falls back to ``createDataFrame``: a
-VALUES text of ~10^6 grid rows would push parse/analyze time past what
-the per-action build job costs, and a side table that large amortizes
-its build anyway.
+Above ``MAX_LOCAL_ROWS`` the builder falls back to
+``createDataFrame(rows)``.  A LocalRelation is not free per action:
+Catalyst walks its rows in every rule that maps a plan's expressions,
+so each action's optimization grows with its row count.  Measured on 4 CPUs, fresh
+process, 12k points through ``SqlEngine.forward`` (four references to
+the grid), Arrow against the fallback:
+
+    grid rows   first action        each later action
+    20,445      4.0-4.3 vs 5.5-6.0  1.4-1.5 vs 1.0-1.5 s
+    32,768      4.6-4.7 vs 5.1-5.4  1.6-2.0 vs 1.2-1.5 s
+    65,536      5.2-5.5 vs 5.6-5.9  2.5-3.2 vs 1.5-1.6 s
+
+so the cap is the smallest power of two above the pages grid.  Far
+above it a LocalRelation is not even safe: a 4-join query over a
+383,244-row (national grid) Arrow LocalRelation failed in
+``LocalSchedulerBackendEndpoint`` with an ``Inbox`` error, where the
+fallback ran the same query in 2.1 s.
 """
 
 from __future__ import annotations
 
-import math
-
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
-# ~1-2 MB of SQL text at the widths used here; parse+analyze stays in
-# the low tens of ms and happens once per view registration
-MAX_LOCAL_ROWS = 16384
+# the smallest power of two above the 20,445-row pages grid (module
+# header: the per-action planning cost grows with the rows)
+MAX_LOCAL_ROWS = 32768
 
-_INT_TYPES = {"BIGINT", "LONG", "INT", "INTEGER", "SMALLINT", "TINYINT"}
-
-
-def _scalar(v, typ: str) -> str:
-    """One exactly-typed SQL literal (see module header for the DOUBLE
-    round-trip argument)."""
-    t = typ.upper()
-    if v is None:
-        return f"CAST(NULL AS {t})"
-    if t == "DOUBLE":
-        v = float(v)
-        if math.isnan(v):
-            s = "NaN"
-        elif math.isinf(v):
-            s = "Infinity" if v > 0 else "-Infinity"
-        else:
-            s = repr(v)
-        return f"CAST('{s}' AS DOUBLE)"
-    if t in _INT_TYPES:
-        return f"CAST({int(v)} AS {'BIGINT' if t == 'LONG' else t})"
-    if t == "BOOLEAN":
-        return "TRUE" if v else "FALSE"
-    if t == "STRING":
-        e = str(v).replace("\\", "\\\\").replace("'", "\\'")
-        return f"'{e}'"
-    raise ValueError(f"local_rows_df: unsupported type {typ!r}")
+# DDL type -> (Arrow type, the Python cast each non-NULL cell goes through)
+_ARROW_TYPES = {
+    "BIGINT": (pa.int64(), int), "LONG": (pa.int64(), int), "INT": (pa.int32(), int),
+    "INTEGER": (pa.int32(), int), "SMALLINT": (pa.int16(), int), "TINYINT": (pa.int8(), int),
+    "DOUBLE": (pa.float64(), float), "BOOLEAN": (pa.bool_(), bool), "STRING": (pa.string(), str),
+}
 
 
-def local_rows_df(spark: SparkSession, rows, schema: str,
-                  max_rows: int = MAX_LOCAL_ROWS) -> DataFrame:
+def local_rows_df(spark: SparkSession, rows, schema: str) -> DataFrame:
     """Small driver-side rows -> DataFrame, as a LocalRelation when the
     row count allows (zero-job broadcast builds), else createDataFrame.
 
     ``schema`` is the simple DDL string form ("name type, ...") with
     types limited to long/int family, double, string, boolean —
     everything the engine's side tables use; richer types raise."""
-    cols = []
+    names, types = [], []
     for part in schema.split(","):
         name, typ = part.strip().split(None, 1)
-        cols.append((name, typ.strip()))
+        arrow = _ARROW_TYPES.get(typ.strip().upper())
+        if arrow is None:
+            raise ValueError(f"local_rows_df: unsupported type {typ!r}")
+        names.append(name)
+        types.append(arrow)
     rows = list(rows)
-    if not rows or len(rows) > max_rows:
+    if len(rows) > MAX_LOCAL_ROWS:
         return spark.createDataFrame(rows, schema=schema)
-    vals = ", ".join(
-        "(" + ", ".join(_scalar(v, t) for v, (_, t) in zip(r, cols)) + ")"
-        for r in rows
-    )
-    names = ", ".join(f"col{i + 1} AS {n}" for i, (n, _) in enumerate(cols))
-    return spark.sql(f"SELECT {names} FROM VALUES {vals}")
+    columns = list(zip(*rows)) if rows else [()] * len(names)
+    table = pa.table(
+        [pa.array([None if v is None else cast(v) for v in c], type=t)
+         for c, (t, cast) in zip(columns, types)],
+        names=names)
+    return spark.createDataFrame(table, schema=schema)

@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from .. import mesh
-from ..localrel import _scalar, local_rows_df
+from ..localrel import local_rows_df
 
 Polygon = tuple[str, list[tuple[float, float]]]  # (poly_id, [(lat, lon), ...])
 
@@ -102,7 +102,10 @@ def _edges_sql(ring: list[tuple[float, float]]) -> str:
     finite vertices may overflow to an infinity, which has no
     literal."""
     def d(v: float) -> str:
-        return _scalar(v, "DOUBLE")
+        # repr is the shortest round-trip form and the JVM parse is
+        # correctly rounded, so the literal has the vertex's bits, -0.0
+        # included (a bare decimal literal is a DECIMAL: no signed zero)
+        return f"CAST('{v!r}' AS DOUBLE)"
 
     n = len(ring)
     return _array_sql([

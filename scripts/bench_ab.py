@@ -37,8 +37,13 @@ the bound, "unresolved" when the reference IQR is wider than the bound
 A metric whose working tree meets the claim rule — at least 9 of 10
 pairs won (the same share of any other pair count) and a median gap,
 in its better direction, larger than the reference's IQR — is marked
-"GAIN"; the verdicts above do not change with it.  The closing JSON
-line adds both sides' quartiles and every run's result line.
+"GAIN"; the verdicts above do not change with it.  A second table
+gives each operation's median seconds per side (from the report line
+that ``perfbench/run.py`` prints before its result line: each run's
+op median, then the median over the runs) and the pairs the working
+tree was faster in, so a change can name the operation it moved.  The
+closing JSON line adds both sides' quartiles, the op medians and every
+run's result line.
 """
 
 from __future__ import annotations
@@ -83,13 +88,16 @@ def checkout(ref: str, base: str) -> str:
     return path
 
 
-def run_perfbench(cwd: str, workload: str, seed: int, trace: int) -> dict:
-    """One perfbench run in checkout ``cwd``: its result line."""
+def run_perfbench(cwd: str, workload: str, seed: int, trace: int) -> tuple[dict, dict]:
+    """One perfbench run in checkout ``cwd``: its result line and the
+    report that ``perfbench/run.py`` prints on the line before."""
     out = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
          "--seconds", str(_spec()["run_seconds"]), "--trace", str(trace)],
         capture_output=True, text=True, cwd=cwd, check=True, timeout=900)
-    return json.loads(out.stdout.strip().splitlines()[-1])
+    lines = out.stdout.strip().splitlines()
+    report = next(json.loads(l)["report"] for l in reversed(lines) if l.startswith('{"report"'))
+    return json.loads(lines[-1]), report
 
 
 def _spec() -> dict:
@@ -157,9 +165,21 @@ def summarize(ref_runs: list[dict], head_runs: list[dict]) -> dict:
     return out
 
 
+def op_medians(ref_reports: list[dict], head_reports: list[dict]) -> dict:
+    """Per operation: each side's median over its runs of the run's
+    median op seconds, and the pairs the working tree was faster in."""
+    out = {}
+    for op in ref_reports[0]["ops"]:
+        a = [r["ops"][op]["median_s"] for r in ref_reports]
+        b = [r["ops"][op]["median_s"] for r in head_reports]
+        out[op] = {"ref": statistics.median(a), "head": statistics.median(b),
+                   "wins": sum(y < x for x, y in zip(a, b))}
+    return out
+
+
 def perfbench_mode(ref: str, ref_dir: str, pairs: int, workload: str, first_seed: int,
                    trace: int) -> None:
-    ref_runs, head_runs = [], []
+    ref_runs, head_runs, ref_reports, head_reports = [], [], [], []
     for i in range(pairs):
         seed = first_seed + i
         order = [("ref", ref_dir), ("head", ROOT)]
@@ -167,9 +187,11 @@ def perfbench_mode(ref: str, ref_dir: str, pairs: int, workload: str, first_seed
             order.reverse()
         for side, cwd in order:
             print(f"pair {i + 1}/{pairs} seed {seed}: {side} ...", flush=True)
-            r = run_perfbench(cwd, workload, seed, trace)
+            r, report = run_perfbench(cwd, workload, seed, trace)
             (ref_runs if side == "ref" else head_runs).append(r)
+            (ref_reports if side == "ref" else head_reports).append(report)
     s = summarize(ref_runs, head_runs)
+    s["ops"] = op_medians(ref_reports, head_reports)
     print(f"\n{workload}, {pairs} pairs, seeds {first_seed}-{first_seed + pairs - 1}, "
           f"failed ref {sum(s['failed']['ref'])} head {sum(s['failed']['head'])}")
     print(f"{'metric':36} {ref[:10]:>12} {'HEAD':>12} {'delta':>8} {'ref IQR':>10} {'wins':>5}"
@@ -180,6 +202,10 @@ def perfbench_mode(ref: str, ref_dir: str, pairs: int, workload: str, first_seed
         print(f"{name:36} {base:12.4g} {head:12.4g} {delta:+7.1%} "
               f"{m['ref_iqr']:10.3g} {m['wins']:>2}/{pairs}  {m.get('verdict', '')}"
               f"{' GAIN' if m['gain'] else ''}")
+    print(f"\n{'op (median s)':36} {ref[:10]:>12} {'HEAD':>12} {'delta':>8} {'wins':>16}")
+    for op, m in s["ops"].items():
+        print(f"{op:36} {m['ref']:12.4g} {m['head']:12.4g} {m['head'] / m['ref'] - 1.0:+7.1%} "
+              f"{m['wins']:>13}/{pairs}")
     print(json.dumps({**s, "workload": workload, "ref": ref, "first_seed": first_seed,
                       "samples_ref": ref_runs, "samples_head": head_runs}))
 

@@ -117,6 +117,55 @@ def test_validate_null_coordinates_quarantined(engine, spark):
     assert {r["pkey"] for r in quarantine.collect()} == {2, 3, 4}
 
 
+def _six_conjunct_valid_point(lat, lon):
+    """The earlier form of ``Engine.valid_point``, kept as the
+    reference of the differential test below."""
+    lat, lon = F.col(lat), F.col(lon)
+    return (lat.isNotNull() & lon.isNotNull()
+            & lat.between(-90.0, 90.0) & lon.between(-180.0, 180.0)
+            & ~F.isnan(lat) & ~F.isnan(lon))
+
+
+def test_valid_point_matches_six_conjunct_reference(engine, spark):
+    """Same valid and quarantine splits as the six-conjunct predicate on
+    every double class: NULL, NaN, ±inf, ±0.0, the bounds, the next
+    double beyond each bound, the smallest subnormal and a huge
+    value, in every (lat, lon) combination."""
+    import math
+
+    inf = float("inf")
+    edge = [None, float("nan"), inf, -inf, 0.0, -0.0, 5e-324, -5e-324, 1e308, -1e308]
+    lats = edge + [90.0, -90.0, math.nextafter(90.0, inf), math.nextafter(-90.0, -inf)]
+    lons = edge + [180.0, -180.0, math.nextafter(180.0, inf), math.nextafter(-180.0, -inf)]
+    rows = [(i, la, lo) for i, (la, lo) in enumerate(itertools.product(lats, lons))]
+    df = spark.createDataFrame(rows, "pkey long, lat double, lon double")
+
+    def keys(frame):
+        return sorted(r.pkey for r in frame.select("pkey").collect())
+
+    valid, quarantine = engine.validate(df, "lat", "lon")
+    ref = _six_conjunct_valid_point("lat", "lon")
+    assert keys(valid) == keys(df.filter(ref))
+    assert keys(quarantine) == keys(df.filter(~ref))
+    assert len(keys(valid)) + len(keys(quarantine)) == len(rows)
+    assert 0 < len(keys(valid)) < len(rows)
+
+
+def test_validate_filter_extracts_each_coordinate_once(engine, spark):
+    """The filter pushed above ``extract_geotags`` holds one regex
+    extraction per coordinate, on both splits: Catalyst copies the
+    ``lat``/``lon`` aliases into every reference of the predicate, and
+    the six-conjunct form evaluated the extraction 8 times per page."""
+    pages = spark.createDataFrame(
+        [("u1", 0, "ja", bytearray(b'<meta name="geo.position" content="36.1;140.1">'))],
+        "url string, warc_ts long, lang string, html binary")
+    for split in engine.validate(pages_src.extract_geotags(pages), "lat", "lon"):
+        plan = split._jdf.queryExecution().optimizedPlan().toString()
+        filters = [line for line in plan.splitlines() if line.lstrip(" :+-").startswith("Filter")]
+        assert len(filters) == 1, plan
+        assert filters[0].count("regexp_extract(") == 2, plan
+
+
 def test_salted_join_equals_broadcast(engine, points):
     polys = [
         ("p0", [(36.0833, 140.0625), (36.0833, 140.125), (36.125, 140.125), (36.125, 140.0625)]),
@@ -777,6 +826,72 @@ def test_sink_null_meshcode_and_status_accounting(spark, tmp_path):
         for k, v in m["status_counts"].items():
             reread[k] = reread.get(k, 0) + v
     assert reread == merged
+
+
+def _sink_edge_rows():
+    """Group 0 of 2 (even codes): ten tiles, more than TOP_TILES, with
+    tied counts on both sides of the cut and a NULL status; group 1
+    (odd codes): -1 tiles, a NULL meshcode, two tied tiles and a NULL
+    status."""
+    rows = []
+    for t, n in enumerate([5, 4, 4, 3, 3, 3, 2, 2, 2, 1]):
+        code = 54400000 + 2 * (9 - t)   # descending codes: ties break ascending
+        rows += [(code, 0 if j else 2) for j in range(n)]
+    rows += [(54400002, None)] + [(-1, 1)] * 4 + [(None, 1)]
+    rows += [(54400003, 0)] * 3 + [(54400001, 0)] * 2 + [(54400001, None)]
+    return [(k, code, status) for k, (code, status) in enumerate(rows)]
+
+
+def test_sink_manifests_pinned_on_edge_input(spark, tmp_path):
+    """NULL status, NULL meshcode, -1 tiles, tied tile counts (meshcode
+    ascending breaks the tie) and a group truncated at TOP_TILES: the
+    manifests, less ``wall_ts``, are pinned literals (the ones the
+    persisted two-collect read-back wrote)."""
+    df = spark.createDataFrame(_sink_edge_rows(), "pkey long, meshcode long, status int")
+    out_dir = str(tmp_path / "edge_sink")
+    ms = sink.run_checkpointed(df, out_dir, n_groups=2)
+    want = [
+        {"bucket_group": 0, "n_rows": 30, "n_ok": 19,
+         "status_counts": {"-1": 1, "0": 19, "2": 10},
+         "top_tiles": [[54400018, 5], [54400014, 4], [54400016, 4], [54400002, 3],
+                       [54400008, 3], [54400010, 3], [54400012, 3], [54400004, 2]],
+         "n_tiles": 10},
+        {"bucket_group": 1, "n_rows": 11, "n_ok": 5,
+         "status_counts": {"-1": 1, "0": 5, "1": 5},
+         "top_tiles": [[54400001, 3], [54400003, 3]],
+         "n_tiles": 2},
+    ]
+    assert [{k: v for k, v in m.items() if k != "wall_ts"} for m in ms] == want
+    reread = sorted(sink.read_manifests(out_dir, spark), key=lambda m: m["bucket_group"])
+    assert reread == ms
+
+
+def test_sink_readback_job_count(spark, tmp_path, monkeypatch):
+    """After the data write, ``run_checkpointed`` derives every
+    manifest from one read-back query: at most 4 Spark jobs (a
+    persisted base aggregate with two collects took 7).  Jobs are
+    counted through the status tracker, under a job group set as soon
+    as the parquet write returns."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    sc = spark.sparkContext
+    write = DataFrameWriter.parquet
+
+    def parquet(self, *args, **kwargs):
+        write(self, *args, **kwargs)
+        sc.setJobGroup("sink-readback", "manifest read-back")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    df = spark.createDataFrame(_sink_edge_rows(), "pkey long, meshcode long, status int")
+    try:
+        ms = sink.run_checkpointed(df, str(tmp_path / "jobs_sink"), n_groups=2)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert sum(m["n_rows"] for m in ms) == 41
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup("sink-readback")
+    assert 0 < len(jobs) <= 4, jobs
 
 
 def test_bucketed_join_rejects_duplicate_poly_ids(spark):

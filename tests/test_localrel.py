@@ -1,12 +1,13 @@
-"""localrel.local_rows_df — the VALUES-backed LocalRelation builder
-behind the r06 zero-job broadcast-build optimization (grid view, poly
-name relations, the bucketed join's candidate side).
+"""localrel.local_rows_df — the Arrow-built LocalRelation builder
+behind the zero-job broadcast builds (grid view, poly name relations,
+the bucketed join's candidate side).
 
 Pins (a) bit-exactness of the DOUBLE round trip including the values a
 decimal literal would corrupt (-0.0) or reject (NaN/inf/denormals),
-(b) the LocalRelation plan shape at the three hot call sites — no
-``Scan ExistingRDD`` means no per-action broadcast-build job, and
-(c) the createDataFrame fallback above the size cap."""
+(b) the LocalRelation plan shape at the hot call sites, the 20,445-row
+pages grid included — no ``Scan ExistingRDD`` means no per-action
+broadcast-build job, and (c) the createDataFrame fallback above the
+size cap."""
 
 from __future__ import annotations
 
@@ -41,8 +42,21 @@ def test_string_int_bool_and_escaping(spark):
     assert sorted(tuple(r) for r in df.collect()) == sorted(rows)
 
 
+def test_empty_rows_plan_as_local_relation(spark):
+    """No rows is an empty LocalRelation, not ``createDataFrame([])``'s
+    RDD scan (a job per action)."""
+    df = local_rows_df(spark, [], "k long, s string, v double")
+    assert df.schema.simpleString() == "struct<k:bigint,s:string,v:double>"
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    assert df.collect() == []
+
+
 def test_fallback_above_cap(spark):
-    df = local_rows_df(spark, [(i,) for i in range(MAX_LOCAL_ROWS + 1)], "k long")
+    rows = [(i,) for i in range(MAX_LOCAL_ROWS + 1)]
+    at_cap = local_rows_df(spark, rows[:MAX_LOCAL_ROWS], "k long")
+    assert "LocalTableScan" in at_cap._jdf.queryExecution().executedPlan().toString()
+    df = local_rows_df(spark, rows, "k long")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" in plan
     assert df.count() == MAX_LOCAL_ROWS + 1
@@ -62,6 +76,7 @@ def test_hot_call_sites_have_no_rdd_scan(spark, semidyna_grid):
     from pyspark.sql import functions as F
 
     from jgdtrans_rs_spark.engine import Engine
+    from jgdtrans_rs_spark.grid import MeshGrid
     from jgdtrans_rs_spark.operators import spatial
     from jgdtrans_rs_spark.plans.spark_sql import SqlEngine
 
@@ -76,6 +91,12 @@ def test_hot_call_sites_have_no_rdd_scan(spark, semidyna_grid):
     sql_eng = SqlEngine(spark, semidyna_grid)
     fwd_plan = sql_eng.forward(pts)._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" not in fwd_plan
+    # the pages_pipeline grid's size, above the earlier 16,384-row cap
+    pages_sized = MeshGrid.from_dict(
+        {54400000 + i: (0.0, 0.0, 0.0) for i in range(20_445)}, "SemiDynaEXE")
+    big_plan = SqlEngine(spark, pages_sized).forward(pts)._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert "ExistingRDD" not in big_plan and "LocalTableScan" in big_plan
     q4s = sql_eng.transform_pip(pts, polys)
     assert q4s.collect()
     assert "ExistingRDD" not in q4s._jdf.queryExecution().executedPlan().toString()
