@@ -660,10 +660,10 @@ def _q_minhash(spark, sf_dir):
 
 def _q_ann_lsh(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return similarity.ann_lsh_topk(emb, n_queries=10, k=5)
+    return similarity.ann_lsh_topk(emb)
 
 
-# IVF recall constants: hits@5 over 10 queries vs brute force, keyed
+# IVF recall constants: hits@k over the queries vs brute force, keyed
 # by the embeddings fixture's integer fingerprint
 # (webops.embeddings_fingerprint_sql).  Deterministic per dataset —
 # seeded k-means init over the hash-filtered ordered sample — and
@@ -681,15 +681,16 @@ def _q_ann_ivf(spark, sf_dir):
     the oracle (VERDICT r02 'Next round #1')."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     emb.createOrReplaceTempView(_EMB)
-    approx = similarity.ann_ivf_topk(emb, n_queries=10, k=5)
-    brute = spark.sql(webops.ann_topk_sql(SPARK, _EMB, 10, 5))
+    approx = similarity.ann_ivf_topk(emb)
+    brute = spark.sql(webops.ann_topk_sql(SPARK, _EMB))
     hits = approx.join(
         brute.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"])
+    n_queries, k = webops._ANN_QUERIES, webops._ANN_K
     return hits.agg(F.count("*").cast("long").alias("n_hits")).select(
-        F.lit(10).cast("long").alias("n_queries"),
-        F.lit(5).cast("int").alias("k"),
+        F.lit(n_queries).cast("long").alias("n_queries"),
+        F.lit(k).cast("int").alias("k"),
         "n_hits",
-        (F.col("n_hits").cast("double") / F.lit(50.0)).alias("recall"),
+        (F.col("n_hits").cast("double") / F.lit(float(n_queries * k))).alias("recall"),
     )
 
 
@@ -701,8 +702,7 @@ def _q_near_dup_emb(spark, sf_dir):
     DuckDB twin rebuilds the augmentation and the LSH pipeline from the
     same hyperplane literals (webops.embedding_near_dup_oracle_sql)."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return similarity.embedding_near_dup(
-        similarity.augment_with_near_dups(emb), threshold=0.9)
+    return similarity.embedding_near_dup(similarity.augment_with_near_dups(emb))
 
 
 def _q_dedup_incremental(spark, sf_dir):
@@ -816,7 +816,7 @@ def oracle_sql() -> dict[str, str]:
     for comp, s in _GRID.statistics().items():
         stats_rows.append(
             f"('{comp}', {s['count']}, " + ", ".join(
-                f"CAST({round(s[k], 12)!r} AS DOUBLE)" for k in ("mean", "std", "abs", "min", "max")
+                oracle.double_lit(round(s[k], 12)) for k in ("mean", "std", "abs", "min", "max")
             ) + ")"
         )
     grid_stats_sql = (
@@ -826,8 +826,8 @@ def oracle_sql() -> dict[str, str]:
     # the distributed-twin oracle mirrors the Spark aggregate formulas
     # (total-based std per transformer.rs:190-237) over the same rows
     grid_rows_sql = " UNION ALL ".join(
-        f"SELECT CAST({a!r} AS DOUBLE) AS dlat_sec, CAST({b!r} AS DOUBLE) AS dlon_sec, "
-        f"CAST({h!r} AS DOUBLE) AS dalt_m"
+        f"SELECT {oracle.double_lit(a)} AS dlat_sec, {oracle.double_lit(b)} AS dlon_sec, "
+        f"{oracle.double_lit(h)} AS dalt_m"
         for _, a, b, h in _GRID.to_rows()
     )
     grid_stats_spark_sql = f"""

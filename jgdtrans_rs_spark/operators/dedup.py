@@ -16,6 +16,12 @@ physical strategy:
                    banded-Hamming near-dup pairs on the int.
 * ngram_jaccard  — exact blocked self-join (the small-corpus verifier
                    for minhash_lsh's recall).
+* winnowing / components — sliding-window fingerprints; connected
+                   components of a pair graph.
+
+Thresholds, band geometry and window widths are plans/webops.py
+constants shared with the DuckDB replicas (``_MAX_ROUNDS`` lives here);
+a test varies one with monkeypatch.
 """
 
 from __future__ import annotations
@@ -99,17 +105,15 @@ def minhash_lsh_pairs(spark: SparkSession, docs: str = "documents") -> DataFrame
     return spark.sql(webops.minhash_pairs_from(SPARK, sigs))
 
 
-def ngram_jaccard_pairs(spark: SparkSession, docs: str = "documents",
-                        tau_pct: int = 50) -> DataFrame:
+def ngram_jaccard_pairs(spark: SparkSession, docs: str = "documents") -> DataFrame:
     """Exact shingle-Jaccard pairs (doc_a, doc_b, inter_n, union_n),
     with the shingle stage materialized (it feeds both sides of the
     blocked self-join)."""
     base = _stage(spark, webops.ngram_base_sql(SPARK, docs), "_ng_base")
-    return spark.sql(webops.ngram_pairs_from(SPARK, base, tau_pct))
+    return spark.sql(webops.ngram_pairs_from(SPARK, base))
 
 
-def winnowing_fingerprints(spark: SparkSession, docs: str = "documents",
-                           window: int = 4) -> DataFrame:
+def winnowing_fingerprints(spark: SparkSession, docs: str = "documents") -> DataFrame:
     """Winnowing fingerprints, relational formulation: shingle stage
     materialized (persist + temp view — CollapseProject would inline
     the shingle pipeline into every window slice: measured minutes at
@@ -119,6 +123,7 @@ def winnowing_fingerprints(spark: SparkSession, docs: str = "documents",
     single-statement array form (webops.winnowing_from — the DuckDB
     oracle)."""
     base = _stage(spark, webops.winnowing_base_sql(SPARK, docs), "_win_base")
+    window = webops._WINNOW_WINDOW
     return spark.sql(f"""
       SELECT DISTINCT doc_id, fp
       FROM (
@@ -160,11 +165,12 @@ def dedup_incremental(spark: SparkSession, docs: str = "documents") -> DataFrame
     return spark.sql(f"WITH {body.lstrip()}")
 
 
-def dedup_components(pairs: DataFrame, nodes: DataFrame,
-                     a: str = "doc_a", b: str = "doc_b",
-                     id_col: str = "doc_id", max_iter: int = 25,
-                     stats: dict | None = None) -> DataFrame:
-    """Connected components over a near-duplicate pair graph ->
+_MAX_ROUNDS = 25  # dedup_components converges in ~log2(diameter) rounds
+
+
+def dedup_components(pairs: DataFrame, nodes: DataFrame) -> DataFrame:
+    """Connected components of the near-duplicate pair graph ``pairs``
+    (doc_a, doc_b) over ``nodes`` (doc_id) ->
     (doc_id, canonical_id, cluster_size): the cluster-assignment step
     a training-data pipeline runs AFTER pair generation, so every
     document maps to one canonical representative (min doc_id in its
@@ -195,25 +201,24 @@ def dedup_components(pairs: DataFrame, nodes: DataFrame,
     needed = log2(component diameter).  Web near-dup graphs are
     overwhelmingly stars/cliques around a canonical document
     (exact-copy families, template clusters) and fix in 2-3 rounds;
-    even pathological chains are now bounded by ~log2(n) << max_iter.
+    even pathological chains are now bounded by ~log2(n) << _MAX_ROUNDS.
     At that scale swap localCheckpoint for reliable ``checkpoint()``
     (executor loss under localCheckpoint forfeits blocks mid-loop).
     Output is deterministic regardless of partitioning: min() is
-    order-free.  ``stats``, if given a dict, receives
-    {'rounds': r, 'changed_per_round': [...]} for convergence audits.
+    order-free.
     """
     from pyspark.sql import functions as F
 
-    p = pairs.select(F.col(a).alias("src"), F.col(b).alias("dst")).localCheckpoint()
+    p = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+    p = p.localCheckpoint()
     edges = (
         p.unionByName(p.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .distinct()
         .localCheckpoint()
     )
     labels = nodes.select(
-        F.col(id_col).alias("node"), F.col(id_col).alias("label")).localCheckpoint()
-    changed_hist: list[int] = []
-    for _ in range(max_iter):
+        F.col("doc_id").alias("node"), F.col("doc_id").alias("label")).localCheckpoint()
+    for _ in range(_MAX_ROUNDS):
         neigh = (
             edges.join(labels, edges.dst == labels.node)
             .groupBy("src").agg(F.min("label").alias("nmin"))
@@ -250,21 +255,16 @@ def dedup_components(pairs: DataFrame, nodes: DataFrame,
             )
             .localCheckpoint()
         )
-        changed = new.filter("chg").count()  # cheap: reads the checkpoint
-        changed_hist.append(changed)
         labels = new.select("node", "label")
-        if changed == 0:
+        if new.filter("chg").count() == 0:  # cheap: reads the checkpoint
             break
     else:
         raise RuntimeError(
-            f"dedup_components did not converge in {max_iter} rounds — "
+            f"dedup_components did not converge in {_MAX_ROUNDS} rounds — "
             "the pair graph has a longer diameter than any dedup graph should")
-    if stats is not None:
-        stats["rounds"] = len(changed_hist)
-        stats["changed_per_round"] = changed_hist
     sizes = labels.groupBy("label").agg(F.count("*").cast("long").alias("cluster_size"))
     return (
         labels.join(sizes, "label")
-        .select(F.col("node").alias(id_col), F.col("label").alias("canonical_id"),
+        .select(F.col("node").alias("doc_id"), F.col("label").alias("canonical_id"),
                 "cluster_size")
     )

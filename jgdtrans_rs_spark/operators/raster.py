@@ -9,7 +9,8 @@ recoverable exactly from the code.  Both directions are declarative:
 * ``vectorize`` — raster cells -> exact cell-corner geometry (pure
   batch-local math, no shuffle), ready for polygon overlay or export.
 
-Both are SQL-expressible and carry full DuckDB oracles.
+Both read the tile column ``meshcode`` that ``Engine.assign_tiles``
+writes.  Both are SQL-expressible and carry full DuckDB oracles.
 """
 
 from __future__ import annotations
@@ -23,13 +24,13 @@ from pyspark.sql.types import DoubleType, StructField, StructType
 from .. import mesh
 
 
-def rasterize(points: DataFrame, value_col: str, mesh_col: str = "meshcode") -> DataFrame:
+def rasterize(points: DataFrame, value_col: str) -> DataFrame:
     """Aggregate point values onto the mesh raster:
     (meshcode, n_points, value_cents) — integer cent sums for exact
     cross-engine comparison."""
     return (
-        points.filter(F.col(mesh_col) != -1)
-        .groupBy(mesh_col)
+        points.filter(F.col("meshcode") != -1)
+        .groupBy("meshcode")
         .agg(
             F.count("*").cast("long").alias("n_points"),
             # try_cast, not cast: under ANSI mode one NaN/Inf value
@@ -41,7 +42,7 @@ def rasterize(points: DataFrame, value_col: str, mesh_col: str = "meshcode") -> 
     )
 
 
-def vectorize(raster: DataFrame, unit: int, mesh_col: str = "meshcode") -> DataFrame:
+def vectorize(raster: DataFrame, unit: int) -> DataFrame:
     """Recover each raster cell's exact corner geometry:
     (meshcode, sw_lat, sw_lon, ne_lat, ne_lon) using the reference's
     pinned node->degree math (coord.rs:322-380)."""
@@ -77,6 +78,6 @@ def vectorize(raster: DataFrame, unit: int, mesh_col: str = "meshcode") -> DataF
             "ne_lon": np.where(valid, ne_lon, nan),
         })
 
-    return raster.withColumn("_c", corners(F.col(mesh_col))).select(
+    return raster.withColumn("_c", corners(F.col("meshcode"))).select(
         *[c for c in raster.columns], "_c.*"
     )

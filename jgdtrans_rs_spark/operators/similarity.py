@@ -1,12 +1,18 @@
-"""Similarity search over embedding columns.
+"""Similarity search over ``vec_id``/``embedding`` frames (the vector
+length is read from the data, ``infer_dim``).
 
 * ``ann_lsh_topk`` — random-hyperplane LSH bucketing: each vector is
-  signed against ``n_planes`` fixed hyperplanes; candidates share a
+  signed against a few fixed hyperplanes per table; candidates share a
   bucket, exact cosine only on candidates.  At 100 TB this turns the
   O(n·q) scan into a bucket-local join; planes are deterministic
   (seeded) so results are reproducible.
+* ``ann_ivf_topk`` — k-means inverted lists; a query probes its nearest.
 * ``embedding_near_dup`` — pairs above a cosine threshold via the same
-  bucketing.
+  bucketing; ``augment_with_near_dups`` plants known positives.
+
+Settings shared with a DuckDB replica are plans/webops.py constants,
+read at call time; the IVF trainer's are the constants below.  A test
+varies one with monkeypatch.
 """
 
 from __future__ import annotations
@@ -18,6 +24,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, IntegerType, LongType
 
 from ..plans import webops
+
+# IVF: _IVF_LISTS lists from _IVF_ITERS Lloyd rounds on ~_IVF_SAMPLE_ROWS
+# sampled vectors; a query probes its _IVF_PROBE nearest lists.
+_IVF_LISTS, _IVF_PROBE = 8, 2
+_IVF_SAMPLE_ROWS, _IVF_ITERS, _IVF_SEED = 2000, 10, 42
 
 
 def _persist_stage(df: DataFrame, base_name: str) -> DataFrame:
@@ -35,42 +46,31 @@ def _persist_stage(df: DataFrame, base_name: str) -> DataFrame:
     return out
 
 
-def infer_dim(df: DataFrame, vec_col: str = "embedding") -> int:
+def infer_dim(df: DataFrame) -> int:
     """Modal vector length — one narrow deterministic pass (group on
-    ``size(vec_col)``; the aggregate is a handful of distinct lengths).
-    This backs the operators' ``dim=None`` default: previously ``dim``
-    defaulted to 64, so a caller with (say) 768-dim embeddings who
-    didn't pass it got EVERY vector tagged wrong-length (sentinel
-    bucket -1) and silently empty results.
+    ``size(embedding)``; the aggregate is a handful of distinct
+    lengths).  A fixed length would tag every vector of a wider corpus
+    wrong-length (sentinel bucket -1) and return silently empty
+    results.
 
     Why a full pass and not ``limit(1024)``: limit takes whichever
     rows the scan produces first, so on a mixed-length corpus the
     inferred dim would flip with partitioning/file order — the exact
     nondeterminism ``train_ivf_centroids`` documents avoiding.  Every
     caller invokes this immediately before a full signature pass over
-    the same frame, so the extra scan is a small constant factor; at
-    corpus scale pass ``dim=`` explicitly and pay nothing.  Mixed
-    lengths resolve to the most common (ties to the smaller) and the
-    minority lengths keep the documented sentinel policy."""
+    the same frame, so the extra scan is a small constant factor.
+    Mixed lengths resolve to the most common (ties to the smaller) and
+    the minority lengths keep the documented sentinel policy."""
     rows = (
-        df.filter(F.col(vec_col).isNotNull())
-        .select(F.size(vec_col).alias("_d"))
+        df.filter(F.col("embedding").isNotNull())
+        .select(F.size("embedding").alias("_d"))
         .filter(F.col("_d") > 0)
         .groupBy("_d").count()
         .orderBy(F.desc("count"), F.asc("_d")).take(1)
     )
     if not rows:
-        raise ValueError(
-            f"infer_dim: no non-empty '{vec_col}' vectors to sample — "
-            f"pass dim= explicitly")
+        raise ValueError("infer_dim: no non-empty 'embedding' vectors to sample")
     return int(rows[0]["_d"])
-
-
-def _planes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
-    # single source of truth with the DuckDB oracle's hyperplane
-    # literals (webops._lsh_planes_values) — one generator, two
-    # executions, so the full-replication oracles stay bit-honest
-    return webops.lsh_planes(dim, n_planes, seed)
 
 
 def _dense_ok(vecs: "pd.Series", dim: int):
@@ -92,9 +92,7 @@ def _dense_ok(vecs: "pd.Series", dim: int):
     return mat, ok
 
 
-def signature_buckets(df: DataFrame, dim: int | None = None,
-                      n_planes: int = 12, n_tables: int = 1,
-                      vec_col: str = "embedding") -> DataFrame:
+def signature_buckets(df: DataFrame, n_planes: int, n_tables: int) -> DataFrame:
     """Add LSH (table, bucket) rows: per table, sign bits against that
     table's fixed hyperplanes packed into an int (one output row per
     input row per table — OR-amplification across tables).
@@ -103,7 +101,7 @@ def signature_buckets(df: DataFrame, dim: int | None = None,
     array + JVM ``posexplode`` — the row expansion stays in codegen.
     On this Spark build the mapInPandas input writer costs ~9 us/row
     JVM-side; the scalar-UDF writer is ~8x cheaper, and only
-    ``vec_col`` ships through Python (passthrough columns stay
+    ``embedding`` ships through Python (passthrough columns stay
     JVM-side).
 
     NULL / wrong-length vectors get the sentinel bucket -1 in every
@@ -111,9 +109,9 @@ def signature_buckets(df: DataFrame, dim: int | None = None,
     re-rank drops them anyway) instead of crashing the batch or — the
     subtler failure — tripping the result-length check when a whole
     batch is degenerate."""
-    if dim is None:
-        dim = infer_dim(df, vec_col)
-    all_planes = [_planes(dim, n_planes, seed=42 + 101 * t) for t in range(n_tables)]
+    dim = infer_dim(df)
+    # the DuckDB replicas' hyperplane literals come from the same generator
+    all_planes = [webops.lsh_planes(dim, n_planes, 42 + 101 * t) for t in range(n_tables)]
 
     @F.pandas_udf(ArrayType(LongType()))
     def buckets(vecs: pd.Series) -> pd.Series:
@@ -132,46 +130,43 @@ def signature_buckets(df: DataFrame, dim: int | None = None,
         return pd.Series(list(out))
 
     return (
-        df.withColumn("_tb", buckets(F.col(vec_col)))
+        df.withColumn("_tb", buckets(F.col("embedding")))
         .select(*df.columns, F.posexplode("_tb").alias("table", "bucket"))
         .withColumn("table", F.col("table").cast("int"))
     )
 
 
-def _rank_topk(joined: DataFrame, k: int, vec_col: str, id_col: str) -> DataFrame:
-    """Exact cosine re-rank of (query_id, q_vec, candidate) rows as a
-    pure Column cosine (F.zip_with/F.aggregate dot product) + window
-    row_number — zero Python in the re-rank; the window shuffle keys
-    on query_id like the grouped alternative would."""
+def _rank_topk(joined: DataFrame) -> DataFrame:
+    """Exact cosine top-_ANN_K re-rank of (query_id, q_vec, candidate)
+    rows as a pure Column cosine (F.zip_with/F.aggregate dot product)
+    + window row_number — zero Python in the re-rank; the window
+    shuffle keys on query_id like the grouped alternative would."""
     from pyspark.sql import Window
 
     from ..functions.columns import cosine_similarity
 
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc(F.col(id_col)))
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc(F.col("vec_id")))
     return (
-        joined.withColumn("cos", cosine_similarity(F.col("q_vec"), F.col(vec_col)))
+        joined.withColumn("cos", cosine_similarity(F.col("q_vec"), F.col("embedding")))
         # zero-norm vectors give NULL cosine (try_divide), NaN inputs
         # give NaN — neither may enter the ranking (Spark sorts NaN
         # above every double, so an unguarded DESC would rank it first)
         .filter(F.col("cos").isNotNull() & ~F.isnan(F.col("cos")))
         .withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", F.col(id_col).alias("neighbor_id"))
+        .filter(F.col("rank") <= webops._ANN_K)
+        .select("query_id", "rank", F.col("vec_id").alias("neighbor_id"))
     )
 
 
-def ann_lsh_topk(df: DataFrame, n_queries: int = 10, k: int = 5,
-                 dim: int | None = None, n_planes: int = 4, n_tables: int = 8,
-                 vec_col: str = "embedding", id_col: str = "vec_id") -> DataFrame:
-    """Approximate top-k: candidates = union over hash tables of the
-    query's bucket, exact cosine re-rank on the (deduplicated)
-    candidate set.
+def ann_lsh_topk(df: DataFrame) -> DataFrame:
+    """Approximate top-k of the query vectors: candidates = union over
+    hash tables of the query's bucket, exact cosine re-rank on the
+    (deduplicated) candidate set.
 
     Scale path: (table, bucket) is the shuffle key; per-bucket
     candidate sets are orders of magnitude smaller than the corpus and
-    recall is tuned by (n_planes, n_tables) — OR-amplification:
-    recall ≈ 1 - (1 - p^m)^L.
+    recall is set by the planes m and tables L (webops._ANN_PLANES,
+    _ANN_TABLES) — OR-amplification: recall ≈ 1 - (1 - p^m)^L.
     """
     # persisted: the signature stage feeds BOTH sides of the bucket
     # join.  At the local tiers the self-join costs the same either
@@ -181,27 +176,22 @@ def ann_lsh_topk(df: DataFrame, n_queries: int = 10, k: int = 5,
     # boundary is explicit like embedding_near_dup's.  Cache contract
     # in _persist_stage.
     b = _persist_stage(
-        signature_buckets(df, dim, n_planes, n_tables, vec_col),
-        "_lsh_sigs")
-    q = b.filter(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
+        signature_buckets(df, webops._ANN_PLANES, webops._ANN_TABLES), "_lsh_sigs")
+    q = b.filter(F.col("vec_id") < webops._ANN_QUERIES).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_vec"),
         F.col("table"), F.col("bucket"),
     )
     joined = (
         q.join(b, ["table", "bucket"])
-        .filter(F.col(id_col) != F.col("query_id"))
-        .dropDuplicates(["query_id", id_col])
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .dropDuplicates(["query_id", "vec_id"])
     )
 
-    return _rank_topk(joined, k, vec_col, id_col)
+    return _rank_topk(joined)
 
 
-def train_ivf_centroids(df: DataFrame, n_lists: int = 8,
-                        dim: int | None = None,
-                        sample_rows: int = 2000, iters: int = 10,
-                        vec_col: str = "embedding", id_col: str = "vec_id",
-                        seed: int = 42) -> np.ndarray:
+def train_ivf_centroids(df: DataFrame) -> np.ndarray:
     """Deterministic k-means coarse quantizer for IVF.
 
     Trains on a bounded UNBIASED sample collected to the driver: a
@@ -211,18 +201,17 @@ def train_ivf_centroids(df: DataFrame, n_lists: int = 8,
     quantizer at scale, and unlike ``sample``, whose per-partition RNG
     changes with the split).  numpy Lloyd iterations with fixed seed —
     reproducible across runs."""
-    if dim is None:
-        dim = infer_dim(df, vec_col)
+    dim = infer_dim(df)
     n = df.count()
-    m = max(1, n // sample_rows)
+    m = max(1, n // _IVF_SAMPLE_ROWS)
     # no limit() after the filter: the hash predicate alone decides
     # membership, so the sample is identical under any partitioning
-    # (limit would truncate the ~sample_rows survivors scan-order-first);
+    # (limit would truncate the survivors scan-order-first);
     # sorting by id fixes the ROW ORDER too — the seeded init pick and
     # the Lloyd means are order-sensitive
     sample = (
-        df.filter(F.pmod(F.xxhash64(F.col(id_col), F.lit(seed)), F.lit(m)) == 0)
-        .select(id_col, vec_col).collect()
+        df.filter(F.pmod(F.xxhash64(F.col("vec_id"), F.lit(_IVF_SEED)), F.lit(m)) == 0)
+        .select("vec_id", "embedding").collect()
     )
     sample.sort(key=lambda r: r[0])
     # degenerate rows (NULL / wrong length) are excluded from training
@@ -232,46 +221,40 @@ def train_ivf_centroids(df: DataFrame, n_lists: int = 8,
     # non-finite samples excluded too: one NaN row makes its centroid
     # mean NaN, then EVERY training point argmins to that centroid
     mat = np.array([v for v in rows if np.isfinite(v).all()])
-    if len(mat) < n_lists:
+    if len(mat) < _IVF_LISTS:
         raise ValueError(
-            f"IVF training sample has {len(mat)} rows < n_lists={n_lists}; "
-            "lower n_lists or raise sample_rows")
-    rs = np.random.RandomState(seed)
-    centroids = mat[rs.choice(len(mat), n_lists, replace=False)]
-    for _ in range(iters):
+            f"IVF training sample has {len(mat)} rows, fewer than the "
+            f"{_IVF_LISTS} lists")
+    rs = np.random.RandomState(_IVF_SEED)
+    centroids = mat[rs.choice(len(mat), _IVF_LISTS, replace=False)]
+    for _ in range(_IVF_ITERS):
         d2 = ((mat[:, None, :] - centroids[None, :, :]) ** 2).sum(axis=2)
         assign = d2.argmin(axis=1)
-        for j in range(n_lists):
+        for j in range(_IVF_LISTS):
             members = mat[assign == j]
             if len(members):
                 centroids[j] = members.mean(axis=0)
     return centroids
 
 
-def ann_ivf_topk(df: DataFrame, n_queries: int = 10, k: int = 5,
-                 n_lists: int = 8, nprobe: int = 2, dim: int | None = None,
-                 vec_col: str = "embedding", id_col: str = "vec_id") -> DataFrame:
-    """IVF approximate top-k: coarse-quantize the corpus into inverted
-    lists, probe the query's ``nprobe`` nearest lists, exact cosine
-    re-rank on the candidates.
+def ann_ivf_topk(df: DataFrame) -> DataFrame:
+    """IVF approximate top-k of the query vectors: coarse-quantize the
+    corpus into inverted lists, probe the query's _IVF_PROBE nearest
+    lists, exact cosine re-rank on the candidates.
 
     Scale path: ``list_id`` is the shuffle key; each query touches
-    nprobe/n_lists of the corpus.  Centroids are trained once on a
-    driver-side sample and broadcast via closure.
+    _IVF_PROBE/_IVF_LISTS of the corpus.  Centroids are trained once on
+    a driver-side sample and broadcast via closure.
     """
-    if dim is None:
-        dim = infer_dim(df, vec_col)
-    centroids = train_ivf_centroids(df, n_lists, dim, vec_col=vec_col, id_col=id_col)
+    centroids = train_ivf_centroids(df)
+    dim = centroids.shape[1]
 
-    def _mat_ok(vecs: pd.Series):
-        # shared degenerate-row policy (NULL / wrong-length / non-finite)
-        return _dense_ok(vecs, dim)
-
+    # both UDFs apply the shared degenerate-row policy (_dense_ok)
     @F.pandas_udf(IntegerType())
     def assign_list(vecs: pd.Series) -> pd.Series:
         if len(vecs) == 0:
             return pd.Series(np.array([], dtype=np.int32))
-        mat, ok = _mat_ok(vecs)
+        mat, ok = _dense_ok(vecs, dim)
         d2 = ((mat[:, None, :] - centroids[None, :, :]) ** 2).sum(axis=2)
         out = d2.argmin(axis=1).astype(np.int32)
         out[~ok] = -1  # degenerate rows land in a list no probe visits
@@ -281,53 +264,51 @@ def ann_ivf_topk(df: DataFrame, n_queries: int = 10, k: int = 5,
     def probe_lists(vecs: pd.Series) -> pd.Series:
         if len(vecs) == 0:
             return pd.Series([])
-        mat, ok = _mat_ok(vecs)
+        mat, ok = _dense_ok(vecs, dim)
         d2 = ((mat[:, None, :] - centroids[None, :, :]) ** 2).sum(axis=2)
-        order = np.argsort(d2, axis=1)[:, :nprobe].astype(np.int32)
+        order = np.argsort(d2, axis=1)[:, :_IVF_PROBE].astype(np.int32)
         empty = np.empty(0, dtype=np.int32)
         return pd.Series([row if good else empty
                           for row, good in zip(order, ok)])
 
-    corpus = df.withColumn("list_id", assign_list(F.col(vec_col)))
+    corpus = df.withColumn("list_id", assign_list(F.col("embedding")))
     queries = (
-        df.filter(F.col(id_col) < n_queries)
-        .select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"),
-                F.explode(probe_lists(F.col(vec_col))).alias("list_id"))
+        df.filter(F.col("vec_id") < webops._ANN_QUERIES)
+        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec"),
+                F.explode(probe_lists(F.col("embedding"))).alias("list_id"))
     )
-    joined = queries.join(corpus, "list_id").filter(F.col(id_col) != F.col("query_id"))
+    joined = queries.join(corpus, "list_id").filter(F.col("vec_id") != F.col("query_id"))
 
-    return _rank_topk(joined.dropDuplicates(["query_id", id_col]), k, vec_col, id_col)
+    return _rank_topk(joined.dropDuplicates(["query_id", "vec_id"]))
 
 
-def augment_with_near_dups(df: DataFrame, every: int = 17, id_offset: int = 1_000_000,
-                           vec_col: str = "embedding", id_col: str = "vec_id") -> DataFrame:
+def augment_with_near_dups(df: DataFrame) -> DataFrame:
     """Union the corpus with deterministic perturbed copies of every
-    ``every``-th vector (new id = old + ``id_offset``): element-wise
+    webops._AUG_EVERY-th vector (new id = old + _AUG_ID_OFFSET): element-wise
     scale by 1 + 0.015*sin(id*7 + i), cosine to the original
     >= 1 - ~2e-4.  Pure Column ops — gives the near-dup operator
     ground-truth positive pairs in-query (mirrors plans/webops.py
     ``_dup_corpus`` for text)."""
+    vid = F.col("vec_id")
     dups = (
-        df.filter(F.col(id_col) % every == 0)
+        df.filter(vid % webops._AUG_EVERY == 0)
         .select(
-            (F.col(id_col) + id_offset).alias(id_col),
+            (vid + webops._AUG_ID_OFFSET).alias("vec_id"),
             F.transform(
-                F.col(vec_col),
-                lambda x, i: (x * (1.0 + 0.015 * F.sin(F.col(id_col) * 7.0 + i.cast("double"))))
+                F.col("embedding"),
+                lambda x, i: (x * (1.0 + 0.015 * F.sin(vid * 7.0 + i.cast("double"))))
                 .cast("float"),
-            ).alias(vec_col),
-            *[c for c in df.columns if c not in (id_col, vec_col)],
+            ).alias("embedding"),
+            *[c for c in df.columns if c not in ("vec_id", "embedding")],
         )
         .select(df.columns)
     )
     return df.unionByName(dups)
 
 
-def embedding_near_dup(df: DataFrame, threshold: float = 0.9,
-                       dim: int | None = None, n_planes: int = 6,
-                       n_tables: int = 4,
-                       vec_col: str = "embedding", id_col: str = "vec_id") -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (a < b) above threshold,
+def embedding_near_dup(df: DataFrame) -> DataFrame:
+    """Embedding-cosine near-duplicate pairs (a < b) at or above the
+    webops._NEAR_DUP_COS threshold,
     candidates via multi-table LSH buckets (high-threshold pairs agree
     on most hyperplanes, so recall is high at far lower cost than the
     quadratic scan).
@@ -344,11 +325,11 @@ def embedding_near_dup(df: DataFrame, threshold: float = 0.9,
     # and their (t, -1) buckets would self-join quadratically on a
     # dirty corpus.
     b = _persist_stage(
-        signature_buckets(df, dim, n_planes, n_tables, vec_col)
+        signature_buckets(df, webops._NEAR_DUP_PLANES, webops._NEAR_DUP_TABLES)
         .filter(F.col("bucket") >= 0),
         "_nd_sigs")
-    left = b.select(F.col(id_col).alias("a"), F.col(vec_col).alias("va"), "table", "bucket")
-    right = b.select(F.col(id_col).alias("b"), F.col(vec_col).alias("vb"), "table", "bucket")
+    left = b.select(F.col("vec_id").alias("a"), F.col("embedding").alias("va"), "table", "bucket")
+    right = b.select(F.col("vec_id").alias("b"), F.col("embedding").alias("vb"), "table", "bucket")
     pairs = (
         left.join(right, ["table", "bucket"])
         .filter(F.col("a") < F.col("b"))
@@ -366,6 +347,6 @@ def embedding_near_dup(df: DataFrame, threshold: float = 0.9,
 
     cos = cosine_similarity(F.col("va"), F.col("vb"))
     return (
-        pairs.filter(~F.isnan(cos) & (cos >= threshold))
+        pairs.filter(~F.isnan(cos) & (cos >= webops._NEAR_DUP_COS))
         .select("a", "b")
     )

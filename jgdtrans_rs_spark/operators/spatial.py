@@ -42,6 +42,7 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 from .. import mesh
 from ..localrel import local_rows_df
+from ..plans.oracle import double_lit
 
 Polygon = tuple[str, list[tuple[float, float]]]  # (poly_id, [(lat, lon), ...])
 
@@ -98,18 +99,12 @@ def _array_sql(items: list[str], elem: str) -> str:
 def _edges_sql(ring: list[tuple[float, float]]) -> str:
     """One ring's edges as a SQL array of exact vertex literals,
     horizontal ones dropped as in ``_crossings`` (they never cross the
-    ray).  The differences are left to the filter: a difference of two
-    finite vertices may overflow to an infinity, which has no
-    literal."""
-    def d(v: float) -> str:
-        # repr is the shortest round-trip form and the JVM parse is
-        # correctly rounded, so the literal has the vertex's bits, -0.0
-        # included (a bare decimal literal is a DECIMAL: no signed zero)
-        return f"CAST('{v!r}' AS DOUBLE)"
-
+    ray).  The differences are left to the filter, so one that
+    overflows to an infinity does so there, as in ``_crossings``."""
     n = len(ring)
     return _array_sql([
-        f"named_struct('y1', {d(y1)}, 'x1', {d(x1)}, 'y2', {d(y2)}, 'x2', {d(x2)})"
+        f"named_struct('y1', {double_lit(y1)}, 'x1', {double_lit(x1)}, "
+        f"'y2', {double_lit(y2)}, 'x2', {double_lit(x2)})"
         for (y1, x1), (y2, x2) in ((ring[i], ring[(i + 1) % n]) for i in range(n))
         if y1 != y2
     ], _EDGE)

@@ -6,12 +6,15 @@ with the DuckDB oracle):
 * boilerplate_strip — corpus-level repeated-segment removal (the
   CCNet-style paragraph-dedup pass reshaped for single-line synthetic
   docs): hash every fixed-width token segment, mark segments that
-  appear in >= min_docs distinct documents as boilerplate, drop every
-  occurrence, rebuild the text in order.
+  appear in >= webops._BOILER_MIN_DOCS distinct documents as
+  boilerplate, drop every occurrence, rebuild the text in order.
 * vocab_topn — corpus-wide token frequency + document frequency,
   ranked, top-N (tokenizer-prep).
+* text_profile, decontaminate, corpus_filter_audit.
 
-Scale notes are on the SQL builders (plans/webops.py).
+Scale notes are on the SQL builders (plans/webops.py); their settings
+are constants there, shared with the DuckDB replicas (a test varies one
+with monkeypatch).
 """
 
 from __future__ import annotations
@@ -23,8 +26,7 @@ from ..plans.textsql import SPARK
 from .dedup import _stage
 
 
-def boilerplate_strip(spark: SparkSession, docs: str = "documents",
-                      seg_len: int = 3, min_docs: int = 3) -> DataFrame:
+def boilerplate_strip(spark: SparkSession, docs: str = "documents") -> DataFrame:
     """(doc_id, n_segs, n_boiler, clean_text).
 
     The segment relation feeds BOTH the boilerplate aggregate and the
@@ -33,16 +35,14 @@ def boilerplate_strip(spark: SparkSession, docs: str = "documents",
     recompute the tokenize+slice pipeline per consumer; same pathology
     PLANS.md documents for minhash/winnowing).  Cache contract as in
     operators/dedup.py."""
-    segrows = _stage(spark, webops.boiler_segments_sql(SPARK, docs, seg_len),
-                     "_bp_segrows")
-    return spark.sql(webops.boilerplate_from(SPARK, segrows, min_docs))
+    segrows = _stage(spark, webops.boiler_segments_sql(SPARK, docs), "_bp_segrows")
+    return spark.sql(webops.boilerplate_from(SPARK, segrows))
 
 
-def vocab_topn(spark: SparkSession, docs: str = "documents",
-               topn: int = 128) -> DataFrame:
-    """(token_id, token, tf, df) for the ``topn`` most frequent tokens
-    (single consumer chain — no staging needed)."""
-    return spark.sql(webops.vocab_topn_sql(SPARK, docs, topn))
+def vocab_topn(spark: SparkSession, docs: str = "documents") -> DataFrame:
+    """(token_id, token, tf, df) for the webops._VOCAB_TOPN most
+    frequent tokens (single consumer chain — no staging needed)."""
+    return spark.sql(webops.vocab_topn_sql(SPARK, docs))
 
 
 def text_profile(spark: SparkSession, docs: str = "documents") -> DataFrame:
@@ -55,8 +55,7 @@ def text_profile(spark: SparkSession, docs: str = "documents") -> DataFrame:
     return spark.sql(webops.text_profile_from(SPARK, base))
 
 
-def decontaminate(spark: SparkSession, docs: str = "documents",
-                  holdout_mod: int = 50) -> DataFrame:
+def decontaminate(spark: SparkSession, docs: str = "documents") -> DataFrame:
     """Benchmark decontamination (webops.decontaminate_sql semantics)
     with the perdoc shingle stage materialized: the stage feeds the
     holdout set, the train probe AND the final left join — three CTE
@@ -65,12 +64,11 @@ def decontaminate(spark: SparkSession, docs: str = "documents",
     operators/dedup.py."""
     perdoc = _stage(spark, webops.decontaminate_perdoc_sql(SPARK, docs),
                     "_dec_perdoc")
-    body = webops.decontaminate_from(SPARK, perdoc, holdout_mod)
+    body = webops.decontaminate_from(SPARK, perdoc)
     return spark.sql(f"WITH {body.lstrip()}")
 
 
-def corpus_filter_audit(spark: SparkSession, docs: str = "documents",
-                        holdout_mod: int = 50) -> DataFrame:
+def corpus_filter_audit(spark: SparkSession, docs: str = "documents") -> DataFrame:
     """(doc_id, source, quality_bucket, dup_shingle_pct, is_exact_dup,
     is_contaminated, keep, reject_reason) — the end-to-end corpus
     cleaning verdict (webops.corpus_filter_audit_sql semantics).
@@ -83,4 +81,4 @@ def corpus_filter_audit(spark: SparkSession, docs: str = "documents",
     would re-inline the token pipeline into every CTE consumer
     otherwise).  Cache contract as in operators/dedup.py."""
     base = _stage(spark, webops.corpus_audit_base_sql(SPARK, docs), "_audit_base")
-    return spark.sql(webops.corpus_filter_audit_from(SPARK, base, holdout_mod))
+    return spark.sql(webops.corpus_filter_audit_from(SPARK, base))

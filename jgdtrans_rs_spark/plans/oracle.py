@@ -27,7 +27,9 @@ output succeeds exactly:
 
 Every numeric literal carries an ``e0`` exponent so both Spark SQL and
 DuckDB type it DOUBLE — bare decimals parse as DECIMAL in both engines
-and would silently change the rounding behaviour.
+and would silently change the rounding behaviour.  Doubles computed in
+Python (grid parameters, polygon vertices) are spelled by
+``double_lit``, which keeps every bit, -0.0 included.
 """
 
 from __future__ import annotations
@@ -66,11 +68,20 @@ def points_sql(orders: str = "orders") -> str:
     )
 
 
+def double_lit(v: float) -> str:
+    """An exact DOUBLE literal in both dialects for any float: repr is
+    the shortest round-trip form and both parsers round correctly, so
+    the quoted cast keeps every bit — -0.0 (a bare decimal literal is a
+    DECIMAL, which has no signed zero), subnormals, ±inf and NaN (a
+    quoted 'nan' is a string, never a column name)."""
+    return f"CAST('{float(v)!r}' AS DOUBLE)"
+
+
 def grid_values(rows: list[tuple]) -> str:
     """Inline un-aliased VALUES relation for a (small) parameter grid —
     corr_sql aliases it per corner join."""
     vals = ", ".join(
-        f"({int(c)}, CAST({a!r} AS DOUBLE), CAST({b!r} AS DOUBLE), CAST({h!r} AS DOUBLE))"
+        f"({int(c)}, {double_lit(a)}, {double_lit(b)}, {double_lit(h)})"
         for c, a, b, h in rows
     )
     return f"(VALUES {vals})"
@@ -725,10 +736,7 @@ def polygon_edges_values(polygons: list[tuple[str, list[tuple[float, float]]]],
         for i in range(len(ring)):
             y1, x1 = ring[i]
             y2, x2 = ring[(i + 1) % len(ring)]
-            rows.append(
-                f"({pid!r}, CAST({y1!r} AS DOUBLE), CAST({x1!r} AS DOUBLE), "
-                f"CAST({y2!r} AS DOUBLE), CAST({x2!r} AS DOUBLE))"
-            )
+            rows.append(f"({pid!r}, {', '.join(map(double_lit, (y1, x1, y2, x2)))})")
     return f"(VALUES {', '.join(rows)}) AS {alias}(poly_id, y1, x1, y2, x2)"
 
 

@@ -146,14 +146,14 @@ def minhash_exprs(sints: str, d: str) -> list[str]:
 SIMHASH_BITS = 60
 
 
-def simhash_expr(tids: str, d: str, bits: int = SIMHASH_BITS) -> str:
-    """bits-bit simhash over token ids: bit j set iff the signed sum
-    over tokens of h_j(tid) is positive, where h_j is the HIGH bit of
+def simhash_expr(tids: str, d: str) -> str:
+    """SIMHASH_BITS-bit simhash over token ids: bit j set iff the signed
+    sum over tokens of h_j(tid) is positive, where h_j is the HIGH bit of
     the multiplicative hash (tid * A_j) mod 2^16 — Knuth multiplicative
     hashing.  (The low bit would factor through parity(tid) and make
     every bit identical — degenerate.)"""
     terms = []
-    for j in range(bits):
+    for j in range(SIMHASH_BITS):
         a_j = 2654435761 % (10_000_019 + j * 64 + 1)
         if a_j % 2 == 0:
             a_j += 1  # odd multiplier -> bijection on Z_2^16
@@ -169,11 +169,11 @@ def simhash_expr(tids: str, d: str, bits: int = SIMHASH_BITS) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def join_str(l: str, d: str, sep: str = " ") -> str:
-    """Join a string list with ``sep``."""
+def join_str(l: str, d: str) -> str:
+    """Join a string list with single spaces."""
     if d == SPARK:
-        return f"array_join({l}, '{sep}')"
-    return f"array_to_string({l}, '{sep}')"
+        return f"array_join({l}, ' ')"
+    return f"array_to_string({l}, ' ')"
 
 
 def slice_list(l: str, start: str, length: str, d: str) -> str:

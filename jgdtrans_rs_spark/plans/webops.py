@@ -12,6 +12,7 @@ exact integers (see plans/textsql.py).
 from __future__ import annotations
 
 from . import textsql as T
+from .oracle import double_lit
 from .textsql import SPARK
 
 
@@ -354,7 +355,10 @@ def ngram_base_sql(d: str, docs: str = "documents") -> str:
     """
 
 
-def ngram_pairs_from(d: str, base_rel: str, tau_pct: int = 50) -> str:
+_NGRAM_TAU_PCT = 50  # exact n-gram Jaccard threshold, percent
+
+
+def ngram_pairs_from(d: str, base_rel: str) -> str:
     """n-gram Jaccard stage 2 over a MATERIALIZED base relation: the
     exploded shingle relation feeds BOTH sides of the blocked
     self-join, so without materialization the shingle pipeline is
@@ -374,16 +378,16 @@ def ngram_pairs_from(d: str, base_rel: str, tau_pct: int = 50) -> str:
       SELECT doc_a, doc_b, CAST(inter_n AS BIGINT) AS inter_n,
              CAST(na + nb - inter_n AS BIGINT) AS union_n
       FROM inter
-      WHERE inter_n * 100 >= (na + nb - inter_n) * {tau_pct}
+      WHERE inter_n * 100 >= (na + nb - inter_n) * {_NGRAM_TAU_PCT}
     """
 
 
-def ngram_jaccard_sql(d: str, docs: str = "documents", tau_pct: int = 50) -> str:
+def ngram_jaccard_sql(d: str, docs: str = "documents") -> str:
     """Exact n-gram Jaccard dedup without LSH (the small-corpus oracle
     twin of minhash_pairs): blocked self-join on shared shingles.
     Single-statement form (the DuckDB oracle path); Spark should use
     operators.dedup.ngram_jaccard_pairs (staged)."""
-    return ngram_pairs_from(d, f"({ngram_base_sql(d, docs)}) _b", tau_pct)
+    return ngram_pairs_from(d, f"({ngram_base_sql(d, docs)}) _b")
 
 
 def events_window_sql(d: str, events: str = "events") -> str:
@@ -402,14 +406,25 @@ def events_window_sql(d: str, events: str = "events") -> str:
     """
 
 
-def ann_topk_sql(d: str, embeddings: str = "embeddings",
-                 n_queries: int = 10, k: int = 5, dim: int = 64) -> str:
-    """Brute-force cosine top-k neighbors for the first ``n_queries``
-    vectors (rank output only — float sums differ across engines by
-    ulps, ranks don't).  Ties broken by neighbor id.  ``dim`` must
-    match the embedding length for the DuckDB positional expansion
-    (Spark's posexplode adapts automatically; a silent 64 here would
-    truncate wider vectors in one dialect only)."""
+# The embedding operators' settings, shared by each Spark operator in
+# operators/similarity.py and its replica here.  The queries are the
+# vectors with vec_id < _ANN_QUERIES.  _EMB_DIM is the fixture's vector
+# length, which DuckDB's positional expansion needs (Spark's posexplode
+# and the operators' infer_dim read it from the data).
+_EMB_DIM = 64
+_ANN_QUERIES = 10
+_ANN_K = 5
+_ANN_PLANES, _ANN_TABLES = 4, 8            # ann_lsh_topk's LSH geometry
+_NEAR_DUP_PLANES, _NEAR_DUP_TABLES = 6, 4  # embedding_near_dup's
+_NEAR_DUP_COS = 0.9
+# augment_with_near_dups: every _AUG_EVERY-th vector, copied to +_AUG_ID_OFFSET
+_AUG_EVERY, _AUG_ID_OFFSET = 17, 1_000_000
+
+
+def ann_topk_sql(d: str, embeddings: str = "embeddings") -> str:
+    """Brute-force cosine top-_ANN_K neighbors of the query vectors
+    (rank output only — float sums differ across engines by ulps,
+    ranks don't).  Ties broken by neighbor id."""
     if d == SPARK:
         # Spark: posexplode is 0-based -> shift to 1-based
         pos = (
@@ -420,11 +435,11 @@ def ann_topk_sql(d: str, embeddings: str = "embeddings",
         pos = (
             f"SELECT vec_id, CAST(r.range AS INTEGER) AS i, "
             f"CAST(list_extract(embedding, r.range) AS DOUBLE) AS v "
-            f"FROM {embeddings}, range(1, {dim + 1}) r"
+            f"FROM {embeddings}, range(1, {_EMB_DIM + 1}) r"
         )
     return f"""
       WITH pos AS ({pos}),
-      q AS (SELECT * FROM pos WHERE vec_id < {n_queries}),
+      q AS (SELECT * FROM pos WHERE vec_id < {_ANN_QUERIES}),
       dots AS (
         SELECT q.vec_id AS query_id, p.vec_id AS neighbor_id,
                SUM(q.v * p.v) AS dot,
@@ -448,7 +463,7 @@ def ann_topk_sql(d: str, embeddings: str = "embeddings",
                ) AS rnk
         FROM dots
       ) _r
-      WHERE rnk <= {k}
+      WHERE rnk <= {_ANN_K}
     """
 
 
@@ -469,7 +484,10 @@ def winnowing_base_sql(d: str, docs: str = "documents") -> str:
     )
 
 
-def winnowing_from(d: str, base_rel: str, window: int = 4) -> str:
+_WINNOW_WINDOW = 4  # winnowing's sliding-window width, in shingles
+
+
+def winnowing_from(d: str, base_rel: str) -> str:
     """Winnowing stage 2 over a MATERIALIZED (doc_id, sints) relation:
     per-window minimum, distinct, exploded.  The Spark operator must
     materialize stage 1 (persist + temp view): Catalyst's
@@ -477,29 +495,31 @@ def winnowing_from(d: str, base_rel: str, window: int = 4) -> str:
     every windowed slice — measured minutes instead of seconds at 5k
     docs (same pathology the minhash pipeline stages around)."""
     n = T.size("sints", d)
-    rng = T.range_list("1", f"{n} - {window} + 2", d)
-    win_min = T.list_min(T.slice_list("sints", "i", str(window), d), d)
+    w = _WINNOW_WINDOW
+    rng = T.range_list("1", f"{n} - {w} + 2", d)
+    win_min = T.list_min(T.slice_list("sints", "i", str(w), d), d)
     mins = T.distinct(T.transform(rng, f"i -> {win_min}", d), d)
-    fps = f"SELECT doc_id, {mins} AS fps FROM {base_rel} WHERE {n} >= {window}"
+    fps = f"SELECT doc_id, {mins} AS fps FROM {base_rel} WHERE {n} >= {w}"
     if d == SPARK:
         return f"SELECT doc_id, fp FROM ({fps}) _f LATERAL VIEW explode(fps) _e AS fp"
     return f"SELECT doc_id, unnest(fps) AS fp FROM ({fps}) _f"
 
 
-def winnowing_sql(d: str, docs: str = "documents", window: int = 4) -> str:
+def winnowing_sql(d: str, docs: str = "documents") -> str:
     """Winnowing document fingerprints (Schleimer et al., SIGMOD 2003
     — the MOSS local fingerprinting algorithm): rolling 3-gram shingle
     hashes (textsql.shingle_ints, a Rabin-Karp-style rolling hash over
-    token ids), then the minimum of each sliding window of ``window``
-    hashes, deduplicated per document.  Guarantees any shared substring
-    of >= window+2 tokens contributes at least one common fingerprint
-    — the rolling-hash fingerprint primitive of a corpus pipeline.
+    token ids), then the minimum of each sliding window of
+    _WINNOW_WINDOW hashes, deduplicated per document.  Guarantees any
+    shared substring of >= _WINNOW_WINDOW+2 tokens contributes at least
+    one common fingerprint — the rolling-hash fingerprint primitive of
+    a corpus pipeline.
 
     Output: (doc_id, fp) exploded rows, integers only -> hash-stable.
     Single-statement form (the DuckDB oracle path); Spark should use
     operators.dedup.winnowing_fingerprints (staged).
     """
-    return winnowing_from(d, f"({winnowing_base_sql(d, docs)}) _b", window)
+    return winnowing_from(d, f"({winnowing_base_sql(d, docs)}) _b")
 
 
 def _hamming(a: str, b: str, d: str) -> str:
@@ -593,25 +613,6 @@ def source_stats_sql(d: str, docs: str = "documents") -> str:
 # ---------------------------------------------------------------------------
 
 
-def _dlit(x: float) -> str:
-    """DOUBLE literal valid in both dialects for ANY float: repr()
-    already carries an exponent for tiny/huge magnitudes (E-notation
-    parses as DOUBLE everywhere); only plain decimals need the ``e0``
-    suffix to stop DECIMAL typing.  Blindly appending e0 to repr()
-    produced unparseable '3.0057e-05e0' whenever a seeded hyperplane
-    weight fell below 1e-4.  Non-finite input raises: repr() would emit
-    'nan'/'inf', which Spark parses as a COLUMN REFERENCE, not a
-    literal — a silent wrong-answer trap (ADVICE r04).  No caller ever
-    passes non-finite constants (weights/thresholds are seeded
-    normals), so failing loudly is the right contract."""
-    v = float(x)
-    if v != v or v in (float("inf"), float("-inf")):
-        raise ValueError(f"_dlit: non-finite SQL double literal {v!r} "
-                         "(Spark would parse 'nan'/'inf' as a column name)")
-    r = repr(v)
-    return r if ("e" in r or "E" in r) else r + "e0"
-
-
 def lsh_planes(dim: int, n_planes: int, seed: int):
     """The random-hyperplane matrix shared verbatim by the Spark
     operator (operators/similarity.signature_buckets) and the DuckDB
@@ -622,22 +623,20 @@ def lsh_planes(dim: int, n_planes: int, seed: int):
     return rs.standard_normal((n_planes, dim))
 
 
-def _lsh_planes_values(dim: int, n_planes: int, n_tables: int) -> str:
+def _lsh_planes_values(n_planes: int, n_tables: int) -> str:
     """(t, j, i, w) literal rows for every table's hyperplanes; i is
-    1-based to join DuckDB's 1-based list positions.  repr() emits the
-    shortest round-trip decimal (parses back to the identical double
-    in any correctly-rounded strtod); _dlit types it DOUBLE in both
-    dialects whatever its magnitude."""
+    1-based to join DuckDB's 1-based list positions, and each weight is
+    an exact ``oracle.double_lit``."""
     rows = []
     for t in range(n_tables):
-        pl = lsh_planes(dim, n_planes, seed=42 + 101 * t)
+        pl = lsh_planes(_EMB_DIM, n_planes, seed=42 + 101 * t)
         for j in range(n_planes):
-            for i in range(dim):
-                rows.append(f"({t},{j},{i + 1},{_dlit(pl[j, i])})")
+            for i in range(_EMB_DIM):
+                rows.append(f"({t},{j},{i + 1},{double_lit(pl[j, i])})")
     return ", ".join(rows)
 
 
-def _lsh_buckets_cte(dim: int, n_planes: int, n_tables: int, pos_rel: str = "pos") -> str:
+def _lsh_buckets_cte(n_planes: int, n_tables: int) -> str:
     """CTE tail computing (vec_id, t, bucket) from positional vector
     rows — the SQL twin of signature_buckets' sign-bit packing.  Sign
     parity across engines: |dot| of a random vector with a random
@@ -646,31 +645,29 @@ def _lsh_buckets_cte(dim: int, n_planes: int, n_tables: int, pos_rel: str = "pos
     ~1e-13 per (vector, plane) — immaterial at fixture and correctness
     scale)."""
     return f"""
-pl AS (SELECT * FROM (VALUES {_lsh_planes_values(dim, n_planes, n_tables)}) v(t, j, i, w)),
+pl AS (SELECT * FROM (VALUES {_lsh_planes_values(n_planes, n_tables)}) v(t, j, i, w)),
 dots AS (SELECT p.vec_id, pl.t, pl.j, SUM(p.v * pl.w) AS dot
-         FROM {pos_rel} p JOIN pl ON pl.i = p.i GROUP BY p.vec_id, pl.t, pl.j),
+         FROM pos p JOIN pl ON pl.i = p.i GROUP BY p.vec_id, pl.t, pl.j),
 buckets AS (SELECT vec_id, t,
                    CAST(SUM(CASE WHEN dot > 0.0e0 THEN (1 << j) ELSE 0 END) AS BIGINT) AS bucket
             FROM dots GROUP BY vec_id, t)"""
 
 
-def ann_lsh_oracle_sql(embeddings: str = "embeddings", n_queries: int = 10,
-                       k: int = 5, dim: int = 64, n_planes: int = 4,
-                       n_tables: int = 8) -> str:
+def ann_lsh_oracle_sql(embeddings: str = "embeddings") -> str:
     """Full DuckDB replication of ``similarity.ann_lsh_topk``:
     bucketing from the identical hyperplane literals, candidate
     equi-join per table, exact-cosine re-rank with the same
     (cosine DESC, neighbor_id) tie-break.  Verified row-identical to
     the Spark operator at sf0.001/0.01/0.1."""
     return f"""
-WITH {_lsh_buckets_cte(dim, n_planes, n_tables)},
+WITH {_lsh_buckets_cte(_ANN_PLANES, _ANN_TABLES)},
 pos AS (SELECT vec_id, CAST(r.range AS INTEGER) AS i,
                CAST(list_extract(embedding, r.range) AS DOUBLE) AS v
-        FROM {embeddings}, range(1, {dim + 1}) r),
+        FROM {embeddings}, range(1, {_EMB_DIM + 1}) r),
 cand AS (SELECT DISTINCT q.vec_id AS query_id, b.vec_id AS neighbor_id
          FROM buckets q JOIN buckets b
            ON b.t = q.t AND b.bucket = q.bucket AND b.vec_id <> q.vec_id
-         WHERE q.vec_id < {n_queries}),
+         WHERE q.vec_id < {_ANN_QUERIES}),
 cd AS (SELECT c.query_id, c.neighbor_id,
               SUM(qp.v * np_.v) AS dot, SUM(qp.v * qp.v) AS qnrm, SUM(np_.v * np_.v) AS nrm
        FROM cand c
@@ -682,28 +679,25 @@ FROM (SELECT query_id, neighbor_id,
              ROW_NUMBER() OVER (PARTITION BY query_id
                                 ORDER BY dot / (sqrt(qnrm) * sqrt(nrm)) DESC, neighbor_id) AS rnk
       FROM cd WHERE qnrm > 0.0e0 AND nrm > 0.0e0) _r
-WHERE rnk <= {k}
+WHERE rnk <= {_ANN_K}
 """
 
 
-def embedding_near_dup_oracle_sql(embeddings: str = "embeddings",
-                                  threshold: float = 0.9, dim: int = 64,
-                                  n_planes: int = 6, n_tables: int = 4,
-                                  every: int = 17, offset: int = 1_000_000) -> str:
+def embedding_near_dup_oracle_sql(embeddings: str = "embeddings") -> str:
     """Full DuckDB replication of ``augment_with_near_dups`` +
     ``embedding_near_dup``: the deterministic perturbed duplicates are
     rebuilt positionally (same op order, same float32 cast — the cast
     absorbs cross-engine sin() last-ulp noise), then bucketing /
     pairing / exact-cosine threshold as in the Spark operator."""
     return f"""
-WITH {_lsh_buckets_cte(dim, n_planes, n_tables)},
+WITH {_lsh_buckets_cte(_NEAR_DUP_PLANES, _NEAR_DUP_TABLES)},
 pos0 AS (SELECT vec_id, CAST(r.range AS INTEGER) AS i,
                 CAST(list_extract(embedding, r.range) AS DOUBLE) AS v
-         FROM {embeddings}, range(1, {dim + 1}) r),
-dup AS (SELECT vec_id + {offset} AS vid, i,
+         FROM {embeddings}, range(1, {_EMB_DIM + 1}) r),
+dup AS (SELECT vec_id + {_AUG_ID_OFFSET} AS vid, i,
                CAST(CAST(v * (1.0e0 + 0.015e0 * sin(CAST(vec_id AS DOUBLE) * 7.0e0
                                                     + CAST(i - 1 AS DOUBLE))) AS FLOAT) AS DOUBLE) AS v
-        FROM pos0 WHERE vec_id % {every} = 0),
+        FROM pos0 WHERE vec_id % {_AUG_EVERY} = 0),
 pos AS (SELECT vec_id, i, v FROM pos0 UNION ALL SELECT vid AS vec_id, i, v FROM dup),
 cand AS (SELECT DISTINCT x.vec_id AS a, y.vec_id AS b
          FROM buckets x JOIN buckets y
@@ -715,7 +709,7 @@ cd AS (SELECT c.a, c.b, SUM(pa.v * pb.v) AS dot,
        JOIN pos pb ON pb.vec_id = c.b AND pb.i = pa.i
        GROUP BY c.a, c.b)
 SELECT a, b FROM cd
-WHERE na > 0.0e0 AND nb > 0.0e0 AND dot / (sqrt(na) * sqrt(nb)) >= {_dlit(threshold)}
+WHERE na > 0.0e0 AND nb > 0.0e0 AND dot / (sqrt(na) * sqrt(nb)) >= {double_lit(_NEAR_DUP_COS)}
 """
 
 
@@ -729,7 +723,6 @@ def embeddings_fingerprint_sql(embeddings: str = "embeddings") -> str:
 
 
 def ann_ivf_recall_oracle_sql(hits_by_fingerprint: dict[int, int],
-                              n_queries: int = 10, k: int = 5,
                               embeddings: str = "embeddings") -> str:
     """Oracle for the IVF recall contract query: the k-means training
     runs driver-side in the operator (its xxhash64 sample filter has
@@ -741,9 +734,9 @@ def ann_ivf_recall_oracle_sql(hits_by_fingerprint: dict[int, int],
     the gate loudly."""
     cases = " ".join(
         f"WHEN {fp} THEN {h}" for fp, h in sorted(hits_by_fingerprint.items()))
-    denom = float(n_queries * k)
+    denom = float(_ANN_QUERIES * _ANN_K)
     return f"""
-SELECT CAST({n_queries} AS BIGINT) AS n_queries, CAST({k} AS INTEGER) AS k,
+SELECT CAST({_ANN_QUERIES} AS BIGINT) AS n_queries, CAST({_ANN_K} AS INTEGER) AS k,
        CAST(h AS BIGINT) AS n_hits, CAST(h AS DOUBLE) / {denom!r}e0 AS recall
 FROM (SELECT CASE ({embeddings_fingerprint_sql(embeddings)}) {cases} END AS h) _c
 """
@@ -870,21 +863,25 @@ def _url_normalize_over(d: str, corpus_sql: str) -> str:
     """
 
 
-def boiler_segments_sql(d: str, docs: str = "documents",
-                        seg_len: int = 3) -> str:
+# Boilerplate: a _BOILER_SEG_LEN-token segment found in at least
+# _BOILER_MIN_DOCS distinct documents.
+_BOILER_SEG_LEN = 3
+_BOILER_MIN_DOCS = 3
+
+
+def boiler_segments_sql(d: str, docs: str = "documents") -> str:
     """Boilerplate-strip stage 1: (doc_id, pos, seg) — each document
-    cut into fixed-width ``seg_len``-token segments (the synthetic
+    cut into fixed-width _BOILER_SEG_LEN-token segments (the synthetic
     corpus has no newlines, so fixed windows stand in for the
-    paragraphs a CCNet-style pipeline would hash; the operator is
-    parameterized, production corpora use real paragraph splits).
-    ``pos`` is the 0-based segment index used to rebuild text in
-    order."""
+    paragraphs a CCNet-style pipeline would hash; production corpora
+    would use real paragraph splits).  ``pos`` is the 0-based segment
+    index used to rebuild text in order."""
     tk = T.toks("text", d)
     n = T.size("_tk", d)
     divop = "div" if d == SPARK else "//"
-    n_segs = f"(({n} + {seg_len - 1}) {divop} {seg_len})"
-    seg = T.join_str(
-        T.slice_list("_tk", f"(i - 1) * {seg_len} + 1", str(seg_len), d), d)
+    w = _BOILER_SEG_LEN
+    n_segs = f"(({n} + {w - 1}) {divop} {w})"
+    seg = T.join_str(T.slice_list("_tk", f"(i - 1) * {w} + 1", str(w), d), d)
     segs = T.transform(T.range_list("1", f"{n_segs} + 1", d), f"i -> {seg}", d)
     base = (f"SELECT doc_id, {segs} AS segs "
             f"FROM (SELECT doc_id, {tk} AS _tk FROM {docs}) _t WHERE {n} > 0")
@@ -896,11 +893,11 @@ def boiler_segments_sql(d: str, docs: str = "documents",
             f"unnest(segs) AS seg FROM ({base}) _s")
 
 
-def boilerplate_from(d: str, segrows_rel: str, min_docs: int = 3) -> str:
+def boilerplate_from(d: str, segrows_rel: str) -> str:
     """Boilerplate-strip stage 2 over a (doc_id, pos, seg) relation
     (MATERIALIZE it in Spark — it feeds both the boilerplate aggregate
-    and the rejoin): a segment seen in >= ``min_docs`` distinct docs
-    is corpus boilerplate (cookie banners, nav bars, license footers
+    and the rejoin): a segment seen in >= _BOILER_MIN_DOCS distinct
+    docs is corpus boilerplate (cookie banners, nav bars, license footers
     in a real crawl); every occurrence is dropped and the per-doc text
     rebuilt in segment order.
 
@@ -920,7 +917,7 @@ def boilerplate_from(d: str, segrows_rel: str, min_docs: int = 3) -> str:
     return f"""
       WITH boiler AS (
         SELECT seg FROM {segrows_rel} AS _sb GROUP BY seg
-        HAVING COUNT(DISTINCT doc_id) >= {min_docs}
+        HAVING COUNT(DISTINCT doc_id) >= {_BOILER_MIN_DOCS}
       )
       SELECT _r.doc_id AS doc_id,
              CAST(COUNT(*) AS INTEGER) AS n_segs,
@@ -931,19 +928,20 @@ def boilerplate_from(d: str, segrows_rel: str, min_docs: int = 3) -> str:
     """
 
 
-def boilerplate_strip_sql(d: str, docs: str = "documents",
-                          seg_len: int = 3, min_docs: int = 3) -> str:
+def boilerplate_strip_sql(d: str, docs: str = "documents") -> str:
     """Single-statement boilerplate strip (the DuckDB oracle path;
     Spark should use operators.text.boilerplate_strip, which
     materializes the segment relation against CTE re-inlining)."""
-    rel = f"({boiler_segments_sql(d, docs, seg_len)})"
-    return boilerplate_from(d, rel, min_docs)
+    return boilerplate_from(d, f"({boiler_segments_sql(d, docs)})")
 
 
-def vocab_topn_sql(d: str, docs: str = "documents", topn: int = 128) -> str:
+_VOCAB_TOPN = 128  # vocab_topn's vocabulary size
+
+
+def vocab_topn_sql(d: str, docs: str = "documents") -> str:
     """Token-frequency vocabulary builder: corpus-wide term frequency
     + document frequency, ranked (tf DESC, token ASC — deterministic
-    ties), top ``topn`` with dense ids 1..topn.  The tokenizer-prep
+    ties), top _VOCAB_TOPN with dense ids 1.._VOCAB_TOPN.  The tokenizer-prep
     primitive of a training-data pipeline.
 
     Scale plan: explode -> groupBy(token) is ONE shuffle with map-side
@@ -972,13 +970,17 @@ def vocab_topn_sql(d: str, docs: str = "documents", topn: int = 128) -> str:
                ROW_NUMBER() OVER (ORDER BY tf DESC, token ASC) AS token_id
         FROM agg
       ) _r
-      WHERE token_id <= {topn}
+      WHERE token_id <= {_VOCAB_TOPN}
     """
 
 
-def sample_stratified_sql(d: str, docs: str = "documents",
-                          rates: dict[str, int] | None = None,
-                          default_pct: int = 20) -> str:
+# sample_stratified_sql's kept percentage per source, and for any
+# other source.
+_SAMPLE_RATES = {"src0": 50, "src1": 5, "src2": 0}
+_SAMPLE_DEFAULT_PCT = 20
+
+
+def sample_stratified_sql(d: str, docs: str = "documents") -> str:
     """Deterministic stratified (per-source) subsampling — the
     data-mixing primitive of a training pipeline: each source keeps a
     configured percentage, decided per document by integer hash of its
@@ -993,13 +995,12 @@ def sample_stratified_sql(d: str, docs: str = "documents",
     Scale plan: a pure narrow filter — no shuffle, no UDF; Catalyst
     pushes the predicate to the scan.  Output rows are the surviving
     (doc_id, source, bucket), hash-stable ints + strings."""
-    rates = rates if rates is not None else {"src0": 50, "src1": 5, "src2": 0}
-    cases = " ".join(f"WHEN '{s}' THEN {p}" for s, p in sorted(rates.items()))
+    cases = " ".join(f"WHEN '{s}' THEN {p}" for s, p in sorted(_SAMPLE_RATES.items()))
     bucket = "CAST(((doc_id * 2654435761) % 4294967296) % 100 AS INTEGER)"
     return f"""
       SELECT doc_id, source, {bucket} AS bucket
       FROM {docs}
-      WHERE {bucket} < CASE source {cases} ELSE {default_pct} END
+      WHERE {bucket} < CASE source {cases} ELSE {_SAMPLE_DEFAULT_PCT} END
     """
 
 
@@ -1043,11 +1044,14 @@ def pii_redact_sql(d: str, docs: str = "documents") -> str:
     """
 
 
-def decontaminate_sql(d: str, docs: str = "documents",
-                      holdout_mod: int = 50) -> str:
+# Documents with doc_id % _HOLDOUT_MOD = 0 stand in for a benchmark.
+_HOLDOUT_MOD = 50
+
+
+def decontaminate_sql(d: str, docs: str = "documents") -> str:
     """Benchmark decontamination — drop training documents that share
     n-gram spans with an evaluation set: docs with
-    doc_id % ``holdout_mod`` = 0 stand in for the benchmark; a
+    doc_id % _HOLDOUT_MOD = 0 stand in for the benchmark; a
     training doc is contaminated if any 3-token shingle also occurs
     in any holdout doc.
 
@@ -1063,7 +1067,7 @@ def decontaminate_sql(d: str, docs: str = "documents",
     (operators/text.decontaminate) materializes the perdoc stage —
     Spark re-executes a multi-referenced CTE per reference."""
     return (f"WITH perdoc AS ({decontaminate_perdoc_sql(d, docs)}),\n"
-            f"{decontaminate_from(d, 'perdoc', holdout_mod)}")
+            f"{decontaminate_from(d, 'perdoc')}")
 
 
 def decontaminate_perdoc_sql(d: str, docs: str = "documents") -> str:
@@ -1074,23 +1078,23 @@ def decontaminate_perdoc_sql(d: str, docs: str = "documents") -> str:
             f"FROM (SELECT doc_id, {tids} AS _tids FROM {docs}) _t")
 
 
-def _contamination_ctes(d: str, sh_rows: str, holdout_mod: int) -> str:
+def _contamination_ctes(sh_rows: str) -> str:
     """sh/hold/hits CTE text — ONE source of truth for the
     contamination probe (holdout shingle set is the broadcast side, one
     aggregate keyed on doc_id), shared by decontaminate_from and the
     corpus audit.  ``sh_rows`` must yield DISTINCT (doc_id, s) rows."""
     return f"""
       sh AS ({sh_rows}),
-      hold AS (SELECT DISTINCT s FROM sh WHERE doc_id % {holdout_mod} = 0),
+      hold AS (SELECT DISTINCT s FROM sh WHERE doc_id % {_HOLDOUT_MOD} = 0),
       hits AS (
         SELECT t.doc_id, COUNT(*) AS n_hit
-        FROM (SELECT doc_id, s FROM sh WHERE doc_id % {holdout_mod} <> 0) t
+        FROM (SELECT doc_id, s FROM sh WHERE doc_id % {_HOLDOUT_MOD} <> 0) t
         JOIN hold h ON t.s = h.s
         GROUP BY t.doc_id
       )"""
 
 
-def decontaminate_from(d: str, perdoc_rel: str, holdout_mod: int = 50) -> str:
+def decontaminate_from(d: str, perdoc_rel: str) -> str:
     """Decontamination over a materialized perdoc relation — WITH-body
     tail (the caller prepends its own stage CTEs or 'WITH')."""
     if d == SPARK:
@@ -1099,12 +1103,12 @@ def decontaminate_from(d: str, perdoc_rel: str, holdout_mod: int = 50) -> str:
     else:
         rows = f"SELECT doc_id, unnest(sints) AS s FROM {perdoc_rel}"
     return f"""
-      {_contamination_ctes(d, rows, holdout_mod)}
+      {_contamination_ctes(rows)}
       SELECT p.doc_id,
              CAST(COALESCE(h.n_hit, 0) AS BIGINT) AS n_hit_shingles,
              (COALESCE(h.n_hit, 0) > 0) AS is_contaminated
       FROM {perdoc_rel} p LEFT JOIN hits h ON h.doc_id = p.doc_id
-      WHERE p.doc_id % {holdout_mod} <> 0
+      WHERE p.doc_id % {_HOLDOUT_MOD} <> 0
     """
 
 
@@ -1171,12 +1175,14 @@ def repetition_stats_sql(d: str, docs: str = "documents") -> str:
     """
 
 
-def pack_chunks_sql(d: str, docs: str = "documents",
-                    context_len: int = 1024) -> str:
+_CONTEXT_LEN = 1024  # pack_chunks' context window, in tokens
+
+
+def pack_chunks_sql(d: str, docs: str = "documents") -> str:
     """Context-window packing planner — concatenate-then-chunk, the
     way pretraining batches are actually built: documents are laid out
     in a deterministic order (doc_id within source) and the token
-    stream is cut every ``context_len`` tokens; each doc reports its
+    stream is cut every _CONTEXT_LEN tokens; each doc reports its
     token span and which chunks it lands in (docs may straddle a
     boundary).
 
@@ -1207,10 +1213,10 @@ def pack_chunks_sql(d: str, docs: str = "documents",
       )
       SELECT doc_id, source, CAST(n_tokens AS INTEGER) AS n_tokens,
              CAST(tok_start AS BIGINT) AS tok_start,
-             CAST(tok_start {divop} {context_len} AS INTEGER) AS chunk_start,
+             CAST(tok_start {divop} {_CONTEXT_LEN} AS INTEGER) AS chunk_start,
              CAST(CASE WHEN n_tokens > 0
-                       THEN (tok_start + n_tokens - 1) {divop} {context_len}
-                       ELSE tok_start {divop} {context_len} END AS INTEGER) AS chunk_end
+                       THEN (tok_start + n_tokens - 1) {divop} {_CONTEXT_LEN}
+                       ELSE tok_start {divop} {_CONTEXT_LEN} END AS INTEGER) AS chunk_end
       FROM c
     """
 
@@ -1235,7 +1241,7 @@ def corpus_audit_base_sql(d: str, docs: str = "documents") -> str:
     """
 
 
-def _audit_ctes_and_select(d: str, base_rel: str, holdout_mod: int) -> tuple[str, str]:
+def _audit_ctes_and_select(d: str, base_rel: str) -> tuple[str, str]:
     """(CTE list text, final SELECT) of the audit composition over a
     corpus_audit_base_sql relation — all stages read the staged
     _tids/_sints columns, none re-tokenizes.  The stage FORMULAS come
@@ -1256,7 +1262,7 @@ def _audit_ctes_and_select(d: str, base_rel: str, holdout_mod: int) -> tuple[str
     # verdict for EVERY document — an empty-text doc falls out of the
     # bucket CASE as 1 ('too short') and gets reject_reason='quality'
     # instead of silently vanishing through the inner-join chain.
-    # Holdout members (doc_id % holdout_mod = 0) also get a row: they
+    # Holdout members (doc_id % _HOLDOUT_MOD = 0) also get a row: they
     # ARE the benchmark, so is_contaminated is pinned TRUE for them —
     # a pipeline must never pack benchmark docs into training data,
     # and 'keep' must come out false regardless of their quality.
@@ -1275,10 +1281,10 @@ def _audit_ctes_and_select(d: str, base_rel: str, holdout_mod: int) -> tuple[str
                (doc_id <> MIN(doc_id) OVER (PARTITION BY md5(text))) AS is_exact_dup
         FROM {base_rel}
       ),
-      {_contamination_ctes(d, sh_rows, holdout_mod)},
+      {_contamination_ctes(sh_rows)},
       dec AS (
         SELECT b.doc_id,
-               CASE WHEN b.doc_id % {holdout_mod} = 0 THEN TRUE
+               CASE WHEN b.doc_id % {_HOLDOUT_MOD} = 0 THEN TRUE
                     ELSE (COALESCE(h.n_hit, 0) > 0) END AS is_contaminated
         FROM {base_rel} b LEFT JOIN hits h ON h.doc_id = b.doc_id
       )"""
@@ -1304,17 +1310,15 @@ def _audit_ctes_and_select(d: str, base_rel: str, holdout_mod: int) -> tuple[str
     return ctes, select
 
 
-def corpus_filter_audit_from(d: str, base_rel: str,
-                             holdout_mod: int = 50) -> str:
+def corpus_filter_audit_from(d: str, base_rel: str) -> str:
     """Audit composition over an already-staged base relation (the
     Spark path: operators/text.corpus_filter_audit persists
     corpus_audit_base_sql first)."""
-    ctes, select = _audit_ctes_and_select(d, base_rel, holdout_mod)
+    ctes, select = _audit_ctes_and_select(d, base_rel)
     return f"WITH {ctes} {select}"
 
 
-def corpus_filter_audit_sql(d: str, docs: str = "documents",
-                            holdout_mod: int = 50) -> str:
+def corpus_filter_audit_sql(d: str, docs: str = "documents") -> str:
     """End-to-end corpus-cleaning verdict — the composition a real
     pipeline runs and logs: per document, the quality bucket
     (quality_score_sql semantics), repetition signal
@@ -1335,7 +1339,7 @@ def corpus_filter_audit_sql(d: str, docs: str = "documents",
     table.  This single-statement form is the DuckDB oracle; the
     Spark operator materializes the base stage explicitly."""
     base = corpus_audit_base_sql(d, docs)
-    ctes, select = _audit_ctes_and_select(d, "_audit_base", holdout_mod)
+    ctes, select = _audit_ctes_and_select(d, "_audit_base")
     return f"WITH _audit_base AS ({base}),{ctes} {select}"
 
 

@@ -84,3 +84,39 @@ def test_every_library_def_is_referenced():
     used = {_uses(n) for _, tree in trees for n in ast.walk(tree)
             if owner.get(id(n)) != _uses(n)}
     assert sorted({d.name for d in defs} - used) == []
+
+
+KNOB_MODULES = (*sorted((ROOT / PKG / "operators").glob("*.py")),
+                ROOT / PKG / "plans" / "webops.py", ROOT / PKG / "plans" / "textsql.py")
+RELATIONS = {"docs", "orders", "embeddings", "events"}
+
+
+def test_every_operator_option_is_varied():
+    """A defaulted parameter of a public top-level function in the
+    operator and SQL-builder modules must be passed, by position or by
+    keyword, in some call of the entry points or the library itself;
+    one that no such call passes is a constant (tests vary a constant
+    with monkeypatch).  Relation-name parameters are exempt.  Calls
+    match on the function's name."""
+    options = {}
+    for path in KNOB_MODULES:
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, ast.FunctionDef) and not node.name.startswith("_"):
+                args = node.args
+                positional = [a.arg for a in args.posonlyargs + args.args]
+                defaulted = positional[len(positional) - len(args.defaults):]
+                defaulted += [a.arg for a, d in zip(args.kwonlyargs, args.kw_defaults)
+                              if d is not None]
+                options[node.name] = (positional, set(defaulted) - RELATIONS)
+    callers = [ROOT / entry for entry in ENTRY_POINTS] + list(LIBRARY.values())
+    for path in callers:
+        for call in ast.walk(ast.parse(path.read_text())):
+            name = isinstance(call, ast.Call) and _uses(call.func)
+            if name not in options:
+                continue
+            positional, unpassed = options[name]
+            if any(isinstance(a, ast.Starred) for a in call.args) or any(
+                    k.arg is None for k in call.keywords):
+                unpassed.clear()
+            unpassed -= set(positional[:len(call.args)]) | {k.arg for k in call.keywords}
+    assert sorted(f"{f}({p})" for f, (_, ps) in options.items() for p in ps) == []

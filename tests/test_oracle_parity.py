@@ -90,7 +90,7 @@ def test_ann_ivf_recall_vs_brute(spark, contract):
 
     queries, _ = contract
     emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
-    got = similarity.ann_ivf_topk(emb, n_queries=10, k=5).toPandas()
+    got = similarity.ann_ivf_topk(emb).toPandas()
     brute = queries["ann_cosine_topk"](spark, SF_SMALL).toPandas()
     sa = set(zip(got["query_id"], got["neighbor_id"]))
     sb = set(zip(brute["query_id"], brute["neighbor_id"]))
@@ -111,6 +111,7 @@ def test_embedding_near_dup_recall_vs_brute(spark):
     cosine >= 0.9 on the driver, and require high recall (and exact
     precision — the operator verifies candidates exactly)."""
     from jgdtrans_rs_spark.operators import similarity
+    from jgdtrans_rs_spark.plans import webops
 
     emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
     aug = similarity.augment_with_near_dups(emb)
@@ -120,7 +121,7 @@ def test_embedding_near_dup_recall_vs_brute(spark):
     norm = mat / np.linalg.norm(mat, axis=1, keepdims=True)
     cos = norm @ norm.T
     iu = np.triu_indices(len(ids), k=1)
-    hit = cos[iu] >= 0.9
+    hit = cos[iu] >= webops._NEAR_DUP_COS
     truth = {
         (int(min(a, b)), int(max(a, b)))
         for a, b in zip(ids[iu[0]][hit], ids[iu[1]][hit])
@@ -129,7 +130,7 @@ def test_embedding_near_dup_recall_vs_brute(spark):
 
     got = {
         (int(r["a"]), int(r["b"]))
-        for r in similarity.embedding_near_dup(aug, threshold=0.9).collect()
+        for r in similarity.embedding_near_dup(aug).collect()
     }
     assert got <= truth, f"false positives: {sorted(got - truth)[:5]}"
     recall = len(got & truth) / len(truth)
@@ -138,11 +139,10 @@ def test_embedding_near_dup_recall_vs_brute(spark):
 
 def test_ann_dim_autodetect_non_64(spark):
     """The ANN operators must work on a corpus whose embedding
-    dimensionality is NOT the former hard default of 64.  Before the
-    ``dim=None`` auto-detect, a 32-dim corpus run without ``dim=``
-    tagged every vector wrong-length (sentinel bucket -1) and returned
-    silently EMPTY results — the worst failure mode for a screen.
-    Auto-detected results must equal the explicit ``dim=32`` run."""
+    dimensionality is NOT the fixture's 64.  Before the length was
+    inferred (``infer_dim``), a fixed 64 tagged every vector of a
+    32-dim corpus wrong-length (sentinel bucket -1) and returned
+    silently EMPTY results — the worst failure mode for a screen."""
     from pyspark.sql import functions as F
 
     from jgdtrans_rs_spark.operators import similarity
@@ -153,19 +153,14 @@ def test_ann_dim_autodetect_non_64(spark):
     )
     assert similarity.infer_dim(emb32) == 32
 
-    auto = similarity.ann_lsh_topk(emb32, n_queries=5, k=3).toPandas()
-    explicit = similarity.ann_lsh_topk(
-        emb32, n_queries=5, k=3, dim=32).toPandas()
+    auto = similarity.ann_lsh_topk(emb32).toPandas()
     assert len(auto) > 0
-    key = ["query_id", "rank", "neighbor_id"]
-    assert (auto[key].sort_values(key).values
-            == explicit[key].sort_values(key).values).all()
 
     nd_auto = similarity.embedding_near_dup(
-        similarity.augment_with_near_dups(emb32), threshold=0.9).toPandas()
+        similarity.augment_with_near_dups(emb32)).toPandas()
     assert len(nd_auto) > 0  # the augmented copies must be found
 
-    ivf = similarity.ann_ivf_topk(emb32, n_queries=5, k=3).toPandas()
+    ivf = similarity.ann_ivf_topk(emb32).toPandas()
     assert len(ivf) > 0
 
     # empty/degenerate corpus: loud, not a silent 64 fallback
@@ -182,20 +177,23 @@ def test_lsh_buckets_null_and_short_vectors(spark):
     length-mismatch crash)."""
     from jgdtrans_rs_spark.operators import similarity
 
-    dim = 64
     degenerate = spark.createDataFrame(
-        [(1, None, 0), (2, [1.0, 2.0], 0)],
+        [(900_001, None, 0), (900_002, [1.0, 2.0], 0)],
         "vec_id long, embedding array<float>, label int")
-    got = similarity.signature_buckets(degenerate, dim=dim, n_tables=2).toPandas()
-    assert len(got) == 4  # 2 rows x 2 tables
-    assert (got["bucket"] == -1).all()
-
-    # mixed batch: good rows bucket normally, bad rows get -1 and never
-    # enter the top-k (their cosine is NULL/NaN)
+    # the 64-long fixture vectors set the inferred length; a union keeps
+    # its inputs' partitions, so the degenerate rows' Arrow batches hold
+    # nothing else
     emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet").limit(50)
-    mixed = emb.unionByName(degenerate.withColumn(
-        "vec_id", degenerate["vec_id"] + 900_000))
-    topk = similarity.ann_lsh_topk(mixed, n_queries=5, k=5).toPandas()
+    mixed = emb.unionByName(degenerate)
+    got = similarity.signature_buckets(mixed, 12, 2).toPandas()
+    bad = got[got["vec_id"] >= 900_000]
+    assert len(bad) == 4  # 2 rows x 2 tables
+    assert (bad["bucket"] == -1).all()
+    assert (got.loc[got["vec_id"] < 900_000, "bucket"] >= 0).all()
+
+    # good rows bucket normally, bad rows get -1 and never enter the
+    # top-k (their cosine is NULL/NaN)
+    topk = similarity.ann_lsh_topk(mixed).toPandas()
     assert len(topk) > 0
     assert not set(topk["neighbor_id"]) & {900_001, 900_002}
 
@@ -228,18 +226,21 @@ def test_quality_score_buckets(spark, duck):
 def test_minhash_near_arm_recall(spark, duck):
     """The minhash threshold must actually recover the NEAR (prefixed
     +2M) duplicate arm, not just exact copies (VERDICT r02 'What's
-    wrong #2'): ground truth = exact shingle-Jaccard >= 60% via the
-    ngram oracle (72 near-arm pairs at sf0.01, J mostly > 0.9);
+    wrong #2'): ground truth = exact shingle-Jaccard >= 60%, read off
+    the ngram oracle's intersection and union sizes (72 near-arm pairs
+    at sf0.01, J mostly > 0.9);
     the banded LSH must find >= 90% of them (measured 0.958) with
     exact precision (the operator verifies candidates exactly)."""
     from jgdtrans_rs_spark.operators import dedup as dedup_ops
     from jgdtrans_rs_spark.plans import webops
     from jgdtrans_rs_spark.plans.textsql import DUCK
 
-    truth = duck.sql(webops.ngram_jaccard_sql(DUCK, tau_pct=60)).df()
+    truth = duck.sql(webops.ngram_jaccard_sql(DUCK)).df()
+    assert webops._NGRAM_TAU_PCT <= webops._MINHASH_TAU_PCT
     tset = {
         (int(a), int(b))
-        for a, b in zip(truth.doc_a, truth.doc_b) if b - a == 2_000_000
+        for a, b, i, u in zip(truth.doc_a, truth.doc_b, truth.inter_n, truth.union_n)
+        if b - a == 2_000_000 and i * 100 >= u * webops._MINHASH_TAU_PCT
     }
     assert len(tset) >= 50  # the fixture must exercise the near arm
 
@@ -312,7 +313,7 @@ def test_ann_zero_norm_vector_never_ranks(spark):
     dim = len(emb.first()["embedding"])
     zero = spark.createDataFrame(
         [(999_999, [0.0] * dim, 0)], "vec_id long, embedding array<float>, label int")
-    got = similarity.ann_lsh_topk(emb.unionByName(zero), n_queries=5, k=5).toPandas()
+    got = similarity.ann_lsh_topk(emb.unionByName(zero)).toPandas()
     assert 999_999 not in set(got["neighbor_id"])
     assert (got.groupby("query_id")["rank"].max() <= 5).all() and len(got) > 0
 
@@ -391,7 +392,7 @@ def test_all_oracle_queries_sf01_half2(spark):
     _sf01_probe(spark, slice(25, None))
 
 
-def test_dedup_components_crafted_graph(spark):
+def test_dedup_components_crafted_graph(spark, monkeypatch):
     """Crafted topology: a 4-chain (worst diameter), a star, a
     triangle, and singletons — every node must map to the component's
     min id with the right cluster size, regardless of partitioning."""
@@ -417,28 +418,29 @@ def test_dedup_components_crafted_graph(spark):
     }
 
     # non-convergence guard: a diameter-3 chain cannot finish in 1 round
-    import pytest as _pytest
+    monkeypatch.setattr(dedup_ops, "_MAX_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup_ops.dedup_components(pairs, nodes)
 
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        dedup_ops.dedup_components(pairs, nodes, max_iter=1)
 
-
-def test_dedup_components_deep_graph_log_rounds(spark):
+def test_dedup_components_deep_graph_log_rounds(spark, monkeypatch):
     """Backpressure proof (VERDICT r04 #2): on a deliberately
     pathological ~10^5-node topology — one 65,536-node chain (the
     worst diameter a graph of that size can have), a 30,000-leaf star,
     and 4,000 singletons — pointer-doubling must converge in
     ~log2(diameter) rounds, not O(diameter).  Plain min-propagation
-    needs 65,535 rounds here; the doubling loop is asserted to finish
-    within log2(n)+c and to produce the exact clustering."""
+    needs 65,535 rounds here; the round budget is cut to log2(n)+c, so
+    the loop raises unless it converges within it, and the clustering
+    must be exact."""
     import math
-    import time
 
     from pyspark.sql import functions as F
 
     from jgdtrans_rs_spark.operators import dedup as dedup_ops
 
     chain_n, star_n, single_n = 65_536, 30_000, 4_000
+    # log2(diameter) + slack
+    monkeypatch.setattr(dedup_ops, "_MAX_ROUNDS", int(math.log2(chain_n)) + 4)
     chain = spark.range(chain_n - 1).select(
         F.col("id").alias("doc_a"), (F.col("id") + 1).alias("doc_b"))
     star = spark.range(star_n - 1).select(
@@ -449,27 +451,17 @@ def test_dedup_components_deep_graph_log_rounds(spark):
         .unionByName(spark.range(star_n).select((F.col("id") + 100_000).alias("doc_id")))
         .unionByName(spark.range(single_n).select((F.col("id") + 900_000).alias("doc_id")))
     )
-    stats: dict = {}
-    t0 = time.monotonic()
-    out = dedup_ops.dedup_components(pairs, nodes, max_iter=25, stats=stats)
+    out = dedup_ops.dedup_components(pairs, nodes)  # raises past the budget
     agg = {
         (int(r["canonical_id"]), int(r["cluster_size"])): int(r["n"])
         for r in out.groupBy("canonical_id", "cluster_size")
         .agg(F.count("*").alias("n")).collect()
         if int(r["cluster_size"]) > 1
     }
-    wall = time.monotonic() - t0
     # exact clustering: one chain component, one star component,
     # singletons map to themselves
     assert agg == {(0, chain_n): chain_n, (100_000, star_n): star_n}
     assert out.count() == chain_n + star_n + single_n
-    bound = int(math.log2(chain_n)) + 4  # log2(diameter) + slack
-    assert stats["rounds"] <= bound, (
-        f"{stats['rounds']} rounds on a {chain_n}-chain (bound {bound}): "
-        f"doubling is broken; changed={stats['changed_per_round']}")
-    # convergence audit artifact for PLANS.md
-    print(f"\ndeep-graph components: rounds={stats['rounds']} "
-          f"wall={wall:.1f}s changed={stats['changed_per_round']}")
 
 
 def test_oracle_sql_survives_non_finite_rows(spark, duck):
@@ -539,47 +531,37 @@ def test_ann_ivf_degenerate_rows_do_not_crash(spark):
     from jgdtrans_rs_spark.operators import similarity
 
     emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
-    dim = len(emb.first()["embedding"])
     junk = spark.createDataFrame(
         [(3, None, 0), (900_000, [1.0, 2.0], 0)],
         "vec_id long, embedding array<float>, label int")
     # vec_id 3 NULL replaces nothing (ids disjoint from fixture? id 3
     # exists in the corpus — union adds a second, degenerate row)
     mixed = emb.unionByName(junk)
-    got = similarity.ann_ivf_topk(mixed, n_queries=5, k=3).toPandas()
+    got = similarity.ann_ivf_topk(mixed).toPandas()
     assert len(got) > 0
     assert 900_000 not in set(got["neighbor_id"])
 
 
-def test_double_literal_parses_at_any_magnitude():
-    """Float literals in generated SQL must parse whatever their
-    magnitude: blindly suffixing repr() with e0 produced '3e-05e0'
-    (a DuckDB parser error) for sub-1e-4 hyperplane weights."""
-    import duckdb as _duck
-
-    from jgdtrans_rs_spark.plans.webops import _dlit
-
-    for v in (0.5, -1.0, 3.0057e-05, -2.5e-20, 1.7976931348623157e+308):
-        lit = _dlit(v)
-        got = _duck.sql(f"SELECT {lit} AS v").fetchone()[0]
-        assert got == v, (v, lit)
-
-
-def test_dlit_rejects_non_finite():
-    """Non-finite constants must fail LOUDLY at SQL-generation time:
-    repr(nan) would reach Spark as a bare 'nan' token, which parses as
-    a COLUMN REFERENCE — a silent wrong-answer, not an error
-    (ADVICE r04)."""
+def test_double_literal_parses_at_any_magnitude(spark, duck):
+    """``oracle.double_lit``, the one double literal of the generated
+    SQL, must give back every double bit for bit in both dialects:
+    -0.0 (a bare decimal literal is a DECIMAL, so ``CAST(-0.0 AS
+    DOUBLE)`` read +0.0), subnormals, the largest finite, the
+    infinities and NaN (a bare ``nan`` would parse as a column name),
+    and the sub-1e-4 magnitudes whose ``e0``-suffixed repr
+    ('3e-05e0') once failed to parse."""
     import math
+    import struct
 
-    import pytest as _pytest
+    from jgdtrans_rs_spark.plans.oracle import double_lit
 
-    from jgdtrans_rs_spark.plans.webops import _dlit
-
-    for v in (float("nan"), float("inf"), float("-inf")):
-        with _pytest.raises(ValueError, match="non-finite"):
-            _dlit(v)
-    assert math.isfinite(float(_dlit(1.5).rstrip("e0") or "1.5"))
+    vals = (0.5, -1.0, 3.0057e-05, -2.5e-20, 1.7976931348623157e+308, -0.0,
+            5e-324, -2.2250738585072014e-308, 1e308, math.inf, -math.inf,
+            math.nan)
+    sql = "SELECT " + ", ".join(f"{double_lit(v)} AS v{i}" for i, v in enumerate(vals))
+    bits = lambda row: [struct.pack("<d", x) for x in row]  # noqa: E731
+    assert bits(duck.sql(sql).fetchone()) == bits(vals)
+    assert bits(spark.sql(sql).first()) == bits(vals)
 
 
 def test_contract_is_exactly_50_fully_oracled(contract):
@@ -793,7 +775,7 @@ def test_heavy_oracles_bigsf(spark, tmp_path_factory):
           sorted(timings.items(), key=lambda kv: -kv[1]))
 
 
-def test_nan_embeddings_are_degenerate_everywhere(spark):
+def test_nan_embeddings_are_degenerate_everywhere(spark, monkeypatch):
     """Non-finite vectors follow the same sentinel policy as NULL /
     wrong-length ones (round-5 review).  Spark orders NaN ABOVE every
     double, so before the fix a NaN vector (1) passed the ok-mask and
@@ -805,6 +787,7 @@ def test_nan_embeddings_are_degenerate_everywhere(spark):
     import math
 
     from jgdtrans_rs_spark.operators import similarity
+    from jgdtrans_rs_spark.plans import webops
 
     emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet").limit(80)
     dim = len(emb.first()["embedding"])
@@ -816,21 +799,22 @@ def test_nan_embeddings_are_degenerate_everywhere(spark):
     mixed = emb.unionByName(bad)
 
     # (1) sentinel bucket, never a join key
-    got = similarity.signature_buckets(bad, dim=dim).toPandas()
+    got = similarity.signature_buckets(bad, 12, 1).toPandas()
     assert (got["bucket"] == -1).all()
 
     # (2) no pair in the near-dup output ever touches the bad ids
-    pairs = similarity.embedding_near_dup(
-        mixed, dim=dim, threshold=0.5).toPandas()
+    monkeypatch.setattr(webops, "_NEAR_DUP_COS", 0.5)
+    pairs = similarity.embedding_near_dup(mixed).toPandas()
     bad_ids = {900_001, 900_002}
     assert not (set(pairs["a"]) | set(pairs["b"])) & bad_ids
 
     # (3) IVF training ignores the non-finite sample and the corpus
     # still lands in real lists; top-k stays non-empty and NaN-free
-    cents = similarity.train_ivf_centroids(mixed, n_lists=4, dim=dim,
-                                           sample_rows=100)
+    monkeypatch.setattr(similarity, "_IVF_LISTS", 4)
+    monkeypatch.setattr(similarity, "_IVF_SAMPLE_ROWS", 100)
+    cents = similarity.train_ivf_centroids(mixed)
+    assert cents.shape == (4, dim)
     assert not math.isnan(cents.sum()) and not math.isinf(cents.sum())
-    topk = similarity.ann_ivf_topk(mixed, n_queries=5, k=3, n_lists=4,
-                                   dim=dim).toPandas()
+    topk = similarity.ann_ivf_topk(mixed).toPandas()
     assert len(topk) > 0
     assert not set(topk["neighbor_id"]) & bad_ids

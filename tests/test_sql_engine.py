@@ -167,3 +167,40 @@ def test_forward_normalizes_output_across_lon_wrap(spark):
     assert k.status == 0 and s.status == 0
     assert k.out_lon < -179.9  # wrapped, not 180.01
     assert s.out_lon == k.out_lon and s.out_lat == k.out_lat  # bit-exact
+
+
+def test_forward_corr_keeps_negative_zero(spark):
+    """A par value ``-0.00000`` parses to -0.0, as in Rust.  On a cell
+    whose four corners are all -0.0 the correction is -0.0 in the
+    kernel, in SqlEngine's grid relation and in the oracle SQL over
+    ``oracle.grid_values`` in both dialects — a bare ``CAST(-0.0 AS
+    DOUBLE)`` literal is a DECIMAL first, so DuckDB read +0.0."""
+    import struct
+
+    import duckdb
+
+    from jgdtrans_rs_spark import kernel
+    from jgdtrans_rs_spark.grid import parse_par
+
+    cell = (54401027, 54401028, 54401037, 54401038)
+    grid = parse_par("h\nh\n" + "".join(f"{c}  -0.00000  -0.00000\n" for c in cell),
+                     "TKY2JGD")
+    lat, lon = 36.1003, 140.0878  # inside the cell
+    c = kernel.forward_corr(np.array([lat]), np.array([lon]), grid)
+    want = [struct.pack("<d", x[0]) for x in (c.dlat, c.dlon, c.dalt)]
+    assert int(c.status[0]) == 0 and want[0] == struct.pack("<d", -0.0)
+
+    src = f"(SELECT 1 AS pkey, {lat!r}e0 AS lat, {lon!r}e0 AS lon, 0.0e0 AS alt) _in"
+    cols = ("dlat_deg", "dlon_deg", "dalt_m")
+    eng = SqlEngine(spark, grid)
+    values = oracle.grid_values(grid.to_rows())
+    for name, run in (
+            ("SqlEngine", lambda: spark.sql(oracle.forward_corr_only_sql(
+                src, eng.grid_rel, grid.mesh_unit)).first().asDict()),
+            ("Spark VALUES", lambda: spark.sql(oracle.forward_corr_only_sql(
+                src, values, grid.mesh_unit)).first().asDict()),
+            ("DuckDB VALUES", lambda: duckdb.sql(oracle.forward_corr_only_sql(
+                src, values, grid.mesh_unit)).df().iloc[0].to_dict())):
+        row = run()
+        assert row["status"] == 0, name
+        assert [struct.pack("<d", row[k]) for k in cols] == want, name

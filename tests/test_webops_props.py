@@ -15,12 +15,14 @@ def _docs(spark):
     spark.read.parquet(f"{SF}/documents.parquet").createOrReplaceTempView("documents")
 
 
-def test_boilerplate_rebuild_identity(spark):
-    """With min_docs above the corpus size nothing is boilerplate, so
-    clean_text must reconstruct the whitespace-normalized original —
-    proving the ordered segment rebuild is lossless."""
+def test_boilerplate_rebuild_identity(spark, monkeypatch):
+    """With the document threshold above the corpus size nothing is
+    boilerplate, so clean_text must reconstruct the
+    whitespace-normalized original — proving the ordered segment
+    rebuild is lossless."""
     _docs(spark)
-    out = spark.sql(webops.boilerplate_strip_sql(SPARK, min_docs=10**9)) \
+    monkeypatch.setattr(webops, "_BOILER_MIN_DOCS", 10**9)
+    out = spark.sql(webops.boilerplate_strip_sql(SPARK)) \
         .select("doc_id", "n_boiler", "clean_text").toPandas().set_index("doc_id")
     src = spark.sql(
         "SELECT doc_id, array_join(filter(split(text, ' '), x -> x != ''), ' ') AS norm "
@@ -31,11 +33,12 @@ def test_boilerplate_rebuild_identity(spark):
     assert (out["clean_text"].sort_index() == src["norm"].sort_index()).all()
 
 
-def test_vocab_tf_conserves_token_count(spark):
-    """With topn above the vocabulary size, the summed term frequency
+def test_vocab_tf_conserves_token_count(spark, monkeypatch):
+    """With top-N above the vocabulary size, the summed term frequency
     must equal the corpus token count, and df <= corpus size."""
     _docs(spark)
-    v = spark.sql(webops.vocab_topn_sql(SPARK, topn=10**6)).toPandas()
+    monkeypatch.setattr(webops, "_VOCAB_TOPN", 10**6)
+    v = spark.sql(webops.vocab_topn_sql(SPARK)).toPandas()
     total = spark.sql(
         "SELECT SUM(size(filter(split(text, ' '), x -> x != ''))) AS n FROM documents"
     ).collect()[0].n
@@ -50,21 +53,23 @@ def test_sample_stratified_deterministic_and_bounded(spark):
     """Two runs select the identical subset; every surviving bucket is
     below its source's configured rate."""
     _docs(spark)
-    rates = {"src0": 50, "src1": 5, "src2": 0}
-    a = spark.sql(webops.sample_stratified_sql(SPARK, rates=rates, default_pct=20)).toPandas()
-    b = spark.sql(webops.sample_stratified_sql(SPARK, rates=rates, default_pct=20)).toPandas()
+    rates = webops._SAMPLE_RATES
+    assert rates["src2"] == 0
+    a = spark.sql(webops.sample_stratified_sql(SPARK)).toPandas()
+    b = spark.sql(webops.sample_stratified_sql(SPARK)).toPandas()
     key = lambda d: sorted(map(tuple, d[["doc_id", "source", "bucket"]].values.tolist()))
     assert key(a) == key(b) and len(a) > 0
     for _, r in a.iterrows():
-        assert r.bucket < rates.get(r.source, 20)
+        assert r.bucket < rates.get(r.source, webops._SAMPLE_DEFAULT_PCT)
     assert not (a["source"] == "src2").any()
 
 
-def test_pack_chunks_spans_tile_the_stream(spark):
+def test_pack_chunks_spans_tile_the_stream(spark, monkeypatch):
     """Per source, token spans must be contiguous (no gaps/overlaps)
     and chunk ids consistent with the spans."""
     _docs(spark)
-    p = spark.sql(webops.pack_chunks_sql(SPARK, context_len=256)).toPandas()
+    monkeypatch.setattr(webops, "_CONTEXT_LEN", 256)
+    p = spark.sql(webops.pack_chunks_sql(SPARK)).toPandas()
     for _, g in p.sort_values(["source", "doc_id"]).groupby("source"):
         starts = g["tok_start"].to_numpy()
         ends = (g["tok_start"] + g["n_tokens"]).to_numpy()
@@ -133,8 +138,8 @@ def test_decontaminate_holdout_excluded_and_copies_flagged(spark):
     shingles with a holdout doc (i.e. itself shifted into train ids)
     must be flagged."""
     _docs(spark)
-    out = spark.sql(webops.decontaminate_sql(SPARK, holdout_mod=50)).toPandas()
-    assert not (out["doc_id"] % 50 == 0).any()
+    out = spark.sql(webops.decontaminate_sql(SPARK)).toPandas()
+    assert not (out["doc_id"] % webops._HOLDOUT_MOD == 0).any()
     # every flagged doc has >= 1 hit; every unflagged has 0
     assert ((out["n_hit_shingles"] > 0) == out["is_contaminated"]).all()
 
@@ -302,7 +307,7 @@ def test_stage_view_reclaim_keeps_catalog_flat(spark):
     dedup_ops.reclaim_stages(spark)  # drain stages other tests left behind
     before = {t.name for t in spark.catalog.listTables()}
     for _ in range(2):
-        similarity.ann_lsh_topk(emb, n_queries=3, k=2).count()
+        similarity.ann_lsh_topk(emb).count()
         dedup_ops.minhash_lsh_pairs(spark).count()
     during = {t.name for t in spark.catalog.listTables()}
     assert len(during) > len(before)  # stages registered per call
