@@ -564,6 +564,27 @@ def test_double_literal_parses_at_any_magnitude(spark, duck):
     assert bits(spark.sql(sql).first()) == bits(vals)
 
 
+def test_dlit_rejects_non_finite(spark, duck):
+    """A non-finite constant must never reach the SQL as a bare token:
+    repr(nan) is 'nan', which parses as a COLUMN REFERENCE — a silent
+    wrong answer, not an error (ADVICE r04).  The shared renderer quotes
+    it, so even with columns named nan/inf/infinity in scope the literal
+    is the constant itself, never the column."""
+    import math
+
+    from jgdtrans_rs_spark.plans.oracle import double_lit
+
+    vals = (math.nan, math.inf, -math.inf)
+    for v in vals:
+        assert double_lit(v).startswith("CAST('"), double_lit(v)
+    sql = ("SELECT " + ", ".join(f"{double_lit(v)} AS v{i}" for i, v in enumerate(vals))
+           + " FROM (SELECT 1.5 AS nan, 2.5 AS inf, 3.5 AS infinity) t")
+    for row in (duck.sql(sql).fetchone(), spark.sql(sql).first()):
+        got = [float(x) for x in row]
+        assert math.isnan(got[0]), row
+        assert got[1:] == [math.inf, -math.inf], row
+
+
 def test_contract_is_exactly_50_fully_oracled(contract):
     """Invariance guard for the driver's per-round CORRECTNESS budget
     (VERDICT r04 #7): the contract must stay at EXACTLY 50 queries —
