@@ -197,8 +197,8 @@ def _q_forward_sqlonly(spark, sf_dir):
 
 
 def _q_backward_newton_sqlonly(spark, sf_dir):
-    """JVM-only Newton inverse: 4 unrolled SQL iterations composed
-    through temp views (bit-identical to the Arrow kernel path,
+    """JVM-only Newton inverse: 4 unrolled SQL iterations, each cut
+    by a lazy local checkpoint (bit-identical to the Arrow kernel path,
     tests/test_sql_engine.py)."""
     return _sql_engine(spark).backward(_points(spark, sf_dir))
 

@@ -433,13 +433,9 @@ class Engine:
         """The broadcast grid as a small DataFrame (for F.broadcast joins
         / coverage anti-joins).  LocalRelation-backed for broadcastable
         grids (localrel.py): zero-job broadcast builds per action."""
-        from .localrel import local_rows_df
+        from .localrel import grid_df
 
-        return local_rows_df(
-            self.spark,
-            self.grid.to_rows(),
-            schema="meshcode long, dlat_sec double, dlon_sec double, dalt_m double",
-        )
+        return grid_df(self.spark, self.grid)
 
     def statistics_df(self) -> DataFrame:
         """Spark-aggregate twin of ``MeshGrid.statistics`` (SURVEY

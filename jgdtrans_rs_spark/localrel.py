@@ -83,3 +83,12 @@ def local_rows_df(spark: SparkSession, rows, schema: str) -> DataFrame:
          for c, (t, cast) in zip(columns, types)],
         names=names)
     return spark.createDataFrame(table, schema=schema)
+
+
+def grid_df(spark: SparkSession, grid) -> DataFrame:
+    """The parameter grid's side table (meshcode, dlat_sec, dlon_sec,
+    dalt_m), one row per ``MeshGrid`` node: ``Engine.grid_df`` and
+    ``SqlEngine``'s broadcast view both read it."""
+    return local_rows_df(
+        spark, grid.to_rows(),
+        schema="meshcode long, dlat_sec double, dlon_sec double, dalt_m double")

@@ -19,6 +19,13 @@ physical strategy:
 * winnowing / components — sliding-window fingerprints; connected
                    components of a pair graph.
 
+A stage that is expensive and read more than once (both sides of a
+self-join, or several projections) is cut with
+``plans/spark_sql.staged_sql``, a lazy local checkpoint, and reaches
+the next statement as a ``sql_with`` argument: a call leaves no temp
+view and no cache entry in the session, and the stage's blocks go when
+the returned DataFrame does.
+
 Thresholds, band geometry and window widths are plans/webops.py
 constants shared with the DuckDB replicas (``_MAX_ROUNDS`` lives here);
 a test varies one with monkeypatch.
@@ -26,105 +33,47 @@ a test varies one with monkeypatch.
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import DataFrame, SparkSession
 
 from ..plans import webops
+from ..plans.spark_sql import sql_with, staged_sql
 from ..plans.textsql import SPARK
-
-# Staged operators below persist their stage boundary and expose it to
-# the follow-up SQL through a temp view.  View names are unique per
-# call (counter suffix, like plans/spark_sql.py) so concurrent or
-# repeated calls in one session never clobber each other's plans.
-# CACHE CONTRACT (applies to every persist() here and to
-# similarity.embedding_near_dup): the staged frame is MEMORY_AND_DISK
-# and LRU-evicted; callers running many dedup passes in a long-lived
-# session should reclaim explicitly once the returned DataFrame has
-# been consumed — either ``spark.catalog.clearCache()`` or
-# ``spark.table(<returned-plan's view>).unpersist()``; results stay
-# correct either way (Spark recomputes evicted stages).
-_view_ids = itertools.count()
-
-# Stage views registered PER SESSION (ADVICE r04; the reclaim route
-# for long-lived sessions) — one call unpersists every staged block
-# AND drops its catalog entry, instead of leaving one uniquely-named
-# view per operator call to LRU eviction.  Keyed by the session
-# object, not applicationId: temp views are session-scoped, and two
-# sessions on one SparkContext share an applicationId — a shared key
-# let one session's reclaim pop (and then fail to drop) the OTHER
-# session's views, leaking them permanently (round-5 review).  A
-# WeakKeyDictionary so a garbage-collected session doesn't pin its
-# name list forever.
-import weakref
-
-_stage_views: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-
-def _register_stage_view(spark: SparkSession, df, base_name: str) -> str:
-    name = f"{base_name}_{next(_view_ids)}"
-    df.createOrReplaceTempView(name)
-    _stage_views.setdefault(spark, []).append(name)
-    return name
-
-
-def reclaim_stages(spark: SparkSession) -> int:
-    """Unpersist and drop every stage view this module (and
-    operators/similarity) registered on ``spark``; returns the number
-    reclaimed.  Safe to call at any time — results built from the
-    stages stay correct (Spark recomputes evicted stages); this only
-    releases storage-memory blocks and catalog entries."""
-    names = _stage_views.pop(spark, [])
-    n = 0
-    for name in names:
-        try:
-            spark.table(name).unpersist()
-            spark.catalog.dropTempView(name)
-            n += 1
-        except Exception:
-            pass  # view already dropped / session torn down
-    return n
-
-
-def _stage(spark: SparkSession, sql: str, base_name: str) -> str:
-    """Persist a stage and register it under a unique view name."""
-    df = spark.sql(sql).persist()
-    return _register_stage_view(spark, df, base_name)
 
 
 def minhash_lsh_pairs(spark: SparkSession, docs: str = "documents") -> DataFrame:
     """Near-duplicate pairs (doc_a, doc_b, inter_n, union_n).
 
-    Staged with persisted boundaries: the shingle pipeline is computed
-    once (not re-inlined into every minhash column / band reference by
+    Staged (``staged_sql``): the shingle pipeline is computed once (not
+    re-inlined into every minhash column / band reference by
     CollapseProject), then signatures once, then the band join — at
     corpus scale each stage is a clean shuffle boundary.
     """
-    sints = _stage(spark, webops.minhash_sints_sql(SPARK, docs), "_mh_sints")
-    sigs = _stage(spark, webops.minhash_sigs_from(SPARK, sints), "_mh_sigs")
-    return spark.sql(webops.minhash_pairs_from(SPARK, sigs))
+    sints = staged_sql(spark, webops.minhash_sints_sql(SPARK, docs))
+    sigs = staged_sql(spark, webops.minhash_sigs_from(SPARK, "__SINTS__"),
+                      SINTS=sints)
+    return sql_with(spark, webops.minhash_pairs_from(SPARK, "__SIGS__"), SIGS=sigs)
 
 
 def ngram_jaccard_pairs(spark: SparkSession, docs: str = "documents") -> DataFrame:
     """Exact shingle-Jaccard pairs (doc_a, doc_b, inter_n, union_n),
     with the shingle stage materialized (it feeds both sides of the
     blocked self-join)."""
-    base = _stage(spark, webops.ngram_base_sql(SPARK, docs), "_ng_base")
-    return spark.sql(webops.ngram_pairs_from(SPARK, base))
+    base = staged_sql(spark, webops.ngram_base_sql(SPARK, docs))
+    return sql_with(spark, webops.ngram_pairs_from(SPARK, "__BASE__"), BASE=base)
 
 
 def winnowing_fingerprints(spark: SparkSession, docs: str = "documents") -> DataFrame:
     """Winnowing fingerprints, relational formulation: shingle stage
-    materialized (persist + temp view — CollapseProject would inline
+    materialized (``staged_sql`` — CollapseProject would inline
     the shingle pipeline into every window slice: measured minutes at
     5k docs), then the sliding minimum as a ROWS window frame over the
     exploded (doc_id, i, shingle) rows — one shuffle on doc_id, no
     per-window array slicing.  Output set identical to the
     single-statement array form (webops.winnowing_from — the DuckDB
     oracle)."""
-    base = _stage(spark, webops.winnowing_base_sql(SPARK, docs), "_win_base")
+    base = staged_sql(spark, webops.winnowing_base_sql(SPARK, docs))
     window = webops._WINNOW_WINDOW
-    return spark.sql(f"""
+    return sql_with(spark, f"""
       SELECT DISTINCT doc_id, fp
       FROM (
         SELECT doc_id, i, n,
@@ -132,20 +81,20 @@ def winnowing_fingerprints(spark: SparkSession, docs: str = "documents") -> Data
                             ROWS BETWEEN CURRENT ROW AND {window - 1} FOLLOWING) AS fp
         FROM (
           SELECT doc_id, i, element_at(sints, i) AS s, size(sints) AS n
-          FROM {base} LATERAL VIEW explode(sequence(1, size(sints))) _e AS i
+          FROM __BASE__ LATERAL VIEW explode(sequence(1, size(sints))) _e AS i
           WHERE size(sints) >= {window}
         ) _rows
       ) _mins
       WHERE i <= n - {window} + 1
-    """)
+    """, BASE=base)
 
 
 def simhash_pairs(spark: SparkSession, docs: str = "documents") -> DataFrame:
     """Banded-Hamming simhash pairs with the signature stage
     materialized (the 32-term signature would otherwise be recomputed
     per band reference through CTE inlining; 26 s -> ~2 s at 5k docs)."""
-    sigs = _stage(spark, webops.simhash_sigs_sql(SPARK, docs), "_sh_sigs")
-    return spark.sql(webops.simhash_pairs_from(SPARK, sigs))
+    sigs = staged_sql(spark, webops.simhash_sigs_sql(SPARK, docs))
+    return sql_with(spark, webops.simhash_pairs_from(SPARK, "__SIGS__"), SIGS=sigs)
 
 
 def dedup_incremental(spark: SparkSession, docs: str = "documents") -> DataFrame:
@@ -155,14 +104,12 @@ def dedup_incremental(spark: SparkSession, docs: str = "documents") -> DataFrame
     #3 — the digest probe, band probe, shingle explode and sizes arms
     all read the corpus), which cost 57 s at sf0.1 vs 2.2 s staged
     (26x).  At 100 TB these stages ARE the precomputed corpus-side
-    signature tables the docstring describes.  Cache contract as
-    above."""
-    sints = _stage(spark, webops.dedup_incremental_sints_sql(SPARK, docs),
-                   "_inc_sints")
-    sigs = _stage(spark, webops.dedup_incremental_sigs_from(SPARK, sints),
-                  "_inc_sigs")
-    body = webops.dedup_incremental_from(SPARK, sigs, sints)
-    return spark.sql(f"WITH {body.lstrip()}")
+    signature tables the docstring describes."""
+    sints = staged_sql(spark, webops.dedup_incremental_sints_sql(SPARK, docs))
+    sigs = staged_sql(spark, webops.dedup_incremental_sigs_from(SPARK, "__SINTS__"),
+                      SINTS=sints)
+    body = webops.dedup_incremental_from(SPARK, "__SIGS__", "__SINTS__")
+    return sql_with(spark, f"WITH {body.lstrip()}", SIGS=sigs, SINTS=sints)
 
 
 _MAX_ROUNDS = 25  # dedup_components converges in ~log2(diameter) rounds

@@ -10,6 +10,11 @@ length is read from the data, ``infer_dim``).
 * ``embedding_near_dup`` — pairs above a cosine threshold via the same
   bucketing; ``augment_with_near_dups`` plants known positives.
 
+The signature stage that feeds both sides of a bucket self-join is cut
+with a lazy local checkpoint (the operators/dedup.py staging rule): no
+temp view and no cache entry is left in the session, and the stage's
+blocks go when the returned DataFrame does.
+
 Settings shared with a DuckDB replica are plans/webops.py constants,
 read at call time; the IVF trainer's are the constants below.  A test
 varies one with monkeypatch.
@@ -29,21 +34,6 @@ from ..plans import webops
 # sampled vectors; a query probes its _IVF_PROBE nearest lists.
 _IVF_LISTS, _IVF_PROBE = 8, 2
 _IVF_SAMPLE_ROWS, _IVF_ITERS, _IVF_SEED = 2000, 10, 42
-
-
-def _persist_stage(df: DataFrame, base_name: str) -> DataFrame:
-    """Persist a stage AND register it in the shared stage registry
-    (operators/dedup._register_stage_view), so one
-    ``dedup.reclaim_stages(spark)`` call unpersists every staged block
-    and drops its temp view (ADVICE r04) — without it, repeated
-    operator calls in a long session would pin blocks reachable only
-    through LRU eviction and leave one view per call in the catalog.
-    Same cache contract as operators/dedup."""
-    from . import dedup as _dedup
-
-    out = df.persist()
-    _dedup._register_stage_view(out.sparkSession, out, base_name)
-    return out
 
 
 def infer_dim(df: DataFrame) -> int:
@@ -168,15 +158,14 @@ def ann_lsh_topk(df: DataFrame) -> DataFrame:
     recall is set by the planes m and tables L (webops._ANN_PLANES,
     _ANN_TABLES) — OR-amplification: recall ≈ 1 - (1 - p^m)^L.
     """
-    # persisted: the signature stage feeds BOTH sides of the bucket
-    # join.  At the local tiers the self-join costs the same either
-    # way (~1.1 s warm at sf0.1 — the Arrow stage is cheap and AQE
-    # reuses the exchange), but at corpus scale the unpersisted plan
-    # has no guarantee of reuse across the two branches, so the stage
-    # boundary is explicit like embedding_near_dup's.  Cache contract
-    # in _persist_stage.
-    b = _persist_stage(
-        signature_buckets(df, webops._ANN_PLANES, webops._ANN_TABLES), "_lsh_sigs")
+    # staged: the signature stage feeds BOTH sides of the bucket join.
+    # At the local tiers the self-join costs the same either way
+    # (~1.1 s warm at sf0.1 — the Arrow stage is cheap and AQE reuses
+    # the exchange), but at corpus scale the uncut plan has no
+    # guarantee of reuse across the two branches, so the stage
+    # boundary is explicit like embedding_near_dup's.
+    b = signature_buckets(
+        df, webops._ANN_PLANES, webops._ANN_TABLES).localCheckpoint(eager=False)
     q = b.filter(F.col("vec_id") < webops._ANN_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_vec"),
@@ -318,16 +307,12 @@ def embedding_near_dup(df: DataFrame) -> DataFrame:
     (table, bucket), so under AQE Spark's skew-join handling splits an
     oversized shuffle partition itself.
     """
-    # persisted: b feeds both join sides (a self-join re-executes
-    # shared lineage).  Cache contract in _persist_stage (unique temp
-    # view = the reclaim handle).  Degenerate rows (sentinel bucket -1)
-    # are dropped up front: they can never clear the cosine threshold,
-    # and their (t, -1) buckets would self-join quadratically on a
-    # dirty corpus.
-    b = _persist_stage(
-        signature_buckets(df, webops._NEAR_DUP_PLANES, webops._NEAR_DUP_TABLES)
-        .filter(F.col("bucket") >= 0),
-        "_nd_sigs")
+    # staged: b feeds both join sides (a self-join re-executes shared
+    # lineage).  Degenerate rows (sentinel bucket -1) are dropped up
+    # front: they can never clear the cosine threshold, and their
+    # (t, -1) buckets would self-join quadratically on a dirty corpus.
+    b = (signature_buckets(df, webops._NEAR_DUP_PLANES, webops._NEAR_DUP_TABLES)
+         .filter(F.col("bucket") >= 0).localCheckpoint(eager=False))
     left = b.select(F.col("vec_id").alias("a"), F.col("embedding").alias("va"), "table", "bucket")
     right = b.select(F.col("vec_id").alias("b"), F.col("embedding").alias("vb"), "table", "bucket")
     pairs = (

@@ -22,21 +22,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..plans import webops
+from ..plans.spark_sql import sql_with, staged_sql
 from ..plans.textsql import SPARK
-from .dedup import _stage
 
 
 def boilerplate_strip(spark: SparkSession, docs: str = "documents") -> DataFrame:
     """(doc_id, n_segs, n_boiler, clean_text).
 
     The segment relation feeds BOTH the boilerplate aggregate and the
-    rejoin, so it is materialized (persist + unique temp view, the
-    dedup.py staging convention — Spark's CTE inlining would otherwise
-    recompute the tokenize+slice pipeline per consumer; same pathology
-    PLANS.md documents for minhash/winnowing).  Cache contract as in
-    operators/dedup.py."""
-    segrows = _stage(spark, webops.boiler_segments_sql(SPARK, docs), "_bp_segrows")
-    return spark.sql(webops.boilerplate_from(SPARK, segrows))
+    rejoin, so it is a stage (``staged_sql``, the operators/dedup.py
+    convention — Spark's CTE inlining would otherwise recompute the
+    tokenize+slice pipeline per consumer; same pathology PLANS.md
+    documents for minhash/winnowing)."""
+    segrows = staged_sql(spark, webops.boiler_segments_sql(SPARK, docs))
+    return sql_with(spark, webops.boilerplate_from(SPARK, "__SEGROWS__"),
+                    SEGROWS=segrows)
 
 
 def vocab_topn(spark: SparkSession, docs: str = "documents") -> DataFrame:
@@ -48,24 +48,21 @@ def vocab_topn(spark: SparkSession, docs: str = "documents") -> DataFrame:
 def text_profile(spark: SparkSession, docs: str = "documents") -> DataFrame:
     """Per-doc token statistics + language heuristic in one pass
     (webops.text_profile_sql semantics) with the tokenize stage
-    materialized — eight consuming expressions would otherwise each
-    inline the split pipeline (PLANS.md 'Expression staging' #1).
-    Cache contract as in operators/dedup.py."""
-    base = _stage(spark, webops.text_profile_base_sql(SPARK, docs), "_prof_base")
-    return spark.sql(webops.text_profile_from(SPARK, base))
+    staged — eight consuming expressions would otherwise each inline
+    the split pipeline (PLANS.md 'Expression staging' #1)."""
+    base = staged_sql(spark, webops.text_profile_base_sql(SPARK, docs))
+    return sql_with(spark, webops.text_profile_from(SPARK, "__BASE__"), BASE=base)
 
 
 def decontaminate(spark: SparkSession, docs: str = "documents") -> DataFrame:
     """Benchmark decontamination (webops.decontaminate_sql semantics)
-    with the perdoc shingle stage materialized: the stage feeds the
-    holdout set, the train probe AND the final left join — three CTE
-    references Spark would otherwise each re-execute (~40 s at the
-    sf0.1 probe vs under a second staged).  Cache contract as in
-    operators/dedup.py."""
-    perdoc = _stage(spark, webops.decontaminate_perdoc_sql(SPARK, docs),
-                    "_dec_perdoc")
-    body = webops.decontaminate_from(SPARK, perdoc)
-    return spark.sql(f"WITH {body.lstrip()}")
+    with the perdoc shingle relation staged: it feeds the holdout set,
+    the train probe AND the final left join — three CTE references
+    Spark would otherwise each re-execute (~40 s at the sf0.1 probe vs
+    under a second staged)."""
+    perdoc = staged_sql(spark, webops.decontaminate_perdoc_sql(SPARK, docs))
+    body = webops.decontaminate_from(SPARK, "__PERDOC__")
+    return sql_with(spark, f"WITH {body.lstrip()}", PERDOC=perdoc)
 
 
 def corpus_filter_audit(spark: SparkSession, docs: str = "documents") -> DataFrame:
@@ -74,11 +71,11 @@ def corpus_filter_audit(spark: SparkSession, docs: str = "documents") -> DataFra
     cleaning verdict (webops.corpus_filter_audit_sql semantics).
 
     The tokenize/shingle base stage (corpus_audit_base_sql) is
-    materialized ONCE (persist + unique temp view) and every audit
-    stage — quality, repetition, exact-dup, decontamination — reads
-    its staged _tids/_sints columns: one tokenizer pass over the
-    corpus instead of one per stage (VERDICT r03 #2; CollapseProject
-    would re-inline the token pipeline into every CTE consumer
-    otherwise).  Cache contract as in operators/dedup.py."""
-    base = _stage(spark, webops.corpus_audit_base_sql(SPARK, docs), "_audit_base")
-    return spark.sql(webops.corpus_filter_audit_from(SPARK, base))
+    materialized ONCE (``staged_sql``) and every audit stage —
+    quality, repetition, exact-dup, decontamination — reads its staged
+    _tids/_sints columns: one tokenizer pass over the corpus instead of
+    one per stage (VERDICT r03 #2; CollapseProject would re-inline the
+    token pipeline into every CTE consumer otherwise)."""
+    base = staged_sql(spark, webops.corpus_audit_base_sql(SPARK, docs))
+    return sql_with(spark, webops.corpus_filter_audit_from(SPARK, "__BASE__"),
+                    BASE=base)

@@ -34,6 +34,8 @@ Python (grid parameters, polygon vertices) are spelled by
 
 from __future__ import annotations
 
+from ..kernel import ITERATION
+
 UNIT_BOUND = {1: 9, 5: 5}
 
 # ---------------------------------------------------------------------------
@@ -511,7 +513,7 @@ PREP_COLS_V = """dlat_deg AS corr_y, dlon_deg AS corr_x,
 
 
 def backward_newton_stages(input_rel: str, grid_rel: str, unit: int,
-                           key: str = "pkey", iterations: int = 4) -> list[str]:
+                           key: str = "pkey") -> list[str]:
     """The Newton inverse as composable stages: element 0 is the
     initial state + prepare-corr over ``input_rel``; element i is
     iteration i's SQL with ``__STATE__`` standing for the previous
@@ -523,13 +525,14 @@ def backward_newton_stages(input_rel: str, grid_rel: str, unit: int,
     resolve of iteration i+1, exactly the carry the numpy kernel uses
     (kernel.backward_corr).  20 grid joins total instead of 32.
 
+    There are ``kernel.ITERATION`` iteration stages (trans.rs:588).
     backward_newton_sql inlines the chain into ONE statement (the
-    DuckDB oracle path); plans/spark_sql.py materializes each stage as
-    a temp view instead, because the fully inlined tree exceeds
-    Spark's analyzer fixed-point budget.
+    DuckDB oracle path); plans/spark_sql.py cuts each stage with a
+    lazy local checkpoint instead, because the fully inlined tree
+    exceeds Spark's analyzer fixed-point budget.
     """
     stages = [_newton_state0(input_rel, key), _newton_prep0(grid_rel, unit, key)]
-    for i in range(iterations):
+    for i in range(ITERATION):
         stages.append(_newton_iteration(grid_rel, unit, key, i))
     stages.append(_add_normalized_select(
         "__STATE__", "q_lat + o_dlat", "q_lon + o_dlon",
@@ -540,7 +543,7 @@ def backward_newton_stages(input_rel: str, grid_rel: str, unit: int,
 
 
 def backward_newton_sql(input_rel: str, grid_rel: str, unit: int,
-                        key: str = "pkey", iterations: int = 4) -> str:
+                        key: str = "pkey") -> str:
     """Verified backward transform (trans.rs:556-672) as fully
     unrolled SQL: per iteration, Jacobian from the carried
     prepare-corr, Newton update, one corr at the updated iterate
@@ -552,7 +555,7 @@ def backward_newton_sql(input_rel: str, grid_rel: str, unit: int,
     (trans.rs:624-648) and every float op is pinned to the kernel's
     order, so output is bit-identical to kernel.backward.
     """
-    stages = backward_newton_stages(input_rel, grid_rel, unit, key, iterations)
+    stages = backward_newton_stages(input_rel, grid_rel, unit, key)
     state = stages[0]
     for n, st in enumerate(stages[1:]):
         state = st.replace("__STATE__", f"({state}) _st{n}")

@@ -316,7 +316,7 @@ def minhash_pairs_sql(d: str, docs: str = "documents") -> str:
     This single-statement form is for the DuckDB oracle (DuckDB
     materializes CTEs); the Spark operator
     (operators/dedup.minhash_lsh_pairs) runs the staged builders with
-    persisted stage boundaries instead — Catalyst's CollapseProject
+    checkpointed stage boundaries instead — Catalyst's CollapseProject
     would otherwise inline the shingle pipeline into every minhash
     column and every CTE reference.  COMPOSED from the same staged
     builders (sints / sigs_from / the band-join CTE body), like every
@@ -490,7 +490,7 @@ _WINNOW_WINDOW = 4  # winnowing's sliding-window width, in shingles
 def winnowing_from(d: str, base_rel: str) -> str:
     """Winnowing stage 2 over a MATERIALIZED (doc_id, sints) relation:
     per-window minimum, distinct, exploded.  The Spark operator must
-    materialize stage 1 (persist + temp view): Catalyst's
+    materialize stage 1 (spark_sql.staged_sql): Catalyst's
     CollapseProject otherwise inlines the whole shingle pipeline into
     every windowed slice — measured minutes instead of seconds at 5k
     docs (same pathology the minhash pipeline stages around)."""
@@ -561,7 +561,7 @@ def simhash_sigs_sql(d: str, docs: str = "documents") -> str:
 
 def simhash_pairs_from(d: str, sigs_rel: str) -> str:
     """SimHash stage 2 over a MATERIALIZED (doc_id, simhash) relation
-    (Spark: persist + temp view — the 32-term signature expression
+    (Spark: spark_sql.staged_sql — the 32-term signature expression
     would otherwise be recomputed per band reference by CTE inlining;
     measured 26 s -> ~2 s at 5k docs)."""
     band_bits = T.SIMHASH_BITS // 4
@@ -1230,7 +1230,7 @@ def corpus_audit_base_sql(d: str, docs: str = "documents") -> str:
     repetition and decontamination CTEs — ~3x the tokenizer compute on
     the most expensive query in the suite at 100 TB).  The Spark
     operator (operators/text.corpus_filter_audit) materializes this
-    relation (persist + temp view, the dedup._stage convention)
+    relation (spark_sql.staged_sql, the operators/dedup.py convention)
     because Catalyst's CollapseProject would otherwise re-inline the
     token pipeline into every consuming stage."""
     tids = T.tok_ids("text", d)
@@ -1312,7 +1312,7 @@ def _audit_ctes_and_select(d: str, base_rel: str) -> tuple[str, str]:
 
 def corpus_filter_audit_from(d: str, base_rel: str) -> str:
     """Audit composition over an already-staged base relation (the
-    Spark path: operators/text.corpus_filter_audit persists
+    Spark path: operators/text.corpus_filter_audit stages
     corpus_audit_base_sql first)."""
     ctes, select = _audit_ctes_and_select(d, base_rel)
     return f"WITH {ctes} {select}"

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.oracle import points_sql
+from ..plans.spark_sql import sql_with
 
 # token vocabulary for deterministic body text (no external data)
 _WORDS = [
@@ -40,11 +41,10 @@ def synth_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     SemiDynaEXE fixture cell, 10% param-miss area, 10% hot cell, 10%
     out-of-domain).
     """
-    # module-private view name: a source constructor must not clobber
-    # a caller's session-level `orders` view as a side effect
-    spark.read.parquet(f"{sf_dir}/orders.parquet") \
-        .createOrReplaceTempView("_pages_orders_src")
-    pts = spark.sql(points_sql("_pages_orders_src"))
+    # the orders frame is a sql_with argument: a source constructor
+    # leaves the caller's session catalog as it found it
+    pts = sql_with(spark, points_sql("__ORDERS__"),
+                   ORDERS=spark.read.parquet(f"{sf_dir}/orders.parquet"))
     w = [F.lit(x) for x in _WORDS]
     nw = len(_WORDS)
     # deterministic 8-token body: word[(k * p_j) % nw] for primes p_j

@@ -120,3 +120,29 @@ def test_every_operator_option_is_varied():
                 unpassed.clear()
             unpassed -= set(positional[:len(call.args)]) | {k.arg for k in call.keywords}
     assert sorted(f"{f}({p})" for f, (_, ps) in options.items() for p in ps) == []
+
+
+STAGING_CALLS = {"persist", "cache", "createOrReplaceTempView"}
+
+
+def test_stages_are_checkpoints_not_cached_views():
+    """A stage boundary in the library is a lazy local checkpoint passed
+    to the next statement as an argument (plans/spark_sql.sql_with), so
+    no call leaves a temp view or a cache entry in the session.  Two
+    views are allowed: SqlEngine's broadcast grid view, made once when
+    the engine is built, and sql_with's own, dropped after analysis."""
+    found = []
+    for path in sorted((ROOT / PKG).rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        exempt = [node for node in tree.body
+                  if isinstance(node, ast.FunctionDef) and node.name == "sql_with"]
+        exempt += [f for node in tree.body
+                   if isinstance(node, ast.ClassDef) and node.name == "SqlEngine"
+                   for f in node.body
+                   if isinstance(f, ast.FunctionDef) and f.name == "__init__"]
+        allowed = {id(n) for f in exempt for n in ast.walk(f)}
+        found += [f"{path.relative_to(ROOT)}:{call.lineno} {call.func.attr}"
+                  for call in ast.walk(tree)
+                  if isinstance(call, ast.Call) and isinstance(call.func, ast.Attribute)
+                  and call.func.attr in STAGING_CALLS and id(call) not in allowed]
+    assert found == []

@@ -119,6 +119,28 @@ def test_transform_pip_jvm_only_and_matches_arrow_chain(engines, pts):
     assert got == want and len(got) > 0
 
 
+def test_forward_and_tiles_stay_under_jit_limit(spark, engines, tmp_path):
+    """forward and assign_tiles over a parquet-read input keep every
+    whole-stage method under HotSpot's 8,000-byte JIT limit (a method
+    above it runs interpreted, 3-10x slower).  Two input shapes: the
+    sink rows perfbench's sql_forward op reads (url key, alt a literal
+    0.0) and the contract points the bench q1s/q3s leaves read (pkey
+    key).  The margin is thin: 7,934 bytes for the url-keyed forward."""
+    from pyspark.sql import functions as F
+
+    _, sql_eng = engines
+    spark.read.parquet(f"{SF_SMALL}/orders.parquet").createOrReplaceTempView("orders_small")
+    spark.sql(oracle.points_sql("orders_small")) \
+        .withColumn("url", F.concat(F.lit("u"), "pkey")).write.parquet(str(tmp_path / "rows"))
+    rows = spark.read.parquet(str(tmp_path / "rows"))
+    pts = rows.select("pkey", "lat", "lon", "alt")
+    pages = rows.select("url", "lat", "lon", F.lit(0.0).alias("alt"))
+    for build in (lambda: sql_eng.forward(pages, key="url"),
+                  lambda: sql_eng.assign_tiles(pages, key="url"),
+                  lambda: sql_eng.forward(pts), lambda: sql_eng.assign_tiles(pts)):
+        assert max_method_bytes(build) < 8000
+
+
 def test_transform_pip_large_ring_stays_jvm_only(spark, engines):
     """A 600-edge ring keeps the plan free of Python stages, and
     transform_pip still returns exactly the Arrow chain's hits."""

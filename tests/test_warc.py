@@ -422,7 +422,6 @@ def test_warc_crawl_near_dup_detection(spark, tmp_path):
         assert pairs == {(0, 1), (0, 2), (1, 2)}
     finally:
         spark.catalog.dropTempView("_warc_dedup_src")
-        dedup_ops.reclaim_stages(spark)
 
 
 def test_warc_crawl_to_sink_end_to_end(spark, semidyna_grid, tmp_path):

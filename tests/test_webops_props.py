@@ -115,8 +115,8 @@ def test_repetition_stats_long_doc_linear(spark):
 
 
 def test_staged_operators_read_materialized_stages(spark):
-    """The staged operators must actually read their persisted stage
-    (InMemoryTableScan in the executed plan) — the guard against the
+    """The staged operators must actually read their checkpointed stage
+    (an ExistingRDD scan in the executed plan) — the guard against the
     CTE/projection re-execution pathologies (PLANS.md 'Expression
     staging'): an unstaged dedup_incremental cost 57 s at sf0.1 vs
     2.2 s staged."""
@@ -130,7 +130,7 @@ def test_staged_operators_read_materialized_stages(spark):
                text_ops.text_profile(spark)):
         df.count()
         plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "InMemoryTableScan" in plan
+        assert "Scan ExistingRDD" in plan
 
 
 def test_decontaminate_holdout_excluded_and_copies_flagged(spark):
@@ -293,27 +293,59 @@ def test_band_join_pinned_on_hand_corpus(spark):
             == incremental, d
 
 
-def test_stage_view_reclaim_keeps_catalog_flat(spark):
-    """Repeated staged-operator calls must not accrete catalog views /
-    cached blocks once reclaimed (VERDICT r05 #7): ann_lsh_topk and
-    minhash_lsh_pairs each register uniquely-named persisted stage
-    views per call; reclaim_stages(spark) must drop every one of
-    them, leaving the temp-view count exactly where it started."""
-    from jgdtrans_rs_spark.operators import dedup as dedup_ops
-    from jgdtrans_rs_spark.operators import similarity
+def test_staged_operators_leave_no_views_or_cache(spark, semidyna_grid):
+    """Repeated operator calls leave the session as they found it: each
+    staged operator cuts its stage with a lazy local checkpoint and
+    passes it to the next statement as a ``sql_with`` argument, so two
+    calls of each — and SqlEngine's forward, backward, tiles and
+    transform_pip, and synth_pages — register no temp view and no
+    cache entry.  The one view they may add is each SqlEngine's grid
+    view, made once when the engine is built."""
+    import __spark_entry__ as entry_mod
+    from jgdtrans_rs_spark.operators import dedup, similarity, text
+    from jgdtrans_rs_spark.plans import oracle
+    from jgdtrans_rs_spark.plans.spark_sql import SqlEngine, sql_with
+    from jgdtrans_rs_spark.sources.pages import synth_pages
 
     _docs(spark)
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    dedup_ops.reclaim_stages(spark)  # drain stages other tests left behind
+    spark.catalog.clearCache()  # what other tests' fixtures cached
     before = {t.name for t in spark.catalog.listTables()}
+    ops = (dedup.minhash_lsh_pairs, dedup.ngram_jaccard_pairs,
+           dedup.winnowing_fingerprints, dedup.simhash_pairs,
+           dedup.dedup_incremental, text.boilerplate_strip, text.text_profile,
+           text.decontaminate, text.corpus_filter_audit,
+           lambda s: similarity.ann_lsh_topk(emb),
+           lambda s: similarity.embedding_near_dup(emb))
     for _ in range(2):
-        similarity.ann_lsh_topk(emb).count()
-        dedup_ops.minhash_lsh_pairs(spark).count()
-    during = {t.name for t in spark.catalog.listTables()}
-    assert len(during) > len(before)  # stages registered per call
-    reclaimed = dedup_ops.reclaim_stages(spark)
-    assert reclaimed == len(during) - len(before)
+        for op in ops:
+            df = op(spark)
+            n = df.count()
+            assert df.count() == n  # the second action reads the stages
+    eng = SqlEngine(spark, semidyna_grid)
+    pts = sql_with(spark, oracle.points_sql("__ORDERS__"),
+                   ORDERS=spark.read.parquet(f"{SF}/orders.parquet"))
+    for df in (eng.forward(pts), eng.backward(pts), eng.assign_tiles(pts),
+               eng.transform_pip(pts, entry_mod.POLYGONS), synth_pages(spark, SF)):
+        df.count()
     after = {t.name for t in spark.catalog.listTables()}
-    assert after == before
-    # reclaiming again is a no-op, not an error
-    assert dedup_ops.reclaim_stages(spark) == 0
+    assert after == before | {eng._view}
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_sql_with_binds_frames_for_the_analysis_only(spark):
+    """``__NAME__`` tokens bind DataFrame arguments through views that
+    are gone once the statement is analyzed, and a cached argument stays
+    cached (dropping the view through ``spark.catalog.dropTempView``, as
+    pyspark's ``spark.sql(text, df=...)`` does, uncaches it)."""
+    from jgdtrans_rs_spark.plans.spark_sql import sql_with
+
+    x = spark.range(3).selectExpr("id", "id * 2 AS y").cache()
+    x.count()
+    before = {t.name for t in spark.catalog.listTables()}
+    got = sql_with(spark, "SELECT x.id, x.y FROM __X__ x JOIN __Z__ z ON x.id = z.id",
+                   X=x, Z=spark.range(1, 5))
+    assert {t.name for t in spark.catalog.listTables()} == before
+    assert x.storageLevel.useMemory
+    assert sorted(map(tuple, got.collect())) == [(1, 2), (2, 4)]
+    x.unpersist()
